@@ -3,6 +3,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.jdbc.graftshim.DerbyVarcharNulls
 
 /** JDBC lookup + distributed batch append — the "database feeder" half.
   *
@@ -39,6 +40,10 @@ import org.apache.spark.sql.functions._
   * has run against a live engine.
   */
 object JdbcFeed {
+
+  // NULL strings bind as VARCHAR on Derby, so typed VARCHAR targets
+  // accept them (see DerbyVarcharNulls)
+  DerbyVarcharNulls.register
 
   /** Upsert-statement dialect for [[mergeKeyed]]. Both forms consume
     * the same staging table and require the staging to be key-unique
@@ -128,34 +133,6 @@ object JdbcFeed {
       .mode(SaveMode.Append)
       .save()
 
-  /** Distributed keyed UPDATE — the reference's one-UPDATE-per-row driver
-    * loop (add_q5010.py:33-40) re-expressed so EXECUTORS apply the
-    * updates: each partition opens one connection and runs a prepared
-    * `UPDATE table SET c1=?,... WHERE key=?` in JDBC batches, COMMITTING
-    * PER BATCH — so a mid-partition task failure leaves earlier batches
-    * durable and the Spark retry re-applies the partition. Updates must
-    * therefore be idempotent (SET to absolute values, the reference's
-    * shape), NOT read-modify-write increments. Row order inside a
-    * partition is preserved; cross-partition commit order is arbitrary,
-    * so callers needing last-write-wins must collapse duplicate keys
-    * FIRST (`Upsert.latestPerKey` semantics) — exactly the contract
-    * `q_upsert_q5010` proves on the DataFrame side.
-    *
-    * Scale shape: updates RANGE-partition on the key across `numWriters`
-    * connections, so concurrent writers hold disjoint lock ranges — a
-    * hash repartition interleaves every writer's keys across the table
-    * and deadlocks under row/page locking (observed live on Derby). The
-    * database sees `numWriters` concurrent batched statements, not 10k
-    * serial round-trips; the throughput knob is (numWriters, batchSize) —
-    * the same two the reference hardcodes to (1, 1). Each JDBC batch
-    * commits as its own transaction (the reference's per-row autocommit,
-    * scaled to batches): lock hold time stays bounded by `batchSize`
-    * however large a partition is.
-    *
-    * The target table needs an index on `key` — without one every UPDATE
-    * is a locking full scan and concurrent writers deadlock regardless of
-    * partitioning (true of any RDBMS at any scale).
-    */
   /** Dialect-shaped UPSERT — the production form of the reference's
     * UPDATE-by-id loop (add_q5010.py:20-46): stage-then-merge.
     * Executors bulk-load the upsert batch into a session-scoped
@@ -220,6 +197,34 @@ object JdbcFeed {
     } finally conn.close()
   }
 
+  /** Distributed keyed UPDATE — the reference's one-UPDATE-per-row driver
+    * loop (add_q5010.py:33-40) re-expressed so EXECUTORS apply the
+    * updates: each partition opens one connection and runs a prepared
+    * `UPDATE table SET c1=?,... WHERE key=?` in JDBC batches, COMMITTING
+    * PER BATCH — so a mid-partition task failure leaves earlier batches
+    * durable and the Spark retry re-applies the partition. Updates must
+    * therefore be idempotent (SET to absolute values, the reference's
+    * shape), NOT read-modify-write increments. Row order inside a
+    * partition is preserved; cross-partition commit order is arbitrary,
+    * so callers needing last-write-wins must collapse duplicate keys
+    * FIRST (`Upsert.latestPerKey` semantics) — exactly the contract
+    * `q_upsert_q5010` proves on the DataFrame side.
+    *
+    * Scale shape: updates RANGE-partition on the key across `numWriters`
+    * connections, so concurrent writers hold disjoint lock ranges — a
+    * hash repartition interleaves every writer's keys across the table
+    * and deadlocks under row/page locking (observed live on Derby). The
+    * database sees `numWriters` concurrent batched statements, not 10k
+    * serial round-trips; the throughput knob is (numWriters, batchSize) —
+    * the same two the reference hardcodes to (1, 1). Each JDBC batch
+    * commits as its own transaction (the reference's per-row autocommit,
+    * scaled to batches): lock hold time stays bounded by `batchSize`
+    * however large a partition is.
+    *
+    * The target table needs an index on `key` — without one every UPDATE
+    * is a locking full scan and concurrent writers deadlock regardless of
+    * partitioning (true of any RDBMS at any scale).
+    */
   def updateKeyed(updates: DataFrame, url: String, table: String,
                   key: String, valueCols: Seq[String],
                   numWriters: Int = 8, batchSize: Int = 500): Unit = {

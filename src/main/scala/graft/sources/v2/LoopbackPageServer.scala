@@ -22,6 +22,11 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
   * 503 before the file is served, exercising the transport's bounded
   * retry/backoff the way a flaky production endpoint would.
   *
+  * `requests(dir)` reads the server's request counters: manifest
+  * answers, ranged (206) page answers and full (200) page answers,
+  * counted apart, so a test can pin how many round trips planning
+  * and scanning cost.
+  *
   * `armExport(...)` switches on the ASYNC EXPORT API — the reference's
   * create-then-poll-then-download flow (feeder.py:49-122) over the
   * same socket:
@@ -42,10 +47,19 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
   * execute long after the builder returns, so the endpoint must outlive
   * the call (same lifetime device as the paged fixture dirs). */
 object LoopbackPageServer {
-  private val servers = scala.collection.concurrent.TrieMap.empty[String, (HttpServer, Faults, Exports)]
+  private val servers = scala.collection.concurrent.TrieMap.empty[String, (HttpServer, PageRoutes, Exports)]
 
-  private final class Faults {
+  /** A snapshot of one server's answered requests since it started:
+    * `_PAGES` manifests, ranged page GETs (206) and full page GETs
+    * (200). Injected 503s are not counted. */
+  final case class Requests(manifest: Long, ranged: Long, full: Long)
+
+  /** Page-route state for one server: armed 503s and request counts. */
+  private final class PageRoutes {
     val remaining = new java.util.concurrent.atomic.AtomicInteger(0)
+    val manifest = new java.util.concurrent.atomic.AtomicLong(0L)
+    val ranged = new java.util.concurrent.atomic.AtomicLong(0L)
+    val full = new java.util.concurrent.atomic.AtomicLong(0L)
   }
 
   /** Export-API state for one server: armed token + artifact, a fresh
@@ -70,6 +84,12 @@ object LoopbackPageServer {
   def failFirst(dir: String, n: Int): Unit =
     servers.get(dir).foreach(_._2.remaining.set(n))
 
+  /** The request counters of the server for `dir` (zeros if none runs). */
+  def requests(dir: String): Requests =
+    servers.get(dir).fold(Requests(0L, 0L, 0L)) { case (_, f, _) =>
+      Requests(f.manifest.get, f.ranged.get, f.full.get)
+    }
+
   /** Arm the async export API for `dir`: requests authenticated with
     * `token` may create exports; each export answers "not ready" to its
     * first `notReadyPolls` status polls, then publishes the file URL of
@@ -89,8 +109,8 @@ object LoopbackPageServer {
     * completed Verify run that never exited). Create AND start the
     * server from a short-lived daemon thread so everything it spawns
     * is a daemon; handler threads get an explicit daemon factory. */
-  private def start(dir: String): (HttpServer, Faults, Exports) = {
-    @volatile var out: (HttpServer, Faults, Exports) = null
+  private def start(dir: String): (HttpServer, PageRoutes, Exports) = {
+    @volatile var out: (HttpServer, PageRoutes, Exports) = null
     @volatile var err: Throwable = null
     val t = new Thread(() => {
       try out = startDaemonContext(dir)
@@ -103,8 +123,8 @@ object LoopbackPageServer {
     out
   }
 
-  private def startDaemonContext(dir: String): (HttpServer, Faults, Exports) = {
-    val faults = new Faults
+  private def startDaemonContext(dir: String): (HttpServer, PageRoutes, Exports) = {
+    val pages = new PageRoutes
     val exports = new Exports
     val srv = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     srv.createContext("/", new HttpHandler {
@@ -136,15 +156,17 @@ object LoopbackPageServer {
           return send(ex, 404, Array.empty)
         val f = new java.io.File(dir, name)
         if (!f.isFile) return send(ex, 404, Array.empty)
-        if (faults.remaining.getAndUpdate(n => math.max(n - 1, 0)) > 0)
+        if (pages.remaining.getAndUpdate(n => math.max(n - 1, 0)) > 0)
           return send(ex, 503, Array.empty)
         val bytes = java.nio.file.Files.readAllBytes(f.toPath)
         rangeOf(ex, bytes.length) match {
           case Some((a, b)) =>
+            pages.ranged.incrementAndGet()
             ex.getResponseHeaders.set("Content-Range",
               s"bytes $a-$b/${bytes.length}")
             send(ex, 206, java.util.Arrays.copyOfRange(bytes, a, b + 1))
           case None =>
+            pages.full.incrementAndGet()
             send(ex, 200, bytes)
         }
       }
@@ -216,6 +238,7 @@ object LoopbackPageServer {
                 f.getName.endsWith(".tsv"))
             s"pages=$n\n".getBytes("UTF-8")
           }
+        pages.manifest.incrementAndGet()
         send(ex, 200, body)
       }
 
@@ -253,6 +276,6 @@ object LoopbackPageServer {
       }))
     srv.start()
     Runtime.getRuntime.addShutdownHook(new Thread(() => srv.stop(0)))
-    (srv, faults, exports)
+    (srv, pages, exports)
   }
 }

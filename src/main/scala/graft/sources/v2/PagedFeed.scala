@@ -51,6 +51,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * results. Every planning/pruning/scheduling piece is shared between
   * transports.
   *
+  * The page list is taken ONCE per DataFrame, as Spark's file sources
+  * do (`InMemoryFileIndex`): [[PagedFeedTable]] lists the pages on
+  * first planning and every scan, statistics call and action planned
+  * from the DataFrame reuses that listing. The page set is therefore
+  * fixed when the DataFrame is first planned; `load()` again to see
+  * pages appended later.
+  *
   * Supported field types: LONG, INT, DOUBLE, STRING, BOOLEAN;
   * `\N` encodes NULL. Lines are TAB-separated in schema order; string
   * values are escaped (see [[PagedTsv]]) so tabs/newlines/backslashes
@@ -82,11 +89,12 @@ class PagedFeedProvider extends TableProvider with DataSourceRegister {
   * (-1 unknown — statistics then report no byte estimate). */
 private[v2] case class PageRef(name: String, loc: String, bytes: Long)
 
-/** The pluggable fetch behind a page. Driver-side: `listPages` (plan),
-  * `firstLine`/`lastLine` (zone probes for key-range pruning — both
-  * BOUNDED reads, never the page). Executor-side: `open` (the full
-  * page, one bounded unit of IO per task). Serializable because the
-  * reader factory ships it to executors. */
+/** The pluggable fetch behind a page. Driver-side: `listPages` (once
+  * per DataFrame, by [[PagedFeedTable]]), `firstLine`/`lastLine` (zone
+  * probes for key-range pruning — both BOUNDED reads, never the page).
+  * Executor-side: `open` (the full page, one bounded unit of IO per
+  * task). Serializable because the reader factory ships it to
+  * executors. */
 private[v2] trait PageTransport extends Serializable {
   def listPages(): Array[PageRef]
   def open(ref: PageRef): java.io.BufferedReader
@@ -155,12 +163,13 @@ private[v2] class FilePageTransport(dir: String) extends PageTransport {
   * bounded retry/backoff (5xx and connection faults retry with
   * exponential backoff; 4xx fails fast — a missing page is a contract
   * violation, not a transient) and an optional `throttleMs` delay
-  * before each page fetch. Planning reads the page count from
-  * `GET <base>/_PAGES` (`pages=N`, the manifest the sink writes), and
-  * the zone probes are HTTP Range requests: `bytes=0-8191` for the
-  * first line, a suffix range for the last — a server answering 200
-  * (no Range support) degrades that page to "unprunable", never to a
-  * wrong prune. */
+  * before each page fetch. Listing the pages reads the page count from
+  * `GET <base>/_PAGES` (`pages=N`, the manifest the sink writes) plus
+  * one size probe per page; it runs once per DataFrame (see
+  * [[PagedFeedTable]]), not per plan. The zone probes are HTTP Range
+  * requests: `bytes=0-8191` for the first line, a suffix range for the
+  * last — a server answering 200 (no Range support) degrades that page
+  * to "unprunable", never to a wrong prune. */
 private[v2] class HttpPageTransport(base: String, retries: Int,
                                     backoffMs: Long, throttleMs: Long,
                                     headers: Map[String, String] = Map.empty)
@@ -223,8 +232,8 @@ private[v2] class HttpPageTransport(base: String, retries: Int,
     (0 until pages).toArray.map { i =>
       val name = f"page-$i%05d.tsv"
       // byte size from a 1-byte ranged GET's Content-Range total (one
-      // cheap bounded round-trip per page at plan time — the scan does
-      // a full GET per page anyway); -1 when the server doesn't say
+      // cheap bounded round-trip per page per listing, and the table
+      // lists once per DataFrame); -1 when the server doesn't say
       val c = connect(s"$base/$name", Some("bytes=0-0"), "GET")
       val len =
         if (c.getResponseCode == 206)
@@ -335,15 +344,21 @@ private[v2] object PagedTsv {
   }
 }
 
+/** One per `load()`. `pages` is the feed's listing, taken on first use
+  * and shared by every scan planned from this table: Spark calls
+  * `estimateStatistics` many times per query and builds a new `Scan`
+  * per action, AQE re-plan and range-partition sample. */
 private[v2] class PagedFeedTable(schema: StructType, props: Map[String, String])
   extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
+  private lazy val pages: Array[PageRef] = PageTransport.forDir(props).listPages()
+
   override def name(): String = s"graft_paged(${props.getOrElse("dir", "?")})"
   override def schema(): StructType = schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new PagedFeedScanBuilder(schema, options.asScala.toMap ++ props)
+    new PagedFeedScanBuilder(schema, options.asScala.toMap ++ props, () => pages)
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
     : org.apache.spark.sql.connector.write.WriteBuilder =
@@ -351,7 +366,8 @@ private[v2] class PagedFeedTable(schema: StructType, props: Map[String, String])
       info.options().asScala.toMap ++ props)
 }
 
-private[v2] class PagedFeedScanBuilder(full: StructType, opts: Map[String, String])
+private[v2] class PagedFeedScanBuilder(full: StructType, opts: Map[String, String],
+                                       listing: () => Array[PageRef])
   extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters with SupportsPushDownLimit {
   private var required: StructType = full
@@ -378,7 +394,8 @@ private[v2] class PagedFeedScanBuilder(full: StructType, opts: Map[String, Strin
   // fetching/parsing early.
   override def pushLimit(n: Int): Boolean = { limit = n; false }
 
-  override def build(): Scan = new PagedFeedScan(full, required, pushed, limit, opts)
+  override def build(): Scan =
+    new PagedFeedScan(full, required, pushed, limit, opts, listing)
 }
 
 private[v2] object PagedFeedScan {
@@ -466,7 +483,8 @@ private[v2] object PagedFeedScan {
 
 private[v2] class PagedFeedScan(full: StructType, required: StructType,
                                 pushed: Array[Filter], limit: Int,
-                                opts: Map[String, String])
+                                opts: Map[String, String],
+                                listing: () => Array[PageRef])
   extends Scan with Batch with SupportsReportStatistics {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -479,11 +497,11 @@ private[v2] class PagedFeedScan(full: StructType, required: StructType,
   private val transport: PageTransport = PageTransport.forDir(opts)
 
   /** Feed-level size/row estimate for the optimizer (AQE, broadcast
-    * decisions): bytes from the transport's page listing (file sizes /
+    * decisions): bytes from the table's page listing (file sizes /
     * HTTP Content-Length); rows exact-ish when the pager declares its
     * page size (`pageRows`). */
   override def estimateStatistics(): Statistics = {
-    val pages = transport.listPages()
+    val pages = listing()
     val bytes =
       if (pages.exists(_.bytes < 0)) None else Some(pages.map(_.bytes).sum)
     val rows = opts.get("pageRows").map(_.toLong)
@@ -497,7 +515,7 @@ private[v2] class PagedFeedScan(full: StructType, required: StructType,
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    var pages = transport.listPages()
+    var pages = listing()
     // pushed LIMIT with a declared page size and no pushed filters:
     // only the first ceil(n/pageRows) pages can contribute — the rest
     // are never fetched (pages are key-ordered by the pager contract)

@@ -118,6 +118,42 @@ class JdbcFeedSpec extends GraftSuite {
     } finally conn.close()
   }
 
+  test("append binds NULL strings into a pre-created VARCHAR column") {
+    // Spark's stock Derby dialect binds a NULL string as CLOB, which a
+    // VARCHAR column rejects; JdbcFeed's dialect binds it as VARCHAR
+    val url = freshDb("nullappend")
+    val batch = (1L to 30L).map(i => (i, if (i % 3 == 0) null else s"s$i", i * 1.0))
+      .toDF("id", "status", "amount")
+    JdbcFeed.append(batch, url, "feed", numWriters = 3, batchSize = 4)
+    val back = readBack(url).collect()
+      .map(r => (r.getLong(0), Option(r.getString(1)))).sortBy(_._1)
+    assert(back.length == 30)
+    back.foreach { case (id, status) =>
+      assert(status == (if (id % 3 == 0) None else Some(s"s$id")), s"id=$id")
+    }
+  }
+
+  test("mergeKeyed with a VARCHAR createTypes stages and applies NULL strings") {
+    val url = freshDb("nullmerge")
+    val batch = (1L to 20L).map(i => (i, "old", i.toDouble)).toDF("id", "status", "amount")
+    JdbcFeed.append(batch, url, "feed", numWriters = 2, batchSize = 16)
+    // 11..20 exist (UPDATE arm, half to NULL), 21..25 are new (INSERT arm)
+    val upserts = (11L to 25L)
+      .map(i => (i, if (i % 2 == 0) null else "merged", i * 10.0))
+      .toDF("id", "status", "amount")
+    JdbcFeed.mergeKeyed(upserts, url, "feed", "id", Seq("status", "amount"),
+      numWriters = 3, batchSize = 8,
+      createTypes = Some("status VARCHAR(8)"))
+    val back = readBack(url).collect()
+      .map(r => (r.getLong(0), Option(r.getString(1)), r.getDouble(2))).sortBy(_._1)
+    assert(back.length == 25)
+    back.foreach { case (id, status, amount) =>
+      if (id <= 10) assert(status.contains("old") && amount == id.toDouble, s"id=$id")
+      else assert(status == (if (id % 2 == 0) None else Some("merged")) &&
+        amount == id * 10.0, s"id=$id")
+    }
+  }
+
   test("MergeDialect: exact SQL per dialect; URL dispatch picks the right one") {
     import graft.sources.JdbcFeed.MergeDialect
     def sq(c: String) = "s.\"" + c + "\""

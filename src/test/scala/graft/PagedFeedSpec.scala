@@ -238,6 +238,45 @@ class PagedFeedSpec extends GraftSuite {
     graft.sources.v2.LoopbackPageServer.failFirst(tmp.getAbsolutePath, 0)
   }
 
+  test("HTTP transport: one DataFrame lists its pages once across all its actions") {
+    // 12 pages of a corrections-shaped feed: DateRepair needs a group,
+    // an order, a recruit date and an interview timestamp
+    val nPages = 12
+    val rowsPerPage = 40
+    val tmp = java.nio.file.Files.createTempDirectory("graft_http_listing").toFile
+    tmp.deleteOnExit()
+    (0 until nPages).foreach { p =>
+      val w = new java.io.PrintWriter(
+        new java.io.File(tmp, f"page-$p%05d.tsv"), "UTF-8")
+      (0 until rowsPerPage).foreach { i =>
+        val id = p * rowsPerPage + i
+        val rec = if (id % 7 == 0) "\\N" else f"2024-${1 + id % 3}%02d-10 09:00:00"
+        w.println(s"$id\t${id % 5}\t$i\t$rec\t2024-02-15 12:00:00")
+      }
+      w.close()
+    }
+    val base = graft.sources.v2.LoopbackPageServer.serve(tmp.getAbsolutePath)
+    val df = spark.read.format("graft-paged")
+      .schema("id BIGINT, file_id BIGINT, row_no BIGINT, q5011 STRING, ivts STRING")
+      .option("dir", base).load()
+    val total = nPages * rowsPerPage
+    assert(df.count() == total)
+    // an aggregate plus a broadcast join over the same DataFrame
+    val repaired = graft.operators.DateRepair.repair(
+      df.withColumn("ivts_t", to_timestamp(col("ivts"))),
+      "file_id", "row_no", "q5011", "ivts_t")
+    assert(repaired.collect().length == total)
+    // range partitioning samples the source in a job of its own
+    val perPart = df.repartitionByRange(4, col("id")).rdd
+      .mapPartitions(it => Iterator(it.size)).collect()
+    assert(perPart.sum == total)
+    val req = graft.sources.v2.LoopbackPageServer.requests(tmp.getAbsolutePath)
+    // one listing: the manifest plus one 1-byte size probe per page
+    assert(req.manifest == 1 && req.ranged == nPages,
+      s"expected 1 manifest GET and $nPages size probes, got $req")
+    assert(req.full >= nPages, s"pages were never read: $req")
+  }
+
   // ---- async export lifecycle (feeder.py:49-122): auth, poll budget,
   // and artifact fidelity against the loopback export API ----
 

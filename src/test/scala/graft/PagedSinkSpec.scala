@@ -142,6 +142,29 @@ class PagedSinkSpec extends GraftSuite {
     assert(back.count() == 5)
   }
 
+  test("a DataFrame keeps the pages it was first planned with; load() again re-lists") {
+    val out = freshDir("relist")
+    import spark.implicits._
+    def append(rows: Seq[(Long, String)]): Unit =
+      rows.toDF("k", "v").coalesce(1)
+        .write.format("graft-paged").option("dir", out.getAbsolutePath)
+        .mode("append").save()
+    def load() = spark.read.format("graft-paged").schema("k BIGINT, v STRING")
+      .option("dir", out.getAbsolutePath).load()
+    append(Seq((1L, "a"), (2L, "b")))
+    val df = load()
+    assert(df.count() == 2)
+    append(Seq((3L, "c"), (4L, "d"), (5L, "e")))
+    // re-executing the same DataFrame: the listing taken at its first
+    // plan stands, as with Spark's file sources
+    assert(df.count() == 2)
+    assert(df.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
+    // a fresh load() lists again and sees the appended page
+    val again = load()
+    assert(again.count() == 5)
+    assert(again.rdd.getNumPartitions == 2)
+  }
+
   test("commit cleanup spares a concurrent write's temporaries") {
     val out = freshDir("concurrent")
     out.mkdirs()
