@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.Verify.jsonString
 /** Benchmark main: times each headline query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Failures are reported in an "err" map — a broken
   * query is never recorded as a timing. */
@@ -91,7 +92,7 @@ object Bench {
       waited += 1
     }
     val psiStart = psiCpuAvg300()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cores
     // partitions default to cores for the committed sf0.1 record; at
     // sf100 a 32-way shuffle means ~0.5 GB tasks (oversized sorts,
     // shuffle-hash builds past the per-task budget) — the same lever a
@@ -118,10 +119,7 @@ object Bench {
         org.apache.logging.log4j.core.config.Configurator.setLevel(
           l, org.apache.logging.log4j.Level.ERROR)
       }
-      // Warm-up: exercise the parquet reader, shuffle machinery, and codegen
-      // once so the first timed query doesn't absorb session start-up.
-      s.read.parquet(s"$sfDir/orders.parquet")
-        .groupBy("o_orderstatus").count().collect()
+      GraftSession.warmUp(s, sfDir)
       s
     }
     var spark = buildSession()
@@ -185,6 +183,17 @@ object Bench {
         System.gc()
       }
     }
+    // One timed rep of `name` into the noop sink, on a live session with
+    // the cache cleared; the query's own failure comes back as Left.
+    def timedRep(name: String): Either[Throwable, Double] = {
+      reviveIfDead()
+      cleanupBetweenReps()
+      val t0 = System.nanoTime()
+      try {
+        all(name)(spark, sfDir).write.mode("overwrite").format("noop").save()
+        Right((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable => Left(e) }
+    }
     var times = Vector.empty[(String, Double)]
     var raws = Vector.empty[(String, Seq[Double])]
     var errs = Vector.empty[(String, String)]
@@ -192,18 +201,11 @@ object Bench {
       var rep = Vector.empty[Double]
       var failed = false
       (1 to reps).foreach { _ =>
-        if (!failed) {
-          reviveIfDead()
-          cleanupBetweenReps()
-          val t0 = System.nanoTime()
-          try {
-            all(name)(spark, sfDir).write.mode("overwrite").format("noop").save()
-            rep :+= (System.nanoTime() - t0) / 1e9
-          } catch {
-            case e: Throwable =>
-              failed = true
-              errs :+= name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-          }
+        if (!failed) timedRep(name) match {
+          case Right(t) => rep :+= t
+          case Left(e) =>
+            failed = true
+            errs :+= name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
         }
       }
       // a query that failed ANY rep is an error, never a timing — a
@@ -220,16 +222,9 @@ object Bench {
       r.length >= 2 && r.drop(1).min > r.head * 1.5 && r.drop(1).min - r.head > 0.5
     // One serial quiet-tail re-time of `name`; min survives into the
     // timing. A retry failure keeps the prior reps (already timed twice).
-    def retime(name: String): Unit = {
-      reviveIfDead()
-      cleanupBetweenReps()
-      val t0 = System.nanoTime()
-      try {
-        all(name)(spark, sfDir).write.mode("overwrite").format("noop").save()
-        val t = (System.nanoTime() - t0) / 1e9
-        raws = raws.map { case (k, r) => if (k == name) k -> (r :+ t) else k -> r }
-        times = times.map { case (k, v) => if (k == name) k -> math.min(v, t) else k -> v }
-      } catch { case _: Throwable => () }
+    def retime(name: String): Unit = timedRep(name).foreach { t =>
+      raws = raws.map { case (k, r) => if (k == name) k -> (r :+ t) else k -> r }
+      times = times.map { case (k, v) => if (k == name) k -> math.min(v, t) else k -> v }
     }
     // Quiet-tail retry (r9 verdict): queries whose later rep inverted
     // re-time ONCE more after the sweep, when the transient external
@@ -298,11 +293,6 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] WARN failed to write bench_floor_next.json: ${e.getMessage}")
     }
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
     // Keep the stdout line SMALL — and this time provably so. The driver
     // tail-captures only the LAST 2,000 characters of output, and a
     // per-query map over ~200 queries is ~8 KB however tersely printed
@@ -321,7 +311,7 @@ object Bench {
     val mean = if (times.nonEmpty) total / times.size else 0.0
     val fams = times.groupBy { case (k, _) => familyOf(k) }.toSeq.sortBy(_._1)
       .map { case (f, ts) =>
-        s"${jstr(f)}:{\"n\":${ts.size},\"sec\":${ms(ts.map(_._2).sum)}}"
+        s"${jsonString(f)}:{\"n\":${ts.size},\"sec\":${ms(ts.map(_._2).sum)}}"
       }.mkString("{", ",", "}")
     val psiEnd = psiCpuAvg300()
     // In-JSON health flag. END pressure is NOT a usable signal: the
@@ -338,10 +328,10 @@ object Bench {
       (raws.nonEmpty && inverted.toDouble / raws.size > 0.1)
     def summaryLine(topK: Int, errK: Int): String = {
       val q = times.sortBy(-_._2).take(topK)
-        .map { case (k, v) => s"${jstr(k)}:${ms(v)}" }.mkString("{", ",", "}")
-      val e = errs.take(errK).map { case (k, v) => s"${jstr(k)}:${jstr(v.take(60))}" }
+        .map { case (k, v) => s"${jsonString(k)}:${ms(v)}" }.mkString("{", ",", "}")
+      val e = errs.take(errK).map { case (k, v) => s"${jsonString(k)}:${jsonString(v.take(60))}" }
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","reps":$reps,"n":${times.size},"n_err":${errs.size},"mean_s":${ms(mean)},"queries":$q,"families":$fams,"err":$e,"sf":${jstr(sfDir)},"psi_avg300_start":$psiStart,"psi_avg300_end":$psiEnd,"rep_inversions":$inverted,"tail_retimed":${tailSet.size},"tail_improved":$tailImproved,"psi_noisy":$noisy,"rep_gc":$repGc,"revived":$revived}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","reps":$reps,"n":${times.size},"n_err":${errs.size},"mean_s":${ms(mean)},"queries":$q,"families":$fams,"err":$e,"sf":${jsonString(sfDir)},"psi_avg300_start":$psiStart,"psi_avg300_end":$psiEnd,"rep_inversions":$inverted,"tail_retimed":${tailSet.size},"tail_improved":$tailImproved,"psi_noisy":$noisy,"rep_gc":$repGc,"revived":$revived}"""
     }
     // Hard size backstop: if (pathologically long names / error text) the
     // top-10 form still exceeds ~1.8 KB, degrade to top-3/1-err — the
@@ -356,10 +346,10 @@ object Bench {
     // untruncated error messages — it survives even if the driver's
     // stdout capture truncates
     try {
-      val fq = times.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
-      val fr = raws.map { case (k, v) => s"${jstr(k)}:${v.mkString("[", ",", "]")}" }.mkString("{", ",", "}")
-      val fe = errs.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
-      val full = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$fq,"queries_reps":$fr,"families":$fams,"err":$fe,"sf":${jstr(sfDir)},"psi_avg300_start":$psiStart,"psi_avg300_end":$psiEnd,"rep_inversions":$inverted,"tail_retimed":${tailSet.size},"tail_improved":$tailImproved,"psi_noisy":$noisy,"rep_gc":$repGc,"revived":$revived}"""
+      val fq = times.map { case (k, v) => s"${jsonString(k)}:$v" }.mkString("{", ",", "}")
+      val fr = raws.map { case (k, v) => s"${jsonString(k)}:${v.mkString("[", ",", "]")}" }.mkString("{", ",", "}")
+      val fe = errs.map { case (k, v) => s"${jsonString(k)}:${jsonString(v)}" }.mkString("{", ",", "}")
+      val full = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$fq,"queries_reps":$fr,"families":$fams,"err":$fe,"sf":${jsonString(sfDir)},"psi_avg300_start":$psiStart,"psi_avg300_end":$psiEnd,"rep_inversions":$inverted,"tail_retimed":${tailSet.size},"tail_improved":$tailImproved,"psi_noisy":$noisy,"rep_gc":$repGc,"revived":$revived}"""
       java.nio.file.Files.write(java.nio.file.Paths.get("target/bench_full.json"),
         full.getBytes("UTF-8"))
     } catch {

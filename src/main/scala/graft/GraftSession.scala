@@ -4,16 +4,16 @@ import org.apache.spark.sql.SparkSession
 
 /** The ONE place the production session config lives.
   *
-  * Every graft entry point (Bench, Verify, ExplainDump) builds its
+  * Every graft entry point (Bench, Verify, tools.Inspect) builds its
   * session through `builder(...)` so the scale-critical settings cannot
   * drift apart between them — the r13 sf100 sweep found exactly that
   * class of bug the hard way: Spark's 128-key ObjectHashAggregate
   * sort-based fallback silently sorted an 8e9-row typed-aggregate input
   * to disk because only some builders carried the raised threshold.
   * SessionContractSpec asserts both that the configs below land on a
-  * session built here and that the three mains reference this builder,
-  * so a refactor that drops either fails `sbt test`, not the next
-  * hundred-terabyte run.
+  * session built here and that every `main` under src/main references
+  * this builder, so a refactor that drops either fails `sbt test`, not
+  * the next hundred-terabyte run.
   */
 object GraftSession {
 
@@ -35,6 +35,12 @@ object GraftSession {
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "4194304",
     "spark.ui.enabled" -> "false")
 
+  /** Local core count for a main's session: `SPARK_GRAFT_CPUS`, else
+    * the host's processor count. The one place the variable is read. */
+  def cores: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+
   /** Shuffle parallelism: `SPARK_GRAFT_SHUFFLE_PARTITIONS` overrides the
     * caller's default (normally = cores). 32-way shuffles are the right
     * grain at bench SFs but ~0.5 GB tasks at sf100 — large-SF sweeps
@@ -51,4 +57,10 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", shufflePartitions(defaultPartitions))
     requiredConfigs.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }
   }
+
+  /** Exercise the parquet reader, shuffle machinery and codegen once so
+    * the first timed query doesn't absorb session start-up. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit =
+    spark.read.parquet(s"$sfDir/orders.parquet")
+      .groupBy("o_orderstatus").count().collect()
 }

@@ -113,9 +113,9 @@ object GraftExtensions {
 }
 
 /** THE single extensions entry point: native SQL functions + the
-  * engine's optimizer rules. Verify, Bench, and ExplainDump sessions
-  * all register this class, so the correctness gate and every committed
-  * plan run with both active. */
+  * engine's optimizer rules. Every session built through GraftSession
+  * (Verify, Bench, tools.Inspect) registers this class, so the
+  * correctness gate and every committed plan run with both active. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions.builders
 

@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   *
   * NOTE: `nearDupPairs` persists the shingle table on small corpora
   * (it feeds the signature pipeline and both verify-join sides — see
-  * `persistShingles`). The cache entries live for the session; a
+  * `ScalePolicy`). The cache entries live for the session; a
   * long-lived service calling these repeatedly should
   * `spark.catalog.clearCache()` between corpora.
   */
@@ -173,29 +173,6 @@ object MinHashLSH {
     *                      from pairing (pathological collisions, e.g.
     *                      empty documents)
     */
-  /** Should the corpus-sized shingle table be cached? Adaptive by the
-    * docs relation's optimizer statistics (for file sources: the scan's
-    * input bytes), the same signal Catalyst's broadcast decision reads:
-    *
-    *   - SMALL corpus (input < ~512 MB — every bench SF up to sf10):
-    *     persist. The table feeds 3 consumers (signature pipeline +
-    *     both verify-join sides); recomputing tokenize→shingle→hash
-    *     per consumer tripled the LSH family's sf0.1 bench cost when
-    *     r13 dropped the persist unconditionally (the +50% family
-    *     regression in BENCH_r13).
-    *   - LARGE corpus (sf100+): do NOT persist. The shingle table is
-    *     the fattest dataset in the pipeline (~8 KB of incompressible
-    *     64-bit hashes per document — ~80 GB at sf100, far past any
-    *     cache, and the MEMORY_AND_DISK overflow is a corpus-sized
-    *     local-disk write that the r13 sweep measured into the disk
-    *     wall); the map-side recompute costs a fraction of a scan.
-    *
-    * On a real cluster the same rule holds per-executor: the threshold
-    * approximates "fits the storage fraction without evicting the
-    * shuffle's working set". */
-  private def persistShingles(docs: DataFrame): Boolean =
-    docs.queryExecution.optimizedPlan.stats.sizeInBytes < (512L << 20)
-
   def nearDupPairs(docs: DataFrame, idCol: String, textCol: String,
                    shingleK: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
                    threshold: Double = 0.8,
@@ -204,7 +181,7 @@ object MinHashLSH {
     // (The banded (id, band, bucket) projection, which is always small,
     // stays persisted inside candidatePairs regardless.)
     val sh0 = shingled(docs, idCol, textCol, shingleK, sqlReplicable)
-    val sh = if (persistShingles(docs))
+    val sh = if (!ScalePolicy.corpusScale(docs))
       sh0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else sh0
     val pairs = candidatePairs(sh, idCol, bands, rowsPerBand, maxBucketSize,
@@ -224,7 +201,7 @@ object MinHashLSH {
     // spills are transient; the irreducible cost is the ~2-3x-corpus
     // shuffle of shingle sets that exact verify implies, which a
     // cluster spreads across executor disks.
-    (if (persistShingles(docs)) pairs else pairs.hint("shuffle_hash"))
+    (if (ScalePolicy.corpusScale(docs)) pairs.hint("shuffle_hash") else pairs)
       .join(shA, Seq("id_a"))
       .join(shB, Seq("id_b"))
       .select(col("id_a"), col("id_b"),
@@ -257,8 +234,8 @@ object MinHashLSH {
     val sh0 = docs.select(col(idCol),
       TextAnalysis.hashedShingles(col(textCol), shingleK).as("__sh"))
     // both join sides read the shingle table — cache it when the corpus
-    // is small (see persistShingles; recompute map-side at corpus scale)
-    val sh = if (persistShingles(docs))
+    // is small (see ScalePolicy; recompute map-side at corpus scale)
+    val sh = if (!ScalePolicy.corpusScale(docs))
       sh0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else sh0
     hintUnlessBroadcastable(pairs)

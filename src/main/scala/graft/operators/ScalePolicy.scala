@@ -1,0 +1,26 @@
+package graft.operators
+
+import org.apache.spark.sql.DataFrame
+
+/** The one "is this a corpus-scale input?" rule, read from the
+  * relation's optimizer statistics (for file sources: the scan's input
+  * bytes) — the same signal Catalyst's broadcast decision reads.
+  *
+  *   - SMALL (< 512 MB, every bench SF up to sf10): persist tables with
+  *     several consumers, and let AQE broadcast a verify join's slim
+  *     pair side. MinHashLSH's shingle table feeds 3 consumers;
+  *     recomputing it per consumer tripled the LSH family's sf0.1 cost
+  *     when r13 dropped the persist (the +50% regression in BENCH_r13).
+  *   - LARGE (sf100+): do NOT persist, and build verify joins as
+  *     SHUFFLE_HASH on the slim pair side. The shingle table (~8 KB of
+  *     64-bit hashes per document, ~80 GB at sf100) is far past any
+  *     cache; its MEMORY_AND_DISK overflow is a corpus-sized disk write
+  *     (the r13 sweep's disk wall), while the map-side recompute costs a
+  *     fraction of a scan.
+  *
+  * Per executor on a real cluster, the threshold approximates "fits the
+  * storage fraction without evicting the shuffle's working set". */
+object ScalePolicy {
+  def corpusScale(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes >= (512L << 20)
+}

@@ -113,7 +113,7 @@ object SimHash {
     // at corpus scale the slim pair side builds a SHUFFLE-HASH table so
     // the fingerprint side streams unsorted (the MinHashLSH verify-join
     // rule; 16-byte rows make even this join cheap).
-    val big = docs.queryExecution.optimizedPlan.stats.sizeInBytes >= (512L << 20)
+    val big = ScalePolicy.corpusScale(docs)
     (if (big) pairs.hint("shuffle_hash") else pairs)
       .join(fps.select(col(idCol).as("id_a"), col("fp").as("fp_a")), Seq("id_a"))
       .join(fps.select(col(idCol).as("id_b"), col("fp").as("fp_b")), Seq("id_b"))

@@ -177,7 +177,7 @@ object Similarity {
     // side is tiny at bench SFs (AQE broadcasts it; no hint); at corpus
     // scale the slim pair side builds a SHUFFLE-HASH table so the
     // vector side streams unsorted (the MinHashLSH verify-join rule).
-    val big = vectors.queryExecution.optimizedPlan.stats.sizeInBytes >= (512L << 20)
+    val big = ScalePolicy.corpusScale(vectors)
     val raw = cosine(col("__va"), col("__vb"))
     val score = roundTo.fold(raw)(d => round(raw, d))
     (if (big) pairs.hint("shuffle_hash") else pairs)

@@ -617,32 +617,20 @@ object ZippedTabular {
 
   // --- distributed readers --------------------------------------------------
 
-  private def readZipped(spark: SparkSession, path: String, columns: Seq[String],
-                         decode: Array[Byte] => (Array[String], Iterator[Array[String]])): DataFrame = {
-    val schema = StructType(columns.map(StructField(_, StringType, nullable = true)))
-    val bin = spark.read.format("binaryFile").load(path)
-      .select(col("content"))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val n = columns.length
-    bin.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val (_, dataRows) = decode(firstEntry(r.getAs[Array[Byte]](0)))
-        dataRows.map(cells => Row.fromSeq(
-          (0 until n).map(i => if (i < cells.length) cells(i) else null)))
-      }
-    }(enc)
-  }
-
   /** Read every `*.zip` under `path` (each containing one CSV entry) into
     * a single string-typed DataFrame with the given column names.
     * Distributed: one task per archive via the binaryFile source. */
   def readZippedCsv(spark: SparkSession, path: String, columns: Seq[String]): DataFrame =
-    readZipped(spark, path, columns, parseCsv)
+    readZippedCsvTyped(spark, path, stringSchema(columns))
 
   /** Same, for zips whose first entry is an XLSX workbook — the
     * reference's actual export shape (feeder.py:118-122). */
   def readZippedXlsx(spark: SparkSession, path: String, columns: Seq[String]): DataFrame =
-    readZipped(spark, path, columns, decodeXlsx)
+    readZippedXlsxTyped(spark, path, stringSchema(columns))
+
+  // convertCell(_, StringType) is the identity: the string readers are the typed ones
+  private def stringSchema(columns: Seq[String]): StructType =
+    StructType(columns.map(StructField(_, StringType, nullable = true)))
 
   // --- typed readers --------------------------------------------------------
 

@@ -1,0 +1,117 @@
+package graft.tools
+
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
+
+import graft.{GraftSession, SparkEntry}
+
+/** One inspection main for plan review and local timing:
+  *
+  *   Inspect dump <sfDir> [out]              EXPLAINS.md for every registry key
+  *   Inspect plan <sfDir> <q_a,q_b> [mode]   plans of the named queries
+  *   Inspect executed <sfDir> <q_a,q_b>      post-AQE plans after a noop run
+  *   Inspect time <sfDir> <q_a,q_b> [reps]   build vs noop-write seconds
+  *
+  * Each mode is a function of a live session (specs use the shared one);
+  * `main` only parses arguments and owns a GraftSession-built session.
+  */
+object Inspect {
+  def main(args: Array[String]): Unit = {
+    def keys = args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val run: SparkSession => Unit = args.toSeq match {
+      case Seq("dump", dir, rest @ _*) =>
+        val out = rest.headOption.getOrElse("EXPLAINS.md")
+        spark => {
+          Files.writeString(Paths.get(out), dump(spark, dir))
+          println(s"[explain] wrote $out")
+        }
+      case Seq("plan", dir, _, rest @ _*) =>
+        spark => println(plan(spark, dir, keys, rest.headOption.getOrElse("formatted")))
+      case Seq("executed", dir, _) =>
+        spark => println(executed(spark, dir, keys))
+      case Seq("time", dir, _, rest @ _*) =>
+        val reps = rest.headOption.fold(2)(_.toInt)
+        def stat(label: String, ts: Seq[Double]): String =
+          f"$label min=${ts.min}%.2f raw=${ts.map(t => f"$t%.2f").mkString(",")}"
+        spark => time(spark, dir, keys, reps).foreach { case (k, rs) =>
+          println(s"[time] $k ${stat("build", rs.map(_._1))} ${stat("action", rs.map(_._2))}")
+        }
+      case _ =>
+        System.err.println("usage: Inspect dump <sfDir> [out] | plan <sfDir> <keys> [mode]" +
+          " | executed <sfDir> <keys> | time <sfDir> <keys> [reps]")
+        sys.exit(2)
+    }
+    val spark = GraftSession.builder(GraftSession.cores, GraftSession.cores).getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    try run(spark) finally spark.stop()
+  }
+
+  /** EXPLAINS.md: the formatted plan of EVERY registry key, first 120
+    * lines each (a hand-maintained list once drifted to 161/206
+    * coverage). Queries that write their own fixture files show the plan
+    * that reads them back. */
+  def dump(spark: SparkSession, sfDir: String): String = {
+    val keys = SparkEntry.queries.keys.toSeq.sorted
+    val head =
+      s"""# EXPLAINS — formatted physical plans (${Paths.get(sfDir).getFileName})
+         |
+         |Generated by `graft.tools.Inspect dump` — all ${keys.size} registry
+         |queries. What to look for:
+         |`PushedFilters`/pruned `ReadSchema` at scans, `BroadcastHashJoin`
+         |for dim sides, no `CartesianProduct` anywhere, partial
+         |(`HashAggregate` x2) aggregation, `Window` only over bounded
+         |row sets.
+         |""".stripMargin
+    head + keys.map { k =>
+      val fmt = orFailure(explain(spark, sfDir, k, "formatted"))
+      s"\n## $k\n\n```\n${fmt.linesIterator.take(120).mkString("\n")}\n```\n"
+    }.mkString
+  }
+
+  /** Plans of `keys` in an ExplainMode (`formatted`, `simple`, `cost`,
+    * …) without executing anything: stats come from file sizes, so the
+    * planner's join and broadcast choices at any sfDir are visible.
+    * `simple` shows the `*(N)` codegen span prefixes `formatted` strips. */
+  def plan(spark: SparkSession, sfDir: String, keys: Seq[String],
+           mode: String = "formatted"): String =
+    sections(keys)(k => explain(spark, sfDir, k, mode))
+
+  /** Runs each query into the `noop` sink and returns its post-AQE final
+    * plan — the only view with WholeStageCodegen spans under AQE, whose
+    * pre-execution plans carry no codegen stages. */
+  def executed(spark: SparkSession, sfDir: String, keys: Seq[String]): String =
+    sections(keys) { k =>
+      val df = SparkEntry.queries(k)(spark, sfDir)
+      df.write.mode("overwrite").format("noop").save()
+      df.queryExecution.executedPlan.toString
+    }
+
+  /** Per key, `reps` (build, action) second pairs after one warm-up;
+    * each rep clears the cache first, as Bench does. Build includes jobs
+    * the query runs while being built; action is Bench's `noop` write. */
+  def time(spark: SparkSession, sfDir: String, keys: Seq[String],
+           reps: Int): Seq[(String, Seq[(Double, Double)])] = {
+    GraftSession.warmUp(spark, sfDir)
+    def secs[T](f: => T): (T, Double) = {
+      val t0 = System.nanoTime(); val r = f
+      (r, (System.nanoTime() - t0) / 1e9)
+    }
+    keys.map(k => k -> (1 to reps).map { _ =>
+      spark.catalog.clearCache()
+      val (df, build) = secs(SparkEntry.queries(k)(spark, sfDir))
+      (build, secs(df.write.mode("overwrite").format("noop").save())._2)
+    })
+  }
+
+  private def explain(spark: SparkSession, sfDir: String, key: String, mode: String): String =
+    SparkEntry.queries(key)(spark, sfDir).queryExecution.explainString(ExplainMode.fromString(mode))
+
+  // one broken plan must not blank the rest — record it and go on
+  private def orFailure(f: => String): String =
+    try f catch { case e: Throwable => s"EXPLAIN FAILED: ${e.getMessage}" }
+
+  private def sections(keys: Seq[String])(f: String => String): String =
+    keys.map(k => s"\n===== $k =====\n${orFailure(f(k))}").mkString("\n")
+}

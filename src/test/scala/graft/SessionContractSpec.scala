@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** The session-config contract as a GATE (r13 verdict task 4).
   *
@@ -16,9 +17,10 @@ import org.apache.spark.sql.SparkSession
   *
   *   1. a session built through `GraftSession.builder` actually carries
   *      every required config (a typo'd key or value fails here);
-  *   2. every production entry point (Bench, Verify, ExplainDump)
-  *      builds its session THROUGH GraftSession — a refactor that
-  *      re-inlines a builder (and then drifts) fails the source scan.
+  *   2. every production entry point (each src/main source defining a
+  *      `main`: Bench, Verify, tools.Inspect) builds its session
+  *      THROUGH GraftSession — a refactor that re-inlines a builder (and
+  *      then drifts) fails the source scan.
   */
 class SessionContractSpec extends GraftSuite {
 
@@ -56,12 +58,15 @@ class SessionContractSpec extends GraftSuite {
   }
 
   test("every production entry point builds through GraftSession") {
-    val mains = Seq(
-      "src/main/scala/graft/Bench.scala",
-      "src/main/scala/graft/Verify.scala",
-      "src/main/scala/graft/tools/ExplainDump.scala")
-    mains.foreach { p =>
-      val src = new String(Files.readAllBytes(Paths.get(p)), "UTF-8")
+    // found, not listed: every src/main source that defines a `main` —
+    // a new tool main cannot opt out by not being named here
+    val sources = Using.resource(Files.walk(Paths.get("src/main/scala")))(
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList)
+    val mains = sources
+      .map(p => p -> new String(Files.readAllBytes(p), "UTF-8"))
+      .filter(_._2.contains("def main("))
+    assert(mains.exists(_._1.endsWith("Bench.scala")), "main scan found no Bench")
+    mains.foreach { case (p, src) =>
       assert(src.contains("GraftSession.builder"),
         s"$p must build its session through GraftSession.builder")
       assert(!src.contains("SparkSession.builder()"),
