@@ -15,53 +15,18 @@ object Bench {
       "avg300=([0-9.]+)".r.findFirstMatchIn(line).map(_.group(1).toDouble).getOrElse(-1.0)
     } catch { case _: Throwable => -1.0 }
 
-  /** Coarse query families for round-over-round subtotals: the registry
-    * grows every round, so per-query comparison breaks, but family
-    * subtotals (graph, LSH/dedup, ANN, feeder, series, …) stay
-    * comparable. Explicit membership for the iterative/graph sets whose
-    * names don't pattern-match; prefix heuristics for the rest. */
-  private val graphFamily = Set(
-    "q_pagerank", "q_kcore", "q_triangle", "q_assortativity", "q_copurchase",
-    "q_local_clustering", "q_link_predict", "q_transition_matrix",
-    "q_dedup_clusters", "q_canonical_pick")
-  private val lshFamily = Set(
-    "q_dedup_exact", "q_dedup_minhash", "q_dedup_simhash", "q_ngram_jaccard",
-    "q_dedup_embed", "q_containment", "q_cross_dedup", "q_line_dedup",
-    "q_dup_spans", "q_winnow", "q_decontaminate", "q_shingle_novelty",
-    "q_semdedup", "q_doc_fingerprint", "q_minhash_est_err", "q_split_leakage",
-    "q_dedup_cluster_profile", "q_media_dedup", "q_dedup_threshold_curve",
-    "q_dedup_method_agreement")
-  private val annFamily = Set(
-    "q_ann_topk", "q_ann_lsh", "q_ann_ivf", "q_ann_pq", "q_knn_classify",
-    "q_knn_graph", "q_embed_centroid", "q_embed_norm_audit", "q_kmeans_train",
-    "q_ann_recall_audit", "q_random_projection", "q_int8_quant_audit",
-    "q_embedding_drift", "q_cluster_keywords", "q_ann_ndcg")
-  private val feederFamily = Set(
-    "q_feeder_load", "q_paged_ingest", "q_zip_extract", "q_pushdown_filter",
-    "q_dedup_antijoin", "q_status_map", "q_date_norm", "q_null_norm",
-    "q_clamp_truncate", "q_wide_projection", "q_batch_append",
-    "q_upsert_q5010", "q_month_repair", "q_wave_sweep", "q_wave_derive",
-    "q_jdbc_roundtrip", "q_write_layout", "q_dedup_skipped", "q_upsert_scd2",
-    "q_cdc_apply", "q_quota_progress", "q_callback_schedule",
-    "q_fieldwork_burndown")
-  private val seriesFamily = Set(
-    "q_events_window", "q_sessionize", "q_session_window_fn", "q_moving_sum",
-    "q_hopping_window", "q_gap_fill", "q_rolling_quantile", "q_rolling_active",
-    "q_ewma", "q_autocorr", "q_seasonality", "q_seasonal_decompose",
-    "q_drawdown", "q_peak_detect", "q_changepoint", "q_linear_fit",
-    "q_burstiness", "q_mom_growth", "q_runs_test", "q_interarrival",
-    "q_late_arrival", "q_interval_coverage", "q_throttle", "q_streaks",
-    "q_time_weighted_avg", "q_cumulative_distinct", "q_event_downsample",
-    "q_stream_dedup", "q_stream_join", "q_incremental_agg", "q_heavy_change",
-    "q_seasonal_naive_backtest", "q_coverage_gap", "q_markov_backtest",
-    "q_kaplan_meier", "q_dp_release")
-  private def familyOf(name: String): String =
-    if (graphFamily(name)) "graph"
-    else if (lshFamily(name)) "lsh"
-    else if (annFamily(name)) "ann"
-    else if (feederFamily(name)) "feeder"
-    else if (seriesFamily(name)) "series"
-    else "other"
+  /** The keys a run times. `only` is SPARK_GRAFT_BENCH_ONLY: a comma
+    * list of query keys and family names (`q_pagerank,ann`), a family
+    * name standing for its bench keys. None times all of `fullSet`;
+    * the result keeps `fullSet`'s order. */
+  private[graft] def selectKeys(fullSet: Seq[String], only: Option[String]): Seq[String] =
+    only match {
+      case None => fullSet
+      case Some(csv) =>
+        val names = csv.split(",").map(_.trim).filter(_.nonEmpty).toSet
+        val want = names ++ Queries.families.filter(f => names(f.name)).flatMap(_.rows.map(_.key))
+        fullSet.filter(want)
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -141,14 +106,9 @@ object Bench {
     val fullSet =
       if (SparkEntry.benchQueries.nonEmpty) SparkEntry.benchQueries
       else all.keys.toSeq.sorted
-    // SPARK_GRAFT_BENCH_ONLY=q_a,q_b restricts the run for targeted
-    // profiling of one family without paying for the full registry.
-    val keys = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
-      case Some(csv) =>
-        val want = csv.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        fullSet.filter(want)
-      case None => fullSet
-    }
+    // SPARK_GRAFT_BENCH_ONLY=q_a,series restricts the run for targeted
+    // profiling without paying for the full registry.
+    val keys = selectKeys(fullSet, sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     // Each query runs REPS times and reports the min — a single rep on a
     // noisy host can read 10× hot (CPU steal lands on one run), and the
     // min survives a judge re-run. Honest reps: the session cache is
@@ -309,6 +269,7 @@ object Bench {
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val total = times.map(_._2).sum
     val mean = if (times.nonEmpty) total / times.size else 0.0
+    val familyOf = Queries.families.flatMap(f => f.rows.map(_.key -> f.name)).toMap
     val fams = times.groupBy { case (k, _) => familyOf(k) }.toSeq.sortBy(_._1)
       .map { case (f, ts) =>
         s"${jsonString(f)}:{\"n\":${ts.size},\"sec\":${ms(ts.map(_._2).sum)}}"

@@ -11,10 +11,9 @@ object SparkEntry {
     Queries.registry.map(q => q.key -> q.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys are non-SQL-expressible
-    * (rows-only check; covered by ScalaTest specs instead). */
+    * the same parquet tables (every registry row carries one). */
   def oracleSql: Map[String, String] =
-    Queries.registry.flatMap(q => q.oracle.map(q.key -> _)).toMap
+    Queries.registry.map(q => q.key -> q.oracle).toMap
 
   /** Headline set for Bench (excludes driver-side-fabrication queries
     * like the zip fixture builder and the test-semantics pager). */

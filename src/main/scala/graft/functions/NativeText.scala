@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
@@ -163,7 +162,7 @@ object NativeText {
   /** Parameters of the SQL-REPLICABLE minhash variant — the
     * [[SimHashUniv]] discipline applied to MinHash so an external SQL
     * engine can recompute signatures, band keys, candidate pairs, and
-    * the exact Jaccard verify bit-for-bit (Queries' minhash-band
+    * the exact Jaccard verify bit-for-bit (the registry's minhash-band
     * oracle): shingle base hash = 31-polynomial over the code points of
     * the SPACE-JOINED k-token shingle string mod P (Mersenne 2^31−1 —
     * matches DuckDB's `ascii` char fold over
@@ -427,7 +426,7 @@ object NativeText {
     * g_j(h) = (h·A_j + B_j) mod P, voting +1 when g_j < P/2. Every
     * product stays < 2^62 — exact in a JVM long AND in a DuckDB/ANSI
     * BIGINT, which is the point: an external SQL engine can recompute
-    * the identical fingerprint (see Queries.dedupSimhashSql). 63 bits so
+    * the identical fingerprint (see queries.Lsh.dedupSimhashSql). 63 bits so
     * `1 << j` never touches the sign bit. The A/B constants come from a
     * fixed-seed java.util.Random (spec-pinned LCG — identical on every
     * JVM) and are interpolated into the oracle SQL from these arrays. */

@@ -60,7 +60,7 @@ object BloomPrune {
     val numBits = BloomFilter.optimalNumOfBits(expectedItems, fpp)
     val bytes = small
       .select(bloomAgg(col(smallKey), expectedItems, numBits).as("__bf"))
-      .head.getAs[Array[Byte]](0)
+      .head().getAs[Array[Byte]](0)
     // renamed key side-steps ambiguity when bigKey == smallKey; no
     // distinct: left_semi already emits each big row at most once
     big

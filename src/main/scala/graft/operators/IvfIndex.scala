@@ -115,7 +115,7 @@ object IvfIndex {
     val m = graft.operators.TextAnalysis.FingerprintMod
     val fold = s"aggregate($vecCol, CAST(0 AS BIGINT), (acc, x) -> " +
       s"pmod(acc * 31 + CAST(floor(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT), ${m}L))"
-    graft.Queries.multHashExpr(s"($fold)")
+    graft.queries.Common.multHashExpr(s"($fold)")
   }
 
   /** DuckDB mirror of [[vecHashExpr]] over the oracle's `v`
@@ -127,7 +127,7 @@ object IvfIndex {
     val fold = s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
       s"list_transform($vecCol, x -> CAST(floor(x * 1000000.0) AS BIGINT))), " +
       s"(acc, x) -> ((acc * 31 + x) % $m + $m) % $m)"
-    graft.Queries.multHashDuck(s"($fold)")
+    graft.queries.Common.multHashDuck(s"($fold)")
   }
 
   /** Bound the in-cell pair scan: cells larger than `targetCellSize`

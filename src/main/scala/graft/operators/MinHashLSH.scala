@@ -73,7 +73,7 @@ object MinHashLSH {
     * hash of that band's signature slice.
     *
     * The engine buckets by xxhash64(band, slot-string) while the DuckDB
-    * replay (Queries.minhashBandPairsSql) keys buckets by the literal
+    * replay (queries.Common.minhashBandPairsSql) keys buckets by the literal
     * slot string: an xxhash64 collision between two distinct slot
     * strings would merge buckets engine-side only (an extra candidate
     * pair, or a bucket pushed over the size cap, that the oracle does

@@ -66,7 +66,7 @@ object WriteLayout {
       // order differs across attempts — the exact bug class Spark fixed
       // in its own round-robin repartition (SPARK-23207), solved the
       // same way, at the same local-sort price.
-      .sortWithinPartitions(df.columns.map(col): _*)
+      .sortWithinPartitions(df.columns.toSeq.map(col): _*)
       .withColumn("__slot",
         pmod(xxhash64(spark_partition_id(), monotonically_increasing_id()),
           col("__files")))

@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.Common
+
 import org.apache.spark.sql.functions._
 
 /** Ops 310-312 (round-8 widening, effect sizes + long memory +
@@ -75,7 +77,7 @@ class LongMemoryOpsSpec extends GraftSuite {
   }
 
   test("q_entropy_rate: quantized conditional-entropy fold replays") {
-    val ev = Queries.events(spark, dir)
+    val ev = Common.events(spark, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       .collect().map(r => (r.getLong(0), r.getTimestamp(1).getTime * 1000 +
         r.getTimestamp(1).getNanos / 1000 % 1000, r.getLong(2), r.getString(3)))

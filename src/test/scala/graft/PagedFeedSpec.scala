@@ -13,8 +13,7 @@ class PagedFeedSpec extends GraftSuite {
     // build the page fixture through the registry query once, then read
     // the same directory directly for the plan-shape assertions
     SparkEntry.queries("q_paged_dsv2")(spark, dir).collect()
-    val tmpRoot = new java.io.File(
-      sys.props.getOrElse("graft.scratch.dir", sys.props("java.io.tmpdir")))
+    val tmpRoot = new java.io.File(sys.props("java.io.tmpdir"))
     val pageDir = tmpRoot.listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith(
         s"graft_dsv2_${spark.sparkContext.applicationId}"))

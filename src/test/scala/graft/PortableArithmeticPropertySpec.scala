@@ -1,12 +1,14 @@
 package graft
 
+import graft.queries.{Common, Text}
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.Prop.forAll
 
 /** Property tests for the engine-portable arithmetic ~30 oracles lean
-  * on: the multiplicative hash (`Queries.multHashExpr`/`multHashDuck` —
+  * on: the multiplicative hash (`Common.multHashExpr`/`multHashDuck` —
   * KMV, A/B bucketing, negative sampling), the ⌊ln·scale⌋ fixed-point
   * folds (token entropy, zipf fit, bigram LM, hill tail), and the
   * `(2n+d) div (2d)` round-half-up (raking, bootstrap CI, seasonal
@@ -21,7 +23,7 @@ class PortableArithmeticPropertySpec extends GraftSuite {
   import spark.implicits._
 
   private val M = BigInt(operators.TextAnalysis.FingerprintMod)
-  private val A = BigInt(Queries.HashMult)
+  private val A = BigInt(Common.HashMult)
 
   private def check(p: Prop, n: Int = 15): Unit = {
     val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(n), p)
@@ -39,7 +41,7 @@ class PortableArithmeticPropertySpec extends GraftSuite {
     val prop = forAll(Gen.listOfN(48, gen)) { xs0 =>
       val xs = (edges ++ xs0).distinct
       val got = xs.toDF("x")
-        .selectExpr("x", s"${Queries.multHashExpr("x")} AS h")
+        .selectExpr("x", s"${Common.multHashExpr("x")} AS h")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       xs.forall { x => got(x) == ((BigInt(x) * A) mod M).toLong }
     }
@@ -168,7 +170,7 @@ class PortableArithmeticPropertySpec extends GraftSuite {
     val cells = for (i <- 0 until 64; j <- 0 until 8) yield (i, j)
     val got = cells.toDF("i", "j")
       .selectExpr("i", "j",
-        s"pmod(CAST(i * 8 + j AS DECIMAL(38,0)) * ${Queries.HashMult}, " +
+        s"pmod(CAST(i * 8 + j AS DECIMAL(38,0)) * ${Common.HashMult}, " +
           s"${operators.TextAnalysis.FingerprintMod}) % 2 = 0 AS pos")
       .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getBoolean(2)).toMap
     cells.foreach { case (i, j) =>
@@ -246,7 +248,7 @@ class PortableArithmeticPropertySpec extends GraftSuite {
   }
 
   test("κ fold (q_cohen_kappa): the production expression matches BigInt under BOTH division semantics") {
-    // the PRODUCTION string (Queries.KappaPpmExpr) evaluated by Spark
+    // the PRODUCTION string (Text.KappaPpmExpr) evaluated by Spark
     // over adversarial (n, agree, rc) triples — agree ≤ n, rc ≤ n²,
     // including rc > n·agree (negative κ) and the rc = n² degenerate
     // guard-off domain (den > 0 enforced by construction: rc < n²
@@ -272,7 +274,7 @@ class PortableArithmeticPropertySpec extends GraftSuite {
         val got = Seq((n, agree, rc.toString))
           .toDF("n", "agree", "__rcs")
           .selectExpr("n", "agree", "CAST(__rcs AS DECIMAL(38,0)) AS __rc")
-          .selectExpr(s"${Queries.KappaPpmExpr} AS k")
+          .selectExpr(s"${Text.KappaPpmExpr} AS k")
           .collect().head.getLong(0)
         got == wantTrunc.toLong
       }

@@ -47,12 +47,12 @@ class RegistryConsistencySpec extends GraftSuite {
       .getOrElse(fail("README.md lost its registry count line"))
     assert(m.group(1).toInt == Queries.registry.size,
       s"README says ${m.group(1)} queries, registry has ${Queries.registry.size}")
-    assert(m.group(2).toInt == Queries.registry.count(_.oracle.nonEmpty),
-      s"README oracle count ${m.group(2)} vs ${Queries.registry.count(_.oracle.nonEmpty)}")
+    assert(m.group(2).toInt == Queries.registry.count(_.oracle.trim.nonEmpty),
+      s"README oracle count ${m.group(2)} vs ${Queries.registry.count(_.oracle.trim.nonEmpty)}")
   }
 
   test("every registry query has oracle SQL (no weaker rows-only checks)") {
-    val withoutOracle = Queries.registry.filter(_.oracle.isEmpty).map(_.key)
+    val withoutOracle = Queries.registry.filter(_.oracle.trim.isEmpty).map(_.key)
     assert(withoutOracle.isEmpty,
       s"queries without oracle SQL: $withoutOracle")
   }

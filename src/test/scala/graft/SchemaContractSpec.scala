@@ -32,7 +32,7 @@ class SchemaContractSpec extends GraftSuite {
     assert(f("value") == DoubleType)
     assert(isTimestampLike(f("ts")) || f("ts") == LongType,
       s"events.ts arrived as ${f("ts")} — neither a timestamp nor legacy " +
-        "ns-as-long; the events loader (Queries.events) must learn this encoding")
+        "ns-as-long; the events loader (graft.queries.Common.events) must learn this encoding")
     // and the loader must normalize whatever the file had to TimestampType
     assert(eventsTable(dir).schema("ts").dataType == TimestampType,
       "events loader no longer yields TimestampType — downstream time math breaks")

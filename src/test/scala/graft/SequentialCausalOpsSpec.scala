@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.Common
+
 import org.apache.spark.sql.functions._
 
 /** q_holt_forecast, q_rdd_cutoff, q_hard_negatives, q_sprt: driver-side
@@ -118,7 +120,7 @@ class SequentialCausalOpsSpec extends GraftSuite {
 
   test("SPRT arms replay; both boundaries reachable") {
     val Mod = graft.operators.TextAnalysis.FingerprintMod
-    val A = Queries.HashMult
+    val A = Common.HashMult
     def h(id: Long): Long = (BigInt(id) * A).mod(BigInt(Mod)).toLong % 1000000L
     val n = events.length.toLong
     val sPur = events.count(_._3 == "purchase").toLong

@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.Common
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,9 +29,9 @@ abstract class GraftSuite extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
   /** The events table with `ts` normalized to TimestampType — THE
-    * loader the queries use (Queries.events), not a copy: the spec
+    * loader the queries use (Common.events), not a copy: the spec
     * replays must see bit-identical rows to the queries under every
     * encoding the loader adapts to. */
   def eventsTable(dir: String): org.apache.spark.sql.DataFrame =
-    Queries.events(spark, dir)
+    Common.events(spark, dir)
 }

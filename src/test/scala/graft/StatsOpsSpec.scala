@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.Common
+
 import org.apache.spark.sql.functions._
 
 /** Ops 282-287 (round-8 widening, classical statistics + eval +
@@ -83,7 +85,7 @@ class StatsOpsSpec extends GraftSuite {
   }
 
   test("q_theil_sen equals the brute-force lower-median pair slope") {
-    val daily = Queries.events(spark, dir)
+    val daily = Common.events(spark, dir)
       .groupBy(to_date(col("ts")).as("d")).agg(count(lit(1)).as("c"))
       .collect().map(r => (r.getDate(0).toLocalDate.toEpochDay, r.getLong(1)))
       .sortBy(_._1)

@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.Ann
+
 import org.apache.spark.sql.functions._
 
 /** Ops 224-233 (round-8 widening II): shard balance, calibration bins,
@@ -423,7 +425,7 @@ class TrainingOpsSpec extends GraftSuite {
   }
 
   test("q_ann_ndcg: weights are the declared discounts; perfect recall gives ndcg 1") {
-    val w = Queries.NdcgW
+    val w = Ann.NdcgW
     assert(w == Seq(1000000000L, 630929753L, 500000000L, 430676558L, 386852807L))
     val got = SparkEntry.queries("q_ann_ndcg")(spark, dir)
       .collect().map(r => (r.getLong(1), r.getLong(2)))

@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.Common
+
 import org.apache.spark.sql.functions._
 
 /** q_dsir, q_span_corruption, q_tokens_per_byte: driver-side replays of
@@ -56,7 +58,7 @@ class TrainingSelectionOpsSpec extends GraftSuite {
   }
 
   test("span-corruption plan replays; mask rate lands near 15%") {
-    val A = Queries.HashMult
+    val A = Common.HashMult
     def masked(docId: Long, i: Long): Boolean = {
       // squared multiplicative hash — the operator's affine-decorrelation
       val h = (BigInt(docId * 1000000L + i) * A).mod(BigInt(Mod))

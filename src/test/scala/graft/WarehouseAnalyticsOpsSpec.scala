@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.Common
+
 import org.apache.spark.sql.functions._
 
 /** Ops 313-316 (round-8 widening, warehouse/econometrics): invoice
@@ -83,7 +85,7 @@ class WarehouseAnalyticsOpsSpec extends GraftSuite {
   }
 
   test("q_stickiness: ratio replays and is bounded by [1/days, 1]") {
-    val ev = Queries.events(spark, dir)
+    val ev = Common.events(spark, dir)
       .select(date_format(col("ts"), "yyyy-MM").as("m"),
         date_format(col("ts"), "yyyy-MM-dd").as("d"), col("user_id"))
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))

@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.Common
+
 import org.apache.spark.sql.functions._
 
 /** Ops 345-348 (round-8 widening, web-corpus/sketch/feature-prep):
@@ -66,8 +68,8 @@ class WebCorpusFeatureOpsSpec extends GraftSuite {
   }
 
   test("q_bloom_fpr: bit-set replay; fp count matches; probes non-empty") {
-    val hm = BigInt(Queries.HashMult)
-    val hm2 = BigInt(Queries.HashMult2)
+    val hm = BigInt(Common.HashMult)
+    val hm2 = BigInt(Common.HashMult2)
     val md = BigInt("36028797018963913")
     val members = spark.read.parquet(s"$dir/orders.parquet")
       .select("o_custkey").distinct().collect().map(_.getLong(0))

@@ -70,7 +70,7 @@ DK = mx("documents", "doc_id")
 VK = mx("embeddings", "vec_id")
 assert DK * K < 100_000_000, "doc_ids must stay below the dupCorpus shift"
 assert VK * K < 100_000_000, "vec_ids must stay below the dupCorpus shift"
-# q_semdedup (Queries.scala) and its oracle plant duplicates at
+# q_semdedup (graft/queries/Lsh.scala) and its oracle plant duplicates at
 # vec_id + 1e7 — a generation whose vec ids reach 1e7 would silently
 # re-introduce the round-8 id-collision divergence the 1e8 dupCorpus
 # shift fixed for doc ids

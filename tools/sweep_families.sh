@@ -21,8 +21,11 @@
 #   tools/sweep_families.sh <sfDir> <tag> [reps]
 #
 # Writes target/sweep_<tag>_<family>.out/.err (+ _full.json per-query
-# record) per family. Families are the Bench.scala sets; "other20" is
-# the 20 slowest non-family queries of the committed sf0.1 record.
+# record) per family. A family name is passed to Bench as is
+# (SPARK_GRAFT_BENCH_ONLY expands it from the registry's families:
+# feeder lsh ann graph series text stats); "other20" is a measured set,
+# the 20 slowest queries of the committed sf0.1 record outside the
+# five families Bench had then.
 set -uo pipefail
 cd "$(dirname "$0")/.."
 SF_DIR="${1:?sfDir}"
@@ -36,10 +39,6 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 
-ANN="q_ann_topk,q_ann_lsh,q_ann_ivf,q_ann_pq,q_knn_classify,q_knn_graph,q_embed_centroid,q_embed_norm_audit,q_kmeans_train,q_ann_recall_audit,q_random_projection,q_int8_quant_audit,q_embedding_drift,q_cluster_keywords,q_ann_ndcg"
-SERIES="q_events_window,q_sessionize,q_session_window_fn,q_moving_sum,q_hopping_window,q_gap_fill,q_rolling_quantile,q_rolling_active,q_ewma,q_autocorr,q_seasonality,q_seasonal_decompose,q_drawdown,q_peak_detect,q_changepoint,q_linear_fit,q_burstiness,q_mom_growth,q_runs_test,q_interarrival,q_late_arrival,q_interval_coverage,q_throttle,q_streaks,q_time_weighted_avg,q_cumulative_distinct,q_event_downsample,q_stream_dedup,q_stream_join,q_incremental_agg,q_heavy_change,q_seasonal_naive_backtest,q_coverage_gap,q_markov_backtest,q_kaplan_meier,q_dp_release"
-GRAPH="q_pagerank,q_kcore,q_triangle,q_assortativity,q_copurchase,q_local_clustering,q_link_predict,q_transition_matrix,q_dedup_clusters,q_canonical_pick"
-LSH="q_dedup_exact,q_dedup_minhash,q_dedup_simhash,q_ngram_jaccard,q_dedup_embed,q_containment,q_cross_dedup,q_line_dedup,q_dup_spans,q_winnow,q_decontaminate,q_shingle_novelty,q_semdedup,q_doc_fingerprint,q_minhash_est_err,q_split_leakage,q_dedup_cluster_profile,q_media_dedup,q_dedup_threshold_curve,q_dedup_method_agreement"
 OTHER20="q_jonckheere,q_pca_deflate,q_fuzzy_phone,q_lof,q_bleu,q_bipartite_project,q_greedy_cover,q_matrix_profile,q_abc_xyz,q_perplexity_bucket,q_assoc_rules,q_hyperanf,q_gearys_c,q_brand_triples,q_kneser_ney,q_modularity,q_moran_i,q_caliper_match,q_rich_club,q_lpa_communities"
 
 run_family() {
@@ -62,11 +61,8 @@ run_family() {
 
 for fam in ${SWEEP_FAMILIES:-ann series other20 graph lsh}; do
   case "$fam" in
-    ann) run_family ann "$ANN" ;;
-    series) run_family series "$SERIES" ;;
-    graph) run_family graph "$GRAPH" ;;
-    lsh) run_family lsh "$LSH" ;;
     other20) run_family other20 "$OTHER20" ;;
+    *) run_family "$fam" "$fam" ;;
   esac
 done
 echo "SWEEP_${TAG}_DONE"
