@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Month-offset date repair (add_q5011_2t.py).
@@ -13,11 +14,19 @@ import org.apache.spark.sql.functions._
   * (add_q5011_2t.py:58-103, month `+1` formatted `%02d`, intentionally NOT
   * wrapping past 12, mirroring the reference exactly).
   *
-  * Spark re-expression: the per-file decision is a grouped aggregate
-  * (`min_by` picks the first row per group without any sort of the full
-  * data), joined back to the rows — one shuffle on the group key plus one
-  * broadcastable join; no per-file driver loop, so a million "files"
-  * repair in one job.
+  * Spark re-expression: one read, one shuffle, no join. The per-file
+  * decision is two window aggregates over `partitionBy(group)` (`min_by`
+  * picks each file's first row, so rows are never ordered within a
+  * file), evaluated in a single Window node next to the rows they flag;
+  * no per-file driver loop, so a million "files" repair in one job.
+  * Reading the input once matters when it is a live feed: every page is
+  * fetched once per action, and the flags always describe the rows they
+  * are applied to.
+  *
+  * Trade-off: the window shuffles and sorts every input row by group,
+  * where a grouped aggregate joined back would shuffle one row per group
+  * but read the input twice. A skewed file becomes one (spillable)
+  * window partition.
   */
 object DateRepair {
 
@@ -36,25 +45,30 @@ object DateRepair {
     *   - null recruiting date → interview date formatted ISO;
     *   - flagged group → month-bumped recruiting date.
     *
+    * Rows whose group is NULL belong to no file: they keep the per-row
+    * fill but are never month-bumped. The output has `groupCol` first,
+    * then the other input columns in their input order.
+    *
     * @param ivTsCol  interview timestamp column (already parsed)
     * @param orderCol defines "first" within a group (file row order)
     */
   def repair(df: DataFrame, groupCol: String, orderCol: String,
              recruitCol: String, ivTsCol: String): DataFrame = {
-    val flags = df.groupBy(col(groupCol)).agg(
-      expr(s"month(min_by($ivTsCol, $orderCol))").as("__iv_month"),
-      expr(s"min_by(cast(substring($recruitCol, 6, 2) as int), $orderCol) " +
-           s"FILTER (WHERE $recruitCol IS NOT NULL)").as("__rec_month"))
-      .withColumn("__month_incorrect",
-        coalesce(col("__rec_month") =!= col("__iv_month"), lit(false)))
-      .select(col(groupCol), col("__month_incorrect"))
-
-    df.join(broadcast(flags), Seq(groupCol))
-      .withColumn(recruitCol,
+    val file = Window.partitionBy(col(groupCol))
+    val ivMonth = month(min_by(col(ivTsCol), col(orderCol)).over(file))
+    // min_by skips a NULL ordering, so this is the first row that HAS a
+    // recruiting date (SQL: ... FILTER (WHERE recruit IS NOT NULL))
+    val recMonth = min_by(substring(col(recruitCol), 6, 2).cast("int"),
+      when(col(recruitCol).isNotNull, col(orderCol))).over(file)
+    val monthIncorrect =
+      col(groupCol).isNotNull && coalesce(recMonth =!= ivMonth, lit(false))
+    val resolver = df.sparkSession.sessionState.conf.resolver
+    val rest = df.columns.filterNot(resolver(_, groupCol))
+    df.withColumn(recruitCol,
         when(col(recruitCol).isNull,
           date_format(col(ivTsCol), "yyyy-MM-dd HH:mm:ss"))
-          .when(col("__month_incorrect"), bumpMonth(col(recruitCol)))
+          .when(monthIncorrect, bumpMonth(col(recruitCol)))
           .otherwise(col(recruitCol)))
-      .drop("__month_incorrect")
+      .select((col(groupCol) +: rest.map(col)): _*)
   }
 }

@@ -197,6 +197,15 @@ object JdbcFeed {
     } finally conn.close()
   }
 
+  /** [[updateKeyed]]'s input: the value columns then the key, hash
+    * partitioned on the key into `numWriters` partitions and sorted by
+    * key within each. */
+  def prepareUpdate(updates: DataFrame, key: String, valueCols: Seq[String],
+                    numWriters: Int): DataFrame =
+    updates.select((valueCols :+ key).map(col): _*)
+      .repartition(numWriters, col(key))
+      .sortWithinPartitions(key)
+
   /** Distributed keyed UPDATE — the reference's one-UPDATE-per-row driver
     * loop (add_q5010.py:33-40) re-expressed so EXECUTORS apply the
     * updates: each partition opens one connection and runs a prepared
@@ -204,26 +213,32 @@ object JdbcFeed {
     * PER BATCH — so a mid-partition task failure leaves earlier batches
     * durable and the Spark retry re-applies the partition. Updates must
     * therefore be idempotent (SET to absolute values, the reference's
-    * shape), NOT read-modify-write increments. Row order inside a
-    * partition is preserved; cross-partition commit order is arbitrary,
-    * so callers needing last-write-wins must collapse duplicate keys
-    * FIRST (`Upsert.latestPerKey` semantics) — exactly the contract
-    * `q_upsert_q5010` proves on the DataFrame side.
+    * shape), NOT read-modify-write increments. Rows of one key meet in
+    * one partition but in no defined order, so callers needing
+    * last-write-wins must collapse duplicate keys FIRST
+    * (`Upsert.latestPerKey` semantics) — exactly the contract
+    * `q_upsert_q5010` proves on the DataFrame side. Per-batch
+    * commits stay: a retried partition re-applies the same absolute
+    * values, so staging the whole load (as [[mergeKeyed]] does) would buy
+    * no correctness here.
     *
-    * Scale shape: updates RANGE-partition on the key across `numWriters`
-    * connections, so concurrent writers hold disjoint lock ranges — a
-    * hash repartition interleaves every writer's keys across the table
-    * and deadlocks under row/page locking (observed live on Derby). The
-    * database sees `numWriters` concurrent batched statements, not 10k
-    * serial round-trips; the throughput knob is (numWriters, batchSize) —
-    * the same two the reference hardcodes to (1, 1). Each JDBC batch
-    * commits as its own transaction (the reference's per-row autocommit,
-    * scaled to batches): lock hold time stays bounded by `batchSize`
-    * however large a partition is.
+    * Scale shape ([[prepareUpdate]]): updates HASH-partition on the key
+    * across `numWriters` connections and sort by key within each
+    * partition. Writers hold disjoint key sets, and each takes its row
+    * locks in ascending key order, so no lock-wait cycle can form between
+    * them. Hash partitioning needs no sampling job, so the input is read
+    * once (a range repartition samples it first — one more read of a
+    * paged feed). The database sees `numWriters` concurrent batched
+    * statements, not 10k serial round-trips; the throughput knob is
+    * (numWriters, batchSize) — the same two the reference hardcodes to
+    * (1, 1). Lock hold time stays bounded by `batchSize` however large a
+    * partition is.
     *
     * The target table needs an index on `key` — without one every UPDATE
     * is a locking full scan and concurrent writers deadlock regardless of
-    * partitioning (true of any RDBMS at any scale).
+    * partitioning (observed live on Derby; true of any RDBMS at any
+    * scale). Against an indexed table, hash-partitioned writers do not
+    * deadlock: JdbcFeedSpec runs 4 of them over interleaved keys.
     */
   def updateKeyed(updates: DataFrame, url: String, table: String,
                   key: String, valueCols: Seq[String],
@@ -231,8 +246,7 @@ object JdbcFeed {
     require(valueCols.nonEmpty, "updateKeyed needs at least one value column")
     val sql = s"UPDATE $table SET ${valueCols.map(c => s"$c = ?").mkString(", ")} " +
       s"WHERE $key = ?"
-    updates.select((valueCols :+ key).map(col): _*)
-      .repartitionByRange(numWriters, col(key))
+    prepareUpdate(updates, key, valueCols, numWriters)
       .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
         if (rows.nonEmpty) {
           val conn = java.sql.DriverManager.getConnection(url)

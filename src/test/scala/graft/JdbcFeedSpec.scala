@@ -93,6 +93,50 @@ class JdbcFeedSpec extends GraftSuite {
     assert(readBack(url).filter(col("STATUS").isin("a", "b")).count() == 2)
   }
 
+  test("updateKeyed: 4 hash-partitioned writers over interleaved keys never deadlock") {
+    // Derby answers a lock-wait cycle with SQLState 40001 within its
+    // deadlock timeout, so a writer layout that can deadlock fails here
+    // instead of hanging
+    val url = freshDb("concurrent")
+    val n = 800
+    val batch = (1L to n.toLong).map(i => (i, "r0", 0.0)).toDF("id", "status", "amount")
+    JdbcFeed.append(batch, url, "feed", numWriters = 4, batchSize = 64)
+    // a multiplicative permutation spreads consecutive keys over every
+    // input partition, so each writer's keys interleave across the table
+    val order = (0 until n).map(i => (i.toLong * 7919L) % n + 1L)
+    (1 to 20).foreach { round =>
+      val fixes = order.map(i => (i, s"r$round", i * round.toDouble))
+        .toDF("id", "status", "amount").repartition(6)
+      JdbcFeed.updateKeyed(fixes, url, "feed", "id", Seq("status", "amount"),
+        numWriters = 4, batchSize = 8)
+      val back = readBack(url).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
+      assert(back.length == n, s"round $round")
+      back.foreach { case (id, status, amount) =>
+        assert(status == s"r$round" && amount == id * round.toDouble,
+          s"round $round id=$id: ($status, $amount)")
+      }
+    }
+  }
+
+  test("prepareUpdate: hash partitioning on the key plus a sort, no range partitioning") {
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val updates = (1L to 10L).map(i => (i, "s", 1.0)).toDF("id", "status", "amount")
+    val plan = JdbcFeed.prepareUpdate(updates, "id", Seq("status", "amount"), 3)
+      .queryExecution.sparkPlan
+    val parts = plan.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+    assert(parts.collect { case h: HashPartitioning
+      if h.numPartitions == 3 && h.expressions.flatMap(_.references.map(_.name)) == Seq("id") => h
+    }.size == 1, s"expected one hash exchange on id into 3 partitions:\n$plan")
+    assert(!parts.exists(_.isInstanceOf[RangePartitioning]), s"range partitioning:\n$plan")
+    val sorts = plan.collect { case s: SortExec => s }
+    assert(sorts.size == 1 && !sorts.head.global &&
+      sorts.head.sortOrder.flatMap(_.references.map(_.name)) == Seq("id"),
+      s"expected one per-partition sort on id:\n$plan")
+  }
+
   test("mergeKeyed upserts: both MERGE arms apply, staging table is dropped") {
     val url = freshDb("merge")
     val batch = (1L to 40L).map(i => (i, "old", i.toDouble)).toDF("id", "status", "amount")

@@ -237,43 +237,85 @@ class PagedFeedSpec extends GraftSuite {
     graft.sources.v2.LoopbackPageServer.failFirst(tmp.getAbsolutePath, 0)
   }
 
-  test("HTTP transport: one DataFrame lists its pages once across all its actions") {
-    // 12 pages of a corrections-shaped feed: DateRepair needs a group,
-    // an order, a recruit date and an interview timestamp
-    val nPages = 12
-    val rowsPerPage = 40
-    val tmp = java.nio.file.Files.createTempDirectory("graft_http_listing").toFile
+  // 12 pages of a corrections-shaped feed: DateRepair needs a group, an
+  // order, a recruit date and an interview timestamp
+  private val corrPages = 12
+  private val corrRowsPerPage = 40
+
+  private def correctionsFeed(tag: String): (String, org.apache.spark.sql.DataFrame) = {
+    val tmp = java.nio.file.Files.createTempDirectory(s"graft_http_$tag").toFile
     tmp.deleteOnExit()
-    (0 until nPages).foreach { p =>
+    (0 until corrPages).foreach { p =>
       val w = new java.io.PrintWriter(
         new java.io.File(tmp, f"page-$p%05d.tsv"), "UTF-8")
-      (0 until rowsPerPage).foreach { i =>
-        val id = p * rowsPerPage + i
+      (0 until corrRowsPerPage).foreach { i =>
+        val id = p * corrRowsPerPage + i
         val rec = if (id % 7 == 0) "\\N" else f"2024-${1 + id % 3}%02d-10 09:00:00"
         w.println(s"$id\t${id % 5}\t$i\t$rec\t2024-02-15 12:00:00")
       }
       w.close()
     }
     val base = graft.sources.v2.LoopbackPageServer.serve(tmp.getAbsolutePath)
-    val df = spark.read.format("graft-paged")
+    (tmp.getAbsolutePath, spark.read.format("graft-paged")
       .schema("id BIGINT, file_id BIGINT, row_no BIGINT, q5011 STRING, ivts STRING")
-      .option("dir", base).load()
-    val total = nPages * rowsPerPage
-    assert(df.count() == total)
-    // an aggregate plus a broadcast join over the same DataFrame
-    val repaired = graft.operators.DateRepair.repair(
+      .option("dir", base).load())
+  }
+
+  private def repairCorrections(df: org.apache.spark.sql.DataFrame) =
+    graft.operators.DateRepair.repair(
       df.withColumn("ivts_t", to_timestamp(col("ivts"))),
       "file_id", "row_no", "q5011", "ivts_t")
-    assert(repaired.collect().length == total)
+
+  test("HTTP transport: one DataFrame lists its pages once across all its actions") {
+    val (dir, df) = correctionsFeed("listing")
+    val total = corrPages * corrRowsPerPage
+    assert(df.count() == total)
+    // a window over the same DataFrame
+    assert(repairCorrections(df).collect().length == total)
     // range partitioning samples the source in a job of its own
     val perPart = df.repartitionByRange(4, col("id")).rdd
       .mapPartitions(it => Iterator(it.size)).collect()
     assert(perPart.sum == total)
-    val req = graft.sources.v2.LoopbackPageServer.requests(tmp.getAbsolutePath)
+    val req = graft.sources.v2.LoopbackPageServer.requests(dir)
     // one listing: the manifest plus one 1-byte size probe per page
-    assert(req.manifest == 1 && req.ranged == nPages,
-      s"expected 1 manifest GET and $nPages size probes, got $req")
-    assert(req.full >= nPages, s"pages were never read: $req")
+    assert(req.manifest == 1 && req.ranged == corrPages,
+      s"expected 1 manifest GET and $corrPages size probes, got $req")
+    assert(req.full >= corrPages, s"pages were never read: $req")
+  }
+
+  test("page fetches: DateRepair plus one action GETs every page once") {
+    val (dir, df) = correctionsFeed("repair_once")
+    val repaired = repairCorrections(df).collect()
+    assert(repaired.length == corrPages * corrRowsPerPage)
+    val req = graft.sources.v2.LoopbackPageServer.requests(dir)
+    assert(req.full == corrPages,
+      s"expected $corrPages full page GETs for one repaired action, got $req")
+  }
+
+  test("page fetches: updateKeyed from a paged feed GETs every page once") {
+    val (dir, df) = correctionsFeed("update_once")
+    System.setProperty("derby.system.home", sys.props("java.io.tmpdir"))
+    val url = "jdbc:derby:memory:paged_update_once"
+    val conn = java.sql.DriverManager.getConnection(url + ";create=true")
+    try {
+      val st = conn.createStatement()
+      st.executeUpdate("CREATE TABLE corr (id BIGINT NOT NULL PRIMARY KEY, row_no BIGINT)")
+      (0L until (corrPages * corrRowsPerPage).toLong).grouped(100).foreach { ids =>
+        st.executeUpdate("INSERT INTO corr VALUES " + ids.map(i => s"($i, -1)").mkString(", "))
+      }
+    } finally conn.close()
+    graft.sources.JdbcFeed.updateKeyed(df, url, "corr", "id", Seq("row_no"),
+      numWriters = 4, batchSize = 50)
+    val req = graft.sources.v2.LoopbackPageServer.requests(dir)
+    assert(req.full == corrPages,
+      s"expected $corrPages full page GETs for one keyed update, got $req")
+    val check = java.sql.DriverManager.getConnection(url)
+    try {
+      val rs = check.createStatement().executeQuery(
+        s"SELECT COUNT(*) FROM corr WHERE row_no = MOD(id, $corrRowsPerPage)")
+      rs.next()
+      assert(rs.getLong(1) == corrPages * corrRowsPerPage, "updates not applied")
+    } finally check.close()
   }
 
   // ---- async export lifecycle (feeder.py:49-122): auth, poll budget,
