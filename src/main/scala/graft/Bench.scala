@@ -64,14 +64,7 @@ object Bench {
     // real cluster pulls, so large-SF sweeps pass a higher count
     // (SPARK_GRAFT_SHUFFLE_PARTITIONS, resolved inside GraftSession)
     def buildSession(): SparkSession = {
-      val s = GraftSession.builder(cpus, cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        // SPARK_GRAFT_CODEC=zstd for large-SF sweeps on small local
-        // disks: the dedup families shuffle long-hash shingle arrays that
-        // zstd packs ~2x tighter than lz4 (committed records keep lz4)
-        .config("spark.io.compression.codec",
-          sys.env.getOrElse("SPARK_GRAFT_CODEC", "lz4"))
-        .getOrCreate()
+      val s = GraftSession.builder(cpus, cpus).getOrCreate()
       s.sparkContext.setLogLevel("WARN")
       // The driver reads the LAST stdout line as the bench record; WARN
       // spam from known-benign sources (bounded driver-side windows, rep-2
@@ -87,72 +80,43 @@ object Bench {
       GraftSession.warmUp(s, sfDir)
       s
     }
-    var spark = buildSession()
-    // One query's fatal error (executor OOM, INTERNAL_ERROR) can stop the
-    // whole local SparkContext; without recovery every later query in the
-    // run records a bogus "Cannot call methods on a stopped SparkContext"
-    // instead of a real reading (the r13 sf100 graph/other20 artifacts).
-    // The failed query keeps its real error; the NEXT query gets a fresh
-    // session.
-    var revived = 0
-    def reviveIfDead(): Unit =
-      if (spark.sparkContext.isStopped) {
-        System.err.println("[bench] SparkContext died — rebuilding session")
-        try spark.stop() catch { case _: Throwable => () }
-        spark = buildSession()
-        revived += 1
-      }
-    val all = SparkEntry.queries
+    // A query whose fatal error stops the context keeps its real error;
+    // the runner rebuilds the session for the NEXT query, so it does not
+    // record a bogus "stopped SparkContext" (the r13 sf100 graph/other20
+    // artifacts). The record's `revived` counts those rebuilds.
+    val runner = new QueryRunner(sfDir, () => buildSession())
     val fullSet =
       if (SparkEntry.benchQueries.nonEmpty) SparkEntry.benchQueries
-      else all.keys.toSeq.sorted
+      else SparkEntry.queries.keys.toSeq.sorted
     // SPARK_GRAFT_BENCH_ONLY=q_a,series restricts the run for targeted
     // profiling without paying for the full registry.
     val keys = selectKeys(fullSet, sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     // Each query runs REPS times and reports the min — a single rep on a
     // noisy host can read 10× hot (CPU steal lands on one run), and the
-    // min survives a judge re-run. Honest reps: the session cache is
-    // cleared first, or rep 2 would reuse rep 1's persisted
-    // intermediates (CacheManager matches by canonicalized plan) and the
-    // min would skip real work.
+    // min survives a judge re-run. Honest reps: the runner releases what
+    // each rep cached, or rep 2 would reuse rep 1's persisted
+    // intermediates and the min would skip real work.
     // SPARK_GRAFT_BENCH_REPS=1 for very-large-SF family sweeps where a
     // second rep doubles hours of wall-clock and the goal is
     // Spark-clean + coarse family times, not a committable floor.
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").flatMap(_.toIntOption)
       .filter(_ >= 1).getOrElse(2)
-    // Per-rep cleanup depth. The session cache is ALWAYS cleared (honest
-    // reps — CacheManager would otherwise hand rep 2 rep 1's persisted
-    // intermediates). SPARK_GRAFT_REP_GC additionally:
-    //   "1" (default for large-SF sweeps, set by tools/sweep_families.sh):
-    //       unpersist leaked RDD blocks AND force a GC so ContextCleaner
-    //       DELETES finished queries' shuffle files now — at sf100 the
-    //       lingering files of completed queries ate the next query's
-    //       spill headroom (r13 disk-wall postmortem).
-    //   "0" (default): clearCache only. The forced GC is NOT free at
-    //       small SFs: it triggers ContextCleaner shuffle-file deletion
-    //       that runs CONCURRENT with the next timed region — the r13
-    //       committed sf0.1 record regressed 30% (454 s vs 349 s) with
-    //       the per-rep GC on, and the r14 A/B isolated it as the cause.
-    //       At sf0.1 the whole run's shuffle files fit the disk, so the
-    //       eager cleanup buys nothing there.
+    // SPARK_GRAFT_REP_GC=1 (set by tools/sweep_families.sh for large-SF
+    // sweeps) forces a GC after every rep, outside the timed window, so
+    // ContextCleaner DELETES finished queries' shuffle files now — at
+    // sf100 the lingering files of completed queries ate the next
+    // query's spill headroom (r13 disk-wall postmortem). Off by default:
+    // the deletion runs CONCURRENT with the next timed region — the r13
+    // committed sf0.1 record regressed 30% (454 s vs 349 s) with the
+    // per-rep GC on, and the r14 A/B isolated it as the cause. At sf0.1
+    // the whole run's shuffle files fit the disk, so it buys nothing.
     val repGc = sys.env.getOrElse("SPARK_GRAFT_REP_GC", "0") == "1"
-    def cleanupBetweenReps(): Unit = {
-      spark.catalog.clearCache()
-      if (repGc) {
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-        System.gc()
-      }
-    }
-    // One timed rep of `name` into the noop sink, on a live session with
-    // the cache cleared; the query's own failure comes back as Left.
+    // One rep of `name`: build start → noop-sink end, on a live session;
+    // the query's own failure comes back as Left.
     def timedRep(name: String): Either[Throwable, Double] = {
-      reviveIfDead()
-      cleanupBetweenReps()
-      val t0 = System.nanoTime()
-      try {
-        all(name)(spark, sfDir).write.mode("overwrite").format("noop").save()
-        Right((System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable => Left(e) }
+      val r = runner.run(name)(QueryRunner.noop)
+      if (repGc) System.gc()
+      r.result.map(_ => r.build_s + r.use_s)
     }
     var times = Vector.empty[(String, Double)]
     var raws = Vector.empty[(String, Seq[Double])]
@@ -292,7 +256,7 @@ object Bench {
         .map { case (k, v) => s"${jsonString(k)}:${ms(v)}" }.mkString("{", ",", "}")
       val e = errs.take(errK).map { case (k, v) => s"${jsonString(k)}:${jsonString(v.take(60))}" }
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","reps":$reps,"n":${times.size},"n_err":${errs.size},"mean_s":${ms(mean)},"queries":$q,"families":$fams,"err":$e,"sf":${jsonString(sfDir)},"psi_avg300_start":$psiStart,"psi_avg300_end":$psiEnd,"rep_inversions":$inverted,"tail_retimed":${tailSet.size},"tail_improved":$tailImproved,"psi_noisy":$noisy,"rep_gc":$repGc,"revived":$revived}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","reps":$reps,"n":${times.size},"n_err":${errs.size},"mean_s":${ms(mean)},"queries":$q,"families":$fams,"err":$e,"sf":${jsonString(sfDir)},"psi_avg300_start":$psiStart,"psi_avg300_end":$psiEnd,"rep_inversions":$inverted,"tail_retimed":${tailSet.size},"tail_improved":$tailImproved,"psi_noisy":$noisy,"rep_gc":$repGc,"revived":${runner.rebuilds}}"""
     }
     // Hard size backstop: if (pathologically long names / error text) the
     // top-10 form still exceeds ~1.8 KB, degrade to top-3/1-err — the
@@ -310,7 +274,7 @@ object Bench {
       val fq = times.map { case (k, v) => s"${jsonString(k)}:$v" }.mkString("{", ",", "}")
       val fr = raws.map { case (k, v) => s"${jsonString(k)}:${v.mkString("[", ",", "]")}" }.mkString("{", ",", "}")
       val fe = errs.map { case (k, v) => s"${jsonString(k)}:${jsonString(v)}" }.mkString("{", ",", "}")
-      val full = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$fq,"queries_reps":$fr,"families":$fams,"err":$fe,"sf":${jsonString(sfDir)},"psi_avg300_start":$psiStart,"psi_avg300_end":$psiEnd,"rep_inversions":$inverted,"tail_retimed":${tailSet.size},"tail_improved":$tailImproved,"psi_noisy":$noisy,"rep_gc":$repGc,"revived":$revived}"""
+      val full = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$fq,"queries_reps":$fr,"families":$fams,"err":$fe,"sf":${jsonString(sfDir)},"psi_avg300_start":$psiStart,"psi_avg300_end":$psiEnd,"rep_inversions":$inverted,"tail_retimed":${tailSet.size},"tail_improved":$tailImproved,"psi_noisy":$noisy,"rep_gc":$repGc,"revived":${runner.rebuilds}}"""
       java.nio.file.Files.write(java.nio.file.Paths.get("target/bench_full.json"),
         full.getBytes("UTF-8"))
     } catch {
@@ -321,7 +285,7 @@ object Bench {
     }
     // stop FIRST, print LAST: SparkContext shutdown can log to stdout,
     // and the summary line must be the final line the driver tails
-    spark.stop()
+    runner.spark.stop()
     println(line)
     System.out.flush()
   }

@@ -14,6 +14,10 @@ import org.apache.spark.sql.SparkSession
   * session built here and that every `main` under src/main references
   * this builder, so a refactor that drops either fails `sbt test`, not
   * the next hundred-terabyte run.
+  *
+  * Each of those mains then runs registry queries on its session through
+  * `QueryRunner`, and so does PlanContractSpec, on an AQE-off sibling of
+  * the test session.
   */
 object GraftSession {
 
@@ -48,9 +52,8 @@ object GraftSession {
   def shufflePartitions(default: String): String =
     sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", default)
 
-  /** Builder with the shared config applied; callers add their own
-    * entry-point-specific settings (AQE, codec, master overrides) on
-    * top before `getOrCreate()`. */
+  /** Builder with the shared config applied; callers may add their own
+    * entry-point-specific settings on top before `getOrCreate()`. */
   def builder(cores: String, defaultPartitions: String): SparkSession.Builder = {
     val base = SparkSession.builder()
       .master(s"local[$cores]")

@@ -2,10 +2,10 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 
-import graft.{GraftSession, SparkEntry}
+import graft.{GraftSession, QueryRunner, SparkEntry}
 
 /** One inspection main for plan review and local timing:
   *
@@ -64,8 +64,9 @@ object Inspect {
          |(`HashAggregate` x2) aggregation, `Window` only over bounded
          |row sets.
          |""".stripMargin
+    val runner = new QueryRunner(sfDir, () => spark)
     head + keys.map { k =>
-      val fmt = orFailure(explain(spark, sfDir, k, "formatted"))
+      val fmt = orFailure(runner.run(k)(explain("formatted")))
       s"\n## $k\n\n```\n${fmt.linesIterator.take(120).mkString("\n")}\n```\n"
     }.mkString
   }
@@ -76,42 +77,41 @@ object Inspect {
     * `simple` shows the `*(N)` codegen span prefixes `formatted` strips. */
   def plan(spark: SparkSession, sfDir: String, keys: Seq[String],
            mode: String = "formatted"): String =
-    sections(keys)(k => explain(spark, sfDir, k, mode))
+    sections(spark, sfDir, keys)(explain(mode))
 
   /** Runs each query into the `noop` sink and returns its post-AQE final
     * plan — the only view with WholeStageCodegen spans under AQE, whose
     * pre-execution plans carry no codegen stages. */
   def executed(spark: SparkSession, sfDir: String, keys: Seq[String]): String =
-    sections(keys) { k =>
-      val df = SparkEntry.queries(k)(spark, sfDir)
-      df.write.mode("overwrite").format("noop").save()
+    sections(spark, sfDir, keys) { df =>
+      QueryRunner.noop(df)
       df.queryExecution.executedPlan.toString
     }
 
-  /** Per key, `reps` (build, action) second pairs after one warm-up;
-    * each rep clears the cache first, as Bench does. Build includes jobs
-    * the query runs while being built; action is Bench's `noop` write. */
+  /** Per key, `reps` (build, action) second pairs after one warm-up,
+    * each rep starting from a released cache, as Bench's do. Build
+    * includes jobs the query runs while being built; action is Bench's
+    * `noop` write. */
   def time(spark: SparkSession, sfDir: String, keys: Seq[String],
            reps: Int): Seq[(String, Seq[(Double, Double)])] = {
     GraftSession.warmUp(spark, sfDir)
-    def secs[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
+    val runner = new QueryRunner(sfDir, () => spark)
     keys.map(k => k -> (1 to reps).map { _ =>
-      spark.catalog.clearCache()
-      val (df, build) = secs(SparkEntry.queries(k)(spark, sfDir))
-      (build, secs(df.write.mode("overwrite").format("noop").save())._2)
+      val r = runner.run(k)(QueryRunner.noop)
+      r.result.fold(throw _, _ => (r.build_s, r.use_s))
     })
   }
 
-  private def explain(spark: SparkSession, sfDir: String, key: String, mode: String): String =
-    SparkEntry.queries(key)(spark, sfDir).queryExecution.explainString(ExplainMode.fromString(mode))
+  private def explain(mode: String)(df: DataFrame): String =
+    df.queryExecution.explainString(ExplainMode.fromString(mode))
 
   // one broken plan must not blank the rest — record it and go on
-  private def orFailure(f: => String): String =
-    try f catch { case e: Throwable => s"EXPLAIN FAILED: ${e.getMessage}" }
+  private def orFailure(r: QueryRunner.Run[String]): String =
+    r.result.fold(e => s"EXPLAIN FAILED: ${e.getMessage}", identity)
 
-  private def sections(keys: Seq[String])(f: String => String): String =
-    keys.map(k => s"\n===== $k =====\n${orFailure(f(k))}").mkString("\n")
+  private def sections(spark: SparkSession, sfDir: String, keys: Seq[String])(
+      use: DataFrame => String): String = {
+    val runner = new QueryRunner(sfDir, () => spark)
+    keys.map(k => s"\n===== $k =====\n${orFailure(runner.run(k)(use))}").mkString("\n")
+  }
 }

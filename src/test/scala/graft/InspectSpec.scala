@@ -21,6 +21,17 @@ class InspectSpec extends GraftSuite {
     assert(!spark.sparkContext.isStopped)
   }
 
+  test("plan: releases what a query persisted while being built") {
+    // q_hyperanf persists its edge and adjacency sets and local-checkpoints
+    // every hop; none of it may outlive the key
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    val out = Inspect.plan(spark, dir, Seq("q_hyperanf"))
+    assert(!out.contains("EXPLAIN FAILED"), out)
+    val left = persisted -- before
+    assert(left.isEmpty, s"persisted RDDs left behind: $left")
+  }
+
   test("time: one (build, action) pair per rep for each key") {
     val keys = Seq("q_feeder_load", "q_status_map")
     val res = Inspect.time(spark, dir, keys, reps = 2)

@@ -20,9 +20,9 @@ import org.apache.spark.sql.execution.ExplainMode
   *     top-k heads, …) — every such query sits in the audited
   *     allowlist below with the bound that justifies it.
   *
-  * Plans are built once over sf0.001 on a sibling session carrying the
-  * production extensions (the Verify/Bench config), then every test
-  * asserts off the shared snapshot.
+  * Plans are built once over sf0.001, through the QueryRunner, on an
+  * AQE-off sibling of the shared session (the Verify/Bench config
+  * otherwise), then every test asserts off the shared snapshot.
   */
 class PlanContractSpec extends GraftSuite {
 
@@ -30,48 +30,42 @@ class PlanContractSpec extends GraftSuite {
                                unpartitionedWindows: Int,
                                err: Option[String])
 
+  // static plans: the contract is about what the PLANNER commits to
+  // from statistics — AQE can rescue a bad static plan at runtime
+  // locally, but the static choice is what scales. A sibling of the
+  // shared session keeps its context, extensions and configs; only AQE
+  // differs.
+  private lazy val sibling: SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s
+  }
+
   private lazy val facts: Map[String, PlanFacts] = {
-    val prevDefault = SparkSession.getDefaultSession
-    val prevActive = SparkSession.getActiveSession
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    try {
-      val s2 = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        // static plans: the contract is about what the PLANNER commits
-        // to from statistics — AQE can rescue a bad static plan at
-        // runtime locally, but the static choice is what scales
-        .config("spark.sql.adaptive.enabled", "false")
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-        .withExtensions(new graft.functions.GraftExtensions())
-        .getOrCreate()
-      val dir = "/root/testdata/sf0.001"
-      val out = SparkEntry.queries.map { case (k, fn) =>
-        val f =
-          try {
-            val qe = fn(s2, dir).queryExecution
-            val fmt = qe.explainString(ExplainMode.fromString("formatted"))
-            val uw = qe.optimizedPlan.collect {
-              case w: org.apache.spark.sql.catalyst.plans.logical.Window
-                if w.partitionSpec.isEmpty => w
-            }.size
-            PlanFacts(fmt, uw, None)
-          } catch {
-            case e: Throwable =>
-              PlanFacts("", 0, Some(Option(e.getMessage).getOrElse(e.getClass.getName)))
-          } finally {
-            s2.catalog.clearCache()
-            s2.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-          }
-        k -> f
+    val runner = new QueryRunner("/root/testdata/sf0.001", () => sibling)
+    SparkEntry.queries.keys.map { k =>
+      val r = runner.run(k) { df =>
+        val qe = df.queryExecution
+        val uw = qe.optimizedPlan.collect {
+          case w: org.apache.spark.sql.catalyst.plans.logical.Window
+            if w.partitionSpec.isEmpty => w
+        }.size
+        PlanFacts(qe.explainString(ExplainMode.fromString("formatted")), uw, None)
       }
-      out
-    } finally {
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
+      k -> r.result.fold(
+        e => PlanFacts("", 0, Some(Option(e.getMessage).getOrElse(e.getClass.getName))),
+        identity)
+    }.toMap
+  }
+
+  test("the AQE-off sibling carries every required config") {
+    assert(sibling.conf.get("spark.sql.adaptive.enabled") == "false")
+    GraftSession.requiredConfigs.foreach { case (k, v) =>
+      assert(sibling.conf.get(k) == v, s"required config $k")
     }
+    // the plans really are static, and the shared session keeps AQE on
+    assert(!facts("q_feeder_load").formatted.contains("AdaptiveSparkPlan"))
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
   }
 
   test("every registry query builds a plan at sf0.001") {
