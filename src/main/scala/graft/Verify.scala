@@ -1,7 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json (the oracle SQL of exactly the keys this run
+  * ran), for the DuckDB oracle compare. */
 object Verify {
   /** JSON string literal with backslash, quote and ALL control chars
     * (<0x20) escaped: one raw tab or CR in an oracle SQL string makes
@@ -25,13 +26,19 @@ object Verify {
       s.sparkContext.setLogLevel("WARN")
       s
     })
+    // nothing from an earlier run may stand in for this one's: the key
+    // list goes first, and each key's result directory goes before the
+    // key runs, so a key whose builder throws leaves no output to compare
+    Files.deleteIfExists(Paths.get(s"$outDir/oracle_sql.json"))
     new java.io.File(outDir).mkdirs()
     keys.foreach { name =>
+      queries.Common.rmTree(new java.io.File(s"$outDir/$name"))
       runner.run(name)(_.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
         .result.left.foreach(e => System.err.println(s"[verify] $name failed: ${e.getMessage}"))
     }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+    val oracle = SparkEntry.oracleSql
+    val json = keys
+      .map(k => s"${jsonString(k)}: ${jsonString(oracle(k))}")
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     runner.spark.stop()

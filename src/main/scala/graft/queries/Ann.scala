@@ -11,6 +11,7 @@ import graft.operators._
   * indexes (LSH, IVF, PQ), kNN, clustering and embedding audits. */
 object Ann extends QueryFamily("ann") {
   import Common._
+  import FixedPoint.{lnQ, sdiv}
 
   /** #21 brute-force cosine top-k ANN baseline (exact; broadcast queries). */
   private def annTopK(s: SparkSession, dir: String): DataFrame = {
@@ -752,7 +753,7 @@ object Ann extends QueryFamily("ann") {
     val scored = tf.join(ft, Seq("token"))
       .crossJoin(broadcast(scal))
       .select(col("cid"), col("token"),
-        expr(s"tf_c * (${lnQ6("__ft + __avg")} - ${lnQ6("__ft")})")
+        expr(s"tf_c * (${lnQ("__ft + __avg")} - ${lnQ("__ft")})")
           .as("score_q6"))
     scored
       .withColumn("rank", row_number().over(
@@ -777,7 +778,7 @@ object Ann extends QueryFamily("ann") {
        |         // (SELECT count(DISTINCT cid) FROM asg) AS av),
        |scored AS (
        |  SELECT tf.cid, tf.token,
-       |    tf.tf_c * (${lnQ6("ft.f + sc.av")} - ${lnQ6("ft.f")}) AS score_q6
+       |    tf.tf_c * (${lnQ("ft.f + sc.av")} - ${lnQ("ft.f")}) AS score_q6
        |  FROM tf JOIN ft USING (token), sc),
        |r AS (
        |  SELECT cid, token, score_q6,
@@ -913,9 +914,7 @@ object Ann extends QueryFamily("ann") {
         .as("__s"))
       .groupBy("cid")
       .agg(count(lit(1)).as("n_vecs"),
-        expr("""CASE WHEN sum(__s) >= 0 THEN sum(__s) div count(1)
-               | ELSE -((-sum(__s)) div count(1)) END"""
-          .stripMargin.replace("\n", " ")).as("mean_sil_ppm"),
+        expr(sdiv("sum(__s)", "count(1)", duck = false)).as("mean_sil_ppm"),
         min("__s").as("min_sil_ppm"), max("__s").as("max_sil_ppm"))
   }
 
@@ -940,8 +939,7 @@ object Ann extends QueryFamily("ann") {
        |      ELSE CAST(0 AS BIGINT) END AS sq
        |  FROM ab)
        |SELECT cid, CAST(count(*) AS BIGINT) AS n_vecs,
-       |  CAST(CASE WHEN sum(sq) >= 0 THEN sum(sq) // count(*)
-       |       ELSE -((-sum(sq)) // count(*)) END AS BIGINT) AS mean_sil_ppm,
+       |  CAST(${sdiv("sum(sq)", "count(*)", duck = true)} AS BIGINT) AS mean_sil_ppm,
        |  CAST(min(sq) AS BIGINT) AS min_sil_ppm,
        |  CAST(max(sq) AS BIGINT) AS max_sil_ppm
        |FROM sr GROUP BY 1""".stripMargin
@@ -1404,7 +1402,7 @@ object Ann extends QueryFamily("ann") {
         .select(col("vec_id"), col("embedding"), col("rel_q6"),
           maxSim.as("__ms"))
         .select(col("vec_id"), col("embedding"), col("rel_q6"),
-          expr(sdivDuckOrSpark("7 * rel_q6 - 3 * __ms", "10", duck = false))
+          expr(sdiv("7 * rel_q6 - 3 * __ms", "10", duck = false))
             .as("__score"))
         .orderBy(desc("__score"), asc("vec_id")).limit(1)
         .collect().map(r => (r.getLong(0), r.getSeq[Float](1),
@@ -1428,9 +1426,7 @@ object Ann extends QueryFamily("ann") {
       val from = (Seq("rel e") ++ prev).mkString(", ")
       s"""p$r AS (
          |  SELECT e.vec_id, e.v, e.rel_q6,
-         |    (CASE WHEN (7 * e.rel_q6 - 3 * $ms) >= 0
-         |      THEN (7 * e.rel_q6 - 3 * $ms) // 10
-         |      ELSE -((-(7 * e.rel_q6 - 3 * $ms)) // 10) END) AS score
+         |    ${sdiv(s"7 * e.rel_q6 - 3 * $ms", "10", duck = true)} AS score
          |  FROM $from
          |  $excl
          |  ORDER BY score DESC, e.vec_id LIMIT 1)""".stripMargin
@@ -1555,8 +1551,7 @@ object Ann extends QueryFamily("ann") {
            |  zip_with(xq, $v1arr,
            |    (xd, vd) -> xd * CAST($dL AS DECIMAL(38,0))
            |      - CAST(vd AS DECIMAL(38,0)) * __s),
-           |  r -> CAST(CASE WHEN r >= 0 THEN r div 1000000000
-           |            ELSE -((-r) div 1000000000) END AS BIGINT))"""
+           |  r -> CAST(${sdiv("r", "1000000000", duck = false)} AS BIGINT))"""
           .stripMargin.replace("\n", " ")).as("rq"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val v2a = powerIterations(resid, "rq", 64, 3, decimalQ = true)
@@ -1604,13 +1599,8 @@ object Ann extends QueryFamily("ann") {
        |  FROM x, v1l),
        |r AS (
        |  SELECT vec_id, list_transform(range(1, 65), j ->
-       |    CAST(CASE WHEN (CAST(xs.xq[j] AS HUGEINT) * dn.d
-       |            - CAST(v1l.v1[j] AS HUGEINT) * xs.s) >= 0
-       |      THEN (CAST(xs.xq[j] AS HUGEINT) * dn.d
-       |            - CAST(v1l.v1[j] AS HUGEINT) * xs.s) // 1000000000
-       |      ELSE -((-(CAST(xs.xq[j] AS HUGEINT) * dn.d
-       |            - CAST(v1l.v1[j] AS HUGEINT) * xs.s)) // 1000000000)
-       |      END AS BIGINT))
+       |    CAST(${sdiv("CAST(xs.xq[j] AS HUGEINT) * dn.d - CAST(v1l.v1[j] AS HUGEINT) * xs.s",
+                   "1000000000", duck = true)} AS BIGINT))
        |    AS xq
        |  FROM xs, v1l, dn),
        |bv0 AS (SELECT CAST(j AS BIGINT) AS d, CAST(1000000 AS BIGINT) AS v

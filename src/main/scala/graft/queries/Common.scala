@@ -16,7 +16,7 @@ private[graft] object Common {
     s.read.parquet(s"$dir/$name.parquet")
 
   /** Deletes `f` and everything under it. */
-  private[queries] def rmTree(f: java.io.File): Unit = {
+  private[graft] def rmTree(f: java.io.File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
     f.delete(); ()
   }
@@ -341,27 +341,4 @@ private[graft] object Common {
   // HashMult for double-hashed slot families (#347 Bloom FPR): slot
   // strides must vary PER KEY or the audit's bit set is structured
   private[graft] val HashMult2 = 2862933555777941757L
-
-  /** `⌊ln(x)·1e6⌋` as an engine-portable SQL fragment — `x` MUST be a
-    * positive integer expression (the property-tested domain). */
-  private[queries] def lnQ6(x: String): String = operators.FixedPoint.lnQ(x)
-
-  /** Engine-portable sign-split ppm division fragment: truncate-toward-
-    * zero semantics on BOTH engines (Spark `div` truncates, DuckDB `//`
-    * floors — they differ exactly on negative numerators). Assumes a
-    * POSITIVE denominator — use [[sdivPpm2]] when the denominator can
-    * go negative too. */
-  private[queries] def sdivPpm(num: String, den: String, duck: Boolean): String =
-    operators.FixedPoint.sdivPpm(num, den, duck)
-
-  /** Sign-split integral division without the ppm scale (shared by
-    * #376): result = trunc(num/den), identical under Spark's
-    * truncating `div` and DuckDB's flooring `//` for any numerator
-    * sign (denominator must be positive). */
-  private[queries] def sdivDuckOrSpark(num: String, den: String, duck: Boolean): String = {
-    val d = if (duck) "//" else "div"
-    s"""(CASE WHEN ($num) >= 0 THEN ($num) $d ($den)
-       | ELSE -((-($num)) $d ($den)) END)"""
-      .stripMargin.replace("\n", " ")
-  }
 }

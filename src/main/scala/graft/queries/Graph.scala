@@ -12,6 +12,7 @@ import graft.operators._
   * HyperANF, spatial autocorrelation. */
 object Graph extends QueryFamily("graph") {
   import Common._
+  import FixedPoint.sdivPpm
 
   /** #46 dedup cluster resolution: near-dup PAIRS → connected-component
     * CLUSTERS + canonical survivor per cluster — the step that makes a
@@ -672,13 +673,9 @@ object Graph extends QueryFamily("graph") {
       .withColumn("e_within", coalesce(col("e_within"), lit(0L)))
       .crossJoin(broadcast(m))
       .withColumn("contrib_ppm", expr(
-        """CAST(CASE
-          WHEN 4 * CAST(__m AS DECIMAL(38,0)) * e_within - CAST(deg_sum AS DECIMAL(38,0)) * deg_sum >= 0
-          THEN ((4 * CAST(__m AS DECIMAL(38,0)) * e_within - CAST(deg_sum AS DECIMAL(38,0)) * deg_sum) * 1000000)
-               div (4 * CAST(__m AS DECIMAL(38,0)) * __m)
-          ELSE -(((CAST(deg_sum AS DECIMAL(38,0)) * deg_sum - 4 * CAST(__m AS DECIMAL(38,0)) * e_within) * 1000000)
-               div (4 * CAST(__m AS DECIMAL(38,0)) * __m))
-          END AS BIGINT)"""))
+        s"""CAST(${sdivPpm(
+          "4 * CAST(__m AS DECIMAL(38,0)) * e_within - CAST(deg_sum AS DECIMAL(38,0)) * deg_sum",
+          "4 * CAST(__m AS DECIMAL(38,0)) * __m", duck = false)} AS BIGINT)"""))
       .select("brand", "n_vertices", "e_within", "deg_sum", "contrib_ppm")
   }
 
@@ -696,13 +693,9 @@ object Graph extends QueryFamily("graph") {
        |m AS (SELECT CAST(count(*) AS BIGINT) AS m FROM e)
        |SELECT dc.brand, dc.n_vertices, coalesce(ec.e_within, 0) AS e_within,
        |  dc.deg_sum,
-       |  CAST(CASE
-       |    WHEN 4 * CAST(m.m AS HUGEINT) * coalesce(ec.e_within, 0) - CAST(dc.deg_sum AS HUGEINT) * dc.deg_sum >= 0
-       |    THEN ((4 * CAST(m.m AS HUGEINT) * coalesce(ec.e_within, 0) - CAST(dc.deg_sum AS HUGEINT) * dc.deg_sum) * 1000000)
-       |         // (4 * CAST(m.m AS HUGEINT) * m.m)
-       |    ELSE -(((CAST(dc.deg_sum AS HUGEINT) * dc.deg_sum - 4 * CAST(m.m AS HUGEINT) * coalesce(ec.e_within, 0)) * 1000000)
-       |         // (4 * CAST(m.m AS HUGEINT) * m.m))
-       |    END AS BIGINT) AS contrib_ppm
+       |  CAST(${sdivPpm(
+          "4 * CAST(m.m AS HUGEINT) * coalesce(ec.e_within, 0) - CAST(dc.deg_sum AS HUGEINT) * dc.deg_sum",
+          "4 * CAST(m.m AS HUGEINT) * m.m", duck = true)} AS BIGINT) AS contrib_ppm
        |FROM dc LEFT JOIN ec ON ec.brand = dc.brand CROSS JOIN m""".stripMargin
 
   /** #289 bipartite projection — supplier–supplier co-supply graph
@@ -969,7 +962,7 @@ object Graph extends QueryFamily("graph") {
   }
 
   private val moranISql =
-    """WITH it AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
+    s"""WITH it AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
       |  FROM lineitem),
       |e AS MATERIALIZED (
       |  SELECT a.pk AS ea, b.pk AS eb
@@ -992,11 +985,8 @@ object Graph extends QueryFamily("graph") {
       |  FROM e JOIN z za ON za.v = e.ea JOIN z zb ON zb.v = e.eb)
       |SELECT CAST(den.n AS BIGINT) AS n_nodes,
       |  CAST(num.ne AS BIGINT) AS n_edges,
-      |  CAST(CASE WHEN (CAST(den.n AS HUGEINT) * num.szz) >= 0
-      |    THEN (CAST(den.n AS HUGEINT) * num.szz * 1000000)
-      |         // (CAST(num.ne AS HUGEINT) * den.sz2)
-      |    ELSE -((-(CAST(den.n AS HUGEINT) * num.szz) * 1000000)
-      |           // (CAST(num.ne AS HUGEINT) * den.sz2)) END AS BIGINT)
+      |  CAST(${sdivPpm("CAST(den.n AS HUGEINT) * num.szz",
+          "CAST(num.ne AS HUGEINT) * den.sz2", duck = true)} AS BIGINT)
       |    AS moran_micro
       |FROM num, den""".stripMargin
 

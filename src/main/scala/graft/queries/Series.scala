@@ -13,6 +13,7 @@ import graft.streaming.EventsStream
   * time-series statistics. */
 object Series extends QueryFamily("series") {
   import Common._
+  import FixedPoint.{lnQ, sdivPpm}
 
   /** events with `ts` additionally exposed as epoch-microsecond long
     * (`ts_us`) for queries doing pure integer time arithmetic that must
@@ -2915,13 +2916,13 @@ object Series extends QueryFamily("series") {
   }
 
   private val sessionEntropySql =
-    """WITH c AS (
+    s"""WITH c AS (
       |  SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS c
       |  FROM events GROUP BY 1, 2)
       |SELECT user_id, CAST(sum(c) AS BIGINT) AS n_events,
       |  CAST(count(*) AS BIGINT) AS n_types,
       |  round(ln(CAST(sum(c) AS DOUBLE))
-      |    - sum(c * CAST(floor(ln(CAST(c AS DOUBLE)) * 1e6) AS BIGINT))
+      |    - sum(c * ${lnQ("CAST(c AS DOUBLE)")})
       |      / (1e6 * CAST(sum(c) AS DOUBLE)), 6) AS entropy
       |FROM c GROUP BY 1""".stripMargin
 
@@ -3074,15 +3075,15 @@ object Series extends QueryFamily("series") {
   }
 
   private val hillTailSql =
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c,
       |    event_id
       |  FROM events WHERE CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) > 0
       |  ORDER BY c DESC, event_id LIMIT 101),
       |th AS (SELECT CAST(min(c) AS BIGINT) AS ck FROM t),
       |q AS (
-      |  SELECT CAST(floor(ln(CAST(c AS DOUBLE)) * 1e9) AS BIGINT)
-      |       - CAST(floor(ln(CAST(th.ck AS DOUBLE)) * 1e9) AS BIGINT) AS lq,
+      |  SELECT ${lnQ("CAST(c AS DOUBLE)", 1000000000L)}
+      |       - ${lnQ("CAST(th.ck AS DOUBLE)", 1000000000L)} AS lq,
       |    th.ck
       |  FROM t, th WHERE t.c > th.ck)
       |SELECT CAST(count(*) AS BIGINT) AS k_used, ck AS xk_cents,
@@ -3120,7 +3121,7 @@ object Series extends QueryFamily("series") {
   }
 
   private val mutualInfoSql =
-    """WITH c AS (
+    s"""WITH c AS (
       |  SELECT event_type,
       |    CAST((epoch_us(ts) // 86400000000 + 3) % 7 + 1 AS INT) AS dow,
       |    CAST(count(*) AS BIGINT) AS nij
@@ -3130,9 +3131,8 @@ object Series extends QueryFamily("series") {
       |t AS (SELECT CAST(sum(nij) AS BIGINT) AS N FROM c),
       |q AS (
       |  SELECT c.nij, t.N,
-      |    CAST(floor(ln(CAST(c.nij AS DOUBLE) * CAST(t.N AS DOUBLE)
-      |      / (CAST(ri.ni AS DOUBLE) * CAST(cj.nj AS DOUBLE))) * 1e9)
-      |      AS BIGINT) AS lt
+      |    ${lnQ("CAST(c.nij AS DOUBLE) * CAST(t.N AS DOUBLE)" +
+              " / (CAST(ri.ni AS DOUBLE) * CAST(cj.nj AS DOUBLE))", 1000000000L)} AS lt
       |  FROM c JOIN ri USING (event_type) JOIN cj USING (dow), t)
       |SELECT max(N) AS n_events,
       |  CAST(sum(CAST(nij AS HUGEINT) * lt) // max(N) AS BIGINT) AS mi_ppb
@@ -3416,7 +3416,7 @@ object Series extends QueryFamily("series") {
       .withColumn("__r_ppm",
         expr("greatest(((n_risk - n_churn) * 1000000) div n_risk, 1)"))
       .withColumn("__term",
-        expr(s"${lnQ6("__r_ppm")} - $LnMillionQ6"))
+        expr(s"${lnQ("__r_ppm")} - $LnMillionQ6"))
       .withColumn("surv_lnq6", sum("__term").over(wAsc))
       .select(col("tenure_d"), col("n_risk"), col("n_churn"),
         (col("__n_end") - col("n_churn")).as("n_censored"), col("surv_lnq6"))
@@ -3441,7 +3441,7 @@ object Series extends QueryFamily("series") {
        |  FROM ten),
        |term AS (
        |  SELECT tenure_d, n_risk, n_churn, n_end - n_churn AS n_censored,
-       |    ${lnQ6("greatest(((n_risk - n_churn) * 1000000) // n_risk, 1)")}
+       |    ${lnQ("greatest(((n_risk - n_churn) * 1000000) // n_risk, 1)")}
        |      - $LnMillionQ6 AS term
        |  FROM risk)
        |SELECT tenure_d, n_risk, n_churn, n_censored,
@@ -3472,7 +3472,7 @@ object Series extends QueryFamily("series") {
       .withColumn("__s", expr("__u - 500000"))
       .withColumn("__arg", expr("greatest(1000000 - 2 * abs(__s), 1)"))
       .withColumn("noise_q6",
-        expr(s"-signum(__s) * (${lnQ6("__arg")} - $LnMillionQ6)").cast("long"))
+        expr(s"-signum(__s) * (${lnQ("__arg")} - $LnMillionQ6)").cast("long"))
     g.select(col("event_type"), col("day"), col("n_true"), col("noise_q6"),
       expr("n_true + (2 * noise_q6 + 1000000) div 2000000").as("n_released"))
   }
@@ -3498,7 +3498,7 @@ object Series extends QueryFamily("series") {
        |  FROM k),
        |n AS (
        |  SELECT event_type, day, n_true,
-       |    CAST(-sign(s) * (${lnQ6("greatest(1000000 - 2 * abs(s), 1)")}
+       |    CAST(-sign(s) * (${lnQ("greatest(1000000 - 2 * abs(s), 1)")}
        |      - $LnMillionQ6) AS BIGINT) AS noise_q6
        |  FROM u)
        |SELECT event_type, day, n_true, noise_q6,
@@ -3885,16 +3885,13 @@ object Series extends QueryFamily("series") {
           - (CAST(__sv AS DECIMAL(38,0)) + __sc + __sp)
             * (CAST(__sv AS DECIMAL(38,0)) + __sc + __sp)""").as("__vt"))
       .select(col("n"),
-        expr("""CAST(CASE
-          WHEN __vt <= 0 THEN 0
-          WHEN 3 * (__vt - __vi) >= 0
-          THEN (3 * (__vt - __vi) * 1000000) div (2 * __vt)
-          ELSE -((3 * (__vi - __vt) * 1000000) div (2 * __vt))
+        expr(s"""CAST(CASE WHEN __vt <= 0 THEN 0
+          ELSE ${sdivPpm("3 * (__vt - __vi)", "2 * __vt", duck = false)}
           END AS BIGINT)""").as("alpha_ppm"))
   }
 
   private val cronbachAlphaSql =
-    """WITH u AS (
+    s"""WITH u AS (
       |  SELECT user_id,
       |    sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS v,
       |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS c,
@@ -3916,11 +3913,8 @@ object Series extends QueryFamily("series") {
       |    n * qt - (sv + sc + sp) * (sv + sc + sp) AS vt
       |  FROM f)
       |SELECT n,
-      |  CAST(CASE
-      |    WHEN vt <= 0 THEN 0
-      |    WHEN 3 * (vt - vi) >= 0
-      |    THEN (3 * (vt - vi) * 1000000) // (2 * vt)
-      |    ELSE -((3 * (vi - vt) * 1000000) // (2 * vt))
+      |  CAST(CASE WHEN vt <= 0 THEN 0
+      |    ELSE ${sdivPpm("3 * (vt - vi)", "2 * vt", duck = true)}
       |    END AS BIGINT) AS alpha_ppm
       |FROM g""".stripMargin
 
@@ -4013,10 +4007,7 @@ object Series extends QueryFamily("series") {
     val a = daily.select(col("__d").as("__d1"), col("__c").as("__c1"))
     val b = daily.select(col("__d").as("__d2"), col("__c").as("__c2"))
     val slopes = a.join(broadcast(b), col("__d1") < col("__d2"))
-      .select(expr(
-        """CASE WHEN __c2 - __c1 >= 0
-          THEN ((__c2 - __c1) * 1000000) div (__d2 - __d1)
-          ELSE -(((__c1 - __c2) * 1000000) div (__d2 - __d1)) END""")
+      .select(expr(sdivPpm("__c2 - __c1", "__d2 - __d1", duck = false))
         .as("__ppm"))
     val n = Window.orderBy("__ppm")
     slopes
@@ -4029,14 +4020,12 @@ object Series extends QueryFamily("series") {
   }
 
   private val theilSenSql =
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS d,
       |    CAST(count(*) AS BIGINT) AS c
       |  FROM events GROUP BY 1),
       |p AS (
-      |  SELECT CASE WHEN b.c - a.c >= 0
-      |    THEN ((b.c - a.c) * 1000000) // (b.d - a.d)
-      |    ELSE -(((a.c - b.c) * 1000000) // (b.d - a.d)) END AS ppm
+      |  SELECT ${sdivPpm("b.c - a.c", "b.d - a.d", duck = true)} AS ppm
       |  FROM d a JOIN d b ON a.d < b.d),
       |r AS (SELECT ppm, row_number() OVER (ORDER BY ppm) AS rk,
       |        count(*) OVER () AS n FROM p)
@@ -4074,7 +4063,7 @@ object Series extends QueryFamily("series") {
   }
 
   private val entropyRateSql =
-    """WITH seq AS (
+    s"""WITH seq AS (
       |  SELECT event_type AS c,
       |    lead(event_type) OVER (PARTITION BY user_id
       |      ORDER BY epoch_us(ts), event_id) AS t
@@ -4085,8 +4074,7 @@ object Series extends QueryFamily("series") {
       |f AS (
       |  SELECT CAST(sum(nct) AS BIGINT) AS n_transitions,
       |    CAST(count(DISTINCT tr.c) AS BIGINT) AS n_states,
-      |    CAST(sum(nct * (CAST(floor(ln(nc) * 1000000) AS BIGINT)
-      |                    - CAST(floor(ln(nct) * 1000000) AS BIGINT)))
+      |    CAST(sum(nct * (${lnQ("nc")} - ${lnQ("nct")}))
       |      AS BIGINT) AS hq
       |  FROM tr JOIN st ON st.c = tr.c)
       |SELECT n_transitions, n_states,
@@ -4185,10 +4173,8 @@ object Series extends QueryFamily("series") {
         s"CAST((CAST(__cnt AS DECIMAL(38,0)) * $M) div __th AS BIGINT)"))
       .withColumn("exact_common", coalesce(col("exact_common"), lit(0L)))
       .withColumn("err_ppm", expr(
-        """CASE WHEN exact_common = 0 THEN 0
-          | WHEN est_common >= exact_common
-          | THEN ((est_common - exact_common) * 1000000) div exact_common
-          | ELSE -(((exact_common - est_common) * 1000000) div exact_common)
+        s"""CASE WHEN exact_common = 0 THEN 0
+          | ELSE ${sdivPpm("est_common - exact_common", "exact_common", duck = false)}
           | END""".stripMargin.replace("\n", " ")))
       .select("type_a", "type_b", "est_common", "exact_common", "err_ppm")
   }
@@ -4225,13 +4211,9 @@ object Series extends QueryFamily("series") {
       |    AS est_common,
       |  coalesce(ex.exact_common, 0) AS exact_common,
       |  CASE WHEN coalesce(ex.exact_common, 0) = 0 THEN 0
-      |    WHEN CAST((CAST(coalesce(cm.cnt, 0) AS HUGEINT) * ${M}) // p.th
-      |         AS BIGINT) >= ex.exact_common
-      |    THEN ((CAST((CAST(coalesce(cm.cnt, 0) AS HUGEINT) * ${M}) // p.th
-      |           AS BIGINT) - ex.exact_common) * 1000000) // ex.exact_common
-      |    ELSE -(((ex.exact_common
-      |             - CAST((CAST(coalesce(cm.cnt, 0) AS HUGEINT) * ${M}) // p.th
-      |               AS BIGINT)) * 1000000) // ex.exact_common)
+      |    ELSE ${sdivPpm(
+            s"CAST((CAST(coalesce(cm.cnt, 0) AS HUGEINT) * ${M}) // p.th AS BIGINT) - ex.exact_common",
+            "ex.exact_common", duck = true)}
       |    END AS err_ppm
       |FROM pairs p
       |LEFT JOIN cm ON cm.type_a = p.type_a AND cm.type_b = p.type_b
@@ -4871,12 +4853,11 @@ object Series extends QueryFamily("series") {
             .stripMargin.replace("\n", " "))).as("e"))
       .select(col("day"), col("__p0"), col("__p1"),
         col("e.arm").as("arm"), col("e.succ").as("__succ"))
-    def lnq(e: String): String = operators.FixedPoint.lnQ(e)
     val perDay = arms.groupBy("arm", "day", "__p0", "__p1")
       .agg(count(lit(1)).as("n_trials"), sum("__succ").as("n_success"))
       .withColumn("llr_micro", expr(
-        s"n_success * (${lnq("__p1")} - ${lnq("__p0")})" +
-          s" + (n_trials - n_success) * (${lnq("1000000 - __p1")} - ${lnq("1000000 - __p0")})"))
+        s"n_success * (${lnQ("__p1")} - ${lnQ("__p0")})" +
+          s" + (n_trials - n_success) * (${lnQ("1000000 - __p1")} - ${lnQ("1000000 - __p0")})"))
     perDay
       .withColumn("cum_llr_micro", sum("llr_micro").over(
         Window.partitionBy("arm").orderBy("day")
@@ -4890,7 +4871,6 @@ object Series extends QueryFamily("series") {
   }
 
   private lazy val sprtSql = {
-    def lnq(e: String): String = operators.FixedPoint.lnQ(e)
     s"""WITH d AS (
        |  SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS pur,
@@ -4912,9 +4892,9 @@ object Series extends QueryFamily("series") {
        |  FROM arms GROUP BY 1, 2, 3, 4),
        |l AS (
        |  SELECT arm, day, n_trials, n_success,
-       |    n_success * (${lnq("p1")} - ${lnq("p0")})
+       |    n_success * (${lnQ("p1")} - ${lnQ("p0")})
        |      + (n_trials - n_success)
-       |        * (${lnq("1000000 - p1")} - ${lnq("1000000 - p0")}) AS llr_micro
+       |        * (${lnQ("1000000 - p1")} - ${lnQ("1000000 - p0")}) AS llr_micro
        |  FROM pd)
        |SELECT arm, day, n_trials, n_success, llr_micro,
        |  CAST(sum(llr_micro) OVER (PARTITION BY arm ORDER BY day
@@ -5404,10 +5384,6 @@ object Series extends QueryFamily("series") {
   }
 
   private val typeTrendSql = {
-    def sdiv(num: String, den: String) =
-      s"""(CASE WHEN ($num) >= 0 THEN (($num) * 1000000) // ($den)
-         | ELSE -((-($num)) * 1000000 // ($den)) END)"""
-        .stripMargin.replace("\n", " ")
     s"""WITH daily AS (
        |  SELECT event_type AS ty, CAST(ts AS DATE) AS d, count(*) AS c
        |  FROM events GROUP BY 1, 2),
@@ -5426,8 +5402,8 @@ object Series extends QueryFamily("series") {
        |    sum(y) AS sy, sum(CAST(x AS HUGEINT) * y) AS sxy
        |  FROM cells GROUP BY 1)
        |SELECT ty AS event_type, CAST(sy AS BIGINT) AS n_events,
-       |  CAST(${sdiv("CAST(nd AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy",
-            "CAST(nd AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx")}
+       |  CAST(${sdivPpm("CAST(nd AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy",
+            "CAST(nd AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx", duck = true)}
        |    AS BIGINT) AS slope_micro
        |FROM m""".stripMargin
   }

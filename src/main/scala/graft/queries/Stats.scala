@@ -12,6 +12,7 @@ import graft.operators._
   * part, nation). */
 object Stats extends QueryFamily("stats") {
   import Common._
+  import FixedPoint.{lnQ, sdiv, sdivPpm, sdivPpm2, sdivRound}
 
   /** #30 top-N per group via window rank. */
   private def topnPerGroup(s: SparkSession, dir: String): DataFrame = {
@@ -1827,8 +1828,8 @@ object Stats extends QueryFamily("stats") {
       sum(expr("n_bad + 1")).as("__bt"))
     seg.crossJoin(broadcast(tot))
       .withColumn("woe_q6",
-        expr(s"(${lnQ6("n_good + 1")} - ${lnQ6("__gt")})" +
-          s" - (${lnQ6("n_bad + 1")} - ${lnQ6("__bt")})"))
+        expr(s"(${lnQ("n_good + 1")} - ${lnQ("__gt")})" +
+          s" - (${lnQ("n_bad + 1")} - ${lnQ("__bt")})"))
       .withColumn("iv_contrib_q",
         expr("(((n_good + 1) * 1000000) div __gt" +
           " - ((n_bad + 1) * 1000000) div __bt) * woe_q6"))
@@ -1846,11 +1847,11 @@ object Stats extends QueryFamily("stats") {
        |  GROUP BY 1),
        |t AS (SELECT sum(n_good + 1) AS gt, sum(n_bad + 1) AS bt FROM seg)
        |SELECT segment, n_good, n_bad,
-       |  CAST((${lnQ6("n_good + 1")} - ${lnQ6("gt")})
-       |    - (${lnQ6("n_bad + 1")} - ${lnQ6("bt")}) AS BIGINT) AS woe_q6,
+       |  CAST((${lnQ("n_good + 1")} - ${lnQ("gt")})
+       |    - (${lnQ("n_bad + 1")} - ${lnQ("bt")}) AS BIGINT) AS woe_q6,
        |  CAST((((n_good + 1) * 1000000) // gt - ((n_bad + 1) * 1000000) // bt)
-       |    * ((${lnQ6("n_good + 1")} - ${lnQ6("gt")})
-       |       - (${lnQ6("n_bad + 1")} - ${lnQ6("bt")})) AS BIGINT)
+       |    * ((${lnQ("n_good + 1")} - ${lnQ("gt")})
+       |       - (${lnQ("n_bad + 1")} - ${lnQ("bt")})) AS BIGINT)
        |    AS iv_contrib_q
        |FROM seg, t""".stripMargin
 
@@ -1947,9 +1948,8 @@ object Stats extends QueryFamily("stats") {
          |  CAST(sum(CAST(nij AS HUGEINT) * lt) // max(N) AS BIGINT) AS mi_ppb
          |FROM (
          |  SELECT c.nij, t.N,
-         |    CAST(floor(ln(CAST(c.nij AS DOUBLE) * CAST(t.N AS DOUBLE)
-         |      / (CAST(ri.ni AS DOUBLE) * CAST(cj.nj AS DOUBLE))) * 1e9)
-         |      AS BIGINT) AS lt
+         |    ${lnQ("CAST(c.nij AS DOUBLE) * CAST(t.N AS DOUBLE)" +
+              " / (CAST(ri.ni AS DOUBLE) * CAST(cj.nj AS DOUBLE))", 1000000000L)} AS lt
          |  FROM ($src) c
          |  JOIN (SELECT x, CAST(sum(nij) AS BIGINT) AS ni
          |        FROM ($src) GROUP BY 1) ri USING (x)
@@ -2351,19 +2351,17 @@ object Stats extends QueryFamily("stats") {
         Seq("nk"))
       .select(col("n_name"), col("segment"), col("pop"),
         coalesce(col("resp"), lit(0L)).as("resp"), col("true_cents"),
-        coalesce(expr(
-          "CASE WHEN __rc >= 0" +
-            " THEN (CAST(pop AS DECIMAL(38,0)) * __rc) div resp" +
-            " ELSE -((CAST(pop AS DECIMAL(38,0)) * (-__rc)) div resp)" +
-            " END").cast("long"), lit(0L)).as("ht_cents"),
+        coalesce(expr(sdiv("CAST(pop AS DECIMAL(38,0)) * __rc", "resp", duck = false))
+          .cast("long"), lit(0L)).as("ht_cents"),
         (col("resp").isNotNull).cast("int").as("covered"))
       .withColumn("diff_cents",
         expr("CASE WHEN covered = 1 THEN ht_cents - true_cents" +
           " ELSE 0 END"))
   }
 
-  private val horvitzThompsonSql =
-    """WITH c AS (SELECT c_custkey, CAST(c_nationkey AS BIGINT) AS nk,
+  private val horvitzThompsonSql = {
+    val ht = sdiv("CAST(pop.pop AS HUGEINT) * r.rc", "r.resp", duck = true)
+    s"""WITH c AS (SELECT c_custkey, CAST(c_nationkey AS BIGINT) AS nk,
       |    c_mktsegment AS segment,
       |    CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
       |  FROM customer),
@@ -2378,21 +2376,16 @@ object Stats extends QueryFamily("stats") {
       |  JOIN c ON c.c_custkey = o.o_custkey GROUP BY 1, 2)
       |SELECT n.n_name, pop.segment, pop.pop,
       |  CAST(coalesce(r.resp, 0) AS BIGINT) AS resp, pop.true_cents,
-      |  CAST(coalesce(CASE WHEN r.rc >= 0
-      |    THEN (CAST(pop.pop AS HUGEINT) * r.rc) // r.resp
-      |    ELSE -((CAST(pop.pop AS HUGEINT) * (-r.rc)) // r.resp)
-      |    END, 0) AS BIGINT) AS ht_cents,
+      |  CAST(coalesce($ht, 0) AS BIGINT) AS ht_cents,
       |  CAST(CASE WHEN r.resp IS NOT NULL THEN 1 ELSE 0 END AS INT)
       |    AS covered,
       |  CAST(CASE WHEN r.resp IS NOT NULL
-      |    THEN coalesce(CASE WHEN r.rc >= 0
-      |      THEN (CAST(pop.pop AS HUGEINT) * r.rc) // r.resp
-      |      ELSE -((CAST(pop.pop AS HUGEINT) * (-r.rc)) // r.resp)
-      |      END, 0) - pop.true_cents
+      |    THEN coalesce($ht, 0) - pop.true_cents
       |    ELSE 0 END AS BIGINT) AS diff_cents
       |FROM pop
       |LEFT JOIN r ON r.nk = pop.nk AND r.segment = pop.segment
       |JOIN nation n ON n.n_nationkey = pop.nk""".stripMargin
+  }
 
   /** #264 stratum proportion variance with FPC — the margin-of-error
     * input (variance, not its square root — the fold stays exact
@@ -2492,17 +2485,14 @@ object Stats extends QueryFamily("stats") {
           .as("__b"),
         sum("__s").cast("decimal(38,0)").as("__t"))
       .select(col("k"), (col("k") * 2).as("n_obs"),
-        expr("""CAST(CASE
-          WHEN k * __b - __t * __t - (k - 1) * (2 * __a - __b) >= 0
-          THEN ((k * __b - __t * __t - (k - 1) * (2 * __a - __b)) * 1000000)
-               div (k * __b - __t * __t + (k - 1) * (2 * __a - __b))
-          ELSE -(((__t * __t + (k - 1) * (2 * __a - __b) - k * __b) * 1000000)
-               div (k * __b - __t * __t + (k - 1) * (2 * __a - __b)))
-          END AS BIGINT)""").as("icc_ppm"))
+        expr(s"""CAST(${sdivPpm(
+          "k * __b - __t * __t - (k - 1) * (2 * __a - __b)",
+          "k * __b - __t * __t + (k - 1) * (2 * __a - __b)", duck = false)} AS BIGINT)""")
+          .as("icc_ppm"))
   }
 
   private val iccAnovaSql =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT o_custkey,
       |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
       |    row_number() OVER (PARTITION BY o_custkey
@@ -2519,13 +2509,8 @@ object Stats extends QueryFamily("stats") {
       |    CAST(sum(s) AS HUGEINT) AS t
       |  FROM c WHERE m = 2)
       |SELECT k, CAST(k * 2 AS BIGINT) AS n_obs,
-      |  CAST(CASE
-      |    WHEN k * b - t * t - (k - 1) * (2 * a - b) >= 0
-      |    THEN ((k * b - t * t - (k - 1) * (2 * a - b)) * 1000000)
-      |         // (k * b - t * t + (k - 1) * (2 * a - b))
-      |    ELSE -(((t * t + (k - 1) * (2 * a - b) - k * b) * 1000000)
-      |         // (k * b - t * t + (k - 1) * (2 * a - b)))
-      |    END AS BIGINT) AS icc_ppm
+      |  CAST(${sdivPpm("k * b - t * t - (k - 1) * (2 * a - b)",
+          "k * b - t * t + (k - 1) * (2 * a - b)", duck = true)} AS BIGINT) AS icc_ppm
       |FROM f""".stripMargin
 
   /** #267 NPS table — the survey world's headline score, derived from
@@ -2556,14 +2541,11 @@ object Stats extends QueryFamily("stats") {
         sum((col("score").between(7, 8)).cast("long")).as("n_passive"),
         sum((col("score") <= 6).cast("long")).as("n_detractor"))
       .withColumn("nps_ppm",
-        expr("""CASE WHEN n_promoter - n_detractor >= 0
-          THEN ((n_promoter - n_detractor) * 1000000) div n_resp
-          ELSE -(((n_detractor - n_promoter) * 1000000) div n_resp)
-          END"""))
+        expr(sdivPpm("n_promoter - n_detractor", "n_resp", duck = false)))
   }
 
   private val npsTableSql =
-    """WITH r AS (
+    s"""WITH r AS (
       |  SELECT c_mktsegment AS segment,
       |    CAST(row_number() OVER (PARTITION BY c_mktsegment
       |      ORDER BY CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT),
@@ -2581,10 +2563,7 @@ object Stats extends QueryFamily("stats") {
       |      AS n_detractor
       |  FROM sc GROUP BY 1)
       |SELECT segment, n_resp, n_promoter, n_passive, n_detractor,
-      |  CAST(CASE WHEN n_promoter - n_detractor >= 0
-      |    THEN ((n_promoter - n_detractor) * 1000000) // n_resp
-      |    ELSE -(((n_detractor - n_promoter) * 1000000) // n_resp)
-      |    END AS BIGINT) AS nps_ppm
+      |  CAST(${sdivPpm("n_promoter - n_detractor", "n_resp", duck = true)} AS BIGINT) AS nps_ppm
       |FROM a""".stripMargin
 
   /** #268 Wilson score interval — the 95% CI a survey report prints
@@ -2984,25 +2963,22 @@ object Stats extends QueryFamily("stats") {
       .withColumn("__bn", expr(
         "n_sample * __sxy - CAST(sx AS DECIMAL(38,0)) * sy"))
       .withColumn("b_ppm", expr(
-        """CAST(CASE WHEN __dx <= 0 THEN 0
-          WHEN __bn >= 0 THEN (__bn * 1000000) div __dx
-          ELSE -((-__bn * 1000000) div __dx) END AS BIGINT)"""))
+        s"""CAST(CASE WHEN __dx <= 0 THEN 0
+          ELSE ${sdivPpm("__bn", "__dx", duck = false)} END AS BIGINT)"""))
       .withColumn("__u", expr(
         "n_sample * CAST(x_pop AS DECIMAL(38,0)) - n_frame * CAST(sx AS DECIMAL(38,0))"))
       .withColumn("y_greg_cents", expr(
-        """CAST((n_frame * CAST(sy AS DECIMAL(38,0))) div n_sample
-          + CASE WHEN b_ppm * __u >= 0
-            THEN (b_ppm * __u) div (n_sample * CAST(1000000 AS DECIMAL(38,0)))
-            ELSE -((-(b_ppm * __u))
-                   div (n_sample * CAST(1000000 AS DECIMAL(38,0))))
-            END AS BIGINT)"""))
+        s"""CAST((n_frame * CAST(sy AS DECIMAL(38,0))) div n_sample
+          + ${sdiv("b_ppm * __u", "n_sample * CAST(1000000 AS DECIMAL(38,0))", duck = false)}
+          AS BIGINT)"""))
       .select(col("n_name"), col("n_frame"), col("n_sample"), col("x_pop"),
         col("y_true"), col("b_ppm"), col("y_greg_cents"),
         expr("y_greg_cents - y_true").as("bias_cents"))
   }
 
-  private val gregEstimatorSql =
-    """WITH pc AS (
+  private val gregEstimatorSql = {
+    val adj = sdiv("c.b_ppm * c.u", "c.n_sample * CAST(1000000 AS HUGEINT)", duck = true)
+    s"""WITH pc AS (
       |  SELECT o_custkey AS c_custkey,
       |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
       |      AS BIGINT)) AS BIGINT) AS x,
@@ -3037,24 +3013,16 @@ object Stats extends QueryFamily("stats") {
       |c AS (
       |  SELECT b.*,
       |    CAST(CASE WHEN b.dx <= 0 THEN 0
-      |      WHEN b.bn >= 0 THEN (b.bn * 1000000) // b.dx
-      |      ELSE -((-b.bn * 1000000) // b.dx) END AS HUGEINT) AS b_ppm
+      |      ELSE ${sdivPpm("b.bn", "b.dx", duck = true)} END AS HUGEINT) AS b_ppm
       |  FROM b)
       |SELECT n.n_name, c.n_frame, c.n_sample, c.x_pop, c.y_true,
       |  CAST(c.b_ppm AS BIGINT) AS b_ppm,
       |  CAST((c.n_frame * CAST(c.sy AS HUGEINT)) // c.n_sample
-      |    + CASE WHEN c.b_ppm * c.u >= 0
-      |      THEN (c.b_ppm * c.u) // (c.n_sample * CAST(1000000 AS HUGEINT))
-      |      ELSE -((-(c.b_ppm * c.u))
-      |             // (c.n_sample * CAST(1000000 AS HUGEINT)))
-      |      END AS BIGINT) AS y_greg_cents,
+      |    + $adj AS BIGINT) AS y_greg_cents,
       |  CAST((c.n_frame * CAST(c.sy AS HUGEINT)) // c.n_sample
-      |    + CASE WHEN c.b_ppm * c.u >= 0
-      |      THEN (c.b_ppm * c.u) // (c.n_sample * CAST(1000000 AS HUGEINT))
-      |      ELSE -((-(c.b_ppm * c.u))
-      |             // (c.n_sample * CAST(1000000 AS HUGEINT)))
-      |      END - c.y_true AS BIGINT) AS bias_cents
+      |    + $adj - c.y_true AS BIGINT) AS bias_cents
       |FROM c JOIN nation n ON n.n_nationkey = c.nk""".stripMargin
+  }
 
   /** #280 Cramér's V — effect-size for a nominal×nominal crosstab
     * (Cramér 1946): order priority × market segment over the full
@@ -4395,9 +4363,7 @@ object Stats extends QueryFamily("stats") {
         col("p.na").as("na"), col("p.nb").as("nb"),
         col("p.gt").as("n_greater"), col("p.lt").as("n_less"))
       .withColumn("delta_ppm", expr(
-        """CASE WHEN n_greater - n_less >= 0
-          THEN ((n_greater - n_less) * 1000000) div (na * nb)
-          ELSE -(((n_less - n_greater) * 1000000) div (na * nb)) END"""))
+        sdivPpm("n_greater - n_less", "na * nb", duck = false)))
   }
 
   private lazy val cliffsDeltaSql = {
@@ -4424,9 +4390,7 @@ object Stats extends QueryFamily("stats") {
        |one AS (SELECT $sums FROM cum),
        |pairs AS ($rows)
        |SELECT g_a, g_b, na, nb, n_greater, n_less,
-       |  CAST(CASE WHEN n_greater - n_less >= 0
-       |    THEN ((n_greater - n_less) * 1000000) // (na * nb)
-       |    ELSE -(((n_less - n_greater) * 1000000) // (na * nb)) END
+       |  CAST(${sdivPpm("n_greater - n_less", "na * nb", duck = true)}
        |    AS BIGINT) AS delta_ppm
        |FROM pairs""".stripMargin
   }
@@ -5008,13 +4972,6 @@ object Stats extends QueryFamily("stats") {
       |  SELECT CAST(u.d AS BIGINT) AS d, coalesce(dd.x, 0) AS x
       |  FROM sp CROSS JOIN unnest(range(sp.lo, sp.hi + 1)) AS u(d)
       |  LEFT JOIN dd ON dd.d = u.d)""".stripMargin
-
-  /** Fully sign-symmetric ppm division: result sign = sign(num·den),
-    * magnitude = (|num|·1e6) div |den| — identical under Spark's
-    * truncating `div` and DuckDB's flooring `//` for ANY operand
-    * signs. */
-  private def sdivPpm2(num: String, den: String, duck: Boolean): String =
-    operators.FixedPoint.sdivPpm2(num, den, duck)
 
   /** #325 partial autocorrelation (PACF lags 1-3) of the daily GMV
     * series — the AR-order diagnostic ACF alone can't give (ACF of an
@@ -5605,7 +5562,7 @@ object Stats extends QueryFamily("stats") {
         (col("p_retailprice").cast("decimal(18,2)") * 100).cast("long")
           .as("__p")),
         col("pk") === col("p_partkey"))
-      .select(expr(s"${lnQ6("__p")}").as("x"), expr(s"${lnQ6("__q")}").as("y"))
+      .select(expr(s"${lnQ("__p")}").as("x"), expr(s"${lnQ("__q")}").as("y"))
     val m = byPart.agg(count(lit(1)).as("n"),
       sum("x").as("sx"), sum("y").as("sy"),
       sum(expr("CAST(x AS DECIMAL(38,0)) * y")).as("sxy"),
@@ -5622,14 +5579,9 @@ object Stats extends QueryFamily("stats") {
           "CAST(n AS DECIMAL(38,0)) * sxx - CAST(sx AS DECIMAL(38,0)) * sx",
           duck = false)).cast("long").as("elasticity_ppm"),
         expr(
-          """round(CAST(CAST(CASE WHEN CAST(n AS DECIMAL(38,0)) * sxy
-            |    - CAST(sx AS DECIMAL(38,0)) * sy >= 0
-            |  THEN (CAST(n AS DECIMAL(38,0)) * sxy
-            |        - CAST(sx AS DECIMAL(38,0)) * sy)
-            |       div (CAST(n AS DECIMAL(38,0)) * n)
-            |  ELSE -((CAST(sx AS DECIMAL(38,0)) * sy
-            |          - CAST(n AS DECIMAL(38,0)) * sxy)
-            |         div (CAST(n AS DECIMAL(38,0)) * n)) END AS BIGINT) AS DOUBLE)
+          s"""round(CAST(CAST(${sdiv(
+                "CAST(n AS DECIMAL(38,0)) * sxy - CAST(sx AS DECIMAL(38,0)) * sy",
+                "CAST(n AS DECIMAL(38,0)) * n", duck = false)} AS BIGINT) AS DOUBLE)
             |  / sqrt(CAST(CAST((CAST(n AS DECIMAL(38,0)) * sxx
             |           - CAST(sx AS DECIMAL(38,0)) * sx)
             |          div (CAST(n AS DECIMAL(38,0)) * n) AS BIGINT) AS DOUBLE)
@@ -5640,14 +5592,13 @@ object Stats extends QueryFamily("stats") {
   }
 
   private val elasticitySql = {
-    def ln6(x: String): String = operators.FixedPoint.lnQ(x)
     s"""WITH bp AS (
       |  SELECT l.l_partkey AS pk, CAST(sum(CAST(l.l_quantity AS BIGINT))
       |    AS BIGINT) AS q
       |  FROM lineitem l GROUP BY 1),
       |xy AS (
-      |  SELECT ${ln6("CAST(p.p_retailprice * 100 AS BIGINT)")} AS x,
-      |    ${ln6("bp.q")} AS y
+      |  SELECT ${lnQ("CAST(p.p_retailprice * 100 AS BIGINT)")} AS x,
+      |    ${lnQ("bp.q")} AS y
       |  FROM bp JOIN part p ON p.p_partkey = bp.pk),
       |m AS (
       |  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sx,
@@ -5661,12 +5612,8 @@ object Stats extends QueryFamily("stats") {
           "CAST(n AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy",
           "CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx",
           duck = true)} AS BIGINT) AS elasticity_ppm,
-      |  round(CAST(CAST(CASE WHEN CAST(n AS HUGEINT) * sxy
-      |      - CAST(sx AS HUGEINT) * sy >= 0
-      |    THEN (CAST(n AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy)
-      |         // (CAST(n AS HUGEINT) * n)
-      |    ELSE -((CAST(sx AS HUGEINT) * sy - CAST(n AS HUGEINT) * sxy)
-      |           // (CAST(n AS HUGEINT) * n)) END AS BIGINT) AS DOUBLE)
+      |  round(CAST(CAST(${sdiv("CAST(n AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy",
+          "CAST(n AS HUGEINT) * n", duck = true)} AS BIGINT) AS DOUBLE)
       |   / sqrt(CAST(CAST((CAST(n AS HUGEINT) * sxx
       |            - CAST(sx AS HUGEINT) * sx)
       |           // (CAST(n AS HUGEINT) * n) AS BIGINT) AS DOUBLE)
@@ -5720,9 +5667,7 @@ object Stats extends QueryFamily("stats") {
         sum("st").as("__sta"), sum("nt").as("__nta"),
         sum("sc").as("__sca"), sum("nc").as("__nca"))
       .withColumn("ate_ppm", expr(
-        """CASE WHEN __w >= 0 THEN CAST(__w div n_orders AS BIGINT)
-          | ELSE -CAST((-__w) div n_orders AS BIGINT) END"""
-          .stripMargin.replace("\n", " ")))
+        s"CAST(${sdiv("__w", "n_orders", duck = false)} AS BIGINT)"))
       .withColumn("naive_diff_ppm", expr(
         """CAST((CAST(__sta AS DECIMAL(38,0)) * 1000000) div __nta
           | - (CAST(__sca AS DECIMAL(38,0)) * 1000000) div __nca AS BIGINT)"""
@@ -5731,7 +5676,7 @@ object Stats extends QueryFamily("stats") {
   }
 
   private val stratifiedAteSql =
-    """WITH cust AS (
+    s"""WITH cust AS (
       |  SELECT c_custkey,
       |    CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS t,
       |    row_number() OVER (ORDER BY CAST(c_acctbal * 100 AS BIGINT),
@@ -5761,8 +5706,7 @@ object Stats extends QueryFamily("stats") {
       |    CAST(sum(sc) AS BIGINT) AS sca, CAST(sum(nc) AS BIGINT) AS nca
       |  FROM used)
       |SELECT n_strata_used, n_orders,
-      |  CASE WHEN w >= 0 THEN CAST(w // n_orders AS BIGINT)
-      |    ELSE -CAST((-w) // n_orders AS BIGINT) END AS ate_ppm,
+      |  CAST(${sdiv("w", "n_orders", duck = true)} AS BIGINT) AS ate_ppm,
       |  CAST((CAST(sta AS HUGEINT) * 1000000) // nta
       |       - (CAST(sca AS HUGEINT) * 1000000) // nca AS BIGINT)
       |    AS naive_diff_ppm
@@ -6557,13 +6501,13 @@ object Stats extends QueryFamily("stats") {
            | div (CAST(n AS DECIMAL(38,0)) * __dx)""".stripMargin
           .replace("\n", " ")))
       .withColumn("resid_milli", expr(
-        "CAST(y AS DECIMAL(38,0)) * 1000 - " + sdivDuckOrSpark(
+        "CAST(y AS DECIMAL(38,0)) * 1000 - " + sdiv(
           "CAST(b_ppm AS DECIMAL(38,0)) * x * 1000 + CAST(a_ppm AS DECIMAL(38,0)) * 1000",
           "1000000", duck = false)))
       // residual back to cents for the dimensionless Cook's chain —
       // e²·anything in raw milli overflows any fixed width at 100 TB;
       // normalizing by SSE keeps every quotient O(n·outlier²/s²)
-      .withColumn("__ec", expr(sdivDuckOrSpark(
+      .withColumn("__ec", expr(sdiv(
         "CAST(resid_milli AS DECIMAL(38,0))", "1000", duck = false)))
       .withColumn("n_days", col("n"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -6591,14 +6535,6 @@ object Stats extends QueryFamily("stats") {
   }
 
   private val cooksDistanceSql = {
-    def sdiv(num: String, den: String) =
-      s"""(CASE WHEN ($num) >= 0 THEN (($num) * 1000000) // ($den)
-         | ELSE -((-($num)) * 1000000 // ($den)) END)"""
-        .stripMargin.replace("\n", " ")
-    def sdivRaw(num: String, den: String) =
-      s"""(CASE WHEN ($num) >= 0 THEN ($num) // ($den)
-         | ELSE -((-($num)) // ($den)) END)"""
-        .stripMargin.replace("\n", " ")
     s"""WITH daily AS (
        |  SELECT strftime(o_orderdate, '%Y-%m-%d') AS day,
        |    sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS y
@@ -6617,11 +6553,11 @@ object Stats extends QueryFamily("stats") {
        |f AS (
        |  SELECT xy.day, xy.x, xy.y, m.n, m.sx,
        |    CAST(m.n AS HUGEINT) * m.sxx - CAST(m.sx AS HUGEINT) * m.sx AS dx,
-       |    ${sdiv("CAST(m.n AS HUGEINT) * m.sxy - CAST(m.sx AS HUGEINT) * m.sy",
-              "CAST(m.n AS HUGEINT) * m.sxx - CAST(m.sx AS HUGEINT) * m.sx")}
+       |    ${sdivPpm("CAST(m.n AS HUGEINT) * m.sxy - CAST(m.sx AS HUGEINT) * m.sy",
+              "CAST(m.n AS HUGEINT) * m.sxx - CAST(m.sx AS HUGEINT) * m.sx", duck = true)}
        |      AS b_ppm,
-       |    ${sdiv("CAST(m.sy AS HUGEINT) * m.sxx - CAST(m.sx AS HUGEINT) * m.sxy",
-              "CAST(m.n AS HUGEINT) * m.sxx - CAST(m.sx AS HUGEINT) * m.sx")}
+       |    ${sdivPpm("CAST(m.sy AS HUGEINT) * m.sxx - CAST(m.sx AS HUGEINT) * m.sxy",
+              "CAST(m.n AS HUGEINT) * m.sxx - CAST(m.sx AS HUGEINT) * m.sx", duck = true)}
        |      AS a_ppm
        |  FROM xy, m),
        |g AS (
@@ -6629,11 +6565,11 @@ object Stats extends QueryFamily("stats") {
        |    ((dx + (CAST(n AS HUGEINT) * x - sx) * (CAST(n AS HUGEINT) * x - sx))
        |     * 1000000) // (CAST(n AS HUGEINT) * dx) AS h_ppm,
        |    CAST(y AS HUGEINT) * 1000 -
-       |      ${sdivRaw("CAST(b_ppm AS HUGEINT) * x * 1000 + CAST(a_ppm AS HUGEINT) * 1000",
-                "1000000")} AS resid_milli
+       |      ${sdiv("CAST(b_ppm AS HUGEINT) * x * 1000 + CAST(a_ppm AS HUGEINT) * 1000",
+                "1000000", duck = true)} AS resid_milli
        |  FROM f),
        |h AS (
-       |  SELECT *, ${sdivRaw("resid_milli", "1000")} AS ec FROM g),
+       |  SELECT *, ${sdiv("resid_milli", "1000", duck = true)} AS ec FROM g),
        |sse AS (SELECT sum(CAST(ec AS HUGEINT) * ec) AS sse FROM h),
        |d AS (
        |  SELECT day, h_ppm, resid_milli,
@@ -6913,7 +6849,7 @@ object Stats extends QueryFamily("stats") {
     att.crossJoin(broadcast(o.filter(col("tr"))
         .agg(count(lit(1)).as("n_treated"))))
       .select(col("n_treated"), col("n_matched"),
-        expr(sdivDuckOrSpark("__td", "n_matched", duck = false))
+        expr(sdiv("__td", "n_matched", duck = false))
           .cast("long").as("att_cents"))
   }
 
@@ -6954,8 +6890,7 @@ object Stats extends QueryFamily("stats") {
        |tn AS (SELECT count(*) AS n_treated FROM o WHERE tr)
        |SELECT CAST(tn.n_treated AS BIGINT) AS n_treated,
        |  CAST(a.n_matched AS BIGINT) AS n_matched,
-       |  CAST(CASE WHEN a.td >= 0 THEN a.td // a.n_matched
-       |       ELSE -((-a.td) // a.n_matched) END AS BIGINT) AS att_cents
+       |  CAST(${sdiv("a.td", "a.n_matched", duck = true)} AS BIGINT) AS att_cents
        |FROM a, tn""".stripMargin
   }
 
@@ -7011,10 +6946,6 @@ object Stats extends QueryFamily("stats") {
   }
 
   private val fixedEffectsSql = {
-    def sdiv(num: String, den: String) =
-      s"""CASE WHEN ($num) >= 0 THEN (($num) * 1000000) // ($den)
-         | ELSE -((-($num)) * 1000000 // ($den)) END"""
-        .stripMargin.replace("\n", " ")
     s"""WITH rev AS (
        |  SELECT c.c_nationkey AS g,
        |    strftime(o.o_orderdate, '%Y-%m-%d') AS d,
@@ -7046,9 +6977,9 @@ object Stats extends QueryFamily("stats") {
        |  FROM per)
        |SELECT CAST(n_groups AS BIGINT) AS n_groups,
        |  CAST(n_days AS BIGINT) AS n_days,
-       |  CAST(${sdiv("num", "den")} AS BIGINT) AS beta_fe_ppm,
-       |  CAST(${sdiv("CAST(n AS HUGEINT) * tsxy - CAST(tsx AS HUGEINT) * tsy",
-              "CAST(n AS HUGEINT) * tsxx - CAST(tsx AS HUGEINT) * tsx")}
+       |  CAST(${sdivPpm("num", "den", duck = true)} AS BIGINT) AS beta_fe_ppm,
+       |  CAST(${sdivPpm("CAST(n AS HUGEINT) * tsxy - CAST(tsx AS HUGEINT) * tsy",
+              "CAST(n AS HUGEINT) * tsxx - CAST(tsx AS HUGEINT) * tsx", duck = true)}
        |    AS BIGINT) AS beta_ols_ppm
        |FROM a""".stripMargin
   }
@@ -7091,8 +7022,8 @@ object Stats extends QueryFamily("stats") {
         .withColumn("__a", expr(sdivPpm(
           "CAST(sy AS DECIMAL(38,0)) * sxx - CAST(sx AS DECIMAL(38,0)) * sxy",
           "greatest(__dx, 1)", duck = false)))
-        .withColumn("__ec", expr(sdivDuckOrSpark(
-          "CAST(y AS DECIMAL(38,0)) * 1000 - " + sdivDuckOrSpark(
+        .withColumn("__ec", expr(sdiv(
+          "CAST(y AS DECIMAL(38,0)) * 1000 - " + sdiv(
             "CAST(__b AS DECIMAL(38,0)) * x * 1000 + CAST(__a AS DECIMAL(38,0)) * 1000",
             "1000000", duck = false), "1000", duck = false)))
         .agg(sum(expr("CAST(__ec AS DECIMAL(38,0)) * __ec")).as("sse"),
@@ -7111,14 +7042,6 @@ object Stats extends QueryFamily("stats") {
   }
 
   private val chowTestSql = {
-    def sdiv(num: String, den: String) =
-      s"""(CASE WHEN ($num) >= 0 THEN (($num) * 1000000) // ($den)
-         | ELSE -((-($num)) * 1000000 // ($den)) END)"""
-        .stripMargin.replace("\n", " ")
-    def sdivRaw(num: String, den: String) =
-      s"""(CASE WHEN ($num) >= 0 THEN ($num) // ($den)
-         | ELSE -((-($num)) // ($den)) END)"""
-        .stripMargin.replace("\n", " ")
     def fitCtes(tag: String, src: String, grp: String) =
       s"""mo$tag AS (
          |  SELECT $grp count(*) AS n, sum(x) AS sx, sum(x * x) AS sxx,
@@ -7126,19 +7049,19 @@ object Stats extends QueryFamily("stats") {
          |  FROM $src ${if (grp.nonEmpty) "GROUP BY seg" else ""}),
          |f$tag AS (
          |  SELECT t.x, t.y, m.n,
-         |    ${sdiv("CAST(m.n AS HUGEINT) * m.sxy - CAST(m.sx AS HUGEINT) * m.sy",
-              "greatest(CAST(m.n AS HUGEINT) * m.sxx - CAST(m.sx AS HUGEINT) * m.sx, 1)")}
+         |    ${sdivPpm("CAST(m.n AS HUGEINT) * m.sxy - CAST(m.sx AS HUGEINT) * m.sy",
+              "greatest(CAST(m.n AS HUGEINT) * m.sxx - CAST(m.sx AS HUGEINT) * m.sx, 1)", duck = true)}
          |      AS b,
-         |    ${sdiv("CAST(m.sy AS HUGEINT) * m.sxx - CAST(m.sx AS HUGEINT) * m.sxy",
-              "greatest(CAST(m.n AS HUGEINT) * m.sxx - CAST(m.sx AS HUGEINT) * m.sx, 1)")}
+         |    ${sdivPpm("CAST(m.sy AS HUGEINT) * m.sxx - CAST(m.sx AS HUGEINT) * m.sxy",
+              "greatest(CAST(m.n AS HUGEINT) * m.sxx - CAST(m.sx AS HUGEINT) * m.sx, 1)", duck = true)}
          |      AS a
          |  FROM $src t JOIN mo$tag m ${if (grp.nonEmpty) "ON m.seg = t.seg" else "ON 1=1"}),
          |s$tag AS (
          |  SELECT sum(CAST(ec AS HUGEINT) * ec) AS sse, count(*) AS nn FROM (
-         |    SELECT ${sdivRaw(
-              s"CAST(y AS HUGEINT) * 1000 - ${sdivRaw(
+         |    SELECT ${sdiv(
+              s"CAST(y AS HUGEINT) * 1000 - ${sdiv(
                 "CAST(b AS HUGEINT) * x * 1000 + CAST(a AS HUGEINT) * 1000",
-                "1000000")}", "1000")} AS ec
+                "1000000", duck = true)}", "1000", duck = true)} AS ec
          |    FROM f$tag))""".stripMargin
     s"""WITH daily AS (
        |  SELECT strftime(o_orderdate, '%Y-%m-%d') AS day,
@@ -7233,13 +7156,8 @@ object Stats extends QueryFamily("stats") {
        |  CAST((sx * 1000000) // n_exceed AS BIGINT) AS b0_micro,
        |  CAST((sw * 1000000) // (CAST(n_exceed AS HUGEINT) * (n_exceed - 1))
        |    AS BIGINT) AS b1_micro,
-       |  CAST(CASE WHEN ((2 * (sx * (n_exceed - 1) - sw)
-       |                   - sx * (n_exceed - 1)) >= 0)
-       |             = ((sx * (n_exceed - 1) - 2 * sw) >= 0)
-       |    THEN (abs(2 * (sx * (n_exceed - 1) - sw) - sx * (n_exceed - 1))
-       |          * 1000000) // abs(sx * (n_exceed - 1) - 2 * sw)
-       |    ELSE -((abs(2 * (sx * (n_exceed - 1) - sw) - sx * (n_exceed - 1))
-       |            * 1000000) // abs(sx * (n_exceed - 1) - 2 * sw)) END
+       |  CAST(${sdivPpm2("2 * (sx * (n_exceed - 1) - sw) - sx * (n_exceed - 1)",
+            "sx * (n_exceed - 1) - 2 * sw", duck = true)}
        |    AS BIGINT) AS xi_micro
        |FROM a""".stripMargin
 
@@ -7262,63 +7180,59 @@ object Stats extends QueryFamily("stats") {
         (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long").as("x"))
     val per = o.groupBy("g").agg(
         count(lit(1)).as("n"), sum(col("x").cast("decimal(38,0)")).as("sx"),
-        sum(expr(s"CAST(x AS DECIMAL(38,0)) * ${lnQ6("x")}")).as("sxl"))
+        sum(expr(s"CAST(x AS DECIMAL(38,0)) * ${lnQ("x")}")).as("sxl"))
       .withColumn("mu", expr("CAST(sx div n AS BIGINT)"))
-      .withColumn("tg_micro", expr(sdivDuckOrSpark(
-        s"sxl - CAST(${lnQ6("mu")} AS DECIMAL(38,0)) * sx",
+      .withColumn("tg_micro", expr(sdiv(
+        s"sxl - CAST(${lnQ("mu")} AS DECIMAL(38,0)) * sx",
         "CAST(n AS DECIMAL(38,0)) * mu", duck = false)))
     val tot = per.agg(
       sum("n").as("nn"), sum("sx").as("tsx"), sum("sxl").as("tsxl"),
       // between: Σ_g S_g·lnq6(μ_g) ; within: Σ_g S_g·T_g (micro-weighted)
-      sum(expr(s"sx * ${lnQ6("mu")}")).as("bnum"),
+      sum(expr(s"sx * ${lnQ("mu")}")).as("bnum"),
       sum(expr("sx * tg_micro")).as("wnum"))
     tot.withColumn("tmu", expr("CAST(tsx div nn AS BIGINT)"))
       .select(col("nn").as("n_orders"),
-        expr(sdivDuckOrSpark(
-          s"tsxl - CAST(${lnQ6("tmu")} AS DECIMAL(38,0)) * tsx",
+        expr(sdiv(
+          s"tsxl - CAST(${lnQ("tmu")} AS DECIMAL(38,0)) * tsx",
           "CAST(nn AS DECIMAL(38,0)) * tmu", duck = false)).cast("long")
           .as("theil_total_micro"),
-        expr(sdivDuckOrSpark(
-          s"bnum - CAST(${lnQ6("tmu")} AS DECIMAL(38,0)) * tsx",
+        expr(sdiv(
+          s"bnum - CAST(${lnQ("tmu")} AS DECIMAL(38,0)) * tsx",
           "tsx", duck = false)).cast("long").as("theil_between_micro"),
-        expr(sdivDuckOrSpark("wnum", "tsx", duck = false)).cast("long")
+        expr(sdiv("wnum", "tsx", duck = false)).cast("long")
           .as("theil_within_micro"))
   }
 
   private val theilIndexSql = {
-    def sdivRaw(num: String, den: String) =
-      s"""(CASE WHEN ($num) >= 0 THEN ($num) // ($den)
-         | ELSE -((-($num)) // ($den)) END)"""
-        .stripMargin.replace("\n", " ")
     s"""WITH o AS (
        |  SELECT c.c_nationkey AS g,
        |    CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS x
        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey),
        |per AS (
        |  SELECT g, count(*) AS n, sum(CAST(x AS HUGEINT)) AS sx,
-       |    sum(CAST(x AS HUGEINT) * ${lnQ6("x")}) AS sxl
+       |    sum(CAST(x AS HUGEINT) * ${lnQ("x")}) AS sxl
        |  FROM o GROUP BY 1),
        |pm AS (
        |  SELECT *, CAST(sx // n AS BIGINT) AS mu FROM per),
        |pt AS (
-       |  SELECT *, ${sdivRaw(
-            s"sxl - CAST(${lnQ6("mu")} AS HUGEINT) * sx",
-            "CAST(n AS HUGEINT) * mu")} AS tg_micro
+       |  SELECT *, ${sdiv(
+            s"sxl - CAST(${lnQ("mu")} AS HUGEINT) * sx",
+            "CAST(n AS HUGEINT) * mu", duck = true)} AS tg_micro
        |  FROM pm),
        |tot AS (
        |  SELECT sum(n) AS nn, sum(sx) AS tsx, sum(sxl) AS tsxl,
-       |    sum(sx * ${lnQ6("mu")}) AS bnum,
+       |    sum(sx * ${lnQ("mu")}) AS bnum,
        |    sum(sx * tg_micro) AS wnum
        |  FROM pt),
        |tm AS (SELECT *, CAST(tsx // nn AS BIGINT) AS tmu FROM tot)
        |SELECT CAST(nn AS BIGINT) AS n_orders,
-       |  CAST(${sdivRaw(
-            s"tsxl - CAST(${lnQ6("tmu")} AS HUGEINT) * tsx",
-            "CAST(nn AS HUGEINT) * tmu")} AS BIGINT) AS theil_total_micro,
-       |  CAST(${sdivRaw(
-            s"bnum - CAST(${lnQ6("tmu")} AS HUGEINT) * tsx",
-            "tsx")} AS BIGINT) AS theil_between_micro,
-       |  CAST(${sdivRaw("wnum", "tsx")} AS BIGINT) AS theil_within_micro
+       |  CAST(${sdiv(
+            s"tsxl - CAST(${lnQ("tmu")} AS HUGEINT) * tsx",
+            "CAST(nn AS HUGEINT) * tmu", duck = true)} AS BIGINT) AS theil_total_micro,
+       |  CAST(${sdiv(
+            s"bnum - CAST(${lnQ("tmu")} AS HUGEINT) * tsx",
+            "tsx", duck = true)} AS BIGINT) AS theil_between_micro,
+       |  CAST(${sdiv("wnum", "tsx", duck = true)} AS BIGINT) AS theil_within_micro
        |FROM tm""".stripMargin
   }
 
@@ -7510,7 +7424,7 @@ object Stats extends QueryFamily("stats") {
         "greatest(__dx, 1)", duck = false)))
     seg.join(broadcast(fits.select("seg", "n", "b_ppm", "a_ppm")), Seq("seg"))
       .select(col("seg"), col("n"), col("b_ppm"),
-        abs(col("rank") - expr(sdivDuckOrSpark(
+        abs(col("rank") - expr(sdiv(
           "CAST(b_ppm AS DECIMAL(38,0)) * key + a_ppm", "1000000",
           duck = false))).as("__err"))
       .groupBy("seg")
@@ -7521,14 +7435,6 @@ object Stats extends QueryFamily("stats") {
   }
 
   private val learnedIndexSql = {
-    def sdiv(num: String, den: String) =
-      s"""(CASE WHEN ($num) >= 0 THEN (($num) * 1000000) // ($den)
-         | ELSE -((-($num)) * 1000000 // ($den)) END)"""
-        .stripMargin.replace("\n", " ")
-    def sdivRaw(num: String, den: String) =
-      s"""(CASE WHEN ($num) >= 0 THEN ($num) // ($den)
-         | ELSE -((-($num)) // ($den)) END)"""
-        .stripMargin.replace("\n", " ")
     s"""WITH o AS (
        |  SELECT o_orderkey AS kk,
        |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS key
@@ -7547,18 +7453,18 @@ object Stats extends QueryFamily("stats") {
        |  FROM seg GROUP BY 1),
        |c AS (
        |  SELECT seg, n,
-       |    ${sdiv("CAST(n AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy",
-            "greatest(CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx, 1)")}
+       |    ${sdivPpm("CAST(n AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy",
+            "greatest(CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx, 1)", duck = true)}
        |      AS b_ppm,
-       |    ${sdiv("CAST(sy AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sxy",
-            "greatest(CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx, 1)")}
+       |    ${sdivPpm("CAST(sy AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sxy",
+            "greatest(CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx, 1)", duck = true)}
        |      AS a_ppm
        |  FROM f)
        |SELECT CAST(seg.seg AS BIGINT) AS seg, CAST(c.n AS BIGINT) AS n_keys,
        |  CAST(c.b_ppm AS BIGINT) AS slope_ppm,
        |  CAST(max(abs(seg.rank -
-       |    ${sdivRaw("CAST(c.b_ppm AS HUGEINT) * seg.key + c.a_ppm",
-              "1000000")})) AS BIGINT) AS max_err
+       |    ${sdiv("CAST(c.b_ppm AS HUGEINT) * seg.key + c.a_ppm",
+              "1000000", duck = true)})) AS BIGINT) AS max_err
        |FROM seg JOIN c USING (seg)
        |GROUP BY 1, 2, 3""".stripMargin
   }
@@ -8198,24 +8104,20 @@ object Stats extends QueryFamily("stats") {
         col("rev").cast("decimal(38,0)") * 1000000L - col("trend_ppm"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the detrended sum goes NEGATIVE in off-season months, so the
-    // round-nearest device sign-splits like sdivC below — plain
+    // round-nearest device sign-splits (FixedPoint.sdivRound) — plain
     // (2a+b) div (2b) would truncate negative means toward zero
     val seas = tr.filter(col("det_ppm").isNotNull)
       .groupBy(substring(col("month"), 6, 2).as("moy"))
       .agg(count(lit(1)).as("k"), sum(col("det_ppm")).as("sd"))
       .select(col("moy"),
-        expr("""CASE WHEN sd >= 0
-               | THEN (2 * CAST(sd AS DECIMAL(38,0)) + k) div (2 * CAST(k AS DECIMAL(38,0)))
-               | ELSE -((2 * -CAST(sd AS DECIMAL(38,0)) + k) div (2 * CAST(k AS DECIMAL(38,0)))) END"""
-          .stripMargin.replace("\n", " ")).as("seasonal_ppm"))
-    def sdivC(x: String): String =
-      s"CASE WHEN ($x) >= 0 THEN ($x) div 1000000 ELSE -((-($x)) div 1000000) END"
+        expr(sdivRound("CAST(sd AS DECIMAL(38,0))", "CAST(k AS DECIMAL(38,0))", duck = false))
+          .as("seasonal_ppm"))
     tr.filter(col("trend_ppm").isNotNull)
       .join(broadcast(seas), substring(col("month"), 6, 2) === col("moy"))
       .select(
-        expr(sdivC("det_ppm - seasonal_ppm")).as("__r"),
-        expr(sdivC("det_ppm")).as("__sr"),
-        expr(sdivC("CAST(rev AS DECIMAL(38,0)) * 1000000 - seasonal_ppm"))
+        expr(sdiv("det_ppm - seasonal_ppm", "1000000", duck = false)).as("__r"),
+        expr(sdiv("det_ppm", "1000000", duck = false)).as("__sr"),
+        expr(sdiv("CAST(rev AS DECIMAL(38,0)) * 1000000 - seasonal_ppm", "1000000", duck = false))
           .as("__tr"))
       .agg(count(lit(1)).as("__n"),
         // cents² per month can pass 1e18 — every square folds in
@@ -8242,8 +8144,6 @@ object Stats extends QueryFamily("stats") {
        | ELSE 0 END AS BIGINT)""".stripMargin.replace("\n", " ")
 
   private lazy val stlStrengthSql = {
-    def sdivC(x: String): String =
-      s"CASE WHEN ($x) >= 0 THEN ($x) // 1000000 ELSE -((-($x)) // 1000000) END"
     def strength(qx: String, sx: String): String =
       s"""CAST(CASE WHEN (n0 * CAST($qx AS HUGEINT) - CAST($sx AS HUGEINT) * $sx) > 0
          | THEN greatest(0, 1000000 -
@@ -8272,14 +8172,12 @@ object Stats extends QueryFamily("stats") {
        |    CAST(count(*) AS HUGEINT) AS k
        |  FROM dt WHERE det_ppm IS NOT NULL GROUP BY 1),
        |se AS (
-       |  SELECT moy, CASE WHEN sd >= 0
-       |    THEN (2 * sd + k) // (2 * k)
-       |    ELSE -((2 * -sd + k) // (2 * k)) END AS seasonal_ppm
+       |  SELECT moy, ${sdivRound("sd", "k", duck = true)} AS seasonal_ppm
        |  FROM se0),
        |c AS (
-       |  SELECT ${sdivC("det_ppm - seasonal_ppm")} AS r,
-       |    ${sdivC("det_ppm")} AS sr,
-       |    ${sdivC("CAST(rev AS HUGEINT) * 1000000 - seasonal_ppm")} AS trv
+       |  SELECT ${sdiv("det_ppm - seasonal_ppm", "1000000", duck = true)} AS r,
+       |    ${sdiv("det_ppm", "1000000", duck = true)} AS sr,
+       |    ${sdiv("CAST(rev AS HUGEINT) * 1000000 - seasonal_ppm", "1000000", duck = true)} AS trv
        |  FROM dt JOIN se ON substr(month, 6, 2) = se.moy
        |  WHERE trend_ppm IS NOT NULL),
        |f AS (

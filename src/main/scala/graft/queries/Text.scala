@@ -11,6 +11,7 @@ import graft.operators._
   * tokenization, language models, corpus curation and text audits. */
 object Text extends QueryFamily("text") {
   import Common._
+  import FixedPoint.{lnQ, sdiv, sdivPpm}
 
   /** #23 text quality scoring: length / punctuation / stopword-family
     * ratios, all codegen'd built-ins over the pruned text column. */
@@ -369,13 +370,13 @@ object Text extends QueryFamily("text") {
           .as("entropy"))
 
   private val tokenEntropySql =
-    """WITH tok AS (
+    s"""WITH tok AS (
       |  SELECT doc_id,
-      |    unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok
+      |    unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok
       |  FROM documents),
       |c AS (SELECT doc_id, tok, count(*) AS c FROM tok GROUP BY 1, 2),
       |a AS (SELECT doc_id, sum(c) AS t,
-      |        sum(c * CAST(floor(ln(c) * 1e6) AS BIGINT)) AS s
+      |        sum(c * ${lnQ("c")}) AS s
       |      FROM c GROUP BY 1)
       |SELECT doc_id, CAST(t AS BIGINT) AS n_tokens,
       |  round(ln(t) - s / (1e6 * t), 6) AS entropy
@@ -1169,16 +1170,16 @@ object Text extends QueryFamily("text") {
   }
 
   private val zipfFitSql =
-    """WITH tok AS (
-      |  SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS token
+    s"""WITH tok AS (
+      |  SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS token
       |  FROM documents),
       |tf AS (SELECT token, CAST(count(*) AS BIGINT) AS freq FROM tok
       |       GROUP BY 1 ORDER BY freq DESC, token LIMIT 200),
       |r AS (SELECT freq,
       |        CAST(row_number() OVER (ORDER BY freq DESC, token) AS BIGINT) AS rk
       |      FROM tf),
-      |c AS (SELECT CAST(floor(ln(rk) * 1e6) AS BIGINT) AS x,
-      |        CAST(floor(ln(freq) * 1e6) AS BIGINT) AS y
+      |c AS (SELECT ${lnQ("rk")} AS x,
+      |        ${lnQ("freq")} AS y
       |      FROM r),
       |m AS (SELECT CAST(count(*) AS BIGINT) AS n_terms,
       |        CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
@@ -2364,19 +2365,12 @@ object Text extends QueryFamily("text") {
 
   /** The κ fold over columns (n, agree, __rc) — shared with the
     * property spec so the PRODUCTION string is what gets tested. The
-    * division is sign-symmetric (both branches divide a nonnegative
-    * numerator) because Spark's `div` truncates toward zero while
-    * DuckDB's `//` floors: on nonnegatives they coincide, on a negative
-    * numerator they differ by one ulp of the quotient. DECIMAL(38,0)
-    * headroom: n ≤ 1e15 docs keeps |num|·1e6 ≤ n²·1e6 = 1e36 < 1e38. */
+    * numerator goes negative when agreement is below chance, hence the
+    * sign-split division. DECIMAL(38,0) headroom: n ≤ 1e15 docs keeps
+    * |num|·1e6 ≤ n²·1e6 = 1e36 < 1e38. */
   private[graft] val KappaPpmExpr: String =
-    """CAST(CASE
-      WHEN CAST(n AS DECIMAL(38,0)) * agree - __rc >= 0
-      THEN ((CAST(n AS DECIMAL(38,0)) * agree - __rc) * 1000000)
-           div (CAST(n AS DECIMAL(38,0)) * n - __rc)
-      ELSE -(((__rc - CAST(n AS DECIMAL(38,0)) * agree) * 1000000)
-           div (CAST(n AS DECIMAL(38,0)) * n - __rc))
-      END AS BIGINT)"""
+    s"""CAST(${sdivPpm("CAST(n AS DECIMAL(38,0)) * agree - __rc",
+      "CAST(n AS DECIMAL(38,0)) * n - __rc", duck = false)} AS BIGINT)"""
 
   private val cohenKappaSql = {
     // the langId CASE over an arbitrary raw-text SQL expression — same
@@ -2411,12 +2405,8 @@ object Text extends QueryFamily("text") {
        |SELECT CAST(n AS BIGINT) AS n, CAST(agree AS BIGINT) AS agree,
        |  CAST((agree * 1000000) // n AS BIGINT) AS po_ppm,
        |  CAST((rc * 1000000) // (CAST(n AS HUGEINT) * n) AS BIGINT) AS pe_ppm,
-       |  CAST(CASE WHEN CAST(n AS HUGEINT) * agree - rc >= 0
-       |    THEN ((CAST(n AS HUGEINT) * agree - rc) * 1000000)
-       |         // (CAST(n AS HUGEINT) * n - rc)
-       |    ELSE -(((rc - CAST(n AS HUGEINT) * agree) * 1000000)
-       |         // (CAST(n AS HUGEINT) * n - rc))
-       |    END AS BIGINT) AS kappa_ppm
+       |  CAST(${sdivPpm("CAST(n AS HUGEINT) * agree - rc",
+            "CAST(n AS HUGEINT) * n - rc", duck = true)} AS BIGINT) AS kappa_ppm
        |FROM tot, rc""".stripMargin
   }
 
@@ -2665,34 +2655,18 @@ object Text extends QueryFamily("text") {
         sum("__k").as("s"),
         sum(expr("CASE WHEN __k = 0 OR __k = 3 THEN 6 ELSE 2 END")).as("a6"))
       .select(col("n"), col("s"), col("a6"),
-        expr("""CAST(CASE
-          WHEN 3 * CAST(n AS DECIMAL(38,0)) * a6
-               - 2 * (CAST(s AS DECIMAL(38,0)) * s
-                 + (3 * CAST(n AS DECIMAL(38,0)) - s)
-                   * (3 * CAST(n AS DECIMAL(38,0)) - s)) >= 0
-          THEN ((3 * CAST(n AS DECIMAL(38,0)) * a6
-               - 2 * (CAST(s AS DECIMAL(38,0)) * s
-                 + (3 * CAST(n AS DECIMAL(38,0)) - s)
-                   * (3 * CAST(n AS DECIMAL(38,0)) - s))) * 1000000)
-               div (18 * CAST(n AS DECIMAL(38,0)) * n
-                 - 2 * (CAST(s AS DECIMAL(38,0)) * s
-                   + (3 * CAST(n AS DECIMAL(38,0)) - s)
-                     * (3 * CAST(n AS DECIMAL(38,0)) - s)))
-          ELSE -(((2 * (CAST(s AS DECIMAL(38,0)) * s
-                 + (3 * CAST(n AS DECIMAL(38,0)) - s)
-                   * (3 * CAST(n AS DECIMAL(38,0)) - s))
-               - 3 * CAST(n AS DECIMAL(38,0)) * a6) * 1000000)
-               div (18 * CAST(n AS DECIMAL(38,0)) * n
-                 - 2 * (CAST(s AS DECIMAL(38,0)) * s
-                   + (3 * CAST(n AS DECIMAL(38,0)) - s)
-                     * (3 * CAST(n AS DECIMAL(38,0)) - s))))
-          END AS BIGINT)""").as("fleiss_kappa_ppm"))
+        expr(s"""CAST(${sdivPpm(
+          "3 * CAST(n AS DECIMAL(38,0)) * a6 - 2 * (CAST(s AS DECIMAL(38,0)) * s" +
+            " + (3 * CAST(n AS DECIMAL(38,0)) - s) * (3 * CAST(n AS DECIMAL(38,0)) - s))",
+          "18 * CAST(n AS DECIMAL(38,0)) * n - 2 * (CAST(s AS DECIMAL(38,0)) * s" +
+            " + (3 * CAST(n AS DECIMAL(38,0)) - s) * (3 * CAST(n AS DECIMAL(38,0)) - s))",
+          duck = false)} AS BIGINT)""").as("fleiss_kappa_ppm"))
   }
 
   private val fleissKappaSql =
-    """WITH d AS (
-      |  SELECT string_split_regex(trim(text), '\s+') AS toks,
-      |    length(regexp_replace(text, '\s+', '', 'g')) AS nc
+    s"""WITH d AS (
+      |  SELECT string_split_regex(trim(text), '\\s+') AS toks,
+      |    length(regexp_replace(text, '\\s+', '', 'g')) AS nc
       |  FROM documents),
       |r AS (
       |  SELECT
@@ -2709,28 +2683,12 @@ object Text extends QueryFamily("text") {
       |      AS a6
       |  FROM r)
       |SELECT n, s, a6,
-      |  CAST(CASE
-      |    WHEN 3 * CAST(n AS HUGEINT) * a6
-      |         - 2 * (CAST(s AS HUGEINT) * s
-      |           + (3 * CAST(n AS HUGEINT) - s) * (3 * CAST(n AS HUGEINT) - s))
-      |         >= 0
-      |    THEN ((3 * CAST(n AS HUGEINT) * a6
-      |         - 2 * (CAST(s AS HUGEINT) * s
-      |           + (3 * CAST(n AS HUGEINT) - s)
-      |             * (3 * CAST(n AS HUGEINT) - s))) * 1000000)
-      |         // (18 * CAST(n AS HUGEINT) * n
-      |           - 2 * (CAST(s AS HUGEINT) * s
-      |             + (3 * CAST(n AS HUGEINT) - s)
-      |               * (3 * CAST(n AS HUGEINT) - s)))
-      |    ELSE -(((2 * (CAST(s AS HUGEINT) * s
-      |           + (3 * CAST(n AS HUGEINT) - s)
-      |             * (3 * CAST(n AS HUGEINT) - s))
-      |         - 3 * CAST(n AS HUGEINT) * a6) * 1000000)
-      |         // (18 * CAST(n AS HUGEINT) * n
-      |           - 2 * (CAST(s AS HUGEINT) * s
-      |             + (3 * CAST(n AS HUGEINT) - s)
-      |               * (3 * CAST(n AS HUGEINT) - s))))
-      |    END AS BIGINT) AS fleiss_kappa_ppm
+      |  CAST(${sdivPpm(
+          "3 * CAST(n AS HUGEINT) * a6" +
+            " - 2 * (CAST(s AS HUGEINT) * s + (3 * CAST(n AS HUGEINT) - s) * (3 * CAST(n AS HUGEINT) - s))",
+          "18 * CAST(n AS HUGEINT) * n" +
+            " - 2 * (CAST(s AS HUGEINT) * s + (3 * CAST(n AS HUGEINT) - s) * (3 * CAST(n AS HUGEINT) - s))",
+          duck = true)} AS BIGINT) AS fleiss_kappa_ppm
       |FROM f""".stripMargin
 
   /** #273 McNemar's test — the PAIRED comparison two classifiers get
@@ -2823,17 +2781,11 @@ object Text extends QueryFamily("text") {
         expr("""CAST(((4 * CAST(n AS DECIMAL(38,0)) * n - __q) * 1000000)
           div (2 * CAST(n AS DECIMAL(38,0)) * (2 * n - 1)) AS BIGINT)""")
           .as("de_ppm"),
-        expr("""CAST(CASE
+        expr(s"""CAST(CASE
           WHEN 4 * CAST(n AS DECIMAL(38,0)) * n - __q = 0 THEN 1000000
-          WHEN 4 * CAST(n AS DECIMAL(38,0)) * n - __q
-               - 2 * CAST(n_disagree AS DECIMAL(38,0)) * (2 * n - 1) >= 0
-          THEN ((4 * CAST(n AS DECIMAL(38,0)) * n - __q
-                 - 2 * CAST(n_disagree AS DECIMAL(38,0)) * (2 * n - 1))
-                * 1000000)
-               div (4 * CAST(n AS DECIMAL(38,0)) * n - __q)
-          ELSE -(((2 * CAST(n_disagree AS DECIMAL(38,0)) * (2 * n - 1)
-                   - (4 * CAST(n AS DECIMAL(38,0)) * n - __q)) * 1000000)
-                 div (4 * CAST(n AS DECIMAL(38,0)) * n - __q))
+          ELSE ${sdivPpm(
+            "4 * CAST(n AS DECIMAL(38,0)) * n - __q - 2 * CAST(n_disagree AS DECIMAL(38,0)) * (2 * n - 1)",
+            "4 * CAST(n AS DECIMAL(38,0)) * n - __q", duck = false)}
           END AS BIGINT)""").as("alpha_ppm"))
   }
 
@@ -2873,15 +2825,9 @@ object Text extends QueryFamily("text") {
        |    AS de_ppm,
        |  CAST(CASE
        |    WHEN 4 * CAST(t.n AS HUGEINT) * t.n - q.q = 0 THEN 1000000
-       |    WHEN 4 * CAST(t.n AS HUGEINT) * t.n - q.q
-       |         - 2 * CAST(t.n_disagree AS HUGEINT) * (2 * t.n - 1) >= 0
-       |    THEN ((4 * CAST(t.n AS HUGEINT) * t.n - q.q
-       |           - 2 * CAST(t.n_disagree AS HUGEINT) * (2 * t.n - 1))
-       |          * 1000000)
-       |         // (4 * CAST(t.n AS HUGEINT) * t.n - q.q)
-       |    ELSE -(((2 * CAST(t.n_disagree AS HUGEINT) * (2 * t.n - 1)
-       |             - (4 * CAST(t.n AS HUGEINT) * t.n - q.q)) * 1000000)
-       |           // (4 * CAST(t.n AS HUGEINT) * t.n - q.q))
+       |    ELSE ${sdivPpm(
+            "4 * CAST(t.n AS HUGEINT) * t.n - q.q - 2 * CAST(t.n_disagree AS HUGEINT) * (2 * t.n - 1)",
+            "4 * CAST(t.n AS HUGEINT) * t.n - q.q", duck = true)}
        |    END AS BIGINT) AS alpha_ppm
        |FROM tot t, q""".stripMargin
   }
@@ -3094,7 +3040,7 @@ object Text extends QueryFamily("text") {
   private[graft] val CharKlExpr: String = (1 to 5).map { i =>
     val p = s"greatest(1, ((c$i + 1) * 1000000) div (n_chars + 5))"
     val q = s"greatest(1, ((t$i + 1) * 1000000) div (tn + 5))"
-    s"($p * (CAST(floor(ln($p) * 1000000) AS BIGINT) - CAST(floor(ln($q) * 1000000) AS BIGINT)))"
+    s"($p * (${lnQ(p)} - ${lnQ(q)}))"
   }.mkString(" + ")
 
   private lazy val charKlSql = {
@@ -3323,7 +3269,7 @@ object Text extends QueryFamily("text") {
   private def collocationLlr(s: SparkSession, dir: String): DataFrame = {
     def xlq(x: String): String =
       s"""CASE WHEN $x > 0 THEN CAST($x AS DECIMAL(38,0))
-         | * CAST(floor(ln($x) * 1e6) AS BIGINT) ELSE CAST(0 AS DECIMAL(38,0))
+         | * ${lnQ(x)} ELSE CAST(0 AS DECIMAL(38,0))
          | END""".stripMargin.replace("\n", " ")
     val big = t(s, dir, "documents")
       .select(expr(
@@ -3355,8 +3301,7 @@ object Text extends QueryFamily("text") {
 
   private val collocationLlrSql = {
     def xlq(x: String): String =
-      s"CASE WHEN $x > 0 THEN CAST($x AS HUGEINT)" +
-        s" * CAST(floor(ln($x) * 1e6) AS BIGINT) ELSE 0 END"
+      s"CASE WHEN $x > 0 THEN CAST($x AS HUGEINT) * ${lnQ(x)} ELSE 0 END"
     s"""WITH ws AS (
       |  SELECT list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
       |                     w -> w <> '') AS l
@@ -3472,8 +3417,8 @@ object Text extends QueryFamily("text") {
       .filter(col("__fd") <= col("cut_doc_id"))
       .groupBy("decile").agg(count(lit(1)).as("vocab_cum"))
     val pts = nk.join(vk, Seq("decile"))
-      .withColumn("__x", expr(lnQ6("n_tokens_cum")))
-      .withColumn("__y", expr(lnQ6("vocab_cum")))
+      .withColumn("__x", expr(lnQ("n_tokens_cum")))
+      .withColumn("__y", expr(lnQ("vocab_cum")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val beta = pts.agg(count(lit(1)).as("__n"),
         sum("__x").as("__sx"), sum("__y").as("__sy"),
@@ -3490,7 +3435,6 @@ object Text extends QueryFamily("text") {
   }
 
   private val heapsLawSql = {
-    def ln6(x: String): String = operators.FixedPoint.lnQ(x)
     s"""WITH d AS (
       |  SELECT doc_id,
       |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -3527,7 +3471,7 @@ object Text extends QueryFamily("text") {
       |pts AS (
       |  SELECT nk.decile, nk.cut_doc_id, nk.n_docs_cum, nk.n_tokens_cum,
       |    vk.vocab_cum,
-      |    ${ln6("nk.n_tokens_cum")} AS x, ${ln6("vk.vocab_cum")} AS y
+      |    ${lnQ("nk.n_tokens_cum")} AS x, ${lnQ("vk.vocab_cum")} AS y
       |  FROM nk JOIN vk ON vk.decile = nk.decile),
       |b AS (
       |  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sx,
@@ -3717,8 +3661,8 @@ object Text extends QueryFamily("text") {
     val tot = model.agg(sum("ct").as("__tt"), sum("cr").as("__tr"))
     val lam = model.crossJoin(broadcast(tot))
       .select(col("b"),
-        expr(s"CAST(floor(ln(greatest(1, ((ct + 1) * 1000000) div (__tt + $B))) * 1000000) AS BIGINT)" +
-          s" - CAST(floor(ln(greatest(1, ((cr + 1) * 1000000) div (__tr + $B))) * 1000000) AS BIGINT)")
+        expr(s"${lnQ(s"greatest(1, ((ct + 1) * 1000000) div (__tt + $B))")}" +
+          s" - ${lnQ(s"greatest(1, ((cr + 1) * 1000000) div (__tr + $B))")}")
           .as("dl"))
     val perDoc = bcnt
       .join(broadcast(lam), Seq("b"))
@@ -3734,9 +3678,9 @@ object Text extends QueryFamily("text") {
   }
 
   private val dsirSql =
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT doc_id, source,
-      |    regexp_split_to_array(trim(lower(text)), '\s+') AS t
+      |    regexp_split_to_array(trim(lower(text)), '\\s+') AS t
       |  FROM documents),
       |uni AS (SELECT doc_id, source, unnest(t) AS g FROM d),
       |big AS (
@@ -3760,8 +3704,8 @@ object Text extends QueryFamily("text") {
       |               CAST(sum(cr) AS BIGINT) AS tr FROM model),
       |lam AS (
       |  SELECT b,
-      |    CAST(floor(ln(greatest(1, ((ct + 1) * 1000000) // (tt + 2048))) * 1000000) AS BIGINT)
-      |    - CAST(floor(ln(greatest(1, ((cr + 1) * 1000000) // (tr + 2048))) * 1000000) AS BIGINT)
+      |    ${lnQ("greatest(1, ((ct + 1) * 1000000) // (tt + 2048))")}
+      |    - ${lnQ("greatest(1, ((cr + 1) * 1000000) // (tr + 2048))")}
       |      AS dl
       |  FROM model CROSS JOIN tot),
       |pd AS (
@@ -4045,9 +3989,9 @@ object Text extends QueryFamily("text") {
         priors, Seq("c")).crossJoin(broadcast(ndTot))))
       .join(model, Seq("token", "c"), "left")
       .select(col("doc_id"), col("lang"), col("c"),
-        expr(s"""${lnQ6("((coalesce(cnt, 0) + 1) * 1000000000000) div (tot + v)")}
+        expr(s"""${lnQ("((coalesce(cnt, 0) + 1) * 1000000000000) div (tot + v)")}
                  - $LnTrillionQ6""").as("__t"),
-        expr(s"""${lnQ6("(nd * 1000000000000) div ndt")}
+        expr(s"""${lnQ("(nd * 1000000000000) div ndt")}
                  - $LnTrillionQ6""").as("__p"))
       .groupBy("doc_id", "lang", "c")
       .agg((sum("__t") + first("__p")).as("__score"))
@@ -4075,9 +4019,9 @@ object Text extends QueryFamily("text") {
        |test AS (SELECT doc_id, lang, token FROM d WHERE NOT train),
        |sc AS (
        |  SELECT t.doc_id, t.lang, cls.c,
-       |    sum(${lnQ6("((coalesce(m.cnt, 0) + 1) * 1000000000000) // (cls.tot + voc.v)")}
+       |    sum(${lnQ("((coalesce(m.cnt, 0) + 1) * 1000000000000) // (cls.tot + voc.v)")}
        |        - $LnTrillionQ6)
-       |      + any_value(${lnQ6("(pri.nd * 1000000000000) // ndt.ndt")}
+       |      + any_value(${lnQ("(pri.nd * 1000000000000) // ndt.ndt")}
        |        - $LnTrillionQ6) AS score
        |  FROM test t
        |  CROSS JOIN cls CROSS JOIN voc CROSS JOIN ndt
@@ -4136,7 +4080,7 @@ object Text extends QueryFamily("text") {
       .join(broadcast(cont), Seq("id2"))
       .crossJoin(broadcast(types))
       .select(col("doc_id"), expr(
-        s"""${lnQ6("""greatest((CAST(greatest(4 * c12 - 3, 0) * tt
+        s"""${lnQ("""greatest((CAST(greatest(4 * c12 - 3, 0) * tt
                       + 3 * n1post * n1pre AS DECIMAL(38,0)) * 1000000000000)
                      div (CAST(4 * c1 AS DECIMAL(38,0)) * tt), 1)""".replace("\n", " "))}
             - $LnTrillionQ6""").as("__t"))
@@ -4169,7 +4113,7 @@ object Text extends QueryFamily("text") {
        |cont AS (SELECT id2, count(*) AS n1pre FROM bg GROUP BY 1),
        |tt AS (SELECT count(*) AS tt FROM bg)
        |SELECT p.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-       |  CAST(sum(${lnQ6(
+       |  CAST(sum(${lnQ(
             """greatest((CAST(greatest(4 * bg.c12 - 3, 0) * tt.tt
               | + 3 * ctx.n1post * cont.n1pre AS HUGEINT) * 1000000000000)
               | // (CAST(4 * ctx.c1 AS HUGEINT) * tt.tt), 1)""".stripMargin.replace("\n", " "))}
@@ -4443,7 +4387,7 @@ object Text extends QueryFamily("text") {
       .filter(col("source") === col("rsource"))
       .select(col("source"), col("tx"), col("rtx"))
     val slpTerms = (0 to 3).map { i =>
-      s"(${lnQ6(s"greatest((cc[${2 * i + 1}] * 1000000000000) div cc[${2 * i}], 1)")}" +
+      s"(${lnQ(s"greatest((cc[${2 * i + 1}] * 1000000000000) div cc[${2 * i}], 1)")}" +
         s" - $LnTrillionQ6)"
     }.mkString(" + ")
     val perPair = pairs.select(col("source"),
@@ -4453,12 +4397,12 @@ object Text extends QueryFamily("text") {
           TextAnalysis.tokens(col("tx")),
           TextAnalysis.tokens(col("rtx"))).as("cc"))
       .select(col("source"),
-        expr(sdivDuckOrSpark(
+        expr(sdiv(
           s"($slpTerms) + 4 * least(CAST(0 AS BIGINT), 1000000 - (r * 1000000) div c)",
           "4", duck = false)).as("__logbleu"))
     perPair.groupBy("source")
       .agg(count(lit(1)).as("n_pairs"),
-        expr(sdivDuckOrSpark("sum(__logbleu)", "count(1)", duck = false))
+        expr(sdiv("sum(__logbleu)", "count(1)", duck = false))
           .cast("long").as("mean_logbleu_q6"))
   }
 
@@ -4492,7 +4436,7 @@ object Text extends QueryFamily("text") {
        |  FROM cnt WHERE hc > 0 GROUP BY 1, 2),
        |lp AS (
        |  SELECT pid,
-       |    sum(${lnQ6("greatest((clip * 1000000000000) // tot, 1)")}
+       |    sum(${lnQ("greatest((clip * 1000000000000) // tot, 1)")}
        |        - $LnTrillionQ6) AS slp
        |  FROM clip GROUP BY 1),
        |lens AS (
@@ -4502,17 +4446,12 @@ object Text extends QueryFamily("text") {
        |  FROM pairs),
        |pp AS (
        |  SELECT lens.source,
-       |    (CASE WHEN (lp.slp + 4 * least(CAST(0 AS BIGINT),
-       |            1000000 - (lens.r * 1000000) // lens.c)) >= 0
-       |      THEN (lp.slp + 4 * least(CAST(0 AS BIGINT),
-       |            1000000 - (lens.r * 1000000) // lens.c)) // 4
-       |      ELSE -((-(lp.slp + 4 * least(CAST(0 AS BIGINT),
-       |            1000000 - (lens.r * 1000000) // lens.c))) // 4) END)
+       |    ${sdiv("lp.slp + 4 * least(CAST(0 AS BIGINT), 1000000 - (lens.r * 1000000) // lens.c)",
+              "4", duck = true)}
        |      AS logbleu
        |  FROM lp JOIN lens USING (pid))
        |SELECT source, CAST(count(*) AS BIGINT) AS n_pairs,
-       |  CAST(CASE WHEN sum(logbleu) >= 0 THEN sum(logbleu) // count(*)
-       |       ELSE -((-sum(logbleu)) // count(*)) END AS BIGINT)
+       |  CAST(${sdiv("sum(logbleu)", "count(*)", duck = true)} AS BIGINT)
        |    AS mean_logbleu_q6
        |FROM pp GROUP BY 1""".stripMargin
 
@@ -4547,14 +4486,14 @@ object Text extends QueryFamily("text") {
           Seq(bSrc, "tok"), "left")
         .select(col("sa"), col("sb"), col(aTot).as("tref"),
           expr(s"""CAST(ca AS DECIMAL(38,0)) *
-                   (${lnQ6(s"2 * CAST(ca AS DECIMAL(38,0)) * $bTot")}
-                    - ${lnQ6(s"CAST(ca AS DECIMAL(38,0)) * $bTot" +
+                   (${lnQ(s"2 * CAST(ca AS DECIMAL(38,0)) * $bTot")}
+                    - ${lnQ(s"CAST(ca AS DECIMAL(38,0)) * $bTot" +
                       s" + CAST(coalesce(cb, 0) AS DECIMAL(38,0)) * $aTot")})""")
             .as("__t"))
         .groupBy("sa", "sb", "tref")
         .agg(sum("__t").as("__s"))
         .select(col("sa"), col("sb"),
-          expr(sdivDuckOrSpark("__s", "2 * tref", duck = false)).as("__half"))
+          expr(sdiv("__s", "2 * tref", duck = false)).as("__half"))
     side("sa", "sb", "ta", "tb")
       .unionAll(side("sb", "sa", "tb", "ta"))
       .groupBy("sa", "sb")
@@ -4562,19 +4501,15 @@ object Text extends QueryFamily("text") {
   }
 
   private val jsDivergenceSql = {
-    def sdivRaw(num: String, den: String) =
-      s"""(CASE WHEN ($num) >= 0 THEN ($num) // ($den)
-         | ELSE -((-($num)) // ($den)) END)"""
-        .stripMargin.replace("\n", " ")
     def side(a: String, b: String, ta: String, tb: String) =
       s"""SELECT p.sa, p.sb,
-         |  ${sdivRaw(
+         |  ${sdiv(
             s"""sum(CAST(x.c AS HUGEINT) *
-               | (${lnQ6(s"2 * CAST(x.c AS HUGEINT) * p.$tb")}
-               |  - ${lnQ6(s"CAST(x.c AS HUGEINT) * p.$tb" +
+               | (${lnQ(s"2 * CAST(x.c AS HUGEINT) * p.$tb")}
+               |  - ${lnQ(s"CAST(x.c AS HUGEINT) * p.$tb" +
                    s" + CAST(coalesce(y.c, 0) AS HUGEINT) * p.$ta")}))"""
               .stripMargin.replace("\n", " "),
-            s"2 * p.$ta")} AS half
+            s"2 * p.$ta", duck = true)} AS half
          |FROM p
          |JOIN c x ON x.source = p.$a
          |LEFT JOIN c y ON y.source = p.$b AND y.tok = x.tok

@@ -3,7 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, SQLExecution}
 
 import graft.{GraftSession, QueryRunner, SparkEntry}
 
@@ -11,7 +11,7 @@ import graft.{GraftSession, QueryRunner, SparkEntry}
   *
   *   Inspect dump <sfDir> [out]              EXPLAINS.md for every registry key
   *   Inspect plan <sfDir> <q_a,q_b> [mode]   plans of the named queries
-  *   Inspect executed <sfDir> <q_a,q_b>      post-AQE plans after a noop run
+  *   Inspect executed <sfDir> <q_a,q_b>      post-AQE plans after a run
   *   Inspect time <sfDir> <q_a,q_b> [reps]   build vs noop-write seconds
   *
   * Each mode is a function of a live session (specs use the shared one);
@@ -79,13 +79,16 @@ object Inspect {
            mode: String = "formatted"): String =
     sections(spark, sfDir, keys)(explain(mode))
 
-  /** Runs each query into the `noop` sink and returns its post-AQE final
-    * plan — the only view with WholeStageCodegen spans under AQE, whose
-    * pre-execution plans carry no codegen stages. */
+  /** Runs each query, discarding its rows, and returns its post-AQE
+    * final plan — the only view with WholeStageCodegen spans under AQE,
+    * whose pre-execution plans carry no codegen stages. The rows come
+    * from the DataFrame's own QueryExecution: a `noop` write plans a
+    * separate command and leaves this plan unfinalized. */
   def executed(spark: SparkSession, sfDir: String, keys: Seq[String]): String =
     sections(spark, sfDir, keys) { df =>
-      QueryRunner.noop(df)
-      df.queryExecution.executedPlan.toString
+      val qe = df.queryExecution
+      SQLExecution.withNewExecutionId(qe, Some("executed"))(qe.toRdd.foreach(_ => ()))
+      qe.executedPlan.toString
     }
 
   /** Per key, `reps` (build, action) second pairs after one warm-up,

@@ -32,6 +32,15 @@ class InspectSpec extends GraftSuite {
     assert(left.isEmpty, s"persisted RDDs left behind: $left")
   }
 
+  test("executed: the final post-AQE plan, with its codegen spans") {
+    val out = Inspect.executed(spark, dir, Seq("q_feeder_load"))
+    assert(out.contains("===== q_feeder_load ====="), out)
+    assert(out.contains("isFinalPlan=true"), out)
+    assert(!out.contains("isFinalPlan=false"), out)
+    // a WholeStageCodegen span prints as its `*(N)` operator prefix
+    assert("""\*\(\d+\)""".r.findFirstIn(out).nonEmpty, out)
+  }
+
   test("time: one (build, action) pair per rep for each key") {
     val keys = Seq("q_feeder_load", "q_status_map")
     val res = Inspect.time(spark, dir, keys, reps = 2)

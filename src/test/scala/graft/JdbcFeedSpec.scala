@@ -233,25 +233,7 @@ class JdbcFeedSpec extends GraftSuite {
     // its JDBC driver sits in the local artifact cache — so the exact
     // string the dialect generates is executed on a live engine here,
     // proving both arms (insert + conflict-update), not just a pin.
-    val jar = {
-      val root = new java.io.File(sys.props("user.home"), ".cache/coursier")
-      if (!root.isDirectory) None
-      else {
-        val walk = java.nio.file.Files.walk(root.toPath)
-        try {
-          val hit = walk
-            .filter(p => p.getFileName.toString.matches("duckdb_jdbc-[0-9.]+\\.jar"))
-            .findFirst()
-          if (hit.isPresent) Some(hit.get.toFile) else None
-        } finally walk.close()
-      }
-    }
-    assume(jar.nonEmpty, "duckdb_jdbc jar not in the local artifact cache")
-    val loader = new java.net.URLClassLoader(
-      Array(jar.get.toURI.toURL), getClass.getClassLoader)
-    val drv = loader.loadClass("org.duckdb.DuckDBDriver")
-      .getDeclaredConstructor().newInstance().asInstanceOf[java.sql.Driver]
-    val conn = drv.connect("jdbc:duckdb:", new java.util.Properties)
+    val conn = DuckDbJdbc.connect()
     try {
       val st = conn.createStatement()
       // ON CONFLICT requires a unique constraint on the merge key —

@@ -3,10 +3,13 @@
 
 Usage: check_oracle.py <sfDir> <verifyOutDir>
 
-For each query dir under verifyOutDir: read the Spark parquet result,
-run the matching oracle SQL from oracle_sql.json in DuckDB (tables
-registered from sfDir), sort columns by name and rows by all values,
-and compare cell-by-cell. Reports rows/schema/values status per query.
+For each key oracle_sql.json lists (the keys graft.Verify ran): read
+the Spark parquet result under verifyOutDir, run the key's oracle SQL in
+DuckDB (tables registered from sfDir), sort columns by name and rows by
+all values, and compare cell-by-cell. Reports rows/schema/values status
+per query; a listed key with no result directory FAILS.
+
+Tests: python3 -m unittest tools/test_check_oracle.py
 """
 import json
 import sys
@@ -48,41 +51,22 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
-def main(sf_dir: str, out_dir: str, only=None) -> None:
-    con = duckdb.connect()
-    # Large-SF sweeps: without a cap DuckDB grows to physical RAM and a
-    # co-running Spark JVM makes that a global OOM kill (observed at sf1:
-    # python3 at 75 GB anon RSS, SIGKILL mid-sweep). Cap + spill instead.
-    mem = os.environ.get("DUCKDB_MEM", "")
-    if mem:
-        con.execute(f"SET memory_limit='{mem}'")
-        tmp = os.path.join(out_dir, ".duckdb_spill")
-        os.makedirs(tmp, exist_ok=True)
-        con.execute(f"SET temp_directory='{tmp}'")
-    thr = os.environ.get("DUCKDB_THREADS", "")
-    if thr:
-        con.execute(f"SET threads={int(thr)}")
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+def check(con, out_dir: str, only=None):
+    """Compares every key oracle_sql.json lists (exactly the keys
+    graft.Verify ran) and returns (n_pass, n_fail). A listed key with no
+    output directory FAILS: its query threw before writing anything.
+    Directories oracle_sql.json does not list are not compared."""
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
-    for name in sorted(os.listdir(out_dir)):
-        path = os.path.join(out_dir, name)
-        # skip non-query artifacts (e.g. the .duckdb_spill dir the
-        # memory-capped run creates inside out_dir)
-        if not os.path.isdir(path) or name.startswith("."):
-            continue
+    for name in sorted(oracle):
         if only is not None and name not in only:
             continue
-        spark_df = pd.read_parquet(path)
-        if name not in oracle:
-            status = f"rows-only ({len(spark_df)} rows)"
-            ok = len(spark_df) > 0
-            print(f"{'PASS' if ok else 'FAIL'} {name}: {status}")
-            n_pass += ok
-            n_fail += not ok
+        path = os.path.join(out_dir, name)
+        if not os.path.isdir(path):
+            print(f"FAIL {name}: no output directory")
+            n_fail += 1
             continue
+        spark_df = pd.read_parquet(path)
         try:
             duck_df = run_with_timeout(con, oracle[name])
         except TimeoutError as e:
@@ -118,6 +102,27 @@ def main(sf_dir: str, out_dir: str, only=None) -> None:
         else:
             print(f"PASS {name}: {len(a)} rows, {len(a.columns)} cols exact")
             n_pass += 1
+    return n_pass, n_fail
+
+
+def main(sf_dir: str, out_dir: str, only=None) -> None:
+    con = duckdb.connect()
+    # Large-SF sweeps: without a cap DuckDB grows to physical RAM and a
+    # co-running Spark JVM makes that a global OOM kill (observed at sf1:
+    # python3 at 75 GB anon RSS, SIGKILL mid-sweep). Cap + spill instead.
+    mem = os.environ.get("DUCKDB_MEM", "")
+    if mem:
+        con.execute(f"SET memory_limit='{mem}'")
+        tmp = os.path.join(out_dir, ".duckdb_spill")
+        os.makedirs(tmp, exist_ok=True)
+        con.execute(f"SET temp_directory='{tmp}'")
+    thr = os.environ.get("DUCKDB_THREADS", "")
+    if thr:
+        con.execute(f"SET threads={int(thr)}")
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    n_pass, n_fail = check(con, out_dir, only)
     print(f"\n{n_pass} pass / {n_fail} fail")
     sys.exit(1 if n_fail else 0)
 
