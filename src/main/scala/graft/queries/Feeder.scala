@@ -812,14 +812,16 @@ object Feeder extends QueryFamily("feeder") {
 
   /** #349 DataSource V2 paged-feed read — the reference's REST pager
     * (feeder.py:22-47) as a REAL TableProvider
-    * (sources/v2/PagedFeed.scala, registered as `graft-paged`): one
-    * InputPartition PER PAGE so the scheduler owns fetch parallelism/
-    * retry, executor-side transport, column pruning pushed into the
-    * line parser. The fixture stands in for the HTTP endpoint (zero
-    * egress): orders serialized as page-NNNNN.tsv files of 2500 rows in
-    * orderkey order — fixture IO, excluded from the bench like the other
-    * fabrication queries. The page files are written DISTRIBUTED: range-
-    * partition on the key, per-partition counts → global offsets
+    * (sources/v2/PagedFeed.scala, registered as `graft-paged`): runs of
+    * contiguous pages packed into input partitions by Spark's file-split
+    * rule, so the scheduler owns fetch parallelism/retry, executor-side
+    * transport with each task's page GETs in flight at once, column
+    * pruning pushed into the line parser. The fixture stands in for the
+    * HTTP endpoint (zero egress): orders serialized as page-NNNNN.tsv
+    * files of 2500 rows in orderkey order — fixture IO, excluded from
+    * the bench like the other fabrication queries. The page files are
+    * written DISTRIBUTED: range-partition on the key, per-partition
+    * counts → global offsets
     * (O(partitions) at the driver, the PrefixSum/pageBoundsDistributed
     * device), page = rank div 2500, then one writer task per page via
     * repartitionAndSortWithinPartitions — the driver never holds the
@@ -829,7 +831,7 @@ object Feeder extends QueryFamily("feeder") {
     * are built; a real deployment reads the actual HTTP feed). The query
     * is the read-side parity gate: a full-feed aggregate by status off
     * the DSv2 scan must equal the parquet truth. PagedFeedSpec asserts
-    * the partition-per-page plan and pruned read schema.
+    * the page packing and pruned read schema.
     *
     * Shared with #350 `q_paged_pushdown`, which reads the SAME fixture
     * through the source's filter-pushdown path. */
@@ -918,8 +920,8 @@ object Feeder extends QueryFamily("feeder") {
     * wave-FILTERED crawl (feeder.py:127-143, `select … where wave = N`)
     * through `SupportsPushDownFilters`: the key-range predicate prunes
     * whole PAGES at planning time (each page file's [first,last] key
-    * span is its zone — PagedFeedSpec asserts fewer planned partitions
-    * than pages), and the status/key filters are evaluated inside the
+    * span is its zone — PagedFeedSpec asserts fewer planned pages than
+    * the feed has), and the status/key filters are evaluated inside the
     * reader during the parse, so non-matching rows never surface to
     * Spark. At 100 TB this is the difference between fetching the
     * overlapping slice of a 10k-page export and fetching all of it.
@@ -951,8 +953,9 @@ object Feeder extends QueryFamily("feeder") {
     * end: the same paged fixture is served by an in-process loopback
     * HTTP endpoint (sources/v2/LoopbackPageServer.scala — the wire is
     * a real socket, the protocol is real GET/Range/retry; zero egress)
-    * and read through `HttpPageTransport` — one GET per page task with
-    * bounded exponential-backoff retry, page-count discovery from
+    * and read through `HttpPageTransport` — one GET per page, a task's
+    * pages all requested at once, each with bounded
+    * exponential-backoff retry, page-count discovery from
     * `GET /_PAGES`, byte statistics from 1-byte ranged GETs'
     * Content-Range totals, and key-zone pruning via HTTP Range probes
     * of each page's first/last line, so the pushed key range below

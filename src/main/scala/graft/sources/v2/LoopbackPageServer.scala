@@ -32,9 +32,12 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
   * JDK server writes the headers and the body as separate segments, and
   * Nagle's algorithm, together with the client's delayed ACK, holds the
   * body back. The server keeps that default on purpose: it stands in for
-  * a remote paginated API, where each GET is a round trip, so a change
-  * that avoids one page GET saves about 44 ms per task slot here, and
-  * the saving comes from fewer fetches rather than a faster fixture.
+  * a remote paginated API, where each GET is a round trip. A round trip
+  * costs its ~44 ms only where it sits on the critical path: a change
+  * that avoids one page GET there saves about 44 ms per task slot, and
+  * a client that overlaps its round trips (`graft-paged` requests a
+  * task's pages at once) saves on the client side. Either way the
+  * saving comes from the client, never from a faster fixture.
   *
   * `armExport(...)` switches on the ASYNC EXPORT API — the reference's
   * create-then-poll-then-download flow (feeder.py:49-122) over the

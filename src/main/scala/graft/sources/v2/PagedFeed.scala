@@ -4,10 +4,12 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
@@ -19,9 +21,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * `spark.read.format("graft-paged").schema(ddl).option("dir", …).load()`.
   *
   * The page-index space is the parallelism axis: `planInputPartitions`
-  * emits ONE InputPartition PER PAGE, so a 10k-page export is a
-  * 10k-task scan with Spark's scheduler in charge of retry/locality —
-  * never a driver loop. Column pruning is pushed into the reader
+  * packs CONTIGUOUS runs of pages into input partitions by Spark's own
+  * file-split rule (`FilePartition.maxSplitBytes`: a partition holds up
+  * to min(`spark.sql.files.maxPartitionBytes`, max(`openCostInBytes`,
+  * Σ(bytes + openCost) / minPartitionNum)) bytes, each page costing its
+  * bytes plus `openCostInBytes`, a page of unknown size the open cost
+  * alone; minPartitionNum is `spark.sql.files.minPartitionNum`, else
+  * the default parallelism). A small feed spreads over every core; a
+  * 10k-page export becomes a few hundred tasks with Spark's scheduler
+  * in charge of retry — never a driver loop. A task requests
+  * ALL its partition's pages at once on a shared daemon pool
+  * ([[PageOpens]]) and reads the bodies in page order, so the round
+  * trips of one partition overlap; at most the partition's pages are
+  * in flight per task. Column pruning is pushed into the reader
   * (`SupportsPushDownRequiredColumns`): a 2-column projection parses
   * 2 fields per line however wide the feed.
   *
@@ -87,22 +99,48 @@ class PagedFeedProvider extends TableProvider with DataSourceRegister {
 /** One page of the feed: a stable name (ordering key), a transport
   * location (file path or URL), and its size in bytes when known
   * (-1 unknown — statistics then report no byte estimate). */
-private[v2] case class PageRef(name: String, loc: String, bytes: Long)
+private[graft] case class PageRef(name: String, loc: String, bytes: Long)
 
 /** The pluggable fetch behind a page. Driver-side: `listPages` (once
   * per DataFrame, by [[PagedFeedTable]]), `firstLine`/`lastLine` (zone
   * probes for key-range pruning — both BOUNDED reads, never the page).
-  * Executor-side: `open` (the full page, one bounded unit of IO per
-  * task). Serializable because the reader factory ships it to
-  * executors. */
+  * Executor-side: `open` (the full page, one bounded unit of IO; a
+  * task opens its partition's pages concurrently, so `open` must be
+  * thread-safe), started at least `throttleMs` apart within a task.
+  * Serializable because the reader factory ships it to executors. */
 private[v2] trait PageTransport extends Serializable {
   def listPages(): Array[PageRef]
   def open(ref: PageRef): java.io.BufferedReader
   def firstLine(ref: PageRef): Option[String]
   def lastLine(ref: PageRef): Option[String]
+  /** Least gap between two page GET starts within one task: the
+    * reference's sleep-between-pages (feeder.py:29-33); 0 = none. */
+  def throttleMs: Long = 0L
 }
 
 private[graft] object PageTransport {
+  /** The daemon pool every page open and listing probe in this JVM runs
+    * on. Its threads only wait on round trips, so it is sized for
+    * overlap, not for cores; the cap bounds the JVM's concurrent page
+    * requests, and idle threads exit. */
+  private[v2] lazy val pool: java.util.concurrent.ScheduledThreadPoolExecutor = {
+    val p = new java.util.concurrent.ScheduledThreadPoolExecutor(64,
+      (r: Runnable) => {
+        val th = new Thread(r, "graft-paged-fetch")
+        th.setDaemon(true)
+        th
+      })
+    p.setKeepAliveTime(5, java.util.concurrent.TimeUnit.SECONDS)
+    p.allowCoreThreadTimeOut(true)
+    p
+  }
+
+  /** The value of `f`, rethrowing what failed it (an `IOException`
+    * stays an `IOException`) on the calling thread. */
+  private[v2] def await[T](f: java.util.concurrent.Future[T]): T =
+    try f.get()
+    catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+
   /** Scheme-dispatch: http(s):// base URL → HTTP transport; anything
     * else is a local/NFS directory of page files. */
   def forDir(opts: Map[String, String]): PageTransport = {
@@ -162,16 +200,17 @@ private[v2] class FilePageTransport(dir: String) extends PageTransport {
   * and sleep-between-pages politeness re-expressed as per-request
   * bounded retry/backoff (5xx and connection faults retry with
   * exponential backoff; 4xx fails fast — a missing page is a contract
-  * violation, not a transient) and an optional `throttleMs` delay
-  * before each page fetch. Listing the pages reads the page count from
-  * `GET <base>/_PAGES` (`pages=N`, the manifest the sink writes) plus
-  * one size probe per page; it runs once per DataFrame (see
+  * violation, not a transient) and an optional `throttleMs` gap
+  * between page fetch starts (kept by [[PageOpens]]). Listing the pages
+  * reads the page count from `GET <base>/_PAGES` (`pages=N`, the
+  * manifest the sink writes), then sends one size probe per page, all
+  * at once on [[PageTransport.pool]]; it runs once per DataFrame (see
   * [[PagedFeedTable]]), not per plan. The zone probes are HTTP Range
   * requests: `bytes=0-8191` for the first line, a suffix range for the
   * last — a server answering 200 (no Range support) degrades that page
   * to "unprunable", never to a wrong prune. */
 private[v2] class HttpPageTransport(base: String, retries: Int,
-                                    backoffMs: Long, throttleMs: Long,
+                                    backoffMs: Long, override val throttleMs: Long,
                                     headers: Map[String, String] = Map.empty)
   extends PageTransport {
 
@@ -191,12 +230,22 @@ private[v2] class HttpPageTransport(base: String, retries: Int,
         l.stripPrefix("pages=").trim.toInt }
       .getOrElse(throw new java.io.IOException(
         s"graft-paged: $base/_PAGES has no pages= line"))
-    (0 until pages).toArray.map { i =>
-      val name = f"page-$i%05d.tsv"
-      // byte size from a 1-byte ranged GET's Content-Range total (one
-      // cheap bounded round-trip per page per listing, and the table
-      // lists once per DataFrame); -1 when the server doesn't say
-      val c = connect(s"$base/$name", Some("bytes=0-0"))
+    val probes = (0 until pages).map { i =>
+      PageTransport.pool.submit(new java.util.concurrent.Callable[PageRef] {
+        override def call(): PageRef = sized(f"page-$i%05d.tsv")
+      })
+    }
+    // the first failed probe fails the listing; the rest are dropped
+    try probes.map(PageTransport.await(_)).toArray
+    finally probes.foreach(_.cancel(true))
+  }
+
+  // byte size from a 1-byte ranged GET's Content-Range total (one cheap
+  // bounded round trip per page per listing, and the table lists once
+  // per DataFrame); -1 when the server doesn't say
+  private def sized(name: String): PageRef = {
+    val c = connect(s"$base/$name", Some("bytes=0-0"))
+    try {
       val len =
         if (c.getResponseCode == 206)
           Option(c.getHeaderField("Content-Range"))
@@ -205,13 +254,11 @@ private[v2] class HttpPageTransport(base: String, retries: Int,
             .getOrElse(-1L)
         else c.getContentLengthLong
       c.getInputStream.close()
-      c.disconnect()
       PageRef(name, s"$base/$name", len)
-    }
+    } finally c.disconnect()
   }
 
   override def open(ref: PageRef): java.io.BufferedReader = {
-    if (throttleMs > 0) Thread.sleep(throttleMs) // feeder.py:29-33 politeness
     val c = connect(ref.loc, None)
     new java.io.BufferedReader(
       new java.io.InputStreamReader(c.getInputStream, "UTF-8")) {
@@ -409,6 +456,41 @@ private[v2] object PagedFeedScan {
     (lo, hi)
   }
 
+  /** Spark's split size for file scans (`FilePartition.maxSplitBytes`)
+    * over pages of `sizes` bytes: min(maxPartitionBytes, max(openCost,
+    * Σ(bytes + openCost) / minPartitionNum)), a size < 0 (unknown)
+    * counting as 0 bytes. */
+  def maxSplitBytes(sizes: Seq[Long], maxPartitionBytes: Long, openCost: Long,
+                    minPartitionNum: Int): Long = {
+    val total = sizes.map(b => math.max(b, 0L) + openCost).sum
+    math.min(maxPartitionBytes, math.max(openCost, total / math.max(minPartitionNum, 1)))
+  }
+
+  /** `pages` cut into contiguous runs the way Spark packs files into
+    * partitions (`FilePartition.getFilePartitions`, without its
+    * largest-first sort: pages keep their order): a run closes before
+    * a page whose bytes would take it past [[maxSplitBytes]], and each
+    * page adds its bytes plus `openCost` to its run. A page larger than
+    * the split gets a run of its own. */
+  def pack(pages: Array[PageRef], maxPartitionBytes: Long, openCost: Long,
+           minPartitionNum: Int): Array[Array[PageRef]] = {
+    val split = maxSplitBytes(pages.toSeq.map(_.bytes), maxPartitionBytes, openCost,
+      minPartitionNum)
+    val runs = Array.newBuilder[Array[PageRef]]
+    val run = Array.newBuilder[PageRef]
+    var runPages = 0
+    var runBytes = 0L
+    pages.foreach { p =>
+      val bytes = math.max(p.bytes, 0L)
+      if (runPages > 0 && runBytes + bytes > split) {
+        runs += run.result(); run.clear(); runPages = 0; runBytes = 0L
+      }
+      run += p; runPages += 1; runBytes += bytes + openCost
+    }
+    if (runPages > 0) runs += run.result()
+    runs.result()
+  }
+
   /** First line of a page file — one bounded read. */
   def firstLine(f: java.io.File): Option[String] = {
     val in = new java.io.BufferedReader(new java.io.InputStreamReader(
@@ -506,11 +588,14 @@ private[v2] class PagedFeedScan(full: StructType, required: StructType,
           case _ => true // unreadable zone → never prune on a guess
         }
       }
-    // one partition per page: the page is the unit of fetch, retry and
-    // locality — exactly the reference's PageNumber loop, parallelized
-    kept.zipWithIndex.map { case (ref, i) =>
-      PagedFeedPartition(i, ref): InputPartition
-    }
+    // contiguous runs of the kept pages, packed by Spark's file-split
+    // rule: the reference's PageNumber loop, cut into one run per task
+    val conf = SQLConf.get
+    val minPartitionNum = conf.filesMinPartitionNum
+      .orElse(conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM))
+      .getOrElse(SparkSession.active.sparkContext.defaultParallelism)
+    PagedFeedScan.pack(kept, conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes,
+      minPartitionNum).map(PagedFeedPartition(_): InputPartition)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -532,7 +617,8 @@ private[v2] class PagedFeedScan(full: StructType, required: StructType,
   }
 }
 
-private[v2] case class PagedFeedPartition(page: Int, ref: PageRef)
+/** One task's contiguous run of pages, in page order. */
+private[graft] case class PagedFeedPartition(pages: Array[PageRef])
   extends InputPartition
 
 /** Serializable factory shipped to executors: holds only the (source
@@ -546,19 +632,76 @@ private[v2] class PagedFeedReaderFactory(picks: Array[(Int, DataType)],
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[PagedFeedPartition]
-    new PagedFeedReader(p.ref, picks, pushed, filterCols, limit, transport)
+    new PagedFeedReader(p.pages, picks, pushed, filterCols, limit, transport)
   }
 }
 
-private[v2] class PagedFeedReader(ref: PageRef, picks: Array[(Int, DataType)],
+/** The GETs of one task's pages, all in flight at once on
+  * [[PageTransport.pool]], so their round trips overlap. Page i+1's
+  * request starts once page i's has started and, with `throttleMs`
+  * set, that many milliseconds later; with no throttle every page is
+  * requested at once. `await(i)` hands page i's open body to the task
+  * thread, or throws what failed its GET (the `IOException` of a GET
+  * that ran out of retries). `close()` closes every body already open;
+  * a request still in flight closes its body when it returns, and one
+  * not yet started is never sent. */
+private[v2] final class PageOpens(pages: Array[PageRef], transport: PageTransport)
+  extends java.io.Closeable {
+  import java.util.concurrent.{CompletableFuture, TimeUnit}
+
+  private val bodies = Array.fill(pages.length)(new CompletableFuture[java.io.BufferedReader])
+  private val gapNs = TimeUnit.MILLISECONDS.toNanos(transport.throttleMs)
+  // when each page's request started; Long.MinValue until it has
+  private val startedNs = new java.util.concurrent.atomic.AtomicLongArray(
+    Array.fill(pages.length)(Long.MinValue))
+
+  if (pages.nonEmpty) schedule(0, 0L)
+
+  private def schedule(i: Int, delayNs: Long): Unit =
+    PageTransport.pool.schedule(new Runnable { override def run(): Unit = start(i) },
+      delayNs, TimeUnit.NANOSECONDS)
+
+  private def start(i: Int): Unit = {
+    if (bodies(i).isDone) return // closed before this page's turn
+    if (gapNs > 0 && i > 0) {
+      // page i was scheduled before page i-1's start was stamped, so the
+      // gap is checked against the stamp itself
+      val prev = startedNs.get(i - 1)
+      val wait = if (prev == Long.MinValue) gapNs else prev + gapNs - System.nanoTime()
+      if (wait > 0) return schedule(i, wait)
+    }
+    if (i + 1 < pages.length) schedule(i + 1, gapNs)
+    startedNs.set(i, System.nanoTime())
+    try {
+      val body = transport.open(pages(i))
+      if (!bodies(i).complete(body)) body.close() // closed while in flight
+    } catch { case t: Throwable => bodies(i).completeExceptionally(t) }
+  }
+
+  def await(i: Int): java.io.BufferedReader = PageTransport.await(bodies(i))
+
+  override def close(): Unit = {
+    val closed = new java.io.IOException("graft-paged: reader closed")
+    bodies.foreach { f =>
+      if (!f.completeExceptionally(closed) && !f.isCompletedExceptionally) f.join().close()
+    }
+  }
+}
+
+/** Reads one task's pages in page order, all of their GETs started at
+  * once ([[PageOpens]]). */
+private[v2] class PagedFeedReader(pages: Array[PageRef], picks: Array[(Int, DataType)],
                                   pushed: Array[Filter],
                                   filterCols: Map[String, (Int, DataType)],
                                   limit: Int,
                                   transport: PageTransport)
   extends PartitionReader[InternalRow] {
-  private val src = transport.open(ref)
-  private val lines =
-    Iterator.continually(src.readLine()).takeWhile(_ != null)
+  private val opens = new PageOpens(pages, transport)
+  // every page's lines in page order; a page is closed once read
+  private val lines = pages.indices.iterator.flatMap { i =>
+    val src = opens.await(i)
+    Iterator.continually(src.readLine()).takeWhile(l => l != null || { src.close(); false })
+  }
   private var row: InternalRow = _
   private var emitted = 0L
 
@@ -607,8 +750,9 @@ private[v2] class PagedFeedReader(ref: PageRef, picks: Array[(Int, DataType)],
 
   override def next(): Boolean = {
     // pushed limit: no partition needs more than `limit` surviving rows
-    // (Spark's own global limit dedups across partitions) — a tail page
-    // stops parsing as soon as the budget is spent
+    // (Spark's own global limit dedups across partitions) — the task
+    // stops parsing as soon as the budget is spent, and close() drops
+    // the pages it never read
     if (limit >= 0 && emitted >= limit) return false
     while (lines.hasNext) {
       val parts = lines.next().split("\t", -1)
@@ -632,7 +776,7 @@ private[v2] class PagedFeedReader(ref: PageRef, picks: Array[(Int, DataType)],
   }
 
   override def get(): InternalRow = row
-  override def close(): Unit = src.close()
+  override def close(): Unit = opens.close()
 }
 
 // ===========================================================================

@@ -50,8 +50,9 @@ object Inspect {
 
   /** EXPLAINS.md: the formatted plan of EVERY registry key, first 120
     * lines each (a hand-maintained list once drifted to 161/206
-    * coverage). Queries that write their own fixture files show the plan
-    * that reads them back. */
+    * coverage); a cut plan ends with a line saying so (see [[clip]]).
+    * Queries that write their own fixture files show the plan that
+    * reads them back. */
   def dump(spark: SparkSession, sfDir: String): String = {
     val keys = SparkEntry.queries.keys.toSeq.sorted
     val head =
@@ -67,8 +68,22 @@ object Inspect {
     val runner = new QueryRunner(sfDir, () => spark)
     head + keys.map { k =>
       val fmt = orFailure(runner.run(k)(explain("formatted")))
-      s"\n## $k\n\n```\n${fmt.linesIterator.take(120).mkString("\n")}\n```\n"
+      s"\n## $k\n\n```\n${clip(fmt, sfDir, k)}\n```\n"
     }.mkString
+  }
+
+  /** The lines `dump` keeps of one plan. */
+  val dumpLines = 120
+
+  /** The first [[dumpLines]] lines of `key`'s plan; a longer plan ends
+    * with one more line giving how many lines were cut and the command
+    * that prints the whole plan. */
+  def clip(plan: String, sfDir: String, key: String): String = {
+    val lines = plan.linesIterator.toVector
+    val kept = lines.take(dumpLines).mkString("\n")
+    val cut = lines.length - dumpLines
+    if (cut <= 0) kept
+    else s"$kept\n... $cut more lines cut; `graft.tools.Inspect plan $sfDir $key formatted` prints them"
   }
 
   /** Plans of `keys` in an ExplainMode (`formatted`, `simple`, `cost`,

@@ -3,9 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** DSv2 paged-feed source (sources/v2/PagedFeed.scala): the REST-pager
-  * shape as a TableProvider — partition-per-page planning, pruned read
-  * schema, full content parity with the parquet truth. */
+  * shape as a TableProvider — pages packed into input partitions by
+  * Spark's file-split rule, pruned read schema, full content parity with
+  * the parquet truth. */
 class PagedFeedSpec extends GraftSuite {
+  import PagedFeedSpec.{plannedPages, plannedRuns}
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -25,13 +27,76 @@ class PagedFeedSpec extends GraftSuite {
         .option("dir", pageDir.getAbsolutePath).load())
   }
 
-  test("one InputPartition per page: the page is the unit of parallelism") {
+  /** `f` with the SQL confs `kv` set, restoring them after. */
+  private def withConf[T](kv: (String, String)*)(f: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** `sizes.length` pages in a fresh directory, page p holding fixed-width
+    * 13-byte lines (keys continuing across pages) up to `sizes(p)` bytes. */
+  private def sizedPages(tag: String, sizes: Seq[Int]): java.io.File = {
+    val tmp = java.nio.file.Files.createTempDirectory(s"graft_dsv2_$tag").toFile
+    tmp.deleteOnExit()
+    var key = 0
+    sizes.zipWithIndex.foreach { case (bytes, p) =>
+      require(bytes % 13 == 0)
+      val f = new java.io.File(tmp, f"page-$p%05d.tsv")
+      f.deleteOnExit()
+      val w = new java.io.PrintWriter(f, "UTF-8")
+      (0 until bytes / 13).foreach { _ => key += 1; w.print(f"$key%06d\t${p % 10}\tS\t1\n") }
+      w.close()
+      assert(f.length() == bytes)
+    }
+    tmp
+  }
+
+  private def fileFeed(dir: java.io.File) = spark.read.format("graft-paged")
+    .schema("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, cents BIGINT")
+    .option("dir", dir.getAbsolutePath).load()
+
+  test("pages pack into contiguous input partitions by Spark's file-split rule") {
+    // the registry fixture: every page planned once, in page order
     val (pageDir, df) = feed
-    val nPages = pageDir.listFiles().count(_.getName.endsWith(".tsv"))
-    assert(nPages == math.ceil(
+    val names = pageDir.listFiles().map(_.getName).filter(_.endsWith(".tsv")).sorted.toSeq
+    assert(names.length == math.ceil(
       spark.read.parquet(s"$dir/orders.parquet").count() / 2500.0).toInt)
-    assert(df.rdd.getNumPartitions == nPages,
-      s"expected $nPages page partitions, got ${df.rdd.getNumPartitions}")
+    assert(plannedRuns(df).flatten == names)
+    // N equal small pages of b bytes, open cost o: a partition holds
+    // min(maxPartitionBytes, max(o, N·(b + o) / minPartitionNum)) bytes,
+    // and a page joins a run while the run's Σ(b + o) plus its b fits,
+    // so k = ⌊(split − b) / (b + o)⌋ + 1 pages per run, ⌈N / k⌉ runs
+    val (n, b, o, minParts) = (10, 650, 1000, 4)
+    val small = sizedPages("pack", Seq.fill(n)(b))
+    withConf("spark.sql.files.openCostInBytes" -> o.toString,
+      "spark.sql.files.minPartitionNum" -> minParts.toString) {
+      val split = n * (b + o) / minParts
+      val k = (split - b) / (b + o) + 1
+      val runs = plannedRuns(fileFeed(small))
+      assert(runs.length == (n + k - 1) / k, s"runs $runs for split $split")
+      assert(runs.map(_.length) == Seq(3, 3, 3, 1))
+      assert(runs.flatten == (0 until n).map(p => f"page-$p%05d.tsv"))
+      assert(fileFeed(small).count() == n * b / 13)
+    }
+    // the default rule (open cost 4 MB, the session's 4 cores) on the
+    // corrections feed's shape: 12 small pages make 4 runs of 3
+    assert(spark.sparkContext.defaultParallelism == 4)
+    val runs12 = plannedRuns(fileFeed(sizedPages("pack12", Seq.fill(12)(b))))
+    assert(runs12.map(_.length) == Seq(3, 3, 3, 3), s"runs $runs12")
+    assert(runs12.flatten == (0 until 12).map(p => f"page-$p%05d.tsv"))
+    // a page larger than maxPartitionBytes gets a partition of its own
+    val mixed = sizedPages("pack_big", Seq(b, 5200, b, b))
+    withConf("spark.sql.files.maxPartitionBytes" -> "2000",
+      "spark.sql.files.openCostInBytes" -> "100") {
+      val runs = plannedRuns(fileFeed(mixed))
+      assert(runs == Seq(Seq("page-00000.tsv"), Seq("page-00001.tsv"),
+        Seq("page-00002.tsv", "page-00003.tsv")), s"runs $runs")
+      assert(fileFeed(mixed).count() == (3 * b + 5200) / 13)
+    }
   }
 
   test("column pruning reaches the reader: a 1-column projection parses 1 field") {
@@ -70,25 +135,25 @@ class PagedFeedSpec extends GraftSuite {
         .schema("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, cents BIGINT")
         .option("dir", tmp.getAbsolutePath).load()
       // no filter → all 3 pages planned
-      assert(df.rdd.getNumPartitions == 3)
+      assert(plannedPages(df) == 3)
       // a range inside page 1's zone plans exactly one page
       val mid = df.filter(col("o_orderkey") >= 150L && col("o_orderkey") <= 160L)
-      assert(mid.rdd.getNumPartitions == 1,
-        s"mid-range filter planned ${mid.rdd.getNumPartitions} of 3 pages")
+      assert(plannedPages(mid) == 1,
+        s"mid-range filter planned ${plannedPages(mid)} of 3 pages")
       assert(mid.count() == 11)
       // a range spanning the 1|2 boundary plans two pages
       val span = df.filter(col("o_orderkey") > 150L && col("o_orderkey") < 250L)
-      assert(span.rdd.getNumPartitions == 2,
-        s"boundary-spanning filter planned ${span.rdd.getNumPartitions} of 3 pages")
+      assert(plannedPages(span) == 2,
+        s"boundary-spanning filter planned ${plannedPages(span)} of 3 pages")
       assert(span.count() == 99)
       // an out-of-range filter plans ZERO pages
       val empty = df.filter(col("o_orderkey") > 300L)
-      assert(empty.rdd.getNumPartitions == 0,
-        s"out-of-range filter still planned ${empty.rdd.getNumPartitions} pages")
+      assert(plannedPages(empty) == 0,
+        s"out-of-range filter still planned ${plannedPages(empty)} pages")
       assert(empty.count() == 0)
       // equality pushes as a point range
       val eq = df.filter(col("o_orderkey") === 42L)
-      assert(eq.rdd.getNumPartitions == 1)
+      assert(plannedPages(eq) == 1)
       assert(eq.count() == 1)
     } finally {
       tmp.listFiles().foreach(_.delete()); tmp.delete()
@@ -136,13 +201,8 @@ class PagedFeedSpec extends GraftSuite {
       val plan = limited.queryExecution.executedPlan.toString
       assert(plan.contains("PushedLimit: 60"), s"limit not pushed:\n$plan")
       // 60 rows over 50-row pages → 2 pages planned, 2 never fetched
-      // (read the SCAN's partitions — the post-limit RDD coalesces)
-      val scan = limited.queryExecution.executedPlan.collectLeaves()
-        .collectFirst {
-          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-            b.scan
-        }.get
-      val nPlanned = scan.toBatch.planInputPartitions().length
+      // (read the SCAN's pages — the post-limit RDD coalesces)
+      val nPlanned = plannedPages(limited)
       assert(nPlanned == 2, s"expected 2 pages for limit 60, planned $nPlanned")
       // a pushed filter disables page-count pruning (rows/page unknown
       // post-filter) but the result stays correct
@@ -190,7 +250,7 @@ class PagedFeedSpec extends GraftSuite {
     val viaFile = spark.read.format("graft-paged")
       .schema("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, cents BIGINT")
       .option("dir", tmp.getAbsolutePath).load()
-    assert(viaHttp.rdd.getNumPartitions == 3, "one partition per page over HTTP")
+    assert(plannedPages(viaHttp) == 3, "every page planned over HTTP")
     val a = viaHttp.collect().map(_.toSeq).toSet
     val b = viaFile.collect().map(_.toSeq).toSet
     assert(a == b && a.size == 300, "HTTP read diverged from file read")
@@ -200,8 +260,8 @@ class PagedFeedSpec extends GraftSuite {
     val (_, base) = httpFixture("prune", 3, 100)
     val df = httpFeed(base)
     val mid = df.filter(col("o_orderkey") >= 150L && col("o_orderkey") <= 160L)
-    assert(mid.rdd.getNumPartitions == 1,
-      s"HTTP zone pruning planned ${mid.rdd.getNumPartitions} of 3 pages")
+    assert(plannedPages(mid) == 1,
+      s"HTTP zone pruning planned ${plannedPages(mid)} of 3 pages")
     assert(mid.count() == 11)
   }
 
@@ -406,4 +466,19 @@ class PagedFeedSpec extends GraftSuite {
       tmp.listFiles().foreach(_.delete()); tmp.delete()
     }
   }
+}
+
+object PagedFeedSpec {
+  /** The page names the `graft-paged` scan of `df` planned, one run per
+    * input partition (the scan's own partitions: a post-scan RDD may
+    * coalesce them). */
+  def plannedRuns(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+    df.queryExecution.sparkPlan.collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.get.inputPartitions.map {
+      case p: graft.sources.v2.PagedFeedPartition => p.pages.map(_.name).toSeq
+    }
+
+  /** How many pages the scan of `df` planned. */
+  def plannedPages(df: org.apache.spark.sql.DataFrame): Int = plannedRuns(df).map(_.length).sum
 }
