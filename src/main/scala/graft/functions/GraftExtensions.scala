@@ -23,16 +23,9 @@ object GraftExtensions {
       "hashed_shingles(text, k) - distinct XXH64 hashes of the k-token word shingles",
       arity("hashed_shingles", 2)(args =>
         NativeText.HashedShingles(args.head, intArg(args(1), "k")))),
-    ("minhash_signature",
-      "minhash_signature(hashes, n) - n-slot minhash signature of a hashed shingle set",
-      arity("minhash_signature", 2)(args =>
-        NativeText.MinHashSignature(args.head, intArg(args(1), "numHashes")))),
     ("jaccard_sets",
       "jaccard_sets(a, b) - exact Jaccard similarity of two BIGINT-array sets",
       arity("jaccard_sets", 2)(args => NativeText.JaccardSets(args.head, args(1)))),
-    ("simhash64",
-      "simhash64(text) - 64-bit Charikar simhash over whitespace tokens",
-      arity("simhash64", 1)(args => NativeText.SimHash64(args.head))),
     ("topk_by",
       "topk_by(score, id, k) - bounded top-k aggregate (array<struct<id,score>>, best first)",
       arity("topk_by", 3)(args =>

@@ -15,9 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * are semantically right but evaluate INTERPRETED — one lambda dispatch
   * and one boxed Long per array element. At millions of shingles that is
   * ~100× slower than a primitive loop. Each expression below is a single
-  * tight loop over primitive arrays, no boxing in the inner loop, using
-  * Spark's own XXH64 — the same preference order the Spark docs give:
-  * built-in function < custom Expression < UDF.
+  * tight loop over primitive arrays, no boxing in the inner loop — the
+  * same preference order the Spark docs give: built-in function <
+  * custom Expression < UDF.
   *
   * (CodegenFallback is a MEASURED decision, not an omission: r15 tried
   * the alternative — a kernel-call `doGenCode` so the host operator
@@ -49,11 +49,6 @@ object NativeText {
   private def requireType(ok: Boolean, what: String): TypeCheckResult =
     if (ok) TypeCheckResult.TypeCheckSuccess
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(what)
-
-  private def isLongArray(dt: DataType): Boolean = dt match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
 
   /** The set-op expressions accept ARRAY<INT> alongside ARRAY<BIGINT>:
     * the univ shingle family emits 31-bit hashes (mod P = 2^31−1) as
@@ -124,46 +119,11 @@ object NativeText {
       copy(child = newChild)
   }
 
-  /** `minhash_signature(shingleHashes, numHashes)` — for slot i, the
-    * minimum over the shingle set of a slot-seeded XXH64 rehash. */
-  case class MinHashSignature(child: Expression, numHashes: Int)
-      extends UnaryExpression with CodegenFallback {
-    require(numHashes >= 1)
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      requireType(isLongArray(child.dataType),
-        s"minhash_signature expects ARRAY<BIGINT>, got ${child.dataType.sql}")
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any = {
-      val hashes = input.asInstanceOf[ArrayData].toLongArray()
-      // empty set has no minima — null, matching the declarative
-      // array_min-based form (not a Long.MaxValue sentinel signature)
-      if (hashes.isEmpty) return null
-      val sig = new Array[Long](numHashes)
-      var i = 0
-      while (i < numHashes) {
-        val slotSeed = XXH64.hashInt(i, Seed)
-        var min = Long.MaxValue
-        var j = 0
-        while (j < hashes.length) {
-          val h = XXH64.hashLong(hashes(j), slotSeed)
-          if (h < min) min = h
-          j += 1
-        }
-        sig(i) = min
-        i += 1
-      }
-      new GenericArrayData(sig)
-    }
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** Parameters of the SQL-REPLICABLE minhash variant — the
-    * [[SimHashUniv]] discipline applied to MinHash so an external SQL
-    * engine can recompute signatures, band keys, candidate pairs, and
-    * the exact Jaccard verify bit-for-bit (the registry's minhash-band
-    * oracle): shingle base hash = 31-polynomial over the code points of
+  /** Parameters of the minhash family — the [[SimHashUniv]] discipline
+    * applied to MinHash so an external SQL engine can recompute
+    * signatures, band keys, candidate pairs, and the exact Jaccard
+    * verify bit-for-bit (the registry's minhash-band oracle): shingle
+    * base hash = 31-polynomial over the code points of
     * the SPACE-JOINED k-token shingle string mod P (Mersenne 2^31−1 —
     * matches DuckDB's `ascii` char fold over
     * `array_to_string(toks[i:i+k-1], ' ')`), then one universal hash
@@ -171,8 +131,8 @@ object NativeText {
     * shingle set. Every product stays < 2^62 — exact in a JVM long AND
     * a BIGINT. Constants from a fixed-seed java.util.Random
     * (spec-pinned LCG), interpolated into the oracle SQL from here.
-    * The XXH64 default family stays the hot-path choice when replay
-    * isn't needed. */
+    * The universal hashes are the textbook MinHash-LSH construction, so
+    * the usual banding collision bounds hold. */
   object MinHashUniv {
     val P: Long = 2147483647L
     val MaxHashes: Int = 32
@@ -240,11 +200,13 @@ object NativeText {
 
   /** `minhash_signature_univ(shingleHashes, numHashes)` — for slot i,
     * the minimum over the shingle set of the universal rehash
-    * (h·A_i + B_i) mod P ([[MinHashUniv]]). The replicable sibling of
-    * [[MinHashSignature]]: same null-on-empty contract. */
+    * (h·A_i + B_i) mod P ([[MinHashUniv]]). An empty set has no minima
+    * and yields null (not a sentinel signature). */
   case class MinHashSignatureUniv(child: Expression, numHashes: Int)
       extends UnaryExpression with CodegenFallback {
-    require(numHashes >= 1 && numHashes <= MinHashUniv.MaxHashes)
+    require(numHashes >= 1 && numHashes <= MinHashUniv.MaxHashes,
+      s"minhash signatures have 1 to ${MinHashUniv.MaxHashes} slots " +
+        s"(MinHashLSH: bands × rowsPerBand <= ${MinHashUniv.MaxHashes}), got $numHashes")
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def checkInputDataTypes(): TypeCheckResult =
       requireType(isIntOrLongArray(child.dataType),
@@ -454,9 +416,8 @@ object NativeText {
 
   /** `simhash_univ(text)` — Charikar simhash with per-bit universal
     * hashing of a SQL-replicable token base hash (see [[SimHashUniv]]).
-    * Use when the fingerprint must be reproducible outside the JVM
-    * (oracle checks, cross-engine dedup); `simhash64` (XXH64) is the
-    * faster default when it doesn't. */
+    * The fingerprint is reproducible outside the JVM, so oracle checks
+    * and cross-engine dedup see the same bits. */
   case class SimHashUnivExpr(child: Expression)
       extends UnaryExpression with CodegenFallback {
     override def dataType: DataType = LongType
@@ -480,39 +441,6 @@ object NativeText {
       var fp = 0L
       var j = 0
       while (j < Bits) {
-        if (votes(j) > 0) fp |= (1L << j)
-        j += 1
-      }
-      fp
-    }
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** `simhash64(text)` — Charikar simhash over whitespace tokens: one
-    * pass hashing each token, one 64-bit vote loop per token. */
-  case class SimHash64(child: Expression)
-      extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes(): TypeCheckResult =
-      requireType(child.dataType == StringType,
-        s"simhash64 expects a STRING argument, got ${child.dataType.sql}")
-    override def nullSafeEval(input: Any): Any = {
-      val toks = tokenize(input.asInstanceOf[UTF8String])
-      val votes = new Array[Int](64)
-      var i = 0
-      while (i < toks.length) {
-        val h = hashToken(toks(i), Seed)
-        var j = 0
-        while (j < 64) {
-          if (((h >>> j) & 1L) == 1L) votes(j) += 1 else votes(j) -= 1
-          j += 1
-        }
-        i += 1
-      }
-      var fp = 0L
-      var j = 0
-      while (j < 64) {
         if (votes(j) > 0) fp |= (1L << j)
         j += 1
       }
@@ -570,8 +498,6 @@ object NativeText {
   def hashed_shingles(text: Column, k: Int): Column = toCol(HashedShingles(exprOf(text), k))
   def shingle_hashes_univ(text: Column, k: Int): Column =
     toCol(ShingleHashesUniv(exprOf(text), k))
-  def minhash_signature(hashes: Column, numHashes: Int): Column =
-    toCol(MinHashSignature(exprOf(hashes), numHashes))
   def minhash_signature_univ(hashes: Column, numHashes: Int): Column =
     toCol(MinHashSignatureUniv(exprOf(hashes), numHashes))
   def jaccard_sets(a: Column, b: Column): Column = toCol(JaccardSets(exprOf(a), exprOf(b)))
@@ -579,7 +505,6 @@ object NativeText {
     toCol(AdjacentTransposition(exprOf(a), exprOf(b)))
   def bleu_clip_counts(hyp: Column, ref: Column): Column =
     toCol(BleuClipCounts(exprOf(hyp), exprOf(ref)))
-  def simhash64(text: Column): Column = toCol(SimHash64(exprOf(text)))
   def simhash_univ(text: Column): Column = toCol(SimHashUnivExpr(exprOf(text)))
   def poly_fingerprint(text: Column, seed: Column, mod: Long): Column =
     toCol(PolyFingerprint(exprOf(text), exprOf(seed), mod))

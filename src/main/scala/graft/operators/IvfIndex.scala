@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -16,37 +14,14 @@ import org.apache.spark.sql.functions._
   * and shuffled |D| for the aggregation); probing is an equi-join on
   * the cell id, hash-partitioned — a cell is the shuffle key, so a
   * 1000-executor probe moves only the probed cells. Train/assign/probe
-  * are separable: at 100 TB you train on a sample, persist the
-  * assignment as a bucketed table, and amortize it across queries.
+  * are separable: at 100 TB you train on a systematic sample
+  * ([[trainReplicable]]), persist the assignment as a bucketed table,
+  * and amortize it across queries.
   */
 object IvfIndex {
 
   private def nearestCells(v: Column, cs: Array[Array[Double]], n: Int): Column =
     graft.functions.NativeVec.nearest_cells(v, cs, n)
-
-  /** K-means centroids of the corpus (deterministic: fixed seed).
-    *
-    * @param sampleFraction train the quantizer on a seeded sample — a
-    *   coarse quantizer needs cluster SHAPE, not every point, so at
-    *   100 TB you train on a thin sample and amortize; quality loss is
-    *   recall-tunable via nprobe. 1.0 = full corpus.
-    */
-  def train(corpus: DataFrame, vecCol: String, nlist: Int, seed: Long = 42L,
-            maxIter: Int = 5, sampleFraction: Double = 1.0): Array[Array[Double]] = {
-    require(sampleFraction > 0.0 && sampleFraction <= 1.0)
-    val src =
-      if (sampleFraction < 1.0) corpus.sample(withReplacement = false, sampleFraction, seed)
-      else corpus
-    val feat = src.select(
-      array_to_vector(src(vecCol).cast("array<double>")).as("__features"))
-    // random init: kmeans|| init runs several extra distributed passes
-    // that dominate training time at moderate nlist; quantizer quality
-    // is recall-tunable via nprobe anyway
-    new KMeans().setK(nlist).setSeed(seed).setMaxIter(maxIter)
-      .setInitMode("random")
-      .setFeaturesCol("__features")
-      .fit(feat).clusterCenters.map(_.toArray)
-  }
 
   /** K-means trained so an EXTERNAL SQL engine can replay it exactly —
     * the trick that puts IVF behind the hash-compare oracle:
@@ -169,42 +144,36 @@ object IvfIndex {
        |      % ((cn + ${targetCellSize - 1}) // $targetCellSize) AS sub
        |  FROM asg JOIN cn USING (cid))""".stripMargin
 
-  /** Approximate top-k: each query probes its `nprobe` closest cells.
+  /** Approximate top-k: each query probes its `nprobe` closest cells
+    * of the `centroids.length`-cell quantizer.
     *
     * @param queries        (qIdCol, vecCol) — small, broadcastable
     * @param corpus         (idCol, vecCol)
-    * @param sampleFraction quantizer training sample (see [[train]]) —
-    *                       ignored when `centroids` are supplied
-    * @param centroids      precomputed quantizer: pass the result of a
-    *                       prior [[train]] (or [[trainReplicable]]) to
-    *                       amortize training across query batches (the
-    *                       persisted-assignment path at scale — train
-    *                       once, probe repeatedly)
+    * @param centroids      the coarse quantizer, e.g. from
+    *                       [[trainReplicable]]: train once, probe
+    *                       repeatedly (the persisted-assignment path at
+    *                       scale)
     * @param roundTo        round cosine to this many decimals BEFORE
     *                       ranking (ties → id) — for comparison against
     *                       a system ranking on rounded scores
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-              nlist: Int, nprobe: Int,
+              centroids: Array[Array[Double]], nprobe: Int,
               qIdCol: String = "q_id", idCol: String = "vec_id",
-              vecCol: String = "embedding", seed: Long = 42L,
-              sampleFraction: Double = 1.0,
-              centroids: Option[Array[Array[Double]]] = None,
+              vecCol: String = "embedding",
               roundTo: Option[Int] = None): DataFrame = {
-    require(nprobe >= 1 && nprobe <= nlist)
-    val cs = centroids.getOrElse(
-      train(corpus, vecCol, nlist, seed, sampleFraction = sampleFraction))
+    require(nprobe >= 1 && nprobe <= centroids.length)
 
     // map-only: cell id AND the vector in one projection — the old form
     // assigned via join+agg, then joined the corpus AGAIN for vectors
     val corpusCells = corpus.select(col(idCol), col(vecCol).as("__cv"),
-      element_at(nearestCells(col(vecCol), cs, 1), 1).as("cid"))
+      element_at(nearestCells(col(vecCol), centroids, 1), 1).as("cid"))
 
     // nprobe closest cells per query, ordered (distance, cid) — the
     // same ranking the crossJoin+window form produced, without either
     val queryProbes = queries
       .select(col(qIdCol), col(vecCol).as("__qv"),
-        explode(nearestCells(col(vecCol), cs, nprobe)).as("cid"))
+        explode(nearestCells(col(vecCol), centroids, nprobe)).as("cid"))
 
     val raw = Similarity.cosine(col("__qv"), col("__cv"))
     val score = roundTo.fold(raw)(d => round(raw, d))

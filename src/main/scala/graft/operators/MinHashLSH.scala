@@ -5,23 +5,25 @@ import org.apache.spark.sql.functions._
 
 /** MinHash + LSH near-duplicate detection at scale.
   *
-  * Pipeline: word shingles → hash each shingle to a long (once) → H
-  * minhash values (one xxhash64 family per slot, salted by slot index) →
-  * band the signature → per-band bucket key → DISTINCT candidate id-pairs
-  * via a self equi-join on (band, bucket) → exact shingle-Jaccard verify,
-  * once per unique pair.
+  * Pipeline: word shingles → one base hash per shingle (once) → H
+  * minhash values (one universal hash (x·A_i + B_i) mod P per slot,
+  * `NativeText.MinHashUniv`) → band the signature → per-band bucket key →
+  * DISTINCT candidate id-pairs via one capped aggregation per
+  * (band, bucket) → exact shingle-Jaccard verify, once per unique pair.
+  * Every step has a SQL replay (queries.Common.minhashBandPairsSql), so
+  * the registry's dedup queries are checked cell-exact against an
+  * external engine.
   *
   * Scale design:
-  *   - candidate pairs are generated per-(band,bucket) — the join is
-  *     hash-partitioned on the bucket key, so work is Σ bucket² per band,
-  *     never |D|². No crossJoin anywhere.
-  *   - the banding/join stage carries ONLY (id, band, bucket) — the
-  *     shingle arrays never ride through the × bands explosion or its
-  *     shuffle; they are joined back exactly once per side for the
-  *     verify stage.
-  *   - Jaccard runs on long-hashed shingles (8-byte comparisons, not
-  *     string compares), once per DISTINCT pair — a pair colliding in
-  *     many bands is still verified once.
+  *   - candidate pairs are generated per-(band,bucket) — the aggregation
+  *     is hash-partitioned on the bucket key, so work is Σ bucket² per
+  *     band, never |D|². No crossJoin anywhere.
+  *   - the banding stage carries ONLY (id, band, bucket) — the shingle
+  *     arrays never ride through the × bands explosion or its shuffle;
+  *     they are joined back exactly once per side for the verify stage.
+  *   - Jaccard runs on integer-hashed shingles (primitive comparisons,
+  *     not string compares), once per DISTINCT pair — a pair colliding
+  *     in many bands is still verified once.
   *   - a mega-bucket (e.g. empty docs all colliding) is bounded by
   *     `maxBucketSize` before pairing, the standard guard against
   *     quadratic skew.
@@ -38,36 +40,22 @@ import org.apache.spark.sql.functions._
   */
 object MinHashLSH {
 
-  /** One minhash slot: min over shingle hashes of a slot-salted rehash. */
-  def minhashSlot(shingleCol: Column, slot: Int): Column =
-    array_min(transform(shingleCol, s => xxhash64(lit(slot), s)))
-
-  /** Full signature as an array column of length `numHashes`. */
-  def signature(shingleCol: Column, numHashes: Int): Column =
-    array((0 until numHashes).map(i => minhashSlot(shingleCol, i)): _*)
-
   /** Signatures as a DataFrame: a single native-expression projection
-    * (one primitive loop per document — no explode, no extra shuffle).
-    * `sqlReplicable` selects the MinHashUniv family (an external SQL
-    * engine recomputes the identical signature — the oracle-gated
-    * queries' choice) over the XXH64 default. */
-  def signatures(docsWithShingles: DataFrame, idCol: String, numHashes: Int,
-                 sqlReplicable: Boolean = false): DataFrame =
+    * (one primitive loop per document — no explode, no extra shuffle)
+    * over the `__sh` base hashes of [[shingled]]. At most
+    * `MinHashUniv.MaxHashes` (32) slots. */
+  def signatures(docsWithShingles: DataFrame, idCol: String, numHashes: Int): DataFrame =
     docsWithShingles.select(col(idCol),
-      (if (sqlReplicable)
-        graft.functions.NativeText.minhash_signature_univ(col("__sh"), numHashes)
-      else graft.functions.NativeText.minhash_signature(col("__sh"), numHashes))
+      graft.functions.NativeText.minhash_signature_univ(col("__sh"), numHashes)
         .as("__sig"))
 
-  /** The shingle projection matching `sqlReplicable`: the univ family
-    * must see the univ BASE hashes (the whole pipeline replays in SQL),
-    * the default family the XXH64 ones. */
+  /** The `__sh` shingle projection the signatures and the verify stage
+    * read: the universal family's base hashes (the whole pipeline
+    * replays in SQL). */
   def shingled(docs: DataFrame, idCol: String, textCol: String,
-               shingleK: Int, sqlReplicable: Boolean): DataFrame =
+               shingleK: Int): DataFrame =
     docs.select(col(idCol),
-      (if (sqlReplicable)
-        graft.functions.NativeText.shingle_hashes_univ(col(textCol), shingleK)
-      else TextAnalysis.hashedShingles(col(textCol), shingleK)).as("__sh"))
+      graft.functions.NativeText.shingle_hashes_univ(col(textCol), shingleK).as("__sh"))
 
   /** (band, bucket) rows for LSH: one output row per band, bucket =
     * hash of that band's signature slice.
@@ -114,9 +102,8 @@ object MinHashLSH {
     * pairs; the shuffle-count win compounds at corpus scale.) */
   def candidatePairs(docsWithShingles: DataFrame, idCol: String,
                      bands: Int, rowsPerBand: Int,
-                     maxBucketSize: Int,
-                     sqlReplicable: Boolean = false): DataFrame = {
-    val sigs = signatures(docsWithShingles, idCol, bands * rowsPerBand, sqlReplicable)
+                     maxBucketSize: Int): DataFrame = {
+    val sigs = signatures(docsWithShingles, idCol, bands * rowsPerBand)
     val bandedDf = banded(sigs, "__sig", bands, rowsPerBand)
       .select(col(idCol), col("band"), col("bucket"))
     bandedDf.groupBy("band", "bucket")
@@ -143,10 +130,9 @@ object MinHashLSH {
   def crossCandidatePairs(left: DataFrame, idL: String,
                           right: DataFrame, idR: String,
                           bands: Int, rowsPerBand: Int,
-                          maxBucketSize: Int,
-                          sqlReplicable: Boolean = false): DataFrame = {
+                          maxBucketSize: Int): DataFrame = {
     def bandedOf(df: DataFrame, id: String): DataFrame =
-      banded(signatures(df, id, bands * rowsPerBand, sqlReplicable),
+      banded(signatures(df, id, bands * rowsPerBand),
         "__sig", bands, rowsPerBand)
         .select(col(id), col("band"), col("bucket"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -168,7 +154,7 @@ object MinHashLSH {
     *
     * @param docs          (idCol, textCol) input
     * @param shingleK      words per shingle
-    * @param bands × rowsPerBand = signature length
+    * @param bands × rowsPerBand = signature length, at most 32
     * @param maxBucketSize skew guard: buckets larger than this are dropped
     *                      from pairing (pathological collisions, e.g.
     *                      empty documents)
@@ -176,16 +162,12 @@ object MinHashLSH {
   def nearDupPairs(docs: DataFrame, idCol: String, textCol: String,
                    shingleK: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
                    threshold: Double = 0.8,
-                   maxBucketSize: Int = 1000,
-                   sqlReplicable: Boolean = false): DataFrame = {
-    // (The banded (id, band, bucket) projection, which is always small,
-    // stays persisted inside candidatePairs regardless.)
-    val sh0 = shingled(docs, idCol, textCol, shingleK, sqlReplicable)
+                   maxBucketSize: Int = 1000): DataFrame = {
+    val sh0 = shingled(docs, idCol, textCol, shingleK)
     val sh = if (!ScalePolicy.corpusScale(docs))
       sh0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else sh0
-    val pairs = candidatePairs(sh, idCol, bands, rowsPerBand, maxBucketSize,
-      sqlReplicable)
+    val pairs = candidatePairs(sh, idCol, bands, rowsPerBand, maxBucketSize)
     val shA = sh.select(col(idCol).as("id_a"), col("__sh").as("__sh_a"))
     val shB = sh.select(col(idCol).as("id_b"), col("__sh").as("__sh_b"))
     // Verify-join strategy follows the same corpus-size signal as the
@@ -209,10 +191,6 @@ object MinHashLSH {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** Shingle-join scaffold shared by every verify-stage scorer: joins
-    * the hashed shingle sets of both members of each candidate pair
-    * (id_a, id_b) and emits the caller's score columns over
-    * (`__sh_a`, `__sh_b`). Hash collisions at 64 bits are negligible. */
   /** A `shuffle_hash` hint on the pair side ONLY when that side is too
     * big to broadcast. A join-strategy hint takes priority over Spark's
     * size-based broadcast selection, so hinting unconditionally (the
@@ -228,6 +206,10 @@ object MinHashLSH {
     if (pairs.queryExecution.optimizedPlan.stats.sizeInBytes <= (8L << 20)) pairs
     else pairs.hint("shuffle_hash")
 
+  /** Shingle-join scaffold shared by every verify-stage scorer: joins
+    * the hashed shingle sets of both members of each candidate pair
+    * (id_a, id_b) and emits the caller's score columns over
+    * (`__sh_a`, `__sh_b`). Hash collisions at 64 bits are negligible. */
   def scorePairs(pairs: DataFrame, docs: DataFrame, idCol: String,
                  textCol: String, shingleK: Int)(
                  score: (Column, Column) => Seq[Column]): DataFrame = {
@@ -245,9 +227,8 @@ object MinHashLSH {
         score(col("__sh_a"), col("__sh_b")): _*)
   }
 
-  /** n-gram Jaccard verify pass over an arbitrary candidate-pair set.
-    * Used both as MinHash's verify stage and standalone over any
-    * blocking scheme. */
+  /** n-gram Jaccard verify pass over an arbitrary candidate-pair set,
+    * whatever blocking scheme produced it. */
   def verifyPairs(pairs: DataFrame, docs: DataFrame, idCol: String,
                   textCol: String, shingleK: Int): DataFrame =
     scorePairs(pairs, docs, idCol, textCol, shingleK)((a, b) =>

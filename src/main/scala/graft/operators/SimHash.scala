@@ -5,43 +5,26 @@ import org.apache.spark.sql.functions._
 
 /** SimHash near-duplicate fingerprinting.
   *
-  * Classic Charikar scheme: each token hashes to 64 bits; bit j of the
-  * document fingerprint is the sign of Σ_tokens (±1 per token depending on
-  * the token-hash's bit j). Hamming-close fingerprints ⇒ similar token
-  * multisets.
-  *
-  * Token hashes are materialized ONCE per document (a projection the
-  * optimizer keeps — CollapseProject refuses to inline a non-cheap
-  * expression referenced 64 times), so the 64 per-bit votes traverse a
-  * precomputed long array instead of re-hashing every token per bit.
+  * Charikar scheme with universal per-bit hashing
+  * (`NativeText.SimHashUniv`): each token gets one base hash, bit j of
+  * the 63-bit document fingerprint is the sign of Σ_tokens (±1 per
+  * token, by whether g_j(token) < P/2). Hamming-close fingerprints ⇒
+  * similar token multisets. The fingerprint is a primitive loop per
+  * document that an external SQL engine recomputes exactly
+  * (queries.Lsh.dedupSimhashSql), so the registry's simhash queries are
+  * checked cell-exact.
   *
   * Candidate generation uses the pigeonhole blocking standard for simhash
-  * dedup: split the 64-bit fingerprint into `chunks` 16-bit chunks; any
-  * pair within hamming distance `chunks - 1` must agree on at least one
-  * chunk, so an equi-join per chunk finds all of them — hash-partitioned
-  * on the chunk value, never all-pairs.
+  * dedup: split the fingerprint into `Chunks` = 4 16-bit chunks; any
+  * pair within hamming distance 3 must agree on at least one chunk, so
+  * an equi-join per chunk finds all of them — hash-partitioned on the
+  * chunk value, never all-pairs.
   */
 object SimHash {
 
-  /** 64-bit hash per token — computed once, voted on 64 times. */
-  def tokenHashes(tokensCol: Column): Column = transform(tokensCol, t => xxhash64(t))
-
-  /** Per-bit vote over precomputed token hashes: +1 / -1 per token for
-    * bit j, summed via a higher-order aggregate (codegen'd, no UDF). */
-  private def bitVote(hashesCol: Column, j: Int): Column =
-    aggregate(hashesCol, lit(0L),
-      (acc, h) => acc + when(shiftright(h, j).bitwiseAND(1) === 1L, 1L).otherwise(-1L))
-
-  /** 64-bit simhash fingerprint from precomputed token hashes. */
-  def simhashFromHashes(hashesCol: Column): Column =
-    (0 until 64).map { j =>
-      when(bitVote(hashesCol, j) > 0, shiftleft(lit(1L), j)).otherwise(lit(0L))
-    }.reduce(_.bitwiseOR(_))
-
-  /** 64-bit simhash fingerprint of a token array. Prefer materializing
-    * `tokenHashes` in a prior projection and calling `simhashFromHashes`
-    * so the hashing isn't repeated per bit. */
-  def simhash(tokensCol: Column): Column = simhashFromHashes(tokenHashes(tokensCol))
+  /** 16-bit chunks per 64-bit fingerprint: the pigeonhole blocking
+    * finds every pair within hamming distance `Chunks - 1`. */
+  private val Chunks = 4
 
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
@@ -50,24 +33,13 @@ object SimHash {
     shiftright(fp, i * 16).bitwiseAND(0xffffL)
 
   /** Document fingerprints as a DataFrame: a single native-expression
-    * projection (one hash + vote loop per document, no explode/shuffle).
-    * This is the form to use on a corpus; the Column-based `simhash`
-    * remains for expression-level composition.
-    *
-    * @param sqlReplicable use the universal-hash fingerprint
-    *   (`NativeText.simhash_univ`) that an external SQL engine can
-    *   recompute exactly — for oracle checks and cross-engine dedup;
-    *   default is the faster XXH64 form
-    */
-  def fingerprints(docs: DataFrame, idCol: String, textCol: String,
-                   sqlReplicable: Boolean = false): DataFrame = {
-    val fp = if (sqlReplicable) graft.functions.NativeText.simhash_univ(col(textCol))
-             else graft.functions.NativeText.simhash64(col(textCol))
-    docs.select(col(idCol), fp.as("fp"))
-  }
+    * projection (`NativeText.simhash_univ`: one hash + vote loop per
+    * document, no explode/shuffle). */
+  def fingerprints(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol), graft.functions.NativeText.simhash_univ(col(textCol)).as("fp"))
 
   /** Near-dup pairs with hamming distance <= maxHamming (must be
-    * < chunks for the pigeonhole guarantee; default 3 with 4 chunks).
+    * < `Chunks` for the pigeonhole guarantee).
     *
     * @param maxBucketSize skew guard, same as MinHashLSH: a hot chunk
     *                      value (e.g. thousands of near-empty docs with
@@ -75,15 +47,14 @@ object SimHash {
     *                      quadratic in one join task
     */
   def nearDupPairs(docs: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3, chunks: Int = 4,
-                   maxBucketSize: Int = 1000,
-                   sqlReplicable: Boolean = false): DataFrame = {
-    require(maxHamming < chunks, "pigeonhole blocking needs maxHamming < chunks")
+                   maxHamming: Int = 3,
+                   maxBucketSize: Int = 1000): DataFrame = {
+    require(maxHamming < Chunks, s"pigeonhole blocking needs maxHamming < $Chunks")
     // persisted: feeds the candidate aggregation and both hamming-join
     // sides. Unlike MinHashLSH's shingle table (8 KB/doc — adaptive
     // persist), a fingerprint row is 16 bytes: caching beats re-reading
     // and re-fingerprinting the text at every scale.
-    val fps = fingerprints(docs, idCol, textCol, sqlReplicable)
+    val fps = fingerprints(docs, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // Candidate ids per 16-bit chunk bucket: ONE capped collect
@@ -97,7 +68,7 @@ object SimHash {
     // sharing a value must not merge (same contract as the old
     // (ci, cv) self-join key)
     val banded = fps.select(col(idCol), posexplode(array(
-        (0 until chunks).map(i => chunk(col("fp"), i)): _*)).as(Seq("ci", "cv")))
+        (0 until Chunks).map(i => chunk(col("fp"), i)): _*)).as(Seq("ci", "cv")))
     val pairs = banded.groupBy("ci", "cv")
       .agg(graft.functions.TopKAggregate
         .topk_by(-col(idCol).cast("double"), col(idCol), maxBucketSize + 1)

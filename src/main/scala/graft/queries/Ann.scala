@@ -102,8 +102,8 @@ object Ann extends QueryFamily("ann") {
     val queries = e.filter(col("vec_id") < 8).select(col("vec_id").as("q_id"), col("embedding"))
     val cents = IvfIndex.trainReplicable(e, "vec_id", "embedding",
       nlist = 16, iters = 3, sampleMod = 4)
-    IvfIndex.ivfTopK(queries, e, k = 5, nlist = 16, nprobe = 4,
-      centroids = Some(cents), roundTo = Some(6))
+    IvfIndex.ivfTopK(queries, e, k = 5, centroids = cents, nprobe = 4,
+      roundTo = Some(6))
   }
 
   private val annIvfSql: String = {
@@ -559,8 +559,8 @@ object Ann extends QueryFamily("ann") {
       .select(col("vec_id").as("q_id"), col("embedding"))
     val cents = IvfIndex.trainReplicable(e, "vec_id", "embedding",
       nlist = 16, iters = 3, sampleMod = 4)
-    val approx = IvfIndex.ivfTopK(queries, e, k = 5, nlist = 16, nprobe = 4,
-      centroids = Some(cents), roundTo = Some(6))
+    val approx = IvfIndex.ivfTopK(queries, e, k = 5, centroids = cents, nprobe = 4,
+      roundTo = Some(6))
       .select(col("q_id"), col("vec_id"), lit(1L).as("__hit"))
     val exact = Similarity.bruteForceTopK(queries, e, k = 5,
       vecCol = "embedding", roundTo = Some(6))
@@ -801,8 +801,8 @@ object Ann extends QueryFamily("ann") {
       .select(col("vec_id").as("q_id"), col("embedding"))
     val cents = IvfIndex.trainReplicable(e, "vec_id", "embedding",
       nlist = 16, iters = 3, sampleMod = 4)
-    val approx = IvfIndex.ivfTopK(queries, e, k = 5, nlist = 16, nprobe = 4,
-      centroids = Some(cents), roundTo = Some(6))
+    val approx = IvfIndex.ivfTopK(queries, e, k = 5, centroids = cents, nprobe = 4,
+      roundTo = Some(6))
       .select(col("q_id"), col("vec_id"), col("rank"))
     val exact = Similarity.bruteForceTopK(queries, e, k = 5,
       vecCol = "embedding", roundTo = Some(6))
@@ -1304,8 +1304,8 @@ object Ann extends QueryFamily("ann") {
       .select(col("vec_id").as("q_id"), col("embedding"))
     val cents = IvfIndex.trainReplicable(e, "vec_id", "embedding",
       nlist = 16, iters = 3, sampleMod = 4)
-    val approx = IvfIndex.ivfTopK(queries, e, k = 10, nlist = 16, nprobe = 4,
-      centroids = Some(cents), roundTo = Some(6))
+    val approx = IvfIndex.ivfTopK(queries, e, k = 10, centroids = cents, nprobe = 4,
+      roundTo = Some(6))
       .withColumn("rank", row_number().over(
         Window.partitionBy("q_id").orderBy(desc("cosine"), asc("vec_id"))))
     val truth = Similarity.bruteForceTopK(queries, e, k = 1,

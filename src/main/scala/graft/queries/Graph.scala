@@ -23,8 +23,7 @@ object Graph extends QueryFamily("graph") {
   private def dedupClusters(s: SparkSession, dir: String): DataFrame = {
     val corpus = dupCorpus(s, dir)
     val pairs = MinHashLSH.nearDupPairs(corpus, "doc_id", "text",
-      shingleK = 3, bands = 8, rowsPerBand = 4, threshold = 0.8,
-      sqlReplicable = true)
+      shingleK = 3, bands = 8, rowsPerBand = 4, threshold = 0.8)
     ConnectedComponents.clusters(corpus, pairs, "doc_id")
   }
 
@@ -91,8 +90,7 @@ object Graph extends QueryFamily("graph") {
   private def canonicalPick(s: SparkSession, dir: String): DataFrame = {
     val corpus = dupCorpus(s, dir)
     val pairs = MinHashLSH.nearDupPairs(corpus, "doc_id", "text",
-      shingleK = 3, bands = 8, rowsPerBand = 4, threshold = 0.8,
-      sqlReplicable = true)
+      shingleK = 3, bands = 8, rowsPerBand = 4, threshold = 0.8)
     val cc = ConnectedComponents.clusters(corpus, pairs, "doc_id")
       .select("doc_id", "cluster_id")
     // persisted: read by the election and the final join — otherwise the

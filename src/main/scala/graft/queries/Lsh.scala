@@ -37,8 +37,7 @@ object Lsh extends QueryFamily("lsh") {
     * the r11 sf1 sweep surfaced once the truth oracle could run). */
   private def dedupMinhash(s: SparkSession, dir: String): DataFrame =
     MinHashLSH.nearDupPairs(dupCorpus(s, dir), "doc_id", "text",
-      shingleK = 3, bands = 8, rowsPerBand = 4, threshold = 0.8,
-      sqlReplicable = true)
+      shingleK = 3, bands = 8, rowsPerBand = 4, threshold = 0.8)
 
   /** Cross-set form of [[minhashBandPairsSql]] — the oracle half of
     * `MinHashLSH.crossCandidatePairs`: both sides' MinHashUniv
@@ -114,7 +113,7 @@ object Lsh extends QueryFamily("lsh") {
     // (identical-fingerprint spam) to 5% of the corpus.
     val cap = math.max(1000L, corpus.count() / 20L).toInt
     SimHash.nearDupPairs(corpus, "doc_id", "text",
-      maxHamming = 3, chunks = 4, maxBucketSize = cap, sqlReplicable = true)
+      maxHamming = 3, maxBucketSize = cap)
   }
 
   private val dedupSimhashSql: String = {
@@ -458,14 +457,12 @@ object Lsh extends QueryFamily("lsh") {
     val batch = docs.filter(col("doc_id") % 3 === 0)
       .unionAll(corpus.filter(col("corpus_id") % 5 === 1)
         .select((col("corpus_id") + 2000000L).as("doc_id"), col("text")))
-    val shB = MinHashLSH.shingled(batch, "doc_id", "text", 3,
-      sqlReplicable = true)
+    val shB = MinHashLSH.shingled(batch, "doc_id", "text", 3)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val shC = MinHashLSH.shingled(corpus, "corpus_id", "text", 3,
-      sqlReplicable = true)
+    val shC = MinHashLSH.shingled(corpus, "corpus_id", "text", 3)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cand = MinHashLSH.crossCandidatePairs(shB, "doc_id", shC, "corpus_id",
-      bands = 8, rowsPerBand = 4, maxBucketSize = 1000, sqlReplicable = true)
+      bands = 8, rowsPerBand = 4, maxBucketSize = 1000)
     val rejected = cand
       .join(shB.select(col("doc_id"), col("__sh").as("__sh_b")), Seq("doc_id"))
       .join(shC.select(col("corpus_id"), col("__sh").as("__sh_c")), Seq("corpus_id"))
@@ -779,8 +776,7 @@ object Lsh extends QueryFamily("lsh") {
   private def splitLeakage(s: SparkSession, dir: String): DataFrame = {
     val corpus = dupCorpus(s, dir)
     val pairs = MinHashLSH.nearDupPairs(corpus, "doc_id", "text",
-      shingleK = 3, bands = 8, rowsPerBand = 4, threshold = 0.8,
-      sqlReplicable = true)
+      shingleK = 3, bands = 8, rowsPerBand = 4, threshold = 0.8)
     val folds = corpus.select(col("doc_id"),
       expr(s"CAST(pmod(${multHashExpr("doc_id")}, 5) AS INT)").as("fold"))
     pairs
@@ -819,8 +815,7 @@ object Lsh extends QueryFamily("lsh") {
   private def dedupClusterProfile(s: SparkSession, dir: String): DataFrame = {
     val corpus = dupCorpus(s, dir)
     val pairs = MinHashLSH.nearDupPairs(corpus, "doc_id", "text",
-      shingleK = 3, bands = 8, rowsPerBand = 4, threshold = 0.8,
-      sqlReplicable = true)
+      shingleK = 3, bands = 8, rowsPerBand = 4, threshold = 0.8)
     ConnectedComponents.clusters(corpus, pairs, "doc_id")
       .groupBy("cluster_id").agg(count(lit(1)).as("__n"))
       .select(when(col("__n") === 1, "1").when(col("__n") === 2, "2")
@@ -906,8 +901,7 @@ object Lsh extends QueryFamily("lsh") {
     * branch form). */
   private def dedupThresholdCurve(s: SparkSession, dir: String): DataFrame = {
     val pairs = MinHashLSH.nearDupPairs(dupCorpus(s, dir), "doc_id", "text",
-      shingleK = 3, bands = 8, rowsPerBand = 4, threshold = 0.8,
-      sqlReplicable = true)
+      shingleK = 3, bands = 8, rowsPerBand = 4, threshold = 0.8)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val surviving = pairs.select(col("id_a"), col("id_b"),
         explode(array(lit(80), lit(90), lit(100))).as("threshold_pct"),
@@ -963,11 +957,10 @@ object Lsh extends QueryFamily("lsh") {
     // union-projection pipeline executed a full corpus job
     val cap = math.max(1000L, 2L * t(s, dir, "documents").count() / 20L).toInt
     val mh = MinHashLSH.nearDupPairs(corpus, "doc_id", "text",
-      shingleK = 3, bands = 8, rowsPerBand = 4, threshold = 0.8,
-      sqlReplicable = true)
+      shingleK = 3, bands = 8, rowsPerBand = 4, threshold = 0.8)
       .select(col("id_a"), col("id_b"), lit(1L).as("__m"))
     val sh = SimHash.nearDupPairs(corpus, "doc_id", "text",
-      maxHamming = 3, chunks = 4, maxBucketSize = cap, sqlReplicable = true)
+      maxHamming = 3, maxBucketSize = cap)
       .select(col("id_a"), col("id_b"), lit(1L).as("__s"))
     mh.join(sh, Seq("id_a", "id_b"), "full_outer")
       .agg(sum(expr("CASE WHEN __m = 1 AND __s = 1 THEN 1 ELSE 0 END"))

@@ -45,9 +45,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * prune whole pages at planning time. Pages are key-ordered (the pager
   * contract), so each page's [first,last] key span is a zone map: the
   * planner probes just the first and last line of each page file (two
-  * bounded reads per page — the stand-in for a pager manifest) and
-  * skips pages whose span misses the pushed key range. A key-range scan
-  * over a 10k-page feed plans only the overlapping pages.
+  * bounded reads per page, all sent at once — the stand-in for a pager
+  * manifest) and skips pages whose span misses the pushed key range. A
+  * key-range scan over a 10k-page feed plans only the overlapping
+  * pages.
   *
   * The transport behind a page is pluggable ([[PageTransport]]) and
   * selected by the `dir` option's scheme: a filesystem path reads
@@ -66,9 +67,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * The page list is taken ONCE per DataFrame, as Spark's file sources
   * do (`InMemoryFileIndex`): [[PagedFeedTable]] lists the pages on
   * first planning and every scan, statistics call and action planned
-  * from the DataFrame reuses that listing. The page set is therefore
-  * fixed when the DataFrame is first planned; `load()` again to see
-  * pages appended later.
+  * from the DataFrame reuses that listing; the zone probes, likewise,
+  * run on the first key-filtered plan and are reused by every later
+  * one. The page set is therefore fixed when the DataFrame is first
+  * planned; `load()` again to see pages appended later.
   *
   * Supported field types: LONG, INT, DOUBLE, STRING, BOOLEAN;
   * `\N` encodes NULL. Lines are TAB-separated in schema order; string
@@ -103,7 +105,8 @@ private[graft] case class PageRef(name: String, loc: String, bytes: Long)
 
 /** The pluggable fetch behind a page. Driver-side: `listPages` (once
   * per DataFrame, by [[PagedFeedTable]]), `firstLine`/`lastLine` (zone
-  * probes for key-range pruning — both BOUNDED reads, never the page).
+  * probes for key-range pruning — both BOUNDED reads, never the page,
+  * every page's probes in flight at once, so they must be thread-safe).
   * Executor-side: `open` (the full page, one bounded unit of IO; a
   * task opens its partition's pages concurrently, so `open` must be
   * thread-safe), started at least `throttleMs` apart within a task.
@@ -140,6 +143,17 @@ private[graft] object PageTransport {
   private[v2] def await[T](f: java.util.concurrent.Future[T]): T =
     try f.get()
     catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+
+  /** `f` of every element of `xs`, all sent at once on [[pool]], in the
+    * order of `xs`. The first call that fails fails the whole; the calls
+    * still pending are then dropped. */
+  private[v2] def concurrently[A, B: scala.reflect.ClassTag](xs: Seq[A])(f: A => B): Array[B] = {
+    val calls = xs.map(x => pool.submit(new java.util.concurrent.Callable[B] {
+      override def call(): B = f(x)
+    }))
+    try calls.map(await(_)).toArray
+    finally calls.foreach(_.cancel(true))
+  }
 
   /** Scheme-dispatch: http(s):// base URL → HTTP transport; anything
     * else is a local/NFS directory of page files. */
@@ -206,9 +220,10 @@ private[v2] class FilePageTransport(dir: String) extends PageTransport {
   * manifest the sink writes), then sends one size probe per page, all
   * at once on [[PageTransport.pool]]; it runs once per DataFrame (see
   * [[PagedFeedTable]]), not per plan. The zone probes are HTTP Range
-  * requests: `bytes=0-8191` for the first line, a suffix range for the
-  * last — a server answering 200 (no Range support) degrades that page
-  * to "unprunable", never to a wrong prune. */
+  * requests, also sent all at once and also taken once per DataFrame:
+  * `bytes=0-8191` for the first line, a suffix range for the last — a
+  * server answering 200 (no Range support) degrades that page to
+  * "unprunable", never to a wrong prune. */
 private[v2] class HttpPageTransport(base: String, retries: Int,
                                     backoffMs: Long, override val throttleMs: Long,
                                     headers: Map[String, String] = Map.empty)
@@ -230,14 +245,7 @@ private[v2] class HttpPageTransport(base: String, retries: Int,
         l.stripPrefix("pages=").trim.toInt }
       .getOrElse(throw new java.io.IOException(
         s"graft-paged: $base/_PAGES has no pages= line"))
-    val probes = (0 until pages).map { i =>
-      PageTransport.pool.submit(new java.util.concurrent.Callable[PageRef] {
-        override def call(): PageRef = sized(f"page-$i%05d.tsv")
-      })
-    }
-    // the first failed probe fails the listing; the rest are dropped
-    try probes.map(PageTransport.await(_)).toArray
-    finally probes.foreach(_.cancel(true))
+    PageTransport.concurrently(0 until pages)(i => sized(f"page-$i%05d.tsv"))
   }
 
   // byte size from a 1-byte ranged GET's Content-Range total (one cheap
@@ -353,21 +361,26 @@ private[v2] object PagedTsv {
   }
 }
 
-/** One per `load()`. `pages` is the feed's listing, taken on first use
-  * and shared by every scan planned from this table: Spark calls
+/** One per `load()`. `pages` is the feed's listing and `zones` its
+  * pages' (first line, last line) pairs, each taken on first use and
+  * shared by every scan planned from this table: Spark calls
   * `estimateStatistics` many times per query and builds a new `Scan`
-  * per action, AQE re-plan and range-partition sample. */
+  * per action, AQE re-plan and range-partition sample. Only a scan
+  * with a pushed key range reads `zones`. */
 private[v2] class PagedFeedTable(schema: StructType, props: Map[String, String])
   extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  private lazy val pages: Array[PageRef] = PageTransport.forDir(props).listPages()
+  private lazy val transport = PageTransport.forDir(props)
+  private lazy val pages: Array[PageRef] = transport.listPages()
+  private lazy val zones: Array[PageZone] = PagedFeedScan.zones(transport, pages)
 
   override def name(): String = s"graft_paged(${props.getOrElse("dir", "?")})"
   override def schema(): StructType = schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new PagedFeedScanBuilder(schema, options.asScala.toMap ++ props, () => pages)
+    new PagedFeedScanBuilder(schema, options.asScala.toMap ++ props, () => pages,
+      () => zones)
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
     : org.apache.spark.sql.connector.write.WriteBuilder =
@@ -376,7 +389,8 @@ private[v2] class PagedFeedTable(schema: StructType, props: Map[String, String])
 }
 
 private[v2] class PagedFeedScanBuilder(full: StructType, opts: Map[String, String],
-                                       listing: () => Array[PageRef])
+                                       listing: () => Array[PageRef],
+                                       zones: () => Array[PageZone])
   extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters with SupportsPushDownLimit {
   private var required: StructType = full
@@ -404,7 +418,7 @@ private[v2] class PagedFeedScanBuilder(full: StructType, opts: Map[String, Strin
   override def pushLimit(n: Int): Boolean = { limit = n; false }
 
   override def build(): Scan =
-    new PagedFeedScan(full, required, pushed, limit, opts, listing)
+    new PagedFeedScan(full, required, pushed, limit, opts, listing, zones)
 }
 
 private[v2] object PagedFeedScan {
@@ -491,6 +505,13 @@ private[v2] object PagedFeedScan {
     runs.result()
   }
 
+  /** Every page's zone probes, the first and last line of each page
+    * sent together on [[PageTransport.pool]]. */
+  def zones(transport: PageTransport, pages: Array[PageRef]): Array[PageZone] =
+    PageTransport.concurrently(pages.toSeq.flatMap(p => Seq(p -> true, p -> false))) {
+      case (p, first) => if (first) transport.firstLine(p) else transport.lastLine(p)
+    }.grouped(2).map(fl => PageZone(fl(0), fl(1))).toArray
+
   /** First line of a page file — one bounded read. */
   def firstLine(f: java.io.File): Option[String] = {
     val in = new java.io.BufferedReader(new java.io.InputStreamReader(
@@ -528,7 +549,8 @@ private[v2] object PagedFeedScan {
 private[v2] class PagedFeedScan(full: StructType, required: StructType,
                                 pushed: Array[Filter], limit: Int,
                                 opts: Map[String, String],
-                                listing: () => Array[PageRef])
+                                listing: () => Array[PageRef],
+                                zones: () => Array[PageZone])
   extends Scan with Batch with SupportsReportStatistics {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -579,14 +601,16 @@ private[v2] class PagedFeedScan(full: StructType, required: StructType,
       PagedFeedScan.keyRange(keyCol, pushed) else (Long.MinValue, Long.MaxValue)
     val kept =
       if (lo == Long.MinValue && hi == Long.MaxValue) pages
-      else pages.filter { ref =>
+      else {
         def key(line: Option[String]): Option[Long] =
           line.map(_.split("\t", -1)).filter(_.length > keyIdx)
             .flatMap(p => scala.util.Try(p(keyIdx).toLong).toOption)
-        (key(transport.firstLine(ref)), key(transport.lastLine(ref))) match {
+        def overlaps(z: PageZone): Boolean = (key(z.first), key(z.last)) match {
           case (Some(first), Some(last)) => last >= lo && first <= hi
           case _ => true // unreadable zone → never prune on a guess
         }
+        // `pages` is a prefix of the listing, so page i's zone is zones(i)
+        pages.zip(zones()).collect { case (ref, z) if overlaps(z) => ref }
       }
     // contiguous runs of the kept pages, packed by Spark's file-split
     // rule: the reference's PageNumber loop, cut into one run per task
@@ -616,6 +640,10 @@ private[v2] class PagedFeedScan(full: StructType, required: StructType,
     new PagedFeedReaderFactory(picks, pushed, filterCols, limit, transport)
   }
 }
+
+/** A page's first and last line (None when a bounded probe could not
+  * read a full line): the key zone planning prunes by. */
+private[v2] case class PageZone(first: Option[String], last: Option[String])
 
 /** One task's contiguous run of pages, in page order. */
 private[graft] case class PagedFeedPartition(pages: Array[PageRef])

@@ -58,13 +58,11 @@ class DedupSpec extends GraftSuite {
       val corpus = docs.unionAll(
         docs.select((col("doc_id") + 100000000L).as("doc_id"), col("text")))
       val lsh = MinHashLSH.nearDupPairs(corpus, "doc_id", "text",
-          shingleK = 3, bands = 8, rowsPerBand = 4, threshold = 0.8,
-          sqlReplicable = true)
+          shingleK = 3, bands = 8, rowsPerBand = 4, threshold = 0.8)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       // brute-force truth over the same univ shingle hashes (|D|^2/2
       // jaccards — fine at spec scale, the thing the oracle can't afford)
-      val sh = MinHashLSH.shingled(corpus, "doc_id", "text", 3,
-        sqlReplicable = true)
+      val sh = MinHashLSH.shingled(corpus, "doc_id", "text", 3)
       val truth = sh.select(col("doc_id").as("id_a"), col("__sh").as("__a"))
         .join(sh.select(col("doc_id").as("id_b"), col("__sh").as("__b")),
           col("id_a") < col("id_b"))

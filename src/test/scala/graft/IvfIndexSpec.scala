@@ -9,7 +9,7 @@ class IvfIndexSpec extends GraftSuite {
   private lazy val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 
   test("assign puts every vector in exactly one cell, map-only (no shuffle)") {
-    val cents = IvfIndex.train(emb, "embedding", nlist = 8)
+    val cents = IvfIndex.trainReplicable(emb, "vec_id", "embedding", nlist = 8)
     val assigned = IvfIndex.assign(emb, "vec_id", "embedding", cents)
     assert(assigned.count() == emb.count())
     assert(assigned.select("vec_id").distinct().count() == emb.count())
@@ -32,7 +32,8 @@ class IvfIndexSpec extends GraftSuite {
     val queries = emb.filter(col("vec_id") < 8).select(col("vec_id").as("q_id"), col("embedding"))
     val exact = Similarity.bruteForceTopK(queries, emb, k = 5)
       .select("q_id", "vec_id").as[(Long, Long)].collect().toSet
-    val approx = IvfIndex.ivfTopK(queries, emb, k = 5, nlist = 8, nprobe = 4)
+    val cents = IvfIndex.trainReplicable(emb, "vec_id", "embedding", nlist = 8)
+    val approx = IvfIndex.ivfTopK(queries, emb, k = 5, centroids = cents, nprobe = 4)
       .select("q_id", "vec_id").as[(Long, Long)].collect().toSet
     val recall = (exact intersect approx).size.toDouble / exact.size
     assert(recall >= 0.5, s"IVF recall $recall too low")
@@ -42,17 +43,17 @@ class IvfIndexSpec extends GraftSuite {
     val queries = emb.filter(col("vec_id") < 8).select(col("vec_id").as("q_id"), col("embedding"))
     val exact = Similarity.bruteForceTopK(queries, emb, k = 5)
       .select("q_id", "vec_id").as[(Long, Long)].collect().toSet
-    val sampled = IvfIndex.ivfTopK(queries, emb, k = 5, nlist = 8, nprobe = 4,
-      sampleFraction = 0.25)
+    // every 4th vector trains the quantizer (trainReplicable's systematic sample)
+    val sampled = IvfIndex.ivfTopK(queries, emb, k = 5, nprobe = 4,
+      centroids = IvfIndex.trainReplicable(emb, "vec_id", "embedding", nlist = 8, sampleMod = 4))
       .select("q_id", "vec_id").as[(Long, Long)].collect().toSet
     val recall = (exact intersect sampled).size.toDouble / exact.size
     assert(recall >= 0.5, s"sample-trained IVF recall $recall too low")
 
-    // train-once / probe-repeatedly: passing the centroids back must give
-    // the identical result with no retraining
-    val cents = IvfIndex.train(emb, "embedding", nlist = 8, sampleFraction = 0.25)
-    val reused = IvfIndex.ivfTopK(queries, emb, k = 5, nlist = 8, nprobe = 4,
-      centroids = Some(cents))
+    // train-once / probe-repeatedly: the quantizer re-trains bit-identically,
+    // so centroids kept from an earlier training give the identical result
+    val cents = IvfIndex.trainReplicable(emb, "vec_id", "embedding", nlist = 8, sampleMod = 4)
+    val reused = IvfIndex.ivfTopK(queries, emb, k = 5, centroids = cents, nprobe = 4)
       .select("q_id", "vec_id").as[(Long, Long)].collect().toSet
     assert(reused == sampled)
   }
@@ -65,8 +66,7 @@ class IvfIndexSpec extends GraftSuite {
     val queries = emb.filter(col("vec_id") < 8).select(col("vec_id").as("q_id"), col("embedding"))
     val exact = Similarity.bruteForceTopK(queries, emb, k = 5)
       .select("q_id", "vec_id").as[(Long, Long)].collect().toSet
-    val approx = IvfIndex.ivfTopK(queries, emb, k = 5, nlist = 8, nprobe = 4,
-      centroids = Some(c1))
+    val approx = IvfIndex.ivfTopK(queries, emb, k = 5, centroids = c1, nprobe = 4)
       .select("q_id", "vec_id").as[(Long, Long)].collect().toSet
     val recall = (exact intersect approx).size.toDouble / exact.size
     assert(recall >= 0.5, s"replicable-trained IVF recall $recall too low")
@@ -76,7 +76,8 @@ class IvfIndexSpec extends GraftSuite {
     val queries = emb.filter(col("vec_id") < 4).select(col("vec_id").as("q_id"), col("embedding"))
     val exact = Similarity.bruteForceTopK(queries, emb, k = 3)
       .select("q_id", "vec_id", "rank").as[(Long, Long, Int)].collect().toSet
-    val full = IvfIndex.ivfTopK(queries, emb, k = 3, nlist = 8, nprobe = 8)
+    val cents = IvfIndex.trainReplicable(emb, "vec_id", "embedding", nlist = 8)
+    val full = IvfIndex.ivfTopK(queries, emb, k = 3, centroids = cents, nprobe = 8)
       .select("q_id", "vec_id", "rank").as[(Long, Long, Int)].collect().toSet
     assert(full == exact)
   }

@@ -33,6 +33,15 @@ class MinHashLSHSpec extends GraftSuite {
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
   }
 
+  test("a signature past 32 slots fails with a message naming bands × rowsPerBand") {
+    val docs = Seq((1L, doc(-1))).toDF("doc_id", "text")
+    val e = intercept[IllegalArgumentException] {
+      MinHashLSH.nearDupPairs(docs, "doc_id", "text", bands = 16, rowsPerBand = 4)
+    }
+    assert(e.getMessage.contains("bands × rowsPerBand <= 32"), e.getMessage)
+    assert(e.getMessage.contains("got 64"), e.getMessage)
+  }
+
   test("jaccard matches hand computation") {
     val df = Seq((Seq("a", "b", "c"), Seq("b", "c", "d"))).toDF("x", "y")
     val j = df.select(MinHashLSH.jaccard(col("x"), col("y"))).as[Double].head()

@@ -343,6 +343,24 @@ class PagedFeedSpec extends GraftSuite {
     assert(req.full >= corrPages, s"pages were never read: $req")
   }
 
+  test("HTTP transport: zone probes run once per DataFrame, and only for a key filter") {
+    val (dir, df) = correctionsFeed("zones")
+    // no pushed key filter: the listing's size probes and no zone probe
+    assert(df.count() == corrPages * corrRowsPerPage)
+    val unfiltered = graft.sources.v2.LoopbackPageServer.requests(dir)
+    assert(unfiltered.ranged == corrPages,
+      s"expected only $corrPages size probes without a key filter, got $unfiltered")
+    // ids 50..100 lie in pages 1 [40, 79] and 2 [80, 119]
+    val keyed = df.filter(col("id") >= 50L && col("id") <= 100L)
+    assert(plannedPages(keyed) == 2)
+    assert(keyed.count() == 51)
+    assert(keyed.count() == 51)
+    // 1 size probe plus 2 zone probes per page, whatever the number of plans
+    val req = graft.sources.v2.LoopbackPageServer.requests(dir)
+    assert(req.ranged == 3 * corrPages,
+      s"expected ${3 * corrPages} ranged GETs over three plans, got $req")
+  }
+
   test("page fetches: DateRepair plus one action GETs every page once") {
     val (dir, df) = correctionsFeed("repair_once")
     val repaired = repairCorrections(df).collect()

@@ -33,13 +33,13 @@ class SimHashSpec extends GraftSuite {
     val base = "spark catalyst tungsten shuffle partition broadcast join aggregate window"
     val docs = Seq((1L, base), (2L, base), (3L, "zzz qqq www eee rrr ttt yyy uuu iii"))
       .toDF("doc_id", "text")
-    val fps = SimHash.fingerprints(docs, "doc_id", "text", sqlReplicable = true)
+    val fps = SimHash.fingerprints(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fps(1L) == fps(2L))
     assert(fps(1L) != fps(3L))
     assert(fps.values.forall(_ >= 0L), "bit 63 must never be set (SQL BIGINT shift limit)")
     val pairs = SimHash.nearDupPairs(docs, "doc_id", "text",
-      maxHamming = 3, chunks = 4, sqlReplicable = true)
+      maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)))
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
@@ -48,7 +48,7 @@ class SimHashSpec extends GraftSuite {
   test("pigeonhole requires maxHamming < chunks") {
     val docs = Seq((1L, "a")).toDF("doc_id", "text")
     intercept[IllegalArgumentException] {
-      SimHash.nearDupPairs(docs, "doc_id", "text", maxHamming = 4, chunks = 4)
+      SimHash.nearDupPairs(docs, "doc_id", "text", maxHamming = 4)
     }
   }
 }

@@ -97,10 +97,14 @@ class PagedFeedReaderSpec extends AnyFunSuite {
 
   test("close() after the first row leaves no page body open, in flight ones included") {
     // slow opens: when the reader closes, later pages are still in flight
+    val laterRequested = new CountDownLatch(1)
     val t = new StubTransport(beforeOpen = ref =>
-      if (ref.name != "page-00000.tsv") Thread.sleep(100))
+      if (ref.name != "page-00000.tsv") { laterRequested.countDown(); Thread.sleep(100) })
     val r = reader(pages(6), t)
     assert(r.next() && r.get().getLong(0) == 1L)
+    // page 1's GET starts on a pool thread: close once it is in flight, or
+    // close() can win the race and cancel it before it is ever sent
+    laterRequested.await(10, TimeUnit.SECONDS)
     r.close()
     assert(t.requested.get > 1, "later pages were never requested")
     assert(t.allClosed(), s"requested ${t.requested.get}, opened ${t.opened.get}, " +
