@@ -63,7 +63,7 @@ object DateRepair {
     val monthIncorrect =
       col(groupCol).isNotNull && coalesce(recMonth =!= ivMonth, lit(false))
     val resolver = df.sparkSession.sessionState.conf.resolver
-    val rest = df.columns.filterNot(resolver(_, groupCol))
+    val rest = df.columns.toSeq.filterNot(resolver(_, groupCol))
     df.withColumn(recruitCol,
         when(col(recruitCol).isNull,
           date_format(col(ivTsCol), "yyyy-MM-dd HH:mm:ss"))

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   *
   *   1. range-partition on (group, value) + sort within partitions —
   *      a global (group, value) order, groups contiguous, NO global
-  *      single-reducer sort;
+  *      single-reducer sort (`PrefixSum.orderedScan`, with pass 1);
   *   2. pass 1: per-partition per-group run-length counts → the driver
   *      derives each group's total and per-partition rank offsets;
   *   3. pass 2: emit ONLY the rows sitting at the floor/ceil ranks of
@@ -38,21 +38,18 @@ object DistributedPercentiles {
             ps: Seq[(String, Double)]): DataFrame = {
     require(ps.nonEmpty && ps.forall { case (_, p) => p >= 0.0 && p <= 1.0 })
     val spark = df.sparkSession
-    val parts = math.max(spark.sparkContext.defaultParallelism, 1)
-    val keyed = df.select(col(groupCol).as("__g"), col(valueCol).cast("double").as("__v"))
-      .filter(col("__v").isNotNull)
-      .repartitionByRange(parts, col("__g"), col("__v"))
-      .sortWithinPartitions("__g", "__v")
-      .rdd.map(r => (r.get(0), r.getDouble(1)))
-
-    // pass 1: ordered per-partition group run-lengths (groups are
-    // contiguous under the range partitioning)
-    val runs: Array[(Int, Seq[(Any, Long)])] = keyed.mapPartitionsWithIndex { (i, it) =>
+    // pass 1 (PrefixSum.orderedScan): ordered per-partition group
+    // run-lengths (groups are contiguous under the range partitioning)
+    val (sorted, runs) = PrefixSum.orderedScan(
+      df.select(col(groupCol).as("__g"), col(valueCol).cast("double").as("__v"))
+        .filter(col("__v").isNotNull),
+      Seq(col("__g"), col("__v"))) { it =>
       val buf = collection.mutable.ArrayBuffer.empty[(Any, Long)]
       var cur: Any = null
       var n = 0L
       var has = false
-      it.foreach { case (g, _) =>
+      it.foreach { r =>
+        val g = r.get(0)
         if (has && g == cur) n += 1
         else {
           if (has) buf += ((cur, n))
@@ -60,24 +57,22 @@ object DistributedPercentiles {
         }
       }
       if (has) buf += ((cur, n))
-      Iterator((i, buf.toSeq))
-    }.collect().sortBy(_._1)
+      buf.toSeq
+    }
 
     // per-group totals + the rank offset of each (partition, group)
     val totals = collection.mutable.LinkedHashMap.empty[Any, Long]
     val offsets = collection.mutable.HashMap.empty[(Int, Any), Long]
-    runs.foreach { case (pi, rs) =>
+    runs.zipWithIndex.foreach { case (rs, pi) =>
       rs.foreach { case (g, n) =>
         val sofar = totals.getOrElse(g, 0L)
         offsets((pi, g)) = sofar
         totals(g) = sofar + n
       }
     }
-    if (totals.isEmpty) {
-      val schema = StructType(df.schema(groupCol) +:
-        ps.map { case (name, _) => StructField(name, DoubleType) })
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    }
+    val schema = StructType(df.schema(groupCol) +:
+      ps.map { case (name, _) => StructField(name, DoubleType) })
+    if (totals.isEmpty) return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
     // ranks to fetch per group: floor and ceil of p·(n-1) per percentile
     val needed: Map[Any, Set[Long]] = totals.map { case (g, n) =>
@@ -90,17 +85,19 @@ object DistributedPercentiles {
     val offsetsB = spark.sparkContext.broadcast(offsets.toMap)
 
     // pass 2: only the boundary-rank rows come back
-    val picked: Map[(Any, Long), Double] = keyed.mapPartitionsWithIndex { (i, it) =>
+    val picked: Map[(Any, Long), Double] = sorted.mapPartitionsWithIndex { (i, it) =>
       val need = neededB.value
       val offs = offsetsB.value
       var cur: Any = null
       var rank = 0L
       var has = false
-      it.flatMap { case (g, v) =>
+      it.flatMap { row =>
+        val g = row.get(0)
         if (!has || g != cur) { cur = g; rank = offs((i, g)); has = true }
         val r = rank
         rank += 1
-        if (need.getOrElse(g, Set.empty).contains(r)) Some(((g, r), v)) else None
+        if (need.getOrElse(g, Set.empty).contains(r)) Some(((g, r), row.getDouble(1)))
+        else None
       }
     }.collect().toMap
 
@@ -116,8 +113,6 @@ object DistributedPercentiles {
       }
       Row.fromSeq(g +: vals)
     }
-    val schema = StructType(df.schema(groupCol) +:
-      ps.map { case (name, _) => StructField(name, DoubleType) })
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
   }
 }

@@ -1,12 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import scala.reflect.ClassTag
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Distributed global prefix sum — the scan primitive behind sequence
   * packing, offset assignment, and file-splitting in a training-data
-  * pipeline.
+  * pipeline — and the home of the two-phase ordered scan
+  * ([[orderedScan]]) that every global order statistic in graft is
+  * built on.
   *
   * The naive Spark form, `sum(x) OVER (ORDER BY k ROWS UNBOUNDED
   * PRECEDING)`, is an unpartitioned window: every row funnels through
@@ -19,9 +25,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *      per-partition starting offsets (O(partitions) driver memory);
   *   3. pass 2: map-side `offset + local running sum` per row.
   *
-  * Both passes MUST reuse the one shuffled lineage (same rule as
-  * PagedReader.pageBoundsDistributed): rebuilding the pipeline per pass
-  * could sample different range bounds.
+  * [[orderedScan]] owns steps 1 and 2's per-partition pass; its callers
+  * are the five scans here (`runningTotal`, `runningTotals`,
+  * `runningMaxExclusive`, `withRankAndRunningTotal`, `withGlobalRank`),
+  * `DistributedPercentiles.exact`, `PagedReader.pageBoundsDistributed`
+  * and the page-file writer `queries.Feeder.pagedFixtureDir`.
   *
   * `orderCol` must be unique — with duplicate keys the relative order
   * of equal keys (and so their running totals) is partition-placement
@@ -29,31 +37,35 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   */
 object PrefixSum {
 
+  /** The two-phase ordered scan's shared steps: range-partition `df` on
+    * `orderCols` into `defaultParallelism` (at least 1) partitions, sort
+    * within each, and run pass 1 — `summarize` once per partition, its
+    * results in partition-index order (one element per partition, and
+    * `collect` keeps partition order). Returns the sorted rows with the
+    * summaries; the caller folds the summaries into per-partition
+    * offsets and runs its pass 2 over the RETURNED RDD.
+    *
+    * Both passes MUST run over that one RDD: cross-pass consistency
+    * comes from reusing its shuffle output (lineage reuse), NOT from any
+    * seed property of RangePartitioner — rebuilding the pipeline for
+    * pass 2 could sample different range bounds and corrupt the offsets.
+    * Only the range-bound sample and the shuffle's map stage execute
+    * `df` (both run here, when the sorted RDD is built under AQE); the
+    * two passes read the shuffle output. `OrderedScanJobsSpec` pins each
+    * caller's job count. */
+  private[graft] def orderedScan[S: ClassTag](df: DataFrame, orderCols: Seq[Column])(
+      summarize: Iterator[Row] => S): (RDD[Row], Array[S]) = {
+    val parts = math.max(df.sparkSession.sparkContext.defaultParallelism, 1)
+    val sorted = df.repartitionByRange(parts, orderCols: _*)
+      .sortWithinPartitions(orderCols: _*).rdd
+    (sorted, sorted.mapPartitions(it => Iterator(summarize(it))).collect())
+  }
+
   /** @return (orderCol, valueCol as long, running_total) where
     *         running_total is the INCLUSIVE prefix sum in `orderCol`
     *         order; null values count as 0 */
-  def runningTotal(df: DataFrame, orderCol: String, valueCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val parts = math.max(spark.sparkContext.defaultParallelism, 1)
-    val keyed = df.select(col(orderCol).as("__k"),
-        coalesce(col(valueCol).cast("long"), lit(0L)).as("__x"))
-      .repartitionByRange(parts, col("__k"))
-      .sortWithinPartitions("__k")
-      .rdd.map(r => (r.get(0), r.getLong(1)))
-    val partSums = keyed
-      .mapPartitionsWithIndex((i, it) => Iterator((i, it.map(_._2).sum)))
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = partSums.scanLeft(0L)(_ + _)
-    val rows = keyed.mapPartitionsWithIndex { (i, it) =>
-      var run = offsets(i)
-      it.map { case (k, x) => run += x; Row(k, x, run) }
-    }
-    val schema = StructType(Seq(
-      df.schema(orderCol).copy(name = orderCol),
-      StructField(valueCol, LongType, nullable = false),
-      StructField("running_total", LongType, nullable = false)))
-    spark.createDataFrame(rows, schema)
-  }
+  def runningTotal(df: DataFrame, orderCol: String, valueCol: String): DataFrame =
+    totals(df, orderCol, Seq(valueCol), Seq("running_total"))
 
   /** Multi-column sibling of [[runningTotal]]: N inclusive prefix sums
     * over the SAME order key in ONE two-phase scan — one range shuffle
@@ -68,43 +80,49 @@ object PrefixSum {
   def runningTotals(df: DataFrame, orderCol: String,
                     valueCols: Seq[String]): DataFrame = {
     require(valueCols.nonEmpty)
-    val spark = df.sparkSession
-    val parts = math.max(spark.sparkContext.defaultParallelism, 1)
+    totals(df, orderCol, valueCols, valueCols.map("r_" + _))
+  }
+
+  /** [[runningTotals]] with the prefix-sum columns named `outCols`; the
+    * running state is one primitive array per partition. */
+  private def totals(df: DataFrame, orderCol: String, valueCols: Seq[String],
+                     outCols: Seq[String]): DataFrame = {
     val n = valueCols.length
-    val keyed = df.select(col(orderCol).as("__k") +:
-        valueCols.map(c => coalesce(col(c).cast("long"), lit(0L)).as(c)): _*)
-      .repartitionByRange(parts, col("__k"))
-      .sortWithinPartitions("__k")
-      .rdd.map { r =>
-        val xs = new Array[Long](n)
-        var i = 0
-        while (i < n) { xs(i) = r.getLong(i + 1); i += 1 }
-        (r.get(0), xs)
-      }
-    val partSums = keyed.mapPartitionsWithIndex { (i, it) =>
+    val (sorted, partSums) = orderedScan(
+      df.select(col(orderCol).as("__k") +:
+        valueCols.map(c => coalesce(col(c).cast("long"), lit(0L)).as(c)): _*),
+      Seq(col("__k"))) { it =>
       val acc = new Array[Long](n)
-      it.foreach { kv =>
+      it.foreach { r =>
         var j = 0
-        while (j < n) { acc(j) += kv._2(j); j += 1 }
+        while (j < n) { acc(j) += r.getLong(j + 1); j += 1 }
       }
-      Iterator((i, acc))
-    }.collect().sortBy(_._1).map(_._2)
+      acc
+    }
     val offsets = partSums.scanLeft(new Array[Long](n)) { (a, b) =>
       Array.tabulate(n)(j => a(j) + b(j))
     }
-    val rows = keyed.mapPartitionsWithIndex { (i, it) =>
+    val rows = sorted.mapPartitionsWithIndex { (i, it) =>
       val run = offsets(i).clone()
-      it.map { case (k, xs) =>
+      it.map { r =>
+        val out = new Array[Any](1 + 2 * n)
+        out(0) = r.get(0)
         var j = 0
-        while (j < n) { run(j) += xs(j); j += 1 }
-        Row.fromSeq(k +: (xs ++ run).toSeq)
+        while (j < n) {
+          val x = r.getLong(j + 1)
+          run(j) += x
+          out(1 + j) = x
+          out(1 + n + j) = run(j)
+          j += 1
+        }
+        new GenericRow(out): Row
       }
     }
     val schema = StructType(
       df.schema(orderCol).copy(name = orderCol) +:
         (valueCols.map(c => StructField(c, LongType, nullable = false)) ++
-          valueCols.map(c => StructField(s"r_$c", LongType, nullable = false))))
-    spark.createDataFrame(rows, schema)
+          outCols.map(c => StructField(c, LongType, nullable = false))))
+    df.sparkSession.createDataFrame(rows, schema)
   }
 
   /** Distributed EXCLUSIVE prefix max — "the largest value seen before
@@ -116,24 +134,18 @@ object PrefixSum {
     * row) is appended. `valueCol` must be LONG and non-null. */
   def runningMaxExclusive(df: DataFrame, orderCol: String, valueCol: String,
                           outCol: String = "prev_max"): DataFrame = {
-    val spark = df.sparkSession
-    val parts = math.max(spark.sparkContext.defaultParallelism, 1)
     val vi = df.schema.fieldIndex(valueCol)
     require(df.schema(vi).dataType == LongType, s"$valueCol must be LONG")
-    // both passes MUST reuse this one shuffled lineage (same rule as
-    // runningTotal): rebuilding could sample different range bounds
-    val keyed = df.repartitionByRange(parts, col(orderCol))
-      .sortWithinPartitions(orderCol).rdd
-    val partMax: Array[Option[Long]] = keyed.mapPartitionsWithIndex { (i, it) =>
+    val (sorted, partMax) = orderedScan(df, Seq(col(orderCol))) { it =>
       var m = Long.MinValue; var any = false
       it.foreach { r => val v = r.getLong(vi); if (v > m) m = v; any = true }
-      Iterator((i, if (any) Some(m) else None))
-    }.collect().sortBy(_._1).map(_._2)
+      if (any) Some(m) else None
+    }
     val offsets: Array[Option[Long]] =
       partMax.scanLeft(None: Option[Long]) { (acc, m) =>
         (acc ++ m).reduceOption(_ max _)
-      }.toArray
-    val rows = keyed.mapPartitionsWithIndex { (i, it) =>
+      }
+    val rows = sorted.mapPartitionsWithIndex { (i, it) =>
       var cur = offsets(i)
       it.map { r =>
         val out = Row.fromSeq(r.toSeq :+ cur.map(Long.box).orNull)
@@ -142,7 +154,7 @@ object PrefixSum {
         out
       }
     }
-    spark.createDataFrame(rows,
+    df.sparkSession.createDataFrame(rows,
       StructType(df.schema.fields :+ StructField(outCol, LongType, nullable = true)))
   }
 
@@ -158,36 +170,9 @@ object PrefixSum {
                               valueCol: String,
                               rankCol: String = "rank",
                               totalCol: String = "running_total"): DataFrame = {
-    require(orderCols.nonEmpty)
-    val spark = df.sparkSession
-    val parts = math.max(spark.sparkContext.defaultParallelism, 1)
     val vi = df.schema.fieldIndex(valueCol)
     require(df.schema(vi).dataType == LongType, s"$valueCol must be LONG")
-    // both passes MUST reuse this one shuffled lineage (same rule as
-    // runningTotal): rebuilding could sample different range bounds
-    val keyed = df.repartitionByRange(parts, orderCols.map(col): _*)
-      .sortWithinPartitions(orderCols.map(col): _*).rdd
-    val partAgg = keyed.mapPartitionsWithIndex { (i, it) =>
-      var n = 0L; var s = 0L
-      it.foreach { r => n += 1; if (!r.isNullAt(vi)) s += r.getLong(vi) }
-      Iterator((i, (n, s)))
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = partAgg.scanLeft((0L, 0L)) { case ((n0, s0), (n, s)) =>
-      (n0 + n, s0 + s)
-    }
-    val rows = keyed.mapPartitionsWithIndex { (i, it) =>
-      var r = offsets(i)._1
-      var run = offsets(i)._2
-      it.map { row =>
-        r += 1
-        if (!row.isNullAt(vi)) run += row.getLong(vi)
-        Row.fromSeq(row.toSeq :+ r :+ run)
-      }
-    }
-    spark.createDataFrame(rows,
-      StructType(df.schema.fields :+
-        StructField(rankCol, LongType, nullable = false) :+
-        StructField(totalCol, LongType, nullable = false)))
+    ranked(df, orderCols, rankCol, Some((vi, totalCol)))
   }
 
   /** Sequence packing: assign each document to a fixed-token-budget bin
@@ -207,33 +192,47 @@ object PrefixSum {
 
   /** Distributed GLOBAL RANK (1..n) in `orderCols` order — the dense
     * row-number primitive behind equi-depth histograms, distributed
-    * ntile, and deterministic pagination. Same two-phase scan as
-    * `runningTotal`: range-partition on the order key (global order
-    * without a global sort), per-partition row counts combine on the
-    * driver into O(partitions) starting offsets, then a map-side local
-    * counter. Never the single-reducer `row_number() OVER (ORDER BY …)`
-    * window. All input columns are preserved; `outCol` (long, 1-based)
-    * is appended. The composite `orderCols` must be unique per row —
-    * with duplicates the rank of equal keys is partition-placement
-    * dependent (same contract as `runningTotal`). */
+    * ntile, and deterministic pagination: [[withRankAndRunningTotal]]
+    * without the running total. Never the single-reducer
+    * `row_number() OVER (ORDER BY …)` window. All input columns are
+    * preserved; `outCol` (long, 1-based) is appended. The composite
+    * `orderCols` must be unique per row — with duplicates the rank of
+    * equal keys is partition-placement dependent (same contract as
+    * `runningTotal`). */
   def withGlobalRank(df: DataFrame, orderCols: Seq[String],
-                     outCol: String = "rank"): DataFrame = {
+                     outCol: String = "rank"): DataFrame =
+    ranked(df, orderCols, outCol, None)
+
+  /** Every input column, then the 1-based rank in `orderCols` order as
+    * `rankCol`, then (given `total` = (index of a LONG column, output
+    * name)) that column's inclusive running total; the running state is
+    * two primitive longs per partition. */
+  private def ranked(df: DataFrame, orderCols: Seq[String], rankCol: String,
+                     total: Option[(Int, String)]): DataFrame = {
     require(orderCols.nonEmpty)
-    val spark = df.sparkSession
-    val parts = math.max(spark.sparkContext.defaultParallelism, 1)
-    // both passes MUST reuse this one shuffled lineage (same rule as
-    // runningTotal): rebuilding could sample different range bounds
-    val keyed = df.repartitionByRange(parts, orderCols.map(col): _*)
-      .sortWithinPartitions(orderCols.map(col): _*).rdd
-    val partCounts = keyed
-      .mapPartitionsWithIndex((i, it) => Iterator((i, it.size.toLong)))
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = partCounts.scanLeft(0L)(_ + _)
-    val rows = keyed.mapPartitionsWithIndex { (i, it) =>
-      var r = offsets(i)
-      it.map { row => r += 1; Row.fromSeq(row.toSeq :+ r) }
+    val vi = total.fold(-1)(_._1)
+    val (sorted, partAgg) = orderedScan(df, orderCols.map(col)) { it =>
+      var n = 0L; var s = 0L
+      it.foreach { r => n += 1; if (vi >= 0 && !r.isNullAt(vi)) s += r.getLong(vi) }
+      (n, s)
     }
-    spark.createDataFrame(rows,
-      StructType(df.schema.fields :+ StructField(outCol, LongType, nullable = false)))
+    val offsets = partAgg.scanLeft((0L, 0L)) { case ((n0, s0), (n, s)) =>
+      (n0 + n, s0 + s)
+    }
+    val rows = sorted.mapPartitionsWithIndex { (i, it) =>
+      var r = offsets(i)._1
+      var run = offsets(i)._2
+      it.map { row =>
+        r += 1
+        if (vi < 0) Row.fromSeq(row.toSeq :+ r)
+        else {
+          if (!row.isNullAt(vi)) run += row.getLong(vi)
+          Row.fromSeq(row.toSeq :+ r :+ run)
+        }
+      }
+    }
+    val appended = StructField(rankCol, LongType, nullable = false) +:
+      total.map(t => StructField(t._2, LongType, nullable = false)).toSeq
+    df.sparkSession.createDataFrame(rows, StructType(df.schema.fields ++ appended))
   }
 }

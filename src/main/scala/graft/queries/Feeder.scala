@@ -820,10 +820,10 @@ object Feeder extends QueryFamily("feeder") {
     * HTTP endpoint (zero egress): orders serialized as page-NNNNN.tsv
     * files of 2500 rows in orderkey order — fixture IO, excluded from
     * the bench like the other fabrication queries. The page files are
-    * written DISTRIBUTED: range-partition on the key, per-partition
-    * counts → global offsets
-    * (O(partitions) at the driver, the PrefixSum/pageBoundsDistributed
-    * device), page = rank div 2500, then one writer task per page via
+    * written DISTRIBUTED by the two-phase ordered scan
+    * (`PrefixSum.orderedScan`: range-partition on the key, per-partition
+    * counts → global offsets, O(partitions) at the driver), page = rank
+    * div 2500, then one writer task per page via
     * repartitionAndSortWithinPartitions — the driver never holds the
     * table (the r9 fixture writer collect()ed all of orders, which would
     * OOM the gate itself at sf100). Executor-local writes feeding the
@@ -848,19 +848,11 @@ object Feeder extends QueryFamily("feeder") {
       Option(pageDir.listFiles()).getOrElse(Array.empty)
         .filter(_.getName.endsWith(".tsv")).foreach(_.delete())
       val pageSize = 2500L
-      val parts = math.max(s.sparkContext.defaultParallelism, 1)
-      val sorted = t(s, dir, "orders")
+      // pass 1 (PrefixSum.orderedScan): per-partition counts → offsets
+      val (sorted, counts) = PrefixSum.orderedScan(t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-          (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-        .repartitionByRange(parts, col("o_orderkey"))
-        .sortWithinPartitions("o_orderkey")
-        .rdd.map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
-      // pass 1: per-partition counts → offsets. Pass 2 MUST reuse this
-      // same RDD lineage (shuffle-output reuse keeps the range bounds
-      // identical across passes — see PagedReader.pageBoundsDistributed).
-      val counts = sorted
-        .mapPartitionsWithIndex((i, it) => Iterator((i, it.size.toLong)))
-        .collect().sortBy(_._1).map(_._2)
+          (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long").as("cents")),
+        Seq(col("o_orderkey")))(_.size.toLong)
       val offsets = counts.scanLeft(0L)(_ + _)
       val nPages = math.max(((offsets.last + pageSize - 1) / pageSize).toInt, 1)
       val pageDirPath = pageDir.getAbsolutePath
@@ -869,7 +861,11 @@ object Feeder extends QueryFamily("feeder") {
       // streams exactly one page file, already in orderkey order
       sorted.mapPartitionsWithIndex { (i, it) =>
           var rank = offsets(i)
-          it.map { row => val k = (rank / pageSize, rank); rank += 1; (k, row) }
+          it.map { r =>
+            val k = (rank / pageSize, rank)
+            rank += 1
+            (k, (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
+          }
         }
         .repartitionAndSortWithinPartitions(new org.apache.spark.Partitioner {
           override def numPartitions: Int = nPages

@@ -1742,10 +1742,9 @@ object Text extends QueryFamily("text") {
         TextAnalysis.tokenCount(lower(col("text"))).cast("long").as("ntok"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // persisted: the prefix scan underneath packByBudget executes its
-    // input three times (range-bound sampling, per-partition totals,
-    // the offset pass) — without the persist each pass re-runs the
-    // dedup aggregation off the shuffle files, and the funnel's bench
-    // time triples vs the sum of its stages
+    // input twice, in the range-bound sample and the shuffle's map stage
+    // (PrefixSum.orderedScan) — without the persist each of them re-runs
+    // the dedup aggregation off the shuffle files
     val unique = accepted.groupBy("fp")
       .agg(min(struct(col("doc_id"), col("ntok"))).as("w"))
       .select(col("w.doc_id").as("doc_id"), col("w.ntok").as("ntok"))
@@ -1883,9 +1882,10 @@ object Text extends QueryFamily("text") {
     * window; docs with <2 tokens score no bigrams and are out of frame
     * on both sides. O(3) output. */
   private def perplexityBucket(s: SparkSession, dir: String): DataFrame = {
-    // persisted: the rank scan executes its input three times (range
-    // sampling, counts, the offset pass) — without this the whole
-    // bigram-LM pipeline re-runs per pass (the q_corpus_build lesson)
+    // persisted: the rank scan executes its input twice, in the
+    // range-bound sample and the shuffle's map stage
+    // (PrefixSum.orderedScan) — without this the whole bigram-LM
+    // pipeline re-runs for each (the q_corpus_build lesson)
     val ds = bigramDocScores(s, dir)
       .select(col("doc_id"), expr("(-__s) div n_bigrams").as("__ppb"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

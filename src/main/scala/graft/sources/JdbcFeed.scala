@@ -112,7 +112,9 @@ object JdbcFeed {
 
   /** Partition the prepared batch so `numWriters` tasks append
     * concurrently; pair with [[appendOptions]] (which carries the JDBC
-    * batch size) to `.save()` against a live database. */
+    * batch size) to `.save()` against a live database. The one place a
+    * JDBC write picks its writer partitioning: [[append]] and
+    * [[mergeKeyed]]'s staging load both go through it. */
   def prepareAppend(batch: DataFrame, numWriters: Int): DataFrame =
     batch.repartition(numWriters)
 
@@ -170,8 +172,7 @@ object JdbcFeed {
     // concurrent merges into the same target never share a stage
     val staging = s"${table}_stage_${java.lang.Long.toHexString(
       java.util.concurrent.ThreadLocalRandom.current().nextLong()).take(8)}"
-    val writer = upserts.select((key +: valueCols).map(col): _*)
-      .repartition(numWriters)
+    val writer = prepareAppend(upserts.select((key +: valueCols).map(col): _*), numWriters)
       .write.format("jdbc")
       .options(appendOptions(url, staging, batchSize))
       .mode(SaveMode.Overwrite)

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.PrefixSum
+
 /** Paginated ingestion.
   *
   * The reference crawls a REST API page by page on a single thread with
@@ -49,33 +51,24 @@ object PagedReader {
     }
   }
 
-  /** Per-page (lo, hi) bounds WITHOUT collecting P·S keys: range-
-    * partition the key column, sort within partitions, then (pass 1)
-    * count per partition and (pass 2) extract ONLY the boundary-rank
-    * keys. The driver holds O(numPages + partitions) values however many
-    * pages are requested — `pageBounds`'s collected window would be the
-    * whole key column when paging an entire table. The unique-key
-    * contract is enforced loudly here too: adjacent duplicates are
-    * detected executor-side within partitions and driver-side across
-    * partition edges, covering every adjacent pair in the paged window.
+  /** Per-page (lo, hi) bounds WITHOUT collecting P·S keys: the
+    * two-phase ordered scan over the key column (`PrefixSum.orderedScan`)
+    * counts per partition (pass 1), then pass 2 extracts ONLY the
+    * boundary-rank keys. The driver holds O(numPages + partitions)
+    * values however many pages are requested — `pageBounds`'s collected
+    * window would be the whole key column when paging an entire table.
+    * The unique-key contract is enforced loudly here too: adjacent
+    * duplicates are detected executor-side within partitions and
+    * driver-side across partition edges, covering every adjacent pair in
+    * the paged window.
     *
     * Two passes = the key-column sort runs twice; callers paging a huge
     * table repeatedly should persist `df`'s key projection first. */
   def pageBoundsDistributed(df: DataFrame, orderCol: String, pageSize: Int,
                             numPages: Int): Seq[(Any, Any)] = {
-    val keys = df.select(col(orderCol).as("__k"))
-      .repartitionByRange(math.max(df.sparkSession.sparkContext.defaultParallelism, 1),
-        col("__k"))
-      .sortWithinPartitions("__k")
-      .rdd.map(_.get(0))
-    // pass 1: per-partition counts → global offsets. Both passes MUST
-    // run over this ONE `keys` RDD: cross-pass consistency comes from
-    // reusing the same shuffle output (lineage reuse), NOT from any
-    // seed property of RangePartitioner — rebuilding the pipeline per
-    // pass could sample different range bounds and corrupt the offsets.
-    val counts = keys
-      .mapPartitionsWithIndex((i, it) => Iterator((i, it.size.toLong)))
-      .collect().sortBy(_._1).map(_._2)
+    // pass 1 (PrefixSum.orderedScan): per-partition counts → global offsets
+    val (keys, counts) = PrefixSum.orderedScan(df.select(col(orderCol).as("__k")),
+      Seq(col("__k")))(_.size.toLong)
     val offsets = counts.scanLeft(0L)(_ + _)
     val n = math.min(offsets.last, pageSize.toLong * numPages)
     if (n == 0) return Seq.empty
@@ -96,7 +89,7 @@ object PagedReader {
         var last: Any = null
         val picked = collection.mutable.ArrayBuffer.empty[(Long, Any)]
         while (it.hasNext && rank < n) {
-          val k = it.next()
+          val k = it.next().get(0)
           if (!seen) { first = k; seen = true }
           else if (java.util.Objects.equals(prev, k)) dup = true
           if (needed(rank)) picked += ((rank, k))
