@@ -111,12 +111,18 @@ object Bench {
     // per-rep GC on, and the r14 A/B isolated it as the cause. At sf0.1
     // the whole run's shuffle files fit the disk, so it buys nothing.
     val repGc = sys.env.getOrElse("SPARK_GRAFT_REP_GC", "0") == "1"
+    // per key, the classes each timed rep compiled (same order as its
+    // raws): a warm codegen cache shows as 0 on later reps
+    var compiles = Map.empty[String, Vector[Long]]
     // One rep of `name`: build start → noop-sink end, on a live session;
     // the query's own failure comes back as Left.
     def timedRep(name: String): Either[Throwable, Double] = {
       val r = runner.run(name)(QueryRunner.noop)
       if (repGc) System.gc()
-      r.result.map(_ => r.build_s + r.use_s)
+      r.result.map { _ =>
+        compiles = compiles.updated(name, compiles.getOrElse(name, Vector.empty) :+ r.compiles)
+        r.build_s + r.use_s
+      }
     }
     var times = Vector.empty[(String, Double)]
     var raws = Vector.empty[(String, Seq[Double])]
@@ -267,14 +273,15 @@ object Bench {
       if (l10.length <= 1800) l10 else summaryLine(3, 1)
     }
     // the on-disk record is genuinely FULL: full-precision doubles
-    // (Double.toString is locale-independent), per-rep raws, and
-    // untruncated error messages — it survives even if the driver's
-    // stdout capture truncates
+    // (Double.toString is locale-independent), per-rep raws and compile
+    // counts, and untruncated error messages — it survives even if the
+    // driver's stdout capture truncates
     try {
       val fq = times.map { case (k, v) => s"${jsonString(k)}:$v" }.mkString("{", ",", "}")
       val fr = raws.map { case (k, v) => s"${jsonString(k)}:${v.mkString("[", ",", "]")}" }.mkString("{", ",", "}")
+      val fc = raws.map { case (k, _) => s"${jsonString(k)}:${compiles(k).mkString("[", ",", "]")}" }.mkString("{", ",", "}")
       val fe = errs.map { case (k, v) => s"${jsonString(k)}:${jsonString(v)}" }.mkString("{", ",", "}")
-      val full = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$fq,"queries_reps":$fr,"families":$fams,"err":$fe,"sf":${jsonString(sfDir)},"psi_avg300_start":$psiStart,"psi_avg300_end":$psiEnd,"rep_inversions":$inverted,"tail_retimed":${tailSet.size},"tail_improved":$tailImproved,"psi_noisy":$noisy,"rep_gc":$repGc,"revived":${runner.rebuilds}}"""
+      val full = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$fq,"queries_reps":$fr,"queries_compiles":$fc,"families":$fams,"err":$fe,"sf":${jsonString(sfDir)},"psi_avg300_start":$psiStart,"psi_avg300_end":$psiEnd,"rep_inversions":$inverted,"tail_retimed":${tailSet.size},"tail_improved":$tailImproved,"psi_noisy":$noisy,"rep_gc":$repGc,"revived":${runner.rebuilds}}"""
       java.nio.file.Files.write(java.nio.file.Paths.get("target/bench_full.json"),
         full.getBytes("UTF-8"))
     } catch {

@@ -31,12 +31,20 @@ object GraftSession {
     *     per-key state, so hash aggregation stays cheap at millions of
     *     keys, while the default fallback turns into a full sort of the
     *     pre-aggregation stream (the sf100 q_knn_graph spill killer);
+    *   - codegen cache raised 100 → 1024 classes: a `registry_hot` pass
+    *     (q_hyperanf, q_canonical_pick, q_corpus_build, q_gearys_c)
+    *     generates about 230 distinct classes, so at 100 the LRU cache
+    *     evicted each before its next use and every pass recompiled ~227
+    *     of them with Janino; `feeder`'s 43 fit either size. Spark reads
+    *     the size once per JVM, when `CodeGenerator` is first used, so it
+    *     must come from this builder — a later `conf.set` has no effect;
     *   - no UI (headless runs).
     */
   val requiredConfigs: Map[String, String] = Map(
     "spark.sql.extensions" -> "graft.functions.GraftExtensions",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "4194304",
+    "spark.sql.codegen.cache.maxEntries" -> "1024",
     "spark.ui.enabled" -> "false")
 
   /** Local core count for a main's session: `SPARK_GRAFT_CPUS`, else

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one path a registry query runs through: build → use → release.
@@ -14,7 +15,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   2. the persisted RDD ids are snapshotted;
   *   3. `build_s` times the registry builder, which includes the driver
   *      jobs a builder runs before its plan exists;
-  *   4. `use_s` times the caller's `use`;
+  *   4. `use_s` times the caller's `use`, and `compiles` counts the
+  *      classes Janino compiled across build and use (codegen-cache
+  *      misses: a warm cache compiles none);
   *   5. whatever the query cached is released AFTER `use` (queries
   *      persist intermediates they read twice and cannot unpersist them,
   *      because they return lazy plans): the session cache is cleared and
@@ -48,13 +51,15 @@ final class QueryRunner(sfDir: String, newSession: () => SparkSession,
       rebuilt += 1
     }
     val before = session.sparkContext.getPersistentRDDs.keySet
+    val c0 = QueryRunner.compiled
     val t0 = System.nanoTime()
     val built = attempt(queries(key)(session, sfDir))
     val t1 = System.nanoTime()
     val result = built.flatMap(df => attempt(use(df)))
     val t2 = System.nanoTime()
+    val compiles = QueryRunner.compiled - c0
     attempt(release(before))
-    QueryRunner.Run(key, (t1 - t0) / 1e9, (t2 - t1) / 1e9, result)
+    QueryRunner.Run(key, (t1 - t0) / 1e9, (t2 - t1) / 1e9, compiles, result)
   }
 
   // Throwable, not NonFatal: a query's OutOfMemoryError must not end the
@@ -72,10 +77,15 @@ final class QueryRunner(sfDir: String, newSession: () => SparkSession,
 }
 
 object QueryRunner {
-  /** One key's run: seconds in the builder and in `use`, and `use`'s
-    * result or the failure of either. */
+  /** One key's run: seconds in the builder and in `use`, the generated
+    * classes compiled in both, and `use`'s result or the failure of
+    * either. */
   final case class Run[T](key: String, build_s: Double, use_s: Double,
-                          result: Either[Throwable, T])
+                          compiles: Long, result: Either[Throwable, T])
+
+  // classes compiled so far in this JVM; the counter is JVM-wide, so a
+  // run's count includes whatever another thread compiled meanwhile
+  private def compiled: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Bench's action: runs the whole plan and discards its rows. */
   val noop: DataFrame => Unit = _.write.mode("overwrite").format("noop").save()

@@ -27,7 +27,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * allocation + boxing per row where the fallback's split stage
   * evaluates the same kernel once per row anyway, and the extra
   * generated classes pressure the JIT code cache session-wide. See
-  * OPTIMIZATION_r15.md "KernelCodegen A/B".)
+  * OPTIMIZATION_r15.md "KernelCodegen A/B". That A/B ran with Spark's
+  * 100-entry codegen cache, which a full bench thrashes, so its time
+  * delta includes Janino recompiles that GraftSession's 1024-entry
+  * cache now avoids; the per-row boxing finding stands as measured.)
   */
 object NativeText {
 

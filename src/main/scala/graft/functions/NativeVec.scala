@@ -16,7 +16,9 @@ import org.apache.spark.sql.types._
   *
   * (CodegenFallback is a measured decision — see the NativeText header:
   * the r15 kernel-call doGenCode experiment regressed the full bench
-  * 366 → 448 s and was reverted.)
+  * 366 → 448 s and was reverted. It ran with the 100-entry codegen
+  * cache, which a full bench thrashes; the per-row boxing finding
+  * stands.)
   */
 object NativeVec {
 

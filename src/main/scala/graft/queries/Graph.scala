@@ -822,8 +822,8 @@ object Graph extends QueryFamily("graph") {
         .groupBy("v")
         .agg(min(struct((col("c") * -1).as("nc"), col("lbl").as("lbl"))).as("__m"))
         .select(col("v"), col("__m.lbl").as("lbl"))
-        // lazy: plan truncation without an eager job per round — see
-        // hyperAnf
+        // eager=false: plan truncation without a count job per round;
+        // the round's shuffle stages still run at build — see hyperAnf
         .localCheckpoint(false)
     }
     lbl.groupBy(col("lbl").as("community"))
@@ -867,8 +867,8 @@ object Graph extends QueryFamily("graph") {
     val adj = e.select(col("ea").as("v"), col("eb").as("n"))
       .unionAll(e.select(col("eb").as("v"), col("ea").as("n")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // lazy checkpoints: plan truncation without an eager job per round
-    // — see hyperAnf
+    // eager=false checkpoints: plan truncation without a count job per
+    // round; each round's shuffle stages still run at build — see hyperAnf
     var visited = adj.agg(min("v").as("v")).select(col("v"), lit(0L).as("hop"))
       .localCheckpoint(false)
     var frontier = visited.select("v")
@@ -1086,13 +1086,16 @@ object Graph extends QueryFamily("graph") {
     // shuffles per round; `bottomk_distinct` (bounded sorted-set
     // state) caps in ONE aggregation, and the estimates read
     // size/last-element off the array instead of re-grouping rows.
-    // LAZY local checkpoints (eager=false): the plan still truncates to
-    // a leaf per round (the driver-OOM guard the checkpoint exists
-    // for), but materialization folds into the ONE final action instead
-    // of an eager driver job per round — the sf0.1 scaling block showed
-    // these loops job-count-bound (8-core ≈ 32-core), and each round's
-    // blocks are computed exactly once either way (checkpoint blocks
-    // cache on first touch; the estimates re-read them).
+    // Local checkpoints with eager=false: the plan still truncates to a
+    // leaf per round (the driver-OOM guard the checkpoint exists for),
+    // and no count job runs per round. They are NOT lazy under AQE:
+    // `Dataset.checkpoint` calls `execute()` on the adaptive plan, which
+    // runs every shuffle map stage of the round's plan while the query
+    // is built (the jobs a job log tags `localCheckpoint at Graph.scala`,
+    // counted in q_hyperanf's 14 `jobs_build`). Only the final stage is
+    // deferred to the action. Each round's blocks are computed once
+    // (checkpoint blocks cache on first touch; the estimates re-read
+    // them).
     var sk = nodes.select(col("v"), array(col("h")).as("hs"))
       .localCheckpoint(false)
     def estimate(hop: Int): DataFrame =

@@ -12,7 +12,8 @@ import graft.{GraftSession, QueryRunner, SparkEntry}
   *   Inspect dump <sfDir> [out]              EXPLAINS.md for every registry key
   *   Inspect plan <sfDir> <q_a,q_b> [mode]   plans of the named queries
   *   Inspect executed <sfDir> <q_a,q_b>      post-AQE plans after a run
-  *   Inspect time <sfDir> <q_a,q_b> [reps]   build vs noop-write seconds
+  *   Inspect time <sfDir> <q_a,q_b> [reps]   build vs noop-write seconds,
+  *                                           classes compiled per rep
   *
   * Each mode is a function of a live session (specs use the shared one);
   * `main` only parses arguments and owns a GraftSession-built session.
@@ -36,7 +37,8 @@ object Inspect {
         def stat(label: String, ts: Seq[Double]): String =
           f"$label min=${ts.min}%.2f raw=${ts.map(t => f"$t%.2f").mkString(",")}"
         spark => time(spark, dir, keys, reps).foreach { case (k, rs) =>
-          println(s"[time] $k ${stat("build", rs.map(_._1))} ${stat("action", rs.map(_._2))}")
+          println(s"[time] $k ${stat("build", rs.map(_._1))} ${stat("action", rs.map(_._2))}" +
+            s" compiles=${rs.map(_._3).mkString(",")}")
         }
       case _ =>
         System.err.println("usage: Inspect dump <sfDir> [out] | plan <sfDir> <keys> [mode]" +
@@ -106,17 +108,17 @@ object Inspect {
       qe.executedPlan.toString
     }
 
-  /** Per key, `reps` (build, action) second pairs after one warm-up,
-    * each rep starting from a released cache, as Bench's do. Build
-    * includes jobs the query runs while being built; action is Bench's
-    * `noop` write. */
+  /** Per key, `reps` (build seconds, action seconds, classes compiled)
+    * triples after one warm-up, each rep starting from a released cache,
+    * as Bench's do. Build includes jobs the query runs while being built;
+    * action is Bench's `noop` write. */
   def time(spark: SparkSession, sfDir: String, keys: Seq[String],
-           reps: Int): Seq[(String, Seq[(Double, Double)])] = {
+           reps: Int): Seq[(String, Seq[(Double, Double, Long)])] = {
     GraftSession.warmUp(spark, sfDir)
     val runner = new QueryRunner(sfDir, () => spark)
     keys.map(k => k -> (1 to reps).map { _ =>
       val r = runner.run(k)(QueryRunner.noop)
-      r.result.fold(throw _, _ => (r.build_s, r.use_s))
+      r.result.fold(throw _, _ => (r.build_s, r.use_s, r.compiles))
     })
   }
 

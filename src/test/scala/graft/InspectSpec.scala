@@ -62,8 +62,9 @@ class InspectSpec extends GraftSuite {
     assert(res.map(_._1) == keys)
     res.foreach { case (k, reps) =>
       assert(reps.size == 2, k)
-      reps.foreach { case (build, action) =>
+      reps.foreach { case (build, action, compiles) =>
         assert(build >= 0 && action > 0, s"$k build=$build action=$action")
+        assert(compiles >= 0, s"$k compiles=$compiles")
       }
     }
     assert(!spark.sparkContext.isStopped)
