@@ -18,13 +18,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   4. `use_s` times the caller's `use`, and `compiles` counts the
   *      classes Janino compiled across build and use (codegen-cache
   *      misses: a warm cache compiles none);
-  *   5. whatever the query cached is released AFTER `use` (queries
-  *      persist intermediates they read twice and cannot unpersist them,
-  *      because they return lazy plans): the session cache is cleared and
-  *      every RDD persisted since step 2 is unpersisted, so state never
-  *      carries into the next key, and a later rep never reuses an
-  *      earlier rep's cached intermediates (CacheManager matches by
-  *      canonicalized plan).
+  *   5. whatever the query cached is released AFTER `use` (a query
+  *      persists an intermediate only when two separate executions read
+  *      it, a driver action and the returned plan for one, and cannot
+  *      unpersist it because it returns a lazy plan): the session cache
+  *      is cleared and every RDD persisted since step 2 is unpersisted,
+  *      so state never carries into the next key, and a later rep never
+  *      reuses an earlier rep's cached intermediates (CacheManager
+  *      matches by canonicalized plan).
   *
   * `run` never throws and prints nothing; a failure comes back as Left
   * and each caller reports it under its own tag. A caller that owns no

@@ -40,10 +40,9 @@ object DistributedPercentiles {
     val spark = df.sparkSession
     // pass 1 (PrefixSum.orderedScan): ordered per-partition group
     // run-lengths (groups are contiguous under the range partitioning)
-    val (sorted, runs) = PrefixSum.orderedScan(
-      df.select(col(groupCol).as("__g"), col(valueCol).cast("double").as("__v"))
-        .filter(col("__v").isNotNull),
-      Seq(col("__g"), col("__v"))) { it =>
+    val v = col(valueCol).cast("double")
+    val (sorted, runs) = PrefixSum.orderedScan(df.filter(v.isNotNull),
+      Seq(col(groupCol), v), Seq(col(groupCol), v)) { it =>
       val buf = collection.mutable.ArrayBuffer.empty[(Any, Long)]
       var cur: Any = null
       var n = 0L

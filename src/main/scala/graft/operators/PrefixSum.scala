@@ -39,11 +39,17 @@ object PrefixSum {
 
   /** The two-phase ordered scan's shared steps: range-partition `df` on
     * `orderCols` into `defaultParallelism` (at least 1) partitions, sort
-    * within each, and run pass 1 — `summarize` once per partition, its
-    * results in partition-index order (one element per partition, and
-    * `collect` keeps partition order). Returns the sorted rows with the
+    * within each, select `project` (all of `df`'s columns when empty),
+    * and run pass 1 — `summarize` once per partition, its results in
+    * partition-index order (one element per partition, and `collect`
+    * keeps partition order). Returns the sorted rows with the
     * summaries; the caller folds the summaries into per-partition
     * offsets and runs its pass 2 over the RETURNED RDD.
+    *
+    * The range partitioning applies to `df` itself and the projection
+    * comes after the sort, so a caller's own `repartition` directly
+    * under `df` collapses into the range shuffle instead of running as
+    * a shuffle of its own (a projection between the two would keep it).
     *
     * Both passes MUST run over that one RDD: cross-pass consistency
     * comes from reusing its shuffle output (lineage reuse), NOT from any
@@ -53,11 +59,12 @@ object PrefixSum {
     * `df` (both run here, when the sorted RDD is built under AQE); the
     * two passes read the shuffle output. `OrderedScanJobsSpec` pins each
     * caller's job count. */
-  private[graft] def orderedScan[S: ClassTag](df: DataFrame, orderCols: Seq[Column])(
-      summarize: Iterator[Row] => S): (RDD[Row], Array[S]) = {
+  private[graft] def orderedScan[S: ClassTag](df: DataFrame, orderCols: Seq[Column],
+      project: Seq[Column] = Nil)(summarize: Iterator[Row] => S): (RDD[Row], Array[S]) = {
     val parts = math.max(df.sparkSession.sparkContext.defaultParallelism, 1)
-    val sorted = df.repartitionByRange(parts, orderCols: _*)
-      .sortWithinPartitions(orderCols: _*).rdd
+    val ordered = df.repartitionByRange(parts, orderCols: _*)
+      .sortWithinPartitions(orderCols: _*)
+    val sorted = (if (project.isEmpty) ordered else ordered.select(project: _*)).rdd
     (sorted, sorted.mapPartitions(it => Iterator(summarize(it))).collect())
   }
 
@@ -88,10 +95,8 @@ object PrefixSum {
   private def totals(df: DataFrame, orderCol: String, valueCols: Seq[String],
                      outCols: Seq[String]): DataFrame = {
     val n = valueCols.length
-    val (sorted, partSums) = orderedScan(
-      df.select(col(orderCol).as("__k") +:
-        valueCols.map(c => coalesce(col(c).cast("long"), lit(0L)).as(c)): _*),
-      Seq(col("__k"))) { it =>
+    val (sorted, partSums) = orderedScan(df, Seq(col(orderCol)),
+      col(orderCol) +: valueCols.map(c => coalesce(col(c).cast("long"), lit(0L)).as(c))) { it =>
       val acc = new Array[Long](n)
       it.foreach { r =>
         var j = 0

@@ -6,11 +6,16 @@ import org.apache.spark.sql.DataFrame
   * relation's optimizer statistics (for file sources: the scan's input
   * bytes) — the same signal Catalyst's broadcast decision reads.
   *
-  *   - SMALL (< 512 MB, every bench SF up to sf10): persist tables with
-  *     several consumers, and let AQE broadcast a verify join's slim
-  *     pair side. MinHashLSH's shingle table feeds 3 consumers;
-  *     recomputing it per consumer tripled the LSH family's sf0.1 cost
-  *     when r13 dropped the persist (the +50% regression in BENCH_r13).
+  *   - SMALL (< 512 MB, every bench SF up to sf10): persist a table
+  *     only when two separate executions read it (a driver action and
+  *     the returned plan, the two passes of `PrefixSum.orderedScan`,
+  *     loop rounds or checkpoints) or when it is a map-side subtree with
+  *     no exchange its consumers can share; within one plan Spark's
+  *     exchange reuse already runs a shared aggregate once. Let AQE
+  *     broadcast a verify join's slim pair side. MinHashLSH's shingle
+  *     table is such a map-side subtree with 3 consumers; recomputing it
+  *     per consumer tripled the LSH family's sf0.1 cost without the
+  *     persist (the +50% regression recorded in BENCH_r13.json).
   *   - LARGE (sf100+): do NOT persist, and build verify joins as
   *     SHUFFLE_HASH on the slim pair side. The shingle table (~8 KB of
   *     64-bit hashes per document, ~80 GB at sf100) is far past any

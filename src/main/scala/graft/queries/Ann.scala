@@ -1647,14 +1647,13 @@ object Ann extends QueryFamily("ann") {
           .as("__d"))
     // pre-partition on neighbor_id ONLY at corpus scale (the
     // ScalePolicy 512 MB stats rule): BOTH heavy joins below key
-    // the k·V edge table on neighbor_id, and at scale the cached-on-
-    // join-key table never moves — one exchange at cache build buys
-    // two at use. At bench SFs AQE broadcasts the O(V) kd/lrd sides,
+    // the k·V edge table on neighbor_id, and at scale every consumer
+    // reads the one repartition exchange — one exchange buys two at
+    // use. At bench SFs AQE broadcasts the O(V) kd/lrd sides,
     // so the edges never shuffled anyway and the extra exchange was
     // pure loss (REPS=5 A/B: 2.75 → 3.14 s unconditional at sf0.1).
     val bigCorpus = ScalePolicy.corpusScale(t(s, dir, "embeddings"))
     val edges = (if (bigCorpus) edges0.repartition(col("neighbor_id")) else edges0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val self = edges.groupBy("vec_id").agg(max(col("__d")).as("__kd"))
     val reach = edges
       .join(self.select(col("vec_id").as("neighbor_id"), col("__kd")),
@@ -1668,7 +1667,6 @@ object Ann extends QueryFamily("ann") {
       // engines
       .select(col("vec_id"), col("__k"),
         expr("(__k * 1000000000000) div greatest(__sr, 1)").as("__lrd"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     edges
       .join(lrd.select(col("vec_id").as("neighbor_id"),
         col("__lrd").as("__lo")), Seq("neighbor_id"))

@@ -50,13 +50,13 @@ object Graph extends QueryFamily("graph") {
   private def transitionMatrix(s: SparkSession, dir: String): DataFrame = {
     val ev = events(s, dir)
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    // persisted: O(types²) rows, read twice (totals + final join) — the
-    // alternative recomputes the full-table window per read
+    // O(types²) rows, read by the totals and the final join: both read
+    // the one aggregate exchange, so the window runs once
     val pairs = ev
       .withColumn("to_type", lead("event_type", 1).over(w))
       .filter(col("to_type").isNotNull)
       .groupBy(col("event_type").as("from_type"), col("to_type"))
-      .agg(count(lit(1)).as("n")).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("n"))
     val totals = pairs.groupBy("from_type").agg(sum("n").as("__tot"))
     pairs.join(broadcast(totals), Seq("from_type"))
       .select(col("from_type"), col("to_type"), col("n"),
@@ -318,11 +318,9 @@ object Graph extends QueryFamily("graph") {
 
   private def triangle(s: SparkSession, dir: String): DataFrame = {
     val edges = copurchaseEdges(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val deg = edges.select(col("ea").as("v"))
       .unionAll(edges.select(col("eb").as("v")))
       .groupBy("v").agg(count(lit(1)).as("deg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // direct each edge from the lower (deg, id) endpoint; carry the
     // destination's (deg, id) so the wedge join can order its two legs
     val dirEdges = edges
@@ -336,7 +334,6 @@ object Graph extends QueryFamily("graph") {
             col("da").as("ddeg"))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"),
         col("e.ddeg").as("ddeg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val wedges = dirEdges.as("e1")
       .join(dirEdges.as("e2"),
         col("e1.src") === col("e2.src") &&
@@ -391,7 +388,6 @@ object Graph extends QueryFamily("graph") {
     * both engines. */
   private def assortativity(s: SparkSession, dir: String): DataFrame = {
     val edges = copurchaseEdges(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val deg = edges.select(col("ea").as("v"))
       .unionAll(edges.select(col("eb").as("v")))
       .groupBy("v").agg(count(lit(1)).as("deg"))
@@ -526,7 +522,6 @@ object Graph extends QueryFamily("graph") {
     * degree-bounded by order size. */
   private def linkPredict(s: SparkSession, dir: String): DataFrame = {
     val e = copurchaseEdges(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val adj = e.select(col("ea").as("v"), col("eb").as("n"))
       .unionAll(e.select(col("eb").as("v"), col("ea").as("n")))
     adj.as("x")
@@ -568,11 +563,9 @@ object Graph extends QueryFamily("graph") {
     * the definition. */
   private def localClustering(s: SparkSession, dir: String): DataFrame = {
     val edges = copurchaseEdges(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val deg = edges.select(col("ea").as("v"))
       .unionAll(edges.select(col("eb").as("v")))
       .groupBy("v").agg(count(lit(1)).as("deg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val dirEdges = edges
       .join(deg.select(col("v").as("ea"), col("deg").as("da")), Seq("ea"))
       .join(deg.select(col("v").as("eb"), col("deg").as("db")), Seq("eb"))
@@ -583,7 +576,6 @@ object Graph extends QueryFamily("graph") {
             col("da").as("ddeg"))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"),
         col("e.ddeg").as("ddeg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tris = dirEdges.as("e1")
       .join(dirEdges.as("e2"),
         col("e1.src") === col("e2.src") &&
@@ -651,7 +643,6 @@ object Graph extends QueryFamily("graph") {
     * (38) arithmetic: 4m² passes BIGINT only below ~1.5e9 edges. */
   private def modularity(s: SparkSession, dir: String): DataFrame = {
     val edges = copurchaseEdges(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bm = t(s, dir, "part").select(col("p_partkey"), col("p_brand"))
     val deg = edges.select(col("ea").as("v"))
       .unionAll(edges.select(col("eb").as("v")))
@@ -710,7 +701,7 @@ object Graph extends QueryFamily("graph") {
     // ONE groupBy(pk) collect_set replaces the old distinct + two
     // downstream groupBys: collect_set dedups (pk, sk) exactly like the
     // dropped .distinct(), and the per-supplier part counts come from
-    // exploding the SAME cached per-part sets (each distinct (pk, sk)
+    // exploding the SAME per-part sets (each distinct (pk, sk)
     // appears exactly once across the sets — the explode IS the
     // distinct fact table). One shuffle of the raw 6-col projection
     // instead of two; the uncut sets keep the FULL Jaccard
@@ -719,7 +710,6 @@ object Graph extends QueryFamily("graph") {
     val sets = t(s, dir, "lineitem")
       .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"))
       .groupBy("pk").agg(sort_array(collect_set(col("sk"))).as("ss"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cnt = sets.select(explode(col("ss")).as("sk"))
       .groupBy("sk").agg(count(lit(1)).as("n"))
     val pairs = sets
@@ -762,9 +752,7 @@ object Graph extends QueryFamily("graph") {
     * #154 wedge bound real?). O(distinct degrees) histogram rows; the
     * CCDF prefix runs on that bounded histogram, not the vertex set. */
   private def degreeDist(s: SparkSession, dir: String): DataFrame = {
-    // persisted: one edges build feeds both endpoint projections
     val edges = copurchaseEdges(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val deg = edges.select(col("ea").as("v"))
       .unionAll(edges.select(col("eb").as("v")))
       .groupBy("v").agg(count(lit(1)).as("__d"))
@@ -927,7 +915,6 @@ object Graph extends QueryFamily("graph") {
     * documented SF gate. */
   private def moranI(s: SparkSession, dir: String): DataFrame = {
     val e = copurchaseEdges(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nodes = e.select(col("ea").as("v"))
       .unionAll(e.select(col("eb").as("v"))).distinct()
     val attr = nodes.join(
@@ -936,13 +923,11 @@ object Graph extends QueryFamily("graph") {
             (col("p_retailprice").cast("decimal(18,2)") * 100).cast("long")
               .as("cents")),
         Seq("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tot = attr.agg(count(lit(1)).as("__n"), sum("cents").as("__s"))
     val z = attr.crossJoin(broadcast(tot))
       .select(col("v"),
         (col("cents").cast("decimal(38,0)") * col("__n") - col("__s"))
           .as("z"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val den = z.agg(sum(col("z") * col("z")).as("__sz2"),
       count(lit(1)).as("__n"))
     val num = e.join(z.select(col("v").as("ea"), col("z").as("za")), Seq("ea"))
@@ -1000,11 +985,9 @@ object Graph extends QueryFamily("graph") {
   private def richClub(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = copurchaseEdges(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val deg = e.select(col("ea").as("v"))
       .unionAll(e.select(col("eb").as("v")))
       .groupBy("v").agg(count(lit(1)).as("deg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ks = Seq(1L, 2L, 4L, 8L, 16L)
     val kdf = broadcast(ks.toDF("k"))
     val nodes = deg.crossJoin(broadcast(kdf)).filter(col("deg") > col("k"))
@@ -1169,7 +1152,6 @@ object Graph extends QueryFamily("graph") {
     * DECIMAL(38)/HUGEINT. */
   private def gearysC(s: SparkSession, dir: String): DataFrame = {
     val e = copurchaseEdges(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nodes = e.select(col("ea").as("v"))
       .unionAll(e.select(col("eb").as("v"))).distinct()
     val attr = nodes.join(
@@ -1178,13 +1160,11 @@ object Graph extends QueryFamily("graph") {
             (col("p_retailprice").cast("decimal(18,2)") * 100).cast("long")
               .as("cents")),
         Seq("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tot = attr.agg(count(lit(1)).as("__n"), sum("cents").as("__s"))
     val z = attr.crossJoin(broadcast(tot))
       .select(col("v"),
         (col("cents").cast("decimal(38,0)") * col("__n") - col("__s"))
           .as("z"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val den = z.agg(sum(col("z") * col("z")).as("__sz2"),
       count(lit(1)).as("__n"))
     val num = e.join(z.select(col("v").as("ea"), col("z").as("za")), Seq("ea"))

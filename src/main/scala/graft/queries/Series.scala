@@ -962,12 +962,10 @@ object Series extends QueryFamily("series") {
       .groupBy(col("event_type"), expr("unix_micros(ts) div 3600000000").as("hr"))
       .agg(count(lit(1)).as("cnt"))
     val span = hc.groupBy("event_type").agg(min("hr").as("h0"), max("hr").as("h1"))
-    // persisted: O(types·hours) rows read twice (lag + join side); the
-    // lineage otherwise re-aggregates the events table per read
     val grid = span
       .select(col("event_type"), explode(expr("sequence(h0, h1)")).as("hr"))
       .join(hc, Seq("event_type", "hr"), "left")
-      .withColumn("cnt", coalesce(col("cnt"), lit(0L))).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
     val lagged = grid
       .select(col("event_type"), col("hr"), col("cnt").as("x"),
         explode(array((1 to maxLag).map(lit): _*)).as("lag"))
@@ -1086,11 +1084,10 @@ object Series extends QueryFamily("series") {
       .groupBy(col("event_type"), expr("unix_micros(ts) div 3600000000").as("hr"))
       .agg(count(lit(1)).as("cnt"))
     val span = hc.groupBy("event_type").agg(min("hr").as("h0"), max("hr").as("h1"))
-    // persisted: read by the totals aggregate AND the window scan
     val grid = span
       .select(col("event_type"), explode(expr("sequence(h0, h1)")).as("hr"))
       .join(hc, Seq("event_type", "hr"), "left")
-      .withColumn("cnt", coalesce(col("cnt"), lit(0L))).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
     val totals = grid.groupBy("event_type")
       .agg(sum("cnt").as("__tot"), count(lit(1)).as("n_hours"))
     val w = Window.partitionBy("event_type").orderBy("hr")
@@ -1674,15 +1671,14 @@ object Series extends QueryFamily("series") {
     * shape that q_autocorr detects and q_linear_fit detrends:
     * seasonal_idx = 24·cnt_h / total (1.0 = flat). ONE
     * map-side-combinable (type, hour) aggregate over the corpus; the
-    * O(24·V) cell table is persisted (it feeds its own totals AND the
-    * final projection — re-deriving would rescan the corpus), totals
+    * O(24·V) cell table feeds its own totals AND the final projection
+    * through one shared exchange (the corpus is scanned once), totals
     * broadcast back, division double only in the final projection.
     * Session timezone is pinned UTC on both engines, so hour() agrees. */
   private def seasonality(s: SparkSession, dir: String): DataFrame = {
     val cells = events(s, dir)
       .groupBy(col("event_type"), hour(col("ts")).cast("long").as("hod"))
       .agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val totals = cells.groupBy("event_type").agg(sum("cnt").as("__tot"))
     cells.join(broadcast(totals), Seq("event_type"))
       .select(col("event_type"), col("hod"), col("cnt"),
@@ -1706,8 +1702,8 @@ object Series extends QueryFamily("series") {
     * itself). Same as-of carry (one shuffle, tolerance residual), the
     * carried payload is the view's exact epoch-micros, the lag buckets
     * to whole hours with integer `div` — no timestamp doubles. The
-    * O(lookback-hours) histogram is persisted (feeds its own total),
-    * share divides against the broadcast 1-row matched count. */
+    * O(lookback-hours) histogram feeds its own total through the same
+    * exchange, share divides against the broadcast 1-row matched count. */
   private def conversionLag(s: SparkSession, dir: String): DataFrame = {
     val ev = events(s, dir)
     val purchases = ev.filter(col("event_type") === "purchase")
@@ -1720,7 +1716,6 @@ object Series extends QueryFamily("series") {
       .filter(col("touch_t").isNotNull)
       .select(expr("CAST((__pt - touch_t) div 3600000000 AS BIGINT)").as("lag_h"))
       .groupBy("lag_h").agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tot = hist.agg(sum("n").as("__tot"))
     hist.crossJoin(broadcast(tot))
       .select(col("lag_h"), col("n"),
@@ -2031,7 +2026,6 @@ object Series extends QueryFamily("series") {
         sum(when(col("us") >= col("mid"), col("cents")).otherwise(0L)).as("y"))
       .select(col("user_id"), (col("user_id") % 2).cast("int").as("arm"),
         col("x"), col("y"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val pooled = users.agg(
       count(lit(1)).cast("decimal(38,0)").as("n"),
       sum(col("x").cast("decimal(38,0)")).as("sx"),
@@ -2429,7 +2423,6 @@ object Series extends QueryFamily("series") {
           expr("(2 * CAST(__s AS DECIMAL(38,0)) * 10000 + 13) div 26")))
       .withColumn("det_q4",
         col("rev").cast("decimal(38,0)") * 10000L - col("trend_q4"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val seas = tr.filter(col("det_q4").isNotNull)
       .groupBy(substring(col("month"), 6, 2).as("moy"))
       .agg(count(lit(1)).as("k"),
@@ -2857,7 +2850,6 @@ object Series extends QueryFamily("series") {
     val hashes = events(s, dir)
       .select(expr(multHashExpr("user_id")).as("h"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sketch = hashes.orderBy("h").limit(k)
       .agg(count(lit(1)).as("k_used"), max(col("h")).as("kth_hash"))
     val exact = hashes.agg(count(lit(1)).as("exact_distinct"))
@@ -3228,7 +3220,6 @@ object Series extends QueryFamily("series") {
       .filter(col("__nt").isNotNull)
     val mid = ev.agg(expr("(min(__t) + max(__t)) div 2").as("__mid"))
     val tagged = tr.crossJoin(broadcast(mid))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val pred = tagged.filter(col("__ntt") < col("__mid"))
       .groupBy(col("event_type").as("a"), col("__nt").as("b"))
       .agg(count(lit(1)).as("c"))
@@ -5892,9 +5883,6 @@ object Series extends QueryFamily("series") {
         sum((col("value").cast("decimal(18,6)") * 1000000).cast("long"))
           .as("__s"))
       .withColumn("mean_micro", expr("(2 * __s + __n) div (2 * __n)"))
-      // consumed twice (PH scan + sigma aggregate) — persist the
-      // O(days) compressed table so the events scan+groupBy runs once
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val wPre = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     val scan = d
       .withColumn("__cs", sum(col("mean_micro")).over(wPre))

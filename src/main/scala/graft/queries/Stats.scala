@@ -1010,8 +1010,8 @@ object Stats extends QueryFamily("stats") {
     * log10 on the data path), ONE 9-row aggregate; expected shares are
     * 6dp literal constants CAST to double IDENTICALLY on both engines
     * (computing log10(1+1/d) live would race libm ulp differences
-    * through the hash gate). The digit table is persisted (feeds its
-    * own total + the final projection). */
+    * through the hash gate). The digit table feeds its own total and
+    * the final projection through one shared exchange. */
   private def benford(s: SparkSession, dir: String): DataFrame = {
     val expShare = expr("""CAST(CASE digit
       WHEN 1 THEN 0.301030 WHEN 2 THEN 0.176091 WHEN 3 THEN 0.124939
@@ -1022,7 +1022,6 @@ object Stats extends QueryFamily("stats") {
       .select(substring(floor(col("o_totalprice")).cast("long").cast("string"), 1, 1)
         .cast("long").as("digit"))
       .groupBy("digit").agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tot = digits.agg(sum("n").as("__tot"))
     digits.crossJoin(broadcast(tot))
       .select(col("digit"), col("n"),
@@ -1330,7 +1329,6 @@ object Stats extends QueryFamily("stats") {
         col("c_mktsegment").as("segment"),
         floor(col("c_acctbal") / 1000.0).cast("long").as("bal_band"))
       .agg(count(lit(1)).as("class_n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tot = cls.agg(count(lit(1)).as("n_classes"),
       coalesce(sum(when(col("class_n") < 5, col("class_n"))), lit(0L))
         .as("rows_at_risk"))
@@ -1705,7 +1703,6 @@ object Stats extends QueryFamily("stats") {
         lit(0L).as("__a"), lit(1L).as("__b"))
     val tagged = a.unionAll(b).groupBy("h")
       .agg(max("__a").as("ia"), max("__b").as("ib"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sk = tagged.orderBy("h").limit(k)
       .agg(count(lit(1)).as("k_used"), max(col("h")).as("__kth"),
         sum(expr("ia * ib")).cast("long").as("k_both"))
@@ -2261,7 +2258,6 @@ object Stats extends QueryFamily("stats") {
       .withColumn("__w", // post-strat weight, trimmed at 10x mean
         expr("least((CAST(pop AS DECIMAL(38,0)) * __R * 1000000)" +
           " div (CAST(resp AS DECIMAL(38,0)) * __N), 10000000)"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sw = cells.agg(sum(expr("CAST(resp AS DECIMAL(38,0)) * __w"))
       .as("__S"))
     cells.crossJoin(broadcast(sw))
@@ -3469,7 +3465,6 @@ object Stats extends QueryFamily("stats") {
       .agg(count(lit(1)).as("class_n"),
         sum((col("__st") === "F").cast("long")).as("__f"),
         sum((col("__st") === "O").cast("long")).as("__o"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tot = cls.agg(sum("class_n").as("__n"),
       sum("__f").as("__tf"), sum("__o").as("__to"))
     cls.crossJoin(broadcast(tot))
@@ -3653,7 +3648,6 @@ object Stats extends QueryFamily("stats") {
       .groupBy(date_format(col("o_orderdate"), "yyyy-MM-dd").as("__day"))
       .agg(sum((col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
         .as("__x"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val m = daily.agg(count(lit(1)).as("__n"), sum("__x").as("__s"),
       sum(col("__x").cast("decimal(38,0)") * col("__x")).as("__q"))
     daily.crossJoin(broadcast(m))
@@ -3774,7 +3768,6 @@ object Stats extends QueryFamily("stats") {
       .select(substring(col("o_orderpriority"), 1, 1).as("__g"),
         expr("CAST(CAST(o_totalprice * 100 AS DECIMAL(18,0)) div 100 AS BIGINT)")
           .as("__x"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val compressed = base.groupBy("__g", "__x").agg(count(lit(1)).as("__w"))
     val byG = Window.partitionBy("__g").orderBy("__x")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -4145,7 +4138,6 @@ object Stats extends QueryFamily("stats") {
       (if (k == 0) col("__x") else lead(col("__x"), k).over(w)).as(s"x$k"))
     val vecs = wins.select(Seq(col("__day"), col("__pos"), col("__n")) ++ cols: _*)
       .filter(col("__pos") <= col("__n") - 6)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val aCols = Seq(col("__day").as("start_day"), col("__pos").as("pa")) ++
       (0 to 6).map(k => col(s"x$k").as(s"a$k"))
     val a = vecs.select(aCols: _*)
@@ -5113,7 +5105,6 @@ object Stats extends QueryFamily("stats") {
     * output. */
   private def periodogram(s: SparkSession, dir: String): DataFrame = {
     val g = dailyGmvGrid(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tot = g.agg(count(lit(1)).as("n"), sum("x").as("s"),
       sum(expr("x * x")).as("sxx"))
     def caseTab(p: Int, f: Int => Long): String =
@@ -5200,7 +5191,6 @@ object Stats extends QueryFamily("stats") {
   private def permutationTest(s: SparkSession, dir: String): DataFrame = {
     val B = 200
     val g = dailyGmvGrid(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val diffPpm = (sw: String, nw: String, sd: String, nd: String) =>
       sdivPpm(s"CAST($sw AS DECIMAL(38,0)) * $nd - CAST($sd AS DECIMAL(38,0)) * $nw",
         s"CAST($nw AS DECIMAL(38,0)) * $nd", duck = false)
@@ -6483,7 +6473,6 @@ object Stats extends QueryFamily("stats") {
       .select(col("day"),
         expr("CAST(datediff(day, __d0) AS LONG)").as("x"),
         col("y").cast("decimal(38,0)").as("y"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val m = xy.agg(count(lit(1)).as("n"), sum("x").as("sx"),
       sum(col("x") * col("x")).as("sxx"), sum("y").as("sy"),
       sum(col("x").cast("decimal(38,0)") * col("y")).as("sxy"))
@@ -6510,7 +6499,6 @@ object Stats extends QueryFamily("stats") {
       .withColumn("__ec", expr(sdiv(
         "CAST(resid_milli AS DECIMAL(38,0))", "1000", duck = false)))
       .withColumn("n_days", col("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
   /** #376 continued: Cook's D = e²h / (2·s²·(1−h)²) in milli units via
@@ -6838,7 +6826,6 @@ object Stats extends QueryFamily("stats") {
            |  AND (__da IS NULL OR __db <= __da) THEN below
            | WHEN __da IS NOT NULL AND __da <= $cal THEN above
            | ELSE NULL END""".stripMargin.replace("\n", " ")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val reps = o.filter(!col("tr"))
       .groupBy(col("bal").as("__mbal"))
       .agg(min(struct(col("k").as("ck"), col("y").as("cy"))).as("__r"))
@@ -7005,7 +6992,6 @@ object Stats extends QueryFamily("stats") {
         col("y").cast("decimal(38,0)").as("y"),
         expr("CAST(datediff(__d1, __d0) AS LONG) div 2").as("__mid"))
       .withColumn("seg", (col("x") <= col("__mid")).cast("int"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def sse(df: DataFrame, groupCols: Seq[String]): DataFrame = {
       val m = if (groupCols.isEmpty) df.groupBy(lit(1).as("__g")) else df.groupBy(groupCols.map(col): _*)
       val mo = m.agg(count(lit(1)).as("n"), sum("x").as("sx"),
@@ -7262,7 +7248,6 @@ object Stats extends QueryFamily("stats") {
         sum(expr("CAST(x div 100 AS DECIMAL(38,0)) * (x div 100)")).as("sxxd"))
       .withColumn("mu", expr("CAST(sx div n AS BIGINT)"))
       .withColumn("mud", expr("CAST(sxd div n AS BIGINT)"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tot = per.agg(
       count(lit(1)).as("k"), sum("n").as("nn"), sum("sx").as("tsx"),
       // pooled within-group variance numerator Σ(nΣx²−S²)/n (dollars²)
@@ -7954,7 +7939,6 @@ object Stats extends QueryFamily("stats") {
         sum(col("__hi") * col("__f")).as("f_hi"),
         sum(lit(1L) - col("__hi")).as("n_lo"),
         sum((lit(1L) - col("__hi")) * col("__f")).as("f_lo"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val agg = strata.agg(
       expr("""CAST(sign(CAST(sum(f_hi) AS DECIMAL(38,0)) * sum(n_lo)
              |     - CAST(sum(f_lo) AS DECIMAL(38,0)) * sum(n_hi)) AS BIGINT)"""
@@ -8102,7 +8086,6 @@ object Stats extends QueryFamily("stats") {
           expr("(2 * CAST(__s AS DECIMAL(38,0)) * 1000000 + 13) div 26")))
       .withColumn("det_ppm",
         col("rev").cast("decimal(38,0)") * 1000000L - col("trend_ppm"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the detrended sum goes NEGATIVE in off-season months, so the
     // round-nearest device sign-splits (FixedPoint.sdivRound) — plain
     // (2a+b) div (2b) would truncate negative means toward zero

@@ -673,15 +673,14 @@ object Text extends QueryFamily("text") {
     // element_at lambda chain per position) and, unpersisted, ran that
     // whole pipeline TWICE (once for the model counts, once for the
     // scoring pass); the window builds the same (doc_id, id1, id2)
-    // rows codegen'd, and the persist makes the model and scoring
-    // passes share one computation
+    // rows codegen'd, and the model and scoring passes both read its
+    // one exchange, so the pipeline runs once
     val w = Window.partitionBy("doc_id").orderBy("pos")
     val pairs = toks.join(broadcast(vocab), Seq("token"), "left")
       .select(col("doc_id"), col("pos"), coalesce(col("id"), lit(0)).as("id1"))
       .withColumn("id2", lead(col("id1"), 1).over(w))
       .filter(col("id2").isNotNull)
       .select("doc_id", "id1", "id2")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bigrams = pairs.groupBy("id1", "id2").agg(count(lit(1)).as("c12"))
     val contexts = bigrams.groupBy("id1").agg(sum(col("c12")).as("c1"))
     val lnP = log((coalesce(col("c12"), lit(0L)).cast("double") + lit(alpha)) /
@@ -907,7 +906,6 @@ object Text extends QueryFamily("text") {
     // from that small relation (distinct tokens ≪ stream length) — the
     // d× explode and the hash fold run per TYPE, never per occurrence
     val exact = toks.groupBy("tok").agg(count(lit(1)).as("exact"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val probes = exact.orderBy(col("exact").desc, col("tok")).limit(10)
     val n = exact.agg(sum("exact").as("__n"))
     val sketch = exact
@@ -1033,12 +1031,10 @@ object Text extends QueryFamily("text") {
     * projection — bit-stable under any partitioning. */
   private def rateShrinkage(s: SparkSession, dir: String): DataFrame = {
     val thresh = 300
-    // persisted: O(sources) rows feed the moment fit AND the final
-    // projection — one documents scan instead of two
     val per = parallelize(s, t(s, dir, "documents"))
       .groupBy("source")
       .agg(count(lit(1)).as("n"),
-        sum(when(col("n_chars") >= thresh, 1L).otherwise(0L)).as("k")).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        sum(when(col("n_chars") >= thresh, 1L).otherwise(0L)).as("k"))
     val mom = per.agg(count(lit(1)).as("__m"), sum("n").as("__sn"),
       sum("k").as("__sk"), sum(col("k") * col("k")).as("__skk"),
       // per-source n is constant in the fixtures; keep the general form
@@ -1446,7 +1442,6 @@ object Text extends QueryFamily("text") {
       .select(col("source"),
         explode(TextAnalysis.tokens(lower(col("text")))).as("tok"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sizes = vocab.groupBy("source").agg(count(lit(1)).as("n"))
     vocab.as("a")
       .join(vocab.as("b"),
@@ -1929,7 +1924,6 @@ object Text extends QueryFamily("text") {
     val tf = parallelize(s, t(s, dir, "documents"))
       .select(explode(TextAnalysis.tokens(lower(col("text")))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tot = tf.agg(sum("tf").as("__t"), count(lit(1)).as("n_types"))
     val top = tf.orderBy(desc("tf"), asc("token")).limit(800)
     // bounded frame: ≤ 800 rows survive the cut
@@ -2346,7 +2340,6 @@ object Text extends QueryFamily("text") {
       .select(TextAnalysis.langId(col("text")).as("__la"),
         TextAnalysis.langId(substring(col("text"), 1, 120)).as("__lb"))
       .groupBy("__la", "__lb").agg(count(lit(1)).as("__c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tot = conf.agg(sum("__c").as("n"),
       sum(when(col("__la") === col("__lb"), col("__c")).otherwise(0L))
         .as("agree"))
@@ -2480,7 +2473,6 @@ object Text extends QueryFamily("text") {
       .select(col("source"),
         explode(TextAnalysis.hashedShingles(col("text"), 3)).as("__sh"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tot = sh.groupBy("source").agg(count(lit(1)).as("__n"))
     val common = sh.as("a")
       .join(sh.as("b"), col("a.__sh") === col("b.__sh")
@@ -2765,7 +2757,6 @@ object Text extends QueryFamily("text") {
       .select(TextAnalysis.langId(col("text")).as("__la"),
         TextAnalysis.langId(substring(col("text"), 1, 120)).as("__lb"))
       .groupBy("__la", "__lb").agg(count(lit(1)).as("__c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tot = conf.agg(sum("__c").as("n"),
       sum(when(col("__la") =!= col("__lb"), col("__c")).otherwise(0L))
         .as("n_disagree"))
@@ -3024,7 +3015,6 @@ object Text extends QueryFamily("text") {
       .agg(sum("__n").as("n_chars"),
         sum("__c1").as("c1"), sum("__c2").as("c2"), sum("__c3").as("c3"),
         sum("__c4").as("c4"), sum("__c5").as("c5"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tot = perSource.agg(sum("n_chars").as("tn"),
       sum("c1").as("t1"), sum("c2").as("t2"), sum("c3").as("t3"),
       sum("c4").as("t4"), sum("c5").as("t5"))
@@ -3562,9 +3552,6 @@ object Text extends QueryFamily("text") {
            |  ' *\\\\| *'), p -> p <> '')"""
           .stripMargin.replace("\n", " "))).as("phrase"))
       .filter(expr("size(split(phrase, ' ')) <= 6"))
-      // read twice (word stats + phrase counts); the lineage re-splits
-      // the whole corpus per read otherwise
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val stats = phrases
       .select(expr("size(split(phrase, ' '))").cast("long").as("__plen"),
         explode(expr("split(phrase, ' ')")).as("w"))
@@ -4059,17 +4046,15 @@ object Text extends QueryFamily("text") {
       .withColumn("id",
         row_number().over(Window.orderBy(desc("df"), asc("token"))))
       .select("token", "id")
-    // adjacent-id pairs via lead() + persist — see bigramDocScores (the
-    // model counts and the scoring pass below share one computation)
+    // adjacent-id pairs via lead() — see bigramDocScores (the model
+    // counts and the scoring pass below share the window's exchange)
     val wkn = Window.partitionBy("doc_id").orderBy("pos")
     val pairs = toks.join(broadcast(vocab), Seq("token"), "left")
       .select(col("doc_id"), col("pos"), coalesce(col("id"), lit(0)).as("id1"))
       .withColumn("id2", lead(col("id1"), 1).over(wkn))
       .filter(col("id2").isNotNull)
       .select("doc_id", "id1", "id2")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bigrams = pairs.groupBy("id1", "id2").agg(count(lit(1)).as("c12"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val contexts = bigrams.groupBy("id1").agg(sum("c12").as("c1"),
       count(lit(1)).as("n1post"))
     val cont = bigrams.groupBy("id2").agg(count(lit(1)).as("n1pre"))
@@ -4333,7 +4318,6 @@ object Text extends QueryFamily("text") {
       .select(explode(TextAnalysis.hashedShingles(lower(col("text")), 3)).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("c"))
     val coc = tf.groupBy(col("c").as("r")).agg(count(lit(1)).as("nr"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     coc.as("a")
       .join(coc.select((col("r") - 1).as("r"), col("nr").as("nr1")).as("b"),
         Seq("r"), "left")
@@ -4472,9 +4456,7 @@ object Text extends QueryFamily("text") {
       .select(col("source"),
         explode(TextAnalysis.tokens(lower(col("text")))).as("tok"))
       .groupBy("source", "tok").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tot = c.groupBy("source").agg(sum("c").as("tt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val pairs = tot.select(col("source").as("sa"), col("tt").as("ta"))
       .crossJoin(broadcast(tot.select(col("source").as("sb"), col("tt").as("tb"))))
       .filter(col("sa") < col("sb"))
