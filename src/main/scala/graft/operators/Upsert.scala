@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * per spreadsheet row (add_q5010.py:33-40, add_q5011_2t.py:72-84). The
   * relational equivalent is a merge: join base to updates on the key and
   * coalesce update values over base values. Executed as one distributed
-  * join — broadcast when the updates side is small (the common case for a
-  * correction file), shuffled hash otherwise.
+  * join with the updates side broadcast: a correction file is small next
+  * to the table it corrects.
   */
 object Upsert {
 
@@ -48,12 +48,10 @@ object Upsert {
     * `orderCol`, or max value tuple when none) — never a base fan-out. */
   def update(base: DataFrame, updates: DataFrame, key: String,
              updateCols: Seq[String],
-             broadcastUpdates: Boolean = true,
              orderCol: Option[String] = None): DataFrame = {
     val u0 = latestPerKey(updates, key, updateCols, orderCol)
     val renamed = updateCols.foldLeft(u0)((d, c) => d.withColumnRenamed(c, s"__u_$c"))
-    val right = if (broadcastUpdates) broadcast(renamed) else renamed
-    val joined = base.join(right, Seq(key), "left")
+    val joined = base.join(broadcast(renamed), Seq(key), "left")
     val projected = base.columns.map { c =>
       if (updateCols.contains(c)) coalesce(col(s"__u_$c"), col(c)).as(c)
       else col(c)
@@ -75,8 +73,7 @@ object Upsert {
     * @param updates (key, valueCol, ts)
     */
   def scd2Apply(history: DataFrame, updates: DataFrame, key: String,
-                valueCol: String, tsCol: String,
-                broadcastUpdates: Boolean = true): DataFrame = {
+                valueCol: String, tsCol: String): DataFrame = {
     // one update per key: keep the LATEST (max ts) — a multi-row update
     // batch would otherwise fan out every history row of that key
     val u = updates
@@ -85,8 +82,7 @@ object Upsert {
       // value tiebreak keeps the pick deterministic on duplicate (key, ts)
       .agg(expr("max_by(__u_val, struct(__u_ts, __u_val))").as("__u_val"),
         max("__u_ts").as("__u_ts"))
-    val right = if (broadcastUpdates) broadcast(u) else u
-    val closed = history.join(right, Seq(key), "left")
+    val closed = history.join(broadcast(u), Seq(key), "left")
       .withColumn("valid_to",
         when(col("valid_to").isNull && col("__u_ts").isNotNull, col("__u_ts"))
           .otherwise(col("valid_to")))

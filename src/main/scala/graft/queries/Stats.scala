@@ -3048,7 +3048,7 @@ object Stats extends QueryFamily("stats") {
       count_distinct(col("__w")).as("k_r"),
       count_distinct(col("__s")).as("k_c"))
     // both sides are O(k) post-aggregation rows — broadcast keeps the
-    // grid build off CartesianProduct (the EXPLAINS hygiene invariant)
+    // grid build off CartesianProduct (PlanContractSpec fails on one)
     val grid = rows.crossJoin(broadcast(cols))
       .join(broadcast(cells), Seq("__w", "__s"), "left")
       .withColumn("__o", coalesce(col("__o"), lit(0L)))
@@ -6904,8 +6904,8 @@ object Stats extends QueryFamily("stats") {
     val dayIdx = days.crossJoin(broadcast(d0))
       .select(col("d"), expr("CAST(datediff(d, __d0) AS LONG)").as("x"))
     // explicit broadcast: the calendar side is O(days) bounded — without
-    // the hint a stats-boundary flip planned this as CartesianProduct
-    // (caught by the r11 EXPLAINS refresh)
+    // the hint a stats-boundary flip planned this as CartesianProduct,
+    // which PlanContractSpec fails on
     val grid = rev.select("g").distinct().crossJoin(broadcast(dayIdx))
     val cells = grid.join(rev, Seq("g", "d"), "left")
       .select(col("g"), col("x"),

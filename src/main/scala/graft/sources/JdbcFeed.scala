@@ -32,7 +32,7 @@ import org.apache.spark.sql.jdbc.graftshim.DerbyVarcharNulls
   * upsert: ANSI `MERGE INTO` (Derby, SQL Server, Oracle, DB2,
   * Postgres ≥ 15) vs Postgres's idiomatic
   * `INSERT … ON CONFLICT … DO UPDATE` — dispatched by
-  * [[MergeDialect.forUrl]] on the JDBC URL, overridable per call.
+  * [[MergeDialect.forUrl]] on the JDBC URL.
   * JdbcFeedSpec pins the exact SQL both dialects generate AND executes
   * both live: the ANSI arm on embedded Derby, the Postgres arm on
   * DuckDB (which accepts the identical INSERT … ON CONFLICT form) —
@@ -142,8 +142,7 @@ object JdbcFeed {
     * batched inserts — the distributed leg), then ONE set-based upsert
     * statement runs inside the database — the DB's own join machinery
     * applies the whole batch, no per-row round-trips at all. The
-    * statement is dialect-dispatched ([[MergeDialect.forUrl]], or pass
-    * `dialect` explicitly): ANSI `MERGE INTO … WHEN MATCHED UPDATE /
+    * statement is dialect-dispatched ([[MergeDialect.forUrl]]): ANSI `MERGE INTO … WHEN MATCHED UPDATE /
     * WHEN NOT MATCHED INSERT` for Derby/warehouses, Postgres's
     * `INSERT … ON CONFLICT (key) DO UPDATE` for the reference's own
     * engine. The staging table is dropped afterwards (and on failure).
@@ -164,10 +163,9 @@ object JdbcFeed {
   def mergeKeyed(upserts: DataFrame, url: String, table: String,
                  key: String, valueCols: Seq[String],
                  numWriters: Int = 8, batchSize: Int = 500,
-                 createTypes: Option[String] = None,
-                 dialect: Option[MergeDialect] = None): Unit = {
+                 createTypes: Option[String] = None): Unit = {
     require(valueCols.nonEmpty, "mergeKeyed needs at least one value column")
-    val d = dialect.getOrElse(MergeDialect.forUrl(url))
+    val d = MergeDialect.forUrl(url)
     // unquoted identifier: letters/digits only, unique per call so
     // concurrent merges into the same target never share a stage
     val staging = s"${table}_stage_${java.lang.Long.toHexString(

@@ -1,15 +1,12 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{ExplainMode, SQLExecution}
 
-import graft.{GraftSession, QueryRunner, SparkEntry}
+import graft.{GraftSession, QueryRunner}
 
 /** One inspection main for plan review and local timing:
   *
-  *   Inspect dump <sfDir> [out]              EXPLAINS.md for every registry key
   *   Inspect plan <sfDir> <q_a,q_b> [mode]   plans of the named queries
   *   Inspect executed <sfDir> <q_a,q_b>      post-AQE plans after a run
   *   Inspect time <sfDir> <q_a,q_b> [reps]   build vs noop-write seconds,
@@ -17,17 +14,14 @@ import graft.{GraftSession, QueryRunner, SparkEntry}
   *
   * Each mode is a function of a live session (specs use the shared one);
   * `main` only parses arguments and owns a GraftSession-built session.
+  * The checked facts of every registry plan (exchanges, scans, windows,
+  * WSCG spans, build jobs) are `src/test/resources/plan_budgets.tsv`,
+  * which `PlanContractSpec` holds each plan to.
   */
 object Inspect {
   def main(args: Array[String]): Unit = {
     def keys = args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val run: SparkSession => Unit = args.toSeq match {
-      case Seq("dump", dir, rest @ _*) =>
-        val out = rest.headOption.getOrElse("EXPLAINS.md")
-        spark => {
-          Files.writeString(Paths.get(out), dump(spark, dir))
-          println(s"[explain] wrote $out")
-        }
       case Seq("plan", dir, _, rest @ _*) =>
         spark => println(plan(spark, dir, keys, rest.headOption.getOrElse("formatted")))
       case Seq("executed", dir, _) =>
@@ -41,51 +35,13 @@ object Inspect {
             s" compiles=${rs.map(_._3).mkString(",")}")
         }
       case _ =>
-        System.err.println("usage: Inspect dump <sfDir> [out] | plan <sfDir> <keys> [mode]" +
+        System.err.println("usage: Inspect plan <sfDir> <keys> [mode]" +
           " | executed <sfDir> <keys> | time <sfDir> <keys> [reps]")
         sys.exit(2)
     }
     val spark = GraftSession.builder(GraftSession.cores, GraftSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try run(spark) finally spark.stop()
-  }
-
-  /** EXPLAINS.md: the formatted plan of EVERY registry key, first 120
-    * lines each (a hand-maintained list once drifted to 161/206
-    * coverage); a cut plan ends with a line saying so (see [[clip]]).
-    * Queries that write their own fixture files show the plan that
-    * reads them back. */
-  def dump(spark: SparkSession, sfDir: String): String = {
-    val keys = SparkEntry.queries.keys.toSeq.sorted
-    val head =
-      s"""# EXPLAINS — formatted physical plans (${Paths.get(sfDir).getFileName})
-         |
-         |Generated by `graft.tools.Inspect dump` — all ${keys.size} registry
-         |queries. What to look for:
-         |`PushedFilters`/pruned `ReadSchema` at scans, `BroadcastHashJoin`
-         |for dim sides, no `CartesianProduct` anywhere, partial
-         |(`HashAggregate` x2) aggregation, `Window` only over bounded
-         |row sets.
-         |""".stripMargin
-    val runner = new QueryRunner(sfDir, () => spark)
-    head + keys.map { k =>
-      val fmt = orFailure(runner.run(k)(explain("formatted")))
-      s"\n## $k\n\n```\n${clip(fmt, sfDir, k)}\n```\n"
-    }.mkString
-  }
-
-  /** The lines `dump` keeps of one plan. */
-  val dumpLines = 120
-
-  /** The first [[dumpLines]] lines of `key`'s plan; a longer plan ends
-    * with one more line giving how many lines were cut and the command
-    * that prints the whole plan. */
-  def clip(plan: String, sfDir: String, key: String): String = {
-    val lines = plan.linesIterator.toVector
-    val kept = lines.take(dumpLines).mkString("\n")
-    val cut = lines.length - dumpLines
-    if (cut <= 0) kept
-    else s"$kept\n... $cut more lines cut; `graft.tools.Inspect plan $sfDir $key formatted` prints them"
   }
 
   /** Plans of `keys` in an ExplainMode (`formatted`, `simple`, `cost`,

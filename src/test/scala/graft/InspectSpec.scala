@@ -32,21 +32,6 @@ class InspectSpec extends GraftSuite {
     assert(left.isEmpty, s"persisted RDDs left behind: $left")
   }
 
-  test("dump: a plan past 120 lines ends with how many lines were cut and how to see them") {
-    val key = "q_cohen_kappa"
-    val full = Inspect.plan(spark, dir, Seq(key))
-      .linesIterator.dropWhile(!_.startsWith("=====")).drop(1).mkString("\n")
-    val n = full.linesIterator.length
-    assert(n > Inspect.dumpLines, s"$key's plan has only $n lines")
-    val clipped = Inspect.clip(full, dir, key).linesIterator.toVector
-    assert(clipped.init == full.linesIterator.take(Inspect.dumpLines).toVector)
-    assert(clipped.last == s"... ${n - Inspect.dumpLines} more lines cut; " +
-      s"`graft.tools.Inspect plan $dir $key formatted` prints them")
-    // a plan that fits is kept whole, with no note
-    val fits = full.linesIterator.take(Inspect.dumpLines).mkString("\n")
-    assert(Inspect.clip(fits, dir, key) == fits)
-  }
-
   test("executed: the final post-AQE plan, with its codegen spans") {
     val out = Inspect.executed(spark, dir, Seq("q_feeder_load"))
     assert(out.contains("===== q_feeder_load ====="), out)

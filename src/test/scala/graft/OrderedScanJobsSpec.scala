@@ -1,10 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.BeforeAndAfterAll
 
@@ -26,37 +21,15 @@ import graft.sources.PagedReader
 class OrderedScanJobsSpec extends GraftSuite with BeforeAndAfterAll {
   import spark.implicits._
 
-  private val Tag = "graft.orderedScanJobsSpec"
+  private lazy val counter = new JobCounter(spark.sparkContext)
 
-  private object Jobs extends SparkListener {
-    val byTag = new ConcurrentHashMap[String, AtomicInteger]()
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      Option(e.properties).flatMap(p => Option(p.getProperty(Tag))).foreach { t =>
-        byTag.computeIfAbsent(t, _ => new AtomicInteger()).incrementAndGet()
-      }
-  }
-
-  override def beforeAll(): Unit = spark.sparkContext.addSparkListener(Jobs)
-  override def afterAll(): Unit = spark.sparkContext.removeSparkListener(Jobs)
-
-  private var seq = 0
-
-  /** Jobs that `body` submits from this thread, counted after the
-    * listener bus has delivered every event. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    seq += 1
-    val tag = s"t$seq"
-    val sc = spark.sparkContext
-    sc.setLocalProperty(Tag, tag)
-    val out = try body finally sc.setLocalProperty(Tag, null)
-    ListenerBusAccess.drain(sc)
-    (out, Option(Jobs.byTag.get(tag)).fold(0)(_.get))
-  }
+  override def beforeAll(): Unit = spark.sparkContext.addSparkListener(counter)
+  override def afterAll(): Unit = spark.sparkContext.removeSparkListener(counter)
 
   /** (jobs to build the DataFrame, jobs to collect it once) */
   private def buildAndCollect(build: => DataFrame): (Int, Int) = {
-    val (df, b) = jobsOf(build)
-    val (_, c) = jobsOf(df.collect())
+    val (df, b) = counter.jobsOf(build)
+    val (_, c) = counter.jobsOf(df.collect())
     (b, c)
   }
 
@@ -90,7 +63,7 @@ class OrderedScanJobsSpec extends GraftSuite with BeforeAndAfterAll {
   }
 
   test("PagedReader.pageBoundsDistributed") {
-    val (bounds, jobs) = jobsOf(PagedReader.pageBoundsDistributed(input, "k", 100, 5))
+    val (bounds, jobs) = counter.jobsOf(PagedReader.pageBoundsDistributed(input, "k", 100, 5))
     assert(bounds.length == 5)
     assert(jobs == 4)
   }
@@ -100,7 +73,7 @@ class OrderedScanJobsSpec extends GraftSuite with BeforeAndAfterAll {
     (1 to 5000).map(i => (i.toLong, (i % 97).toLong, if (i % 3 == 0) "F" else "O", i / 100.0))
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val (pageDir, jobs) = jobsOf(graft.queries.Feeder.pagedFixtureDir(spark, dir))
+    val (pageDir, jobs) = counter.jobsOf(graft.queries.Feeder.pagedFixtureDir(spark, dir))
     assert(new java.io.File(pageDir).listFiles().count(_.getName.endsWith(".tsv")) == 2)
     assert(jobs == 5)
   }
